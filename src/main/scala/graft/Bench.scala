@@ -239,13 +239,7 @@ object Bench {
     val queryParams = BqfParams(qBits = 16, countBits = 8, hashBits = 48, kTokens = 8, zTokens = 2)
     lazy val queryDf = TokensTable.dataframe(spark, 20000, partitions = cpus)
     lazy val qfps = sgram_fingerprints(col("tokens"), queryParams.sTokens, queryParams.hashBits, queryParams.seed)
-    // sorted-index + tree merge: same blob as buildGlobal (canonical
-    // layout), ~2x faster cold — this build is untimed but real wall time
-    def buildBlob(df: org.apache.spark.sql.DataFrame,
-                  fps: org.apache.spark.sql.Column,
-                  p: BqfParams): Array[Byte] =
-      BqfPipeline.treeMerge(BqfPipeline.buildIndexSorted(df, fps, p, 32), 32, 16)
-    lazy val bq = new BqfQuery(spark, buildBlob(queryDf, qfps, queryParams))
+    lazy val bq = new BqfQuery(spark, BqfPipeline.buildGlobal(queryDf, qfps, queryParams))
 
     // 2. point-query throughput: 3M+ abundance probes through the broadcast
     // sketch. Min over trials, same policy as the build phase (trial 1 also
@@ -353,7 +347,7 @@ object Bench {
       // stress sketch: same corpus, fingerprints masked to 32 bits
       val stressParams = queryParams.copy(hashBits = 32)
       val sfps = sgram_fingerprints(col("tokens"), stressParams.sTokens, stressParams.hashBits, stressParams.seed)
-      val bq32 = new BqfQuery(spark, buildBlob(queryDf, sfps, stressParams))
+      val bq32 = new BqfQuery(spark, BqfPipeline.buildGlobal(queryDf, sfps, stressParams))
       val (fp32, bound32, distinct32, sec32) = audit(32, bq32)
       phaseGc += "fp_audit" -> (gcMs() - g0)
       results += "fp_audit" -> (sec48 + sec32)
@@ -460,7 +454,7 @@ object Bench {
       // rebuilding from docsDf would bill the baseline for the fingerprint
       // explode the ingest number excludes (asymmetric comparison)
       val (_, buildOnceSec) = time {
-        BqfPipeline.buildIndexSortedFromFps(allFps.select("fp"), ip, ingestBuckets)
+        BqfPipeline.buildIndexSorted(allFps, array(col("fp")), ip, ingestBuckets)
           .agg(sum(octet_length(col("sketch")))).head()
       }
       graft.streaming.IndexIngest.compact(spark, store)

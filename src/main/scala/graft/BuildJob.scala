@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.GraftFunctions._
-import graft.operators.{BqfParams, SketchAggregators}
+import graft.operators.BqfParams
 import graft.sources.TokensTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -11,12 +11,11 @@ import org.apache.spark.sql.functions._
   * Builds the sharded sketch index (fixed shard count — the same job at any
   * parallelism) and prints one JSON line.
   *
-  * args: cpus rows nBuckets [mode: sorted|udaf]
+  * args: cpus rows nBuckets
   */
 object BuildJob {
   def main(args: Array[String]): Unit = {
     val Array(cpus, rows, nBuckets) = args.take(3).map(_.toInt)
-    val mode = if (args.length > 3) args(3) else "sorted"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-build-$cpus")
@@ -43,141 +42,7 @@ object BuildJob {
     val t0 = System.nanoTime()
     // aggregate over the sketch bytes so Catalyst cannot prune the build
     // (a bare .count() would optimize the sketch construction away)
-    mode match {
-      case "fps" => // decompose: fingerprint generation only
-        val n = df.select(explode(fps).as("fp")).count()
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"fps"}""")
-        emitStages(); spark.stop(); return
-      case "shuffle" => // decompose: fingerprints + shuffle, no build
-        val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-        val n = df.select(explode(fps).as("fp"))
-          .repartition(nBuckets, expr(s"shiftrightunsigned(fp, $shift)"))
-          .count()
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"shuffle"}""")
-        emitStages(); spark.stop(); return
-      case "consume" => // decompose: shuffle + typed iterator consumption
-        import spark.implicits._
-        val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-        val n = df.select(explode(fps).as("fp"))
-          .repartition(nBuckets, expr(s"shiftrightunsigned(fp, $shift)"))
-          .select("fp").as[Long]
-          .mapPartitions { it => var s = 0L; var c = 0L; it.foreach { v => s += v; c += 1 }; Iterator.single(c) }
-          .reduce(_ + _)
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"consume"}""")
-        emitStages(); spark.stop(); return
-      case "chunks" => // decompose: map side of the sorted build only —
-        // fingerprints + per-bucket chunk builders + chunk-row encode, NO
-        // exchange (counts chunk rows in place). sorted minus chunks
-        // isolates what the shuffle write/read itself costs.
-        import spark.implicits._
-        val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-        val n = df.select(fps.as("fps")).as[Array[Long]]
-          .mapPartitions { docs =>
-            val builders = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nBuckets)
-            docs.foreach { arr =>
-              if (arr != null) {
-                var i = 0
-                while (i < arr.length) {
-                  val b = (arr(i) >>> shift).toInt
-                  if (builders(b) == null) builders(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-                  builders(b).addOne(arr(i))
-                  i += 1
-                }
-              }
-            }
-            Iterator.range(0, nBuckets).flatMap { b =>
-              if (builders(b) == null) Iterator.empty
-              else { val r = builders(b).result(); builders(b) = null; Iterator.single((b.toLong, r)) }
-            }
-          }
-          .map(c => c._2.length.toLong).reduce(_ + _)
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"chunks"}""")
-        emitStages(); spark.stop(); return
-      case "write" => // decompose: chunks + exchange write/read, NO array
-        // decode and no shard build (bare count after the repartition)
-        val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-        val spark2 = spark; import spark2.implicits._
-        val n = df.select(fps.as("fps")).as[Array[Long]]
-          .mapPartitions { docs =>
-            val builders = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nBuckets)
-            docs.foreach { arr =>
-              if (arr != null) {
-                var i = 0
-                while (i < arr.length) {
-                  val b = (arr(i) >>> shift).toInt
-                  if (builders(b) == null) builders(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-                  builders(b).addOne(arr(i))
-                  i += 1
-                }
-              }
-            }
-            Iterator.range(0, nBuckets).flatMap { b =>
-              if (builders(b) == null) Iterator.empty
-              else { val r = builders(b).result(); builders(b) = null; Iterator.single((b.toLong, r)) }
-            }
-          }
-          .toDF("bucket", "chunk")
-          .repartition(nBuckets, col("bucket"))
-          // sum(size(chunk)) reads only each array's length header — keeps
-          // the chunk column from being pruned out of the exchange without
-          // paying the Array[Long] decode
-          .agg(sum(size(col("chunk")))).head().getLong(0)
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"write"}""")
-        emitStages(); spark.stop(); return
-      case "writebin" => // A/B of "write": chunks packed to BINARY columns
-        // (one Platform.copyMemory per chunk) instead of array<long>
-        val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-        val spark3 = spark; import spark3.implicits._
-        val n = df.select(fps.as("fps")).as[Array[Long]]
-          .mapPartitions { docs =>
-            val builders = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nBuckets)
-            docs.foreach { arr =>
-              if (arr != null) {
-                var i = 0
-                while (i < arr.length) {
-                  val b = (arr(i) >>> shift).toInt
-                  if (builders(b) == null) builders(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-                  builders(b).addOne(arr(i))
-                  i += 1
-                }
-              }
-            }
-            Iterator.range(0, nBuckets).flatMap { b =>
-              if (builders(b) == null) Iterator.empty
-              else {
-                val r = builders(b).result(); builders(b) = null
-                val bytes = new Array[Byte](8 * r.length)
-                org.apache.spark.unsafe.Platform.copyMemory(
-                  r, org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET,
-                  bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length)
-                Iterator.single((b.toLong, bytes))
-              }
-            }
-          }
-          .toDF("bucket", "chunk")
-          .repartition(nBuckets, col("bucket"))
-          .agg(sum(octet_length(col("chunk")))).head().getLong(0)
-        println(s"""{"sec":${(System.nanoTime() - t0) / 1e9},"kgrams":$kgrams,"shards":0,"sketch_bytes":$n,"cpus":$cpus,"mode":"writebin"}""")
-        emitStages(); spark.stop(); return
-      case "merge" => // time the DISTRIBUTED merge only: 128 shards -> 16
-        val shards = graft.plans.BqfPipeline.buildIndexSorted(df, fps, params, nBuckets)
-        shards.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count() // build untimed
-        val tm0 = System.nanoTime()
-        val merged = graft.plans.BqfPipeline.reshardMerge(shards, params, math.max(1, nBuckets / 8))
-        val row = merged.agg(count(lit(1)).as("shards"), sum(octet_length(col("sketch"))).as("bytes")).head()
-        println(s"""{"sec":${(System.nanoTime() - tm0) / 1e9},"kgrams":$kgrams,"shards":${row.getLong(0)},"sketch_bytes":${row.getLong(1)},"cpus":$cpus,"mode":"merge"}""")
-        emitStages(); spark.stop(); return
-      case _ => ()
-    }
-    val shards = mode match {
-      case "udaf" =>
-        val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-        df.withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(nBuckets)))
-          .groupBy(col("bucket"))
-          .agg(bqf(fps).as("sketch"))
-      case _ =>
-        graft.plans.BqfPipeline.buildIndexSorted(df, fps, params, nBuckets)
-    }
+    val shards = graft.plans.BqfPipeline.buildIndexSorted(df, fps, params, nBuckets)
     val row = shards
       .agg(count(lit(1)).as("shards"), sum(octet_length(col("sketch"))).as("bytes"))
       .head()
@@ -191,7 +56,7 @@ object BuildJob {
       var t = 0L; while (it.hasNext) t += it.next().getCollectionTime
       t
     }
-    println(s"""{"sec":$sec,"kgrams":$kgrams,"shards":${row.getLong(0)},"sketch_bytes":${row.getLong(1)},"cpus":$cpus,"mode":"$mode","gc_ms":$gcMs}""")
+    println(s"""{"sec":$sec,"kgrams":$kgrams,"shards":${row.getLong(0)},"sketch_bytes":${row.getLong(1)},"cpus":$cpus,"gc_ms":$gcMs}""")
     emitStages()
     spark.stop()
   }

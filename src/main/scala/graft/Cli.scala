@@ -249,10 +249,7 @@ object Cli {
         // sidecar records the routing params: a query-index run with a
         // mismatched -n or -q would otherwise route probes to the wrong
         // buckets and answer zeros SILENTLY
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(opts("-o"), "_graft_index.json"),
-          s"""{"nBuckets":$nBuckets,"qBits":${params.qBits},"countBits":${params.countBits},""" +
-          s""""hashBits":${params.hashBits},"kTokens":${params.kTokens},"zTokens":${params.zTokens},"seed":${params.seed}}""")
+        graft.plans.IndexSidecar.write(spark, opts("-o"), graft.plans.IndexSidecar(nBuckets, params))
         println(s"Index construction time = ${(System.nanoTime() - t0) / 1000000}ms ($nBuckets shards)")
 
       case "query-index" =>
@@ -272,22 +269,16 @@ object Cli {
         // conflicting -n/-k/-z on the command line is an ERROR — wrong
         // routing answers zeros silently); legacy stores without a sidecar
         // fall back to an explicit -n, else REFUSE (no inference)
-        val meta = {
-          val p = java.nio.file.Paths.get(opts("-b"), "_graft_index.json")
-          if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p)) else None
+        val meta = graft.plans.IndexSidecar.read(spark, opts("-b"))
+        meta.foreach { m =>
+          require(m.kTokens == params.kTokens && m.zTokens == params.zTokens &&
+            m.hashBits == params.hashBits && m.seed == params.seed,
+            s"query-index params (-k/-z/-h/seed) conflict with the index sidecar: ${m.json}")
         }
-        def metaField(name: String): Option[Long] =
-          meta.flatMap(m => s""""$name":(-?[0-9]+)""".r.findFirstMatchIn(m).map(_.group(1).toLong))
-        metaField("kTokens").foreach { k =>
-          require(k == params.kTokens && metaField("zTokens").forall(_ == params.zTokens) &&
-            metaField("hashBits").forall(_ == params.hashBits) &&
-            metaField("seed").forall(_ == params.seed),
-            s"query-index params (-k/-z/-h/seed) conflict with the index sidecar: $meta")
-        }
-        val nBuckets = metaField("nBuckets").map { n =>
+        val nBuckets = meta.map { m =>
           opts.get("-n").map(_.toInt).foreach(cli =>
-            require(cli == n, s"-n $cli conflicts with the index's $n shards (sidecar)"))
-          n.toInt
+            require(cli == m.nBuckets, s"-n $cli conflicts with the index's ${m.nBuckets} shards (sidecar)"))
+          m.nBuckets
         }.orElse(opts.get("-n").map(_.toInt)).getOrElse {
           // no sidecar, no -n: REFUSE rather than infer. next-pow-2 of
           // max(bucket)+1 guesses low whenever the top buckets happen to be

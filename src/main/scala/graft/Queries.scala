@@ -65,12 +65,9 @@ object Queries {
     */
   private val sketchCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
 
-  /** Build the text-shingle BQF for a scale dir and return a query handle.
-    * Uses the sorted-index scale path + tree merge rather than the direct
-    * UDAF aggregation: measured 2.4 vs 4.2 s cold at sf0.1 (the radix bulk
-    * build beats per-insert aggregation), and the canonical layout makes
-    * the two builds BIT-IDENTICAL (verified byte-for-byte), so nothing
-    * downstream can tell the difference.
+  /** Build the text-shingle BQF for a scale dir and return a query handle:
+    * the cached sorted index shards folded in one merge level, the same
+    * blob [[BqfPipeline.buildGlobal]] builds.
     */
   def buildTextSketch(spark: SparkSession, dir: String): BqfQuery = {
     val bytes = sketchCache.computeIfAbsent(s"text|$dir|$TextParams|$ShingleN", _ =>
@@ -653,12 +650,8 @@ object Queries {
     ensureTokensParquet(spark, nRows)
     val df = TokensTable.dataframe(spark, nRows)
     val fps = sgram_fingerprints(col("tokens"), TokParams.sTokens, TokParams.hashBits, TokParams.seed)
-    val bytes = sketchCache.computeIfAbsent(s"tok|$nRows|$TokParams", _ => {
-      // sorted-index path + tree merge, same switch as buildTextSketch:
-      // radix bulk build beats per-insert aggregation, output bit-identical
-      val shards = BqfPipeline.buildIndexSorted(df, fps, TokParams, nBuckets = 32)
-      BqfPipeline.treeMerge(shards, 32, fanout = 32)
-    })
+    val bytes = sketchCache.computeIfAbsent(s"tok|$nRows|$TokParams", _ =>
+      BqfPipeline.buildGlobal(df, fps, TokParams))
     val q = new BqfQuery(spark, bytes)
     df.withColumn("st", q.sequenceStatsOf(col("tokens")))
       .select(col("doc_id"), col("st.minimum").as("min_abund"),
@@ -1075,10 +1068,9 @@ object Queries {
   def q34Decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val bytes = sketchCache.computeIfAbsent(s"decon|$dir|$TextParams|$ShingleN", _ => {
       val fps = shingle_fingerprints(col("text"), ShingleN, TextParams.hashBits, TextParams.seed)
-      val shards = BqfPipeline.buildIndexSorted(
+      BqfPipeline.buildGlobal(
         spread(docs(spark, dir)).filter(col("doc_id") % 13 === 0 && length(col("text")) >= ShingleN),
-        fps, TextParams, nBuckets = 32)
-      BqfPipeline.treeMerge(shards, 32, fanout = 32)
+        fps, TextParams)
     })
     val q = new BqfQuery(spark, bytes)
     // the candidate side never materializes a shingle string: the rolling

@@ -513,7 +513,7 @@ final class BackpackFilter(
   @inline private def countMax: Long = (1L << countBits) - 1L
 
   /** Encode an abundance for storage (clamp / floor-log2). */
-  @inline private def encodeCount(count: Long): Long = mode match {
+  @inline private[graft] def encodeCount(count: Long): Long = mode match {
     case CountMode.Exact =>
       if (count >= countMax) countMax else if (count < 0) 0 else count
     case CountMode.OrderOfMagnitude =>
@@ -597,7 +597,7 @@ final class BackpackFilter(
 
   /** Raw insert with an already-encoded stored count (merge/rebuild path). */
   private def addEncoded(fp0: Long, storedCount: Long, mergePath: Boolean): Unit = {
-    if (nDistinct + 1 >= sizeLimit) resize(1)
+    growFor(fp0)
     val fp = fp0 & maskRight(hashBits)
     val quot = fp & maskRight(qBits)
     val rem = fp >>> qBits
@@ -627,13 +627,28 @@ final class BackpackFilter(
     }
   }
 
+  /** Resize before an insert that would reach the 95% cap. A duplicate only
+    * bumps its counter, so it never grows the table: the quotient then
+    * depends on the distinct count alone, as in [[BackpackFilter.fromEntries]].
+    */
+  private def growFor(fp0: Long): Unit =
+    if (nDistinct + 1 >= sizeLimit && !holds(fp0)) resize(1)
+
+  /** Is `fp` stored (whatever its counter holds)? */
+  private def holds(fp0: Long): Boolean = {
+    val fp = fp0 & maskRight(hashBits)
+    val quot = fp & maskRight(qBits)
+    isOccupied(quot) &&
+      (findInRun(runStartOf(quot, occupied = true), runEndPos(quot), fp >>> qBits) & BackpackFilter.FlagBit) != 0
+  }
+
   /** Counting-filter insert: returns true exactly on the *second* insertion
     * of `fp` (count bit 0 -> 1). Requires countBits == 1; the streaming
     * "seen at least twice" filter (/root/reference/src/bqf_cf.cpp:119-183).
     */
   def addReturningSecond(fp0: Long): Boolean = {
     require(countBits == 1, "addReturningSecond requires countBits == 1")
-    if (nDistinct + 1 >= sizeLimit) resize(1)
+    growFor(fp0)
     val fp = fp0 & maskRight(hashBits)
     val quot = fp & maskRight(qBits)
     val rem = fp >>> qBits
@@ -890,7 +905,8 @@ final class BackpackFilter(
   /** Associative, order-insensitive in-place merge: fold `other`'s entries
     * in with saturating-add (exact) / max (oom) counter combine; auto-resize
     * handles capacity. min(min(a+b,M)+c,M) == min(a+b+c,M) for non-negative
-    * counts, so merge order does not affect results (SURVEY.md §2.e).
+    * counts, so merge order does not affect results (SURVEY.md §2.e). The
+    * result is byte-identical to [[BackpackFilter.mergeAll]] of the two.
     */
   def mergeInPlace(other: BackpackFilter): BackpackFilter = {
     require(other.hashBits == hashBits && other.countBits == countBits && other.mode == mode
@@ -904,7 +920,9 @@ final class BackpackFilter(
     // (IndexIngest.ingestBatch) — the incremental path costs
     // O(|other| × cluster) instead of the rebuild's O(|this| + |other|),
     // turning per-batch merge cost from O(store) into O(batch).
-    if (other.nDistinct > math.max(4096L, nDistinct / 8))
+    // (the incremental path keeps this filter's q as the floor, so it only
+    // applies when `other` does not carry a larger one)
+    if (other.nDistinct > math.max(4096L, nDistinct / 8) || other.qBits > qBits)
       adopt(BackpackFilter.mergeAll(Seq(this, other)))
     else other.foreachRaw((fp, stored) => this.addEncoded(fp, stored, mergePath = true))
     this
@@ -1113,11 +1131,16 @@ object BackpackFilter {
   }
 
   /** Bulk-build a filter from (fingerprint, storedCount) entry arrays in a
-    * single sequential pass — the scale path for merge/resize. The RSQF
-    * layout is canonical (runs in quotient order, each starting at
-    * max(quotient, previous end + 1), remainders ascending), so building
-    * from sorted entries yields a table bit-identical to incremental
-    * insertion; property tests assert exactly that.
+    * single sequential pass — the one construction path behind every built
+    * sketch (shard builds, UDAF buffers, merge, resize). The RSQF layout is
+    * canonical (runs in quotient order, each starting at max(quotient,
+    * previous end + 1), remainders ascending), so building from sorted
+    * entries yields a table bit-identical to incremental insertion;
+    * property tests assert exactly that.
+    *
+    * Quotient rule: q is the smallest value >= `qBits` whose 95% load cap
+    * admits the deduplicated entry count. Producers pass qBits = 7, so a
+    * sketch's bytes depend only on its parameters and its entries.
     *
     * `combine`: how to fold duplicate fingerprints' stored counts
     * (saturating add for exact, max for oom).
@@ -1129,11 +1152,20 @@ object BackpackFilter {
     */
   def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
                   kTokens: Int, zTokens: Int, seed: Long,
-                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
+                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter =
+    build(qBits, qBits, countBits, hashBits, mode, kTokens, zTokens, seed, fps, counts, n0)
+
+  /** [[fromEntries]] with the sort quotient `sortQ` (a guess at the final
+    * q) apart from the floor `floorQ`: entries are sorted once when the
+    * guess holds and re-sorted once when deduplication moves q.
+    */
+  private def build(floorQ: Int, sortQ: Int, countBits: Int, hashBits: Int, mode: CountMode,
+                    kTokens: Int, zTokens: Int, seed: Long,
+                    fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
     // 1. sort by physical layout order
     val keys = new Array[Long](n0)
     var i = 0
-    while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), qBits, hashBits); i += 1 }
+    while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), sortQ, hashBits); i += 1 }
     val allOnes = counts == null
     val vals =
       if (allOnes) { sortKeys(keys, n0, hashBits); new Array[Long](n0) }
@@ -1158,17 +1190,17 @@ object BackpackFilter {
       i = j
     }
     val n = w
-    // smallest q >= qBits with n < 0.95 * 2^q — exactly where incremental
+    // smallest q >= floorQ with n < 0.95 * 2^q — exactly where incremental
     // insertion's resize trigger (nDistinct + 1 >= sizeLimit) lands
-    var q = qBits
+    var q = floorQ
     while ((((1L << q) * 0.95).toLong) <= n) q += 1
     require(hashBits - q >= 1, s"entries exceed hash space (n=$n hashBits=$hashBits)")
-    if (q != qBits) {
+    if (q != sortQ) {
       // quotient width changed: keys must be re-rotated; recurse once
       val fx = new Array[Long](n)
       i = 0
-      while (i < n) { fx(i) = unrotate(keys(i), qBits, hashBits); i += 1 }
-      return fromEntries(q, countBits, hashBits, mode, kTokens, zTokens, seed, fx, vals, n)
+      while (i < n) { fx(i) = unrotate(keys(i), sortQ, hashBits); i += 1 }
+      return build(q, q, countBits, hashBits, mode, kTokens, zTokens, seed, fx, vals, n)
     }
 
     val f = new BackpackFilter(q, countBits, hashBits, mode, kTokens, zTokens, seed)
@@ -1261,7 +1293,11 @@ object BackpackFilter {
 
   /** Merge many filters into a fresh one via the bulk path: O(total) gather
     * + sort + single-pass build. This is what shuffle-boundary tree merges
-    * use — per-entry insert cost independent of load factor.
+    * use — per-entry insert cost independent of load factor. q follows
+    * [[fromEntries]]' rule with the inputs' largest q as the floor; the sum
+    * of input counts only guesses the sort quotient, so disjoint inputs
+    * sort once and overlapping ones re-sort when they shrink across a
+    * capacity boundary.
     */
   def mergeAll(filters: Seq[BackpackFilter]): BackpackFilter = {
     require(filters.nonEmpty)
@@ -1276,7 +1312,7 @@ object BackpackFilter {
     var i = 0
     filters.foreach(_.foreachRaw { (fp, c) => fps(i) = fp; counts(i) = c; i += 1 })
     val q = filters.map(_.quotientBits).max
-    fromEntries(math.max(q, tightQBits(total)), h.countBits, h.hashBits, h.mode,
+    build(q, math.max(q, tightQBits(total)), h.countBits, h.hashBits, h.mode,
       h.kTokens, h.zTokens, h.seed, fps, counts, i)
   }
 

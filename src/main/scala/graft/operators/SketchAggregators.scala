@@ -10,10 +10,14 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Construction parameters for a distributed BQF build.
   *
-  * @param qBits     initial quotient bits of each per-partition shard (they
-  *                  auto-resize at 95% load, so this only sets the floor)
+  * Every built sketch follows one quotient rule: q is the smallest value
+  * >= 7 (and >= the largest q of any merged input) whose 95% load cap
+  * admits the deduplicated entry count ([[BackpackFilter.fromEntries]]).
+  *
+  * @param qBits     quotient bits of [[freshSized]] only; built sketches
+  *                  size themselves by the rule above
   * @param countBits abundance counter bits (saturates at 2^c - 1)
-  * @param hashBits  fingerprint width; FP bound = 2^-(hashBits - qBits)
+  * @param hashBits  fingerprint width; FP bound = 2^-(hashBits - q)
   */
 final case class BqfParams(
     qBits: Int = 16,
@@ -26,35 +30,97 @@ final case class BqfParams(
   /** Tokens per inserted s-gram: s = k - z. */
   def sTokens: Int = kTokens - zTokens
 
-  /** Aggregation zero buffers start tiny (q=7, ~1.3 KB) and auto-resize:
-    * growth is amortized O(n) through the bulk rebuild, while a full-size
-    * zero would cost 2^qBits words per (group x partition) buffer — a
-    * memory/caching disaster for wide grouped builds.
+  /** Empty filter at the floor quotient (q=7). `add` grows it at the 95%
+    * cap, so it ends at the q the rule gives for its distinct count.
     */
   def fresh(): BackpackFilter =
-    BackpackFilter(math.min(qBits, 12), countBits, hashBits, mode, kTokens, zTokens, seed)
+    BackpackFilter(7, countBits, hashBits, mode, kTokens, zTokens, seed)
 
   /** Full-size filter at the declared qBits (query-side / direct use). */
   def freshSized(): BackpackFilter =
     BackpackFilter(qBits, countBits, hashBits, mode, kTokens, zTokens, seed)
 }
 
-/** Aggregation buffer: a live filter absorbing this task's rows plus a list
-  * of already-built shards merged in from other partials. Keeping shards
-  * lazy lets `finish` fold them in ONE k-way bulk merge (gather + radix sort
-  * + sequential build) instead of k pairwise re-sorts — the final reducer of
-  * a wide aggregation touches each entry once. `cap` bounds buffered shards
-  * so executor memory stays flat on very wide merges.
+/** Aggregation buffer: encoded (fingerprint, storedCount) entries buffered
+  * since the last flush, a consolidated filter `live`, and already-built
+  * filters merged in from other partials. The buffer flushes through
+  * [[BackpackFilter.fromEntries]] every [[BqfShards.FlushAt]] entries, so
+  * task heap stays bounded; `pending` folds in ONE k-way bulk merge, and
+  * `cap` bounds how many built filters wait for it. No path inserts per
+  * row, so the result depends only on the entries, never on how Spark
+  * split them.
   */
 final class BqfShards(var live: BackpackFilter,
                       var pending: List[BackpackFilter]) extends Serializable
     with com.esotericsoftware.kryo.KryoSerializable {
+  // buffered entries; `counts == null` while every stored count is 1 (the
+  // keys-only sort of fromEntries). Kryo instantiates this class without
+  // running the constructor, so `read` resets these fields itself.
+  private var fps: Array[Long] = null
+  private var counts: Array[Long] = null
+  private var n = 0
+
+  private def reserve(k: Int): Unit =
+    if (fps == null || n + k > fps.length) {
+      val len = math.max(n + k, if (fps == null) 1024 else fps.length * 2)
+      fps = if (fps == null) new Array[Long](len) else java.util.Arrays.copyOf(fps, len)
+      if (counts != null) counts = java.util.Arrays.copyOf(counts, len)
+    }
+
+  /** Buffer every fingerprint of `xs` with count 1. */
+  def addOnes(xs: Array[Long]): BqfShards = {
+    reserve(xs.length)
+    System.arraycopy(xs, 0, fps, n, xs.length)
+    if (counts != null) java.util.Arrays.fill(counts, n, n + xs.length, 1L)
+    n += xs.length
+    if (n >= BqfShards.FlushAt) flush()
+    this
+  }
+
+  /** Buffer one fingerprint with an already-encoded stored count. */
+  def addStored(fp: Long, stored: Long): BqfShards = {
+    reserve(1)
+    if (counts == null) {
+      counts = new Array[Long](fps.length)
+      java.util.Arrays.fill(counts, 0, n, 1L)
+    }
+    fps(n) = fp
+    counts(n) = stored
+    n += 1
+    if (n >= BqfShards.FlushAt) flush()
+    this
+  }
+
+  /** Take a built filter: an empty `live` is replaced outright (it carries
+    * no entries and no larger q), anything else waits in `pending`.
+    */
+  private def push(f: BackpackFilter): Unit =
+    if (live == null || (live.distinctCount == 0 && live.quotientBits <= f.quotientBits)) live = f
+    else pending = f :: pending
+
+  private def flush(): Unit = if (n > 0) {
+    push(BackpackFilter.fromEntries(7, live.countBits, live.hashBits, live.mode,
+      live.kTokens, live.zTokens, live.seed, fps, counts, n))
+    fps = null; counts = null; n = 0
+  }
+
   def absorb(other: BqfShards, cap: Int = 16): BqfShards = {
-    pending = other.live :: other.pending ::: pending
+    other.flush()
+    if (other.live != null) push(other.live)
+    other.pending.foreach(push)
     if (pending.size >= cap) consolidate()
     this
   }
+
+  /** Add one built shard (the merge aggregator's input). */
+  def absorbShard(f: BackpackFilter, cap: Int): BqfShards = {
+    push(f)
+    if (pending.size >= cap) consolidate()
+    this
+  }
+
   def consolidate(): BqfShards = {
+    flush()
     if (pending.nonEmpty) {
       live = BackpackFilter.mergeAll(live :: pending)
       pending = Nil
@@ -81,27 +147,33 @@ final class BqfShards(var live: BackpackFilter,
   }
   override def read(kryo: com.esotericsoftware.kryo.Kryo,
                     input: com.esotericsoftware.kryo.io.Input): Unit = {
-    val n = input.readInt()
-    live = if (n < 0) null else BackpackFilter.deserialize(input.readBytes(n))
+    val len = input.readInt()
+    live = if (len < 0) null else BackpackFilter.deserialize(input.readBytes(len))
     pending = Nil
+    fps = null; counts = null; n = 0
   }
 }
 
-/** The central mergeable UDAF of the library: each executor folds the
-  * fingerprint arrays of its partition into a local [[BackpackFilter]];
-  * Catalyst's partial aggregation merges shard sketches at the shuffle
-  * boundary (the signature named by the north star:
-  * Aggregator[IN, BQFSketch, OUT]). The buffer lives as a JVM object inside
-  * ObjectHashAggregate, serialized only when partials cross the exchange.
+object BqfShards {
+  /** Buffered entries per flush: 32 MB of fingerprints, the bound the
+    * index build's map-side chunker uses.
+    */
+  final val FlushAt = 4 << 20
+}
+
+/** The central mergeable UDAF of the library: each partition's fingerprint
+  * arrays buffer as entries and build through
+  * [[BackpackFilter.fromEntries]]; Catalyst's partial aggregation merges
+  * shard sketches at the shuffle boundary (the signature named by the
+  * north star: Aggregator[IN, BQFSketch, OUT]). The buffer lives as a JVM
+  * object inside ObjectHashAggregate, serialized only when partials cross
+  * the exchange.
   */
 class BqfArrayAggregator(params: BqfParams)
     extends Aggregator[Array[Long], BqfShards, Array[Byte]] {
   override def zero: BqfShards = new BqfShards(params.fresh(), Nil)
-  override def reduce(b: BqfShards, fps: Array[Long]): BqfShards = {
-    var i = 0
-    while (i < fps.length) { b.live.add(fps(i), 1L); i += 1 }
-    b
-  }
+  override def reduce(b: BqfShards, fps: Array[Long]): BqfShards =
+    if (fps == null) b else b.addOnes(fps)
   override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b)
   override def finish(r: BqfShards): Array[Byte] = r.result()
   override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]
@@ -110,13 +182,14 @@ class BqfArrayAggregator(params: BqfParams)
 
 /** Weighted variant: rows are (fingerprint, count) pairs — the shape of the
   * reference's counted-s-mer input (/root/reference/src/abstract_bqf.cpp:22-52).
+  * Duplicate fingerprints combine as in a merge: saturating add (exact),
+  * max exponent (order of magnitude).
   */
 class BqfCountedAggregator(params: BqfParams)
     extends Aggregator[(Long, Long), BqfShards, Array[Byte]] {
   override def zero: BqfShards = new BqfShards(params.fresh(), Nil)
-  override def reduce(b: BqfShards, in: (Long, Long)): BqfShards = {
-    b.live.add(in._1, in._2); b
-  }
+  override def reduce(b: BqfShards, in: (Long, Long)): BqfShards =
+    b.addStored(in._1, b.live.encodeCount(in._2))
   override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b)
   override def finish(r: BqfShards): Array[Byte] = r.result()
   override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]
@@ -135,17 +208,9 @@ class BqfCountedAggregator(params: BqfParams)
 class BqfMergeAggregator(cap: Int = 16)
     extends Aggregator[Array[Byte], BqfShards, Array[Byte]] {
   override def zero: BqfShards = new BqfShards(null, Nil)
-  override def reduce(b: BqfShards, bytes: Array[Byte]): BqfShards = {
-    val shard = BackpackFilter.deserialize(bytes)
-    if (b.live == null) b.live = shard else b.pending = shard :: b.pending
-    if (b.pending.size >= cap) b.consolidate()
-    b
-  }
-  override def merge(a: BqfShards, b: BqfShards): BqfShards = {
-    if (a.live == null) b
-    else if (b.live == null) a
-    else a.absorb(b, cap)
-  }
+  override def reduce(b: BqfShards, bytes: Array[Byte]): BqfShards =
+    b.absorbShard(BackpackFilter.deserialize(bytes), cap)
+  override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b, cap)
   override def finish(r: BqfShards): Array[Byte] =
     if (r.live == null) null else r.result()
   override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]

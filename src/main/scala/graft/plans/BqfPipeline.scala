@@ -18,15 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object BqfPipeline {
 
-  /** One-shot global build: fingerprint arrays -> single serialized sketch.
-    * Plan: partial ObjectHashAggregate per partition -> single-row final
-    * merge (fine up to a few thousand partitions; beyond that use
-    * [[buildSharded]]).
+  /** One-shot global build: fingerprint arrays -> single serialized sketch,
+    * as the 32-shard sorted index folded in one merge level. An empty input
+    * gives the empty q=7 sketch.
     */
-  def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] = {
-    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    df.agg(bqf(fpCol).as("sketch")).head().getAs[Array[Byte]](0)
-  }
+  def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] =
+    Option(treeMerge(buildIndexSorted(df, fpCol, params, 32), 32, 32))
+      .getOrElse(params.fresh().serialize())
 
   /** Deterministic-bucket sharded build with bounded-fanout tree merge.
     * `idCol` must be a stable row identifier (e.g. doc_id).
@@ -41,75 +39,61 @@ object BqfPipeline {
     treeMerge(shards, nBuckets, fanout)
   }
 
-  /** Scale-path index build: explode fingerprints, shuffle them to
-    * fingerprint-range buckets (high bits, so quotients inside each shard
-    * stay uniform), and construct each shard filter in ONE sequential pass
-    * from its gathered entries — no per-insert aggregation, no buffer
-    * resize churn, no big-object serialization beyond the final sketch
-    * blobs. Point queries route to a shard by the same high bits. This is
+  /** Scale-path index build: shuffle fingerprints to fingerprint-range
+    * buckets (high bits, so quotients inside each shard stay uniform), and
+    * construct each shard filter in ONE sequential pass from its gathered
+    * entries — no aggregation buffers, no big-object serialization beyond
+    * the final sketch blobs. Point queries route to a shard by the same high bits. This is
     * how the build survives 100 TB: Spark's shuffle machinery moves 8-byte
     * fingerprints; the sketch is only materialized once per shard.
     *
     * Returns (bucket, serialized sketch) rows; `nBuckets` must be a power
     * of two.
     */
-  def buildIndexSorted(df: DataFrame, fpCol: Column, params: graft.operators.BqfParams,
+  def buildIndexSorted(df: DataFrame, fpCol: Column, params: BqfParams,
                        nBuckets: Int): DataFrame = {
-    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = df.sparkSession
     import spark.implicits._
-    val bucketBits = java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val shift = params.hashBits - bucketBits
-    // Map-side bucketing into ARRAY CHUNKS: a profile of this job at 155M
-    // k-grams showed fingerprint extraction itself costs ~2 s at 8 cores
-    // while shuffling the fingerprints as individual rows cost ~21 s and
-    // re-reading them through the typed row boundary another ~13 s — the
-    // row machinery, not the bytes, dominates. So each input task groups
-    // its fingerprints by destination bucket and emits one (bucket, chunk)
-    // array row per bucket (~tasks x buckets rows total instead of one row
-    // per k-gram); array encode/decode is a memcpy. Same shuffle BYTES,
-    // ~10^4x fewer shuffle ROWS.
-    df.select(fpCol.as("fps")).as[Array[Long]]
-      .mapPartitions(docs => chunkByBucket(docs, nBuckets, shift))
-      .toDF("bucket", "chunk")
-      .repartition(nBuckets, col("bucket"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        gatherChunks(it.map { case (b, c) => (b, c, null) }).map { case (bucket, fps, _) =>
-          (bucket, buildShard(fps, null, params))
-        }
-      }
-      .toDF("bucket", "sketch")
+    sortedBuild(df.select(fpCol.as("fps")).as[Array[Long]], params, nBuckets, counted = false)(
+      docs => docs.map(fps => (fps, null)))
   }
 
-  /** [[buildIndexSorted]] over an ALREADY-EXPLODED fingerprint column (one
-    * Long row per k-gram) — the input shape a streaming ingest batch or a
-    * cached/filtered fingerprint table hands you. Identical plan from the
-    * chunking map stage on, so bulk-vs-incremental comparisons charged from
-    * the same cached input are symmetric.
+  /** The one sorted build plan behind [[buildIndexSorted]] and
+    * [[reshardMerge]]: each input task turns its rows into (fingerprints,
+    * stored counts) entry arrays (`counted = false`: counts are all 1 and
+    * stay null), the map-side chunker groups them by destination bucket
+    * (high fingerprint bits) into array-chunk rows, one exchange moves the
+    * chunks, and each reduce task gathers its buckets and builds every
+    * shard with [[graft.core.BackpackFilter.fromEntries]].
+    *
+    * Why chunks: a profile of the index build at 155M k-grams showed
+    * fingerprint extraction itself costs ~2 s at 8 cores while shuffling
+    * the fingerprints as individual rows cost ~21 s and re-reading them
+    * through the typed row boundary another ~13 s — the row machinery, not
+    * the bytes, dominates. One (bucket, chunk) row per bucket per flush is
+    * ~tasks x buckets rows instead of one per k-gram; array encode/decode
+    * is a memcpy. Same shuffle BYTES, ~10^4x fewer shuffle ROWS.
     */
-  def buildIndexSortedFromFps(fps: DataFrame, params: BqfParams, nBuckets: Int): DataFrame = {
+  private def sortedBuild[T](in: org.apache.spark.sql.Dataset[T], params: BqfParams,
+                             nBuckets: Int, counted: Boolean)(
+      entries: Iterator[T] => Iterator[(Array[Long], Array[Long])]): DataFrame = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
-    val spark = fps.sparkSession
+    val spark = in.sparkSession
     import spark.implicits._
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    fps.select(col("fp")).as[Long]
-      // re-batch singles into arrays so the shared chunker's inner loop (and
-      // its bounded-flush accounting) is identical to the per-doc path
-      .mapPartitions(it => chunkByBucket(it.grouped(8192).map(_.toArray), nBuckets, shift))
-      .toDF("bucket", "chunk")
+    in.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted))
+      .toDF("bucket", "fps", "stored")
       .repartition(nBuckets, col("bucket"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        gatherChunks(it.map { case (b, c) => (b, c, null) }).map { case (bucket, fps, _) =>
-          (bucket, buildShard(fps, null, params))
-        }
-      }
+      .as[(Long, Array[Long], Array[Long])]
+      .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
+        (bucket, buildShard(fps, stored, params))
+      })
       .toDF("bucket", "sketch")
   }
 
-  /** Map-side bucketizer shared by the index builds: groups each task's
-    * fingerprints by destination bucket into array-chunk rows.
+  /** Map-side bucketizer of [[sortedBuild]]: groups each task's entries
+    * by destination bucket into (bucket, fingerprints, stored counts) chunk
+    * rows; the counts array is null unless `counted`.
     *
     * Bounded buffering: builders flush to chunk rows every ~4M buffered
     * fingerprints (32 MB), so task heap is independent of input-partition
@@ -119,43 +103,60 @@ object BqfPipeline {
     * fingerprint arrays (a null text/tokens row upstream) contribute
     * nothing, matching the old explode path's semantics.
     */
-  private def chunkByBucket(docs: Iterator[Array[Long]], nBuckets: Int,
-                            shift: Int): Iterator[(Long, Array[Long])] =
-    new Iterator[(Long, Array[Long])] {
-      private val builders = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nBuckets)
-      private val queue = scala.collection.mutable.Queue.empty[(Long, Array[Long])]
+  private def chunkByBucket(entries: Iterator[(Array[Long], Array[Long])], nBuckets: Int,
+                            shift: Int, counted: Boolean): Iterator[(Long, Array[Long], Array[Long])] =
+    new Iterator[(Long, Array[Long], Array[Long])] {
+      private type Builder = scala.collection.mutable.ArrayBuilder.ofLong
+      private val fpB = new Array[Builder](nBuckets)
+      private val countB = if (counted) new Array[Builder](nBuckets) else null
+      private val queue = scala.collection.mutable.Queue.empty[(Long, Array[Long], Array[Long])]
       private var nBuffered = 0L
       private val flushAt = 4L << 20
       // expected entries per bucket per flush epoch (uniform fingerprints):
       // pre-sizing the builders removes the doubling-growth copies, which
       // at full flush epochs re-copy roughly the whole buffered volume
       private val hint = math.min(flushAt / nBuckets, 1L << 20).toInt
+      private def builder(bs: Array[Builder], b: Int): Builder = {
+        var bb = bs(b)
+        if (bb == null) {
+          bb = new Builder
+          bb.sizeHint(hint)
+          bs(b) = bb
+        }
+        bb
+      }
       private def flush(): Unit = {
         var b = 0
         while (b < nBuckets) {
-          val bb = builders(b)
-          if (bb != null) { queue.enqueue((b.toLong, bb.result())); builders(b) = null }
+          val bb = fpB(b)
+          if (bb != null) {
+            queue.enqueue((b.toLong, bb.result(), if (counted) countB(b).result() else null))
+            fpB(b) = null
+            if (counted) countB(b) = null
+          }
           b += 1
         }
         nBuffered = 0L
       }
       private def fill(): Unit =
-        while (queue.isEmpty && docs.hasNext) {
-          while (docs.hasNext && nBuffered < flushAt) {
-            val fps = docs.next()
+        while (queue.isEmpty && entries.hasNext) {
+          while (entries.hasNext && nBuffered < flushAt) {
+            val (fps, stored) = entries.next()
             if (fps != null) {
               var i = 0
-              while (i < fps.length) {
-                val fp = fps(i)
-                val b = (fp >>> shift).toInt
-                var bb = builders(b)
-                if (bb == null) {
-                  bb = new scala.collection.mutable.ArrayBuilder.ofLong
-                  bb.sizeHint(hint)
-                  builders(b) = bb
+              if (counted) {
+                while (i < fps.length) {
+                  val b = (fps(i) >>> shift).toInt
+                  builder(fpB, b).addOne(fps(i))
+                  builder(countB, b).addOne(stored(i))
+                  i += 1
                 }
-                bb.addOne(fp)
-                i += 1
+              } else {
+                while (i < fps.length) {
+                  val fp = fps(i)
+                  builder(fpB, (fp >>> shift).toInt).addOne(fp)
+                  i += 1
+                }
               }
               nBuffered += fps.length
             }
@@ -163,13 +164,9 @@ object BqfPipeline {
           flush()
         }
       override def hasNext: Boolean = { fill(); queue.nonEmpty }
-      override def next(): (Long, Array[Long]) = { fill(); queue.dequeue() }
+      override def next(): (Long, Array[Long], Array[Long]) = { fill(); queue.dequeue() }
     }
 
-  /** Concatenate per-bucket chunk rows ((bucket, fps, stored?) with stored
-    * possibly null for the all-ones build) into one contiguous pair of
-    * arrays per bucket — plain arraycopies, no per-entry work.
-    */
   /** Reduce-task memory guard: a shard build gathers its whole shard
     * (~16 B per fingerprint + radix buffers), so an under-sharded huge
     * corpus would OOM the executor mid-stage with no hint. Fail FAST with
@@ -181,6 +178,10 @@ object BqfPipeline {
   private def maxShardFps: Long =
     java.lang.Long.getLong("graft.maxShardFps", 96L << 20) // ~1.5 GB gathered
 
+  /** Concatenate per-bucket chunk rows ((bucket, fps, stored?) with stored
+    * possibly null for the all-ones build) into one contiguous pair of
+    * arrays per bucket — plain arraycopies, no per-entry work.
+    */
   private def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
       : Iterator[(Long, Array[Long], Array[Long])] = {
     val chunks = scala.collection.mutable.LongMap
@@ -215,12 +216,10 @@ object BqfPipeline {
       7, params.countBits, params.hashBits, params.mode,
       params.kTokens, params.zTokens, params.seed, fps, stored, fps.length).serialize()
 
-  /** Distributed merge / re-shard: enumerate every shard sketch in parallel
-    * (lazy raw iteration — no shard is materialized as an entry array on a
-    * single node), shuffle the raw (fingerprint, storedCount) pairs to
-    * `nOut` fingerprint-range buckets as paired ARRAY CHUNKS (same
-    * rows-are-the-cost lesson as [[buildIndexSorted]]), and bulk-rebuild one
-    * sketch per output bucket. This is the scale form of the final merge
+  /** Distributed merge / re-shard: every input task reads its shard
+    * sketches' raw (fingerprint, storedCount) entries, and the same sorted
+    * build as [[buildIndexSorted]] routes them to `nOut` fingerprint-range
+    * buckets and bulk-rebuilds one sketch per output bucket. This is the scale form of the final merge
     * level: where [[treeMerge]] ends in one serial reducer producing a
     * driver blob, reshardMerge's last level is `nOut` independent O(n)
     * sorted builds, so merge wall time scales with cores. Output bucket b
@@ -229,42 +228,18 @@ object BqfPipeline {
     * sharded.
     */
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
-    require(nOut >= 1 && (nOut & (nOut - 1)) == 0, "nOut must be a power of 2")
     val spark = shards.sparkSession
     import spark.implicits._
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nOut)
-    shards.select("sketch").as[Array[Byte]]
-      .mapPartitions { sketches =>
-        val fb = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nOut)
-        val sb = new Array[scala.collection.mutable.ArrayBuilder.ofLong](nOut)
-        sketches.foreach { bytes =>
-          // specialized visitor: zero boxing across the 10^8-entry stream
-          graft.core.BackpackFilter.deserialize(bytes).foreachRaw { (fp, stored) =>
-            val b = (fp >>> shift).toInt
-            if (fb(b) == null) {
-              fb(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-              sb(b) = new scala.collection.mutable.ArrayBuilder.ofLong
-            }
-            fb(b).addOne(fp)
-            sb(b).addOne(stored)
-          }
-        }
-        Iterator.range(0, nOut).flatMap { b =>
-          if (fb(b) == null) Iterator.empty
-          else {
-            val out = (b.toLong, fb(b).result(), sb(b).result())
-            fb(b) = null; sb(b) = null
-            Iterator.single(out)
-          }
-        }
-      }
-      .toDF("bucket", "fps", "stored")
-      .repartition(nOut, col("bucket"))
-      .as[(Long, Array[Long], Array[Long])]
-      .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
-        (bucket, buildShard(fps, stored, params))
+    sortedBuild(shards.select("sketch").as[Array[Byte]], params, nOut, counted = true)(
+      _.map { bytes =>
+        val f = graft.core.BackpackFilter.deserialize(bytes)
+        val fps = new Array[Long](f.distinctCount.toInt)
+        val stored = new Array[Long](fps.length)
+        var i = 0
+        // specialized visitor: zero boxing across the 10^8-entry stream
+        f.foreachRaw { (fp, c) => fps(i) = fp; stored(i) = c; i += 1 }
+        (fps, stored)
       })
-      .toDF("bucket", "sketch")
   }
 
   /** The enumerate operator exposed relationally at scale: explode every

@@ -249,11 +249,8 @@ object IndexIngest {
       .write.mode("overwrite").parquet(tmp.toString)
     // carry the routing sidecar (underscore files are invisible to the
     // parquet read above) across the swap
-    val sidecar = new org.apache.hadoop.fs.Path(storeDir, "_graft_index.json")
-    if (fs.exists(sidecar))
-      org.apache.hadoop.fs.FileUtil.copy(fs, sidecar, fs,
-        new org.apache.hadoop.fs.Path(tmp, "_graft_index.json"), false,
-        spark.sparkContext.hadoopConfiguration)
+    graft.plans.IndexSidecar.read(spark, storeDir)
+      .foreach(graft.plans.IndexSidecar.write(spark, tmp.toString, _))
     // swap via rename-aside, never delete-then-rename: the original store
     // stays intact on disk until the compacted tmp is in place, so no
     // crash point loses data (worst case: store absent for the instant
@@ -274,32 +271,21 @@ object IndexIngest {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
     import spark.implicits._
+    val store = if (storeExists(spark, storeDir)) spark.read.parquet(storeDir) else null
     // An existing sidecar is a routing CONTRACT, not just documentation: a
     // second ingest with a different nBuckets (or k/z/hash/seed) would
     // silently append rows routed by a different shift — currentShards then
     // mixes shard versions built under two routings and every query answers
     // wrong/zero counts with no error. Refuse up front, mirroring the
-    // query-index sidecar conflict check.
-    {
-      val sidecarP = new org.apache.hadoop.fs.Path(storeDir, "_graft_index.json")
-      val sfs = sidecarP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (sfs.exists(sidecarP)) {
-        val in = sfs.open(sidecarP)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        def field(name: String): Option[Long] =
-          s""""$name":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-        val expected = Seq(
-          "nBuckets" -> nBuckets.toLong, "qBits" -> params.qBits.toLong,
-          "countBits" -> params.countBits.toLong, "hashBits" -> params.hashBits.toLong,
-          "kTokens" -> params.kTokens.toLong, "zTokens" -> params.zTokens.toLong,
-          "seed" -> params.seed)
-        val conflicts = expected.collect {
-          case (n, v) if field(n).exists(_ != v) => s"$n: store=${field(n).get} call=$v"
-        }
-        require(conflicts.isEmpty,
-          s"ingestBatch routing conflicts with $storeDir's sidecar (${conflicts.mkString(", ")}); " +
-            "a mismatched ingest would corrupt the store silently")
-      }
+    // query-index sidecar conflict check. (Read after storeExists, which
+    // restores a store a crashed compact left aside, sidecar included.)
+    val sidecar = graft.plans.IndexSidecar(nBuckets, params)
+    val stored = graft.plans.IndexSidecar.read(spark, storeDir)
+    stored.foreach { s =>
+      val conflicts = s.conflicts(sidecar)
+      require(conflicts.isEmpty,
+        s"ingestBatch routing conflicts with $storeDir's sidecar (${conflicts.mkString(", ")}); " +
+          "a mismatched ingest would corrupt the store silently")
     }
     // ONE store read and ONE driver-side metadata job serve both the replay
     // guard and the live-shard file pruning (separate committed() +
@@ -307,7 +293,6 @@ object IndexIngest {
     // micro-batch). The agg touches only the two tiny columns — parquet
     // column pruning keeps the sketch blobs out of it — and its collect is
     // bounded by nBuckets rows.
-    val store = if (storeExists(spark, storeDir)) spark.read.parquet(storeDir) else null
     val meta =
       if (store == null) Array.empty[org.apache.spark.sql.Row]
       else store.groupBy("bucket").agg(
@@ -316,14 +301,8 @@ object IndexIngest {
     if (meta.exists(_.getLong(2) == 1L)) return // replay: batchId already committed
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
     // pre-aggregate: the exchange carries one (fp, count) per distinct
-    // fingerprint per batch, and the UDAF does counted inserts.
-    // NOTE (r8): a one-exchange bulk alternative (map-side bucket chunking
-    // + per-bucket fromEntries, see BqfPipeline.buildIndexSortedFromFps)
-    // produces byte-identical partial sketches and measured ~25% faster
-    // per batch — but its different write parallelism changes the store's
-    // parquet file/page layout, which the bench's committed byte-exact
-    // pruning tripwire constants encode; the plan below is kept
-    // layout-stable on purpose.
+    // fingerprint per batch, and the counted UDAF builds each bucket's
+    // partial from those entries.
     val bqf = graft.operators.SketchAggregators.bqfOverCountedFingerprints(params)
     val partials = batch.select(col("fp"))
       .groupBy("fp").agg(count(lit(1)).as("cnt"))
@@ -382,17 +361,7 @@ object IndexIngest {
     // same routing sidecar the CLI's build-index writes: it makes the
     // ingest store directly queryable by `graft.Cli query-index` (which
     // otherwise refuses to guess nBuckets) and guards against a future
-    // ingest with mismatched routing. Underscore prefix = invisible to the
-    // parquet reader, like _SUCCESS.
-    val sidecar = new org.apache.hadoop.fs.Path(storeDir, "_graft_index.json")
-    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sidecar)) {
-      val out = fs.create(sidecar, true)
-      out.write((s"""{"nBuckets":$nBuckets,"qBits":${params.qBits},""" +
-        s""""countBits":${params.countBits},"hashBits":${params.hashBits},""" +
-        s""""kTokens":${params.kTokens},"zTokens":${params.zTokens},"seed":${params.seed}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
+    // ingest with mismatched routing.
+    if (stored.isEmpty) graft.plans.IndexSidecar.write(spark, storeDir, sidecar)
   }
 }

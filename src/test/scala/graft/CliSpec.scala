@@ -249,6 +249,31 @@ class CliSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("conflict"), s"got: ${e2.getMessage}")
   }
 
+  test("query-index and ingestBatch reject a sidecar with a missing or an unknown field") {
+    val params = graft.operators.BqfParams(qBits = 12, countBits = 16, hashBits = 48, kTokens = 8, zTokens = 2)
+    Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", s"$dir/sidecar_idx",
+      "-n", "8", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
+    val ingestStore = s"$dir/sidecar_ingest"
+    graft.streaming.IndexIngest.ingestBatch(Seq(1L, 2L, 3L).toDF("fp"), 0L, params, 8, ingestStore)
+    val good = graft.plans.IndexSidecar(8, params).json
+    val bad = Seq(
+      "missing" -> good.replace(""","seed":0""", ""),
+      "unknown" -> good.replace("}", ""","extra":1}"""))
+    for ((label, text) <- bad) {
+      for (store <- Seq(s"$dir/sidecar_idx", ingestStore))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(store, "_graft_index.json"), text)
+      val eq = intercept[IllegalArgumentException] {
+        Cli.main(Array("query-index", "-b", s"$dir/sidecar_idx", "-i", s"$dir/tokens.parquet",
+          "-o", s"$dir/sidecar_q_$label", "-n", "8", "-k", "8", "-z", "2"))
+      }
+      assert(eq.getMessage.contains(label), s"query-index, $label field: ${eq.getMessage}")
+      val ei = intercept[IllegalArgumentException] {
+        graft.streaming.IndexIngest.ingestBatch(Seq(4L).toDF("fp"), 1L, params, 8, ingestStore)
+      }
+      assert(ei.getMessage.contains(label), s"ingestBatch, $label field: ${ei.getMessage}")
+    }
+  }
+
   test("enumerate streams the sketch entries out relationally") {
     val out = spark.read.parquet {
       Cli.main(Array("enumerate", "-b", s"$dir/sketch.bqf", "-o", s"$dir/enum.parquet"))

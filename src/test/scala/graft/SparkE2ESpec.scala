@@ -34,12 +34,28 @@ class SparkE2ESpec extends AnyFunSuite {
   }
 
   test("build is independent of partitioning (2 vs 8 partitions)") {
-    def build(parts: Int) = {
-      val df = TokensTable.dataframe(spark, 400, partitions = parts)
-      BackpackFilter.deserialize(BqfPipeline.buildGlobal(
-        df, sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed), params))
-    }
-    assert(build(2).enumerate() == build(8).enumerate())
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
+    def build(parts: Int) = BqfPipeline.buildGlobal(TokensTable.dataframe(spark, 400, partitions = parts), fps, params)
+    def viaUdaf(parts: Int) = TokensTable.dataframe(spark, 400, partitions = parts)
+      .agg(bqf(fps)).head().getAs[Array[Byte]](0)
+    assert(build(2).sameElements(build(8)), "buildGlobal bytes depend on partitioning")
+    assert(viaUdaf(2).sameElements(viaUdaf(8)), "UDAF bytes depend on partitioning")
+    assert(viaUdaf(2).sameElements(build(2)), "UDAF bytes != buildGlobal bytes")
+
+    // order-of-magnitude counted input with duplicate fingerprints: (fp, 2)
+    // and (fp, 100) must answer 2^floor(log2 100) = 64 whether the two rows
+    // meet in one partial or in two
+    val oom = params.copy(mode = graft.core.CountMode.OrderOfMagnitude, countBits = 6)
+    val counted = SketchAggregators.bqfOverCountedFingerprints(oom)
+    val rows = Seq((7L, 2L), (7L, 100L)) ++
+      (1L to 3000L).map(i => (graft.core.Fingerprint.splitmix64(i % 1000) & 0xffffffffffffL, i))
+    def oomBuild(parts: Int) = rows.toDF("fp", "cnt").repartition(parts)
+      .agg(counted(col("fp"), col("cnt"))).head().getAs[Array[Byte]](0)
+    val one = rows.toDF("fp", "cnt").coalesce(1).agg(counted(col("fp"), col("cnt"))).head().getAs[Array[Byte]](0)
+    assert(BackpackFilter.deserialize(one).abundance(7L) == 64L)
+    assert(one.sameElements(oomBuild(2)) && one.sameElements(oomBuild(8)),
+      "order-of-magnitude counted build depends on partitioning")
   }
 
   test("sharded tree-merge build equals global build") {

@@ -95,6 +95,38 @@ class BulkBuildSpec extends AnyFunSuite {
     assert(viaBulk.abundance(12345L & Bits.maskRight(h)) >= 3)
   }
 
+  test("overlapping merge: mergeAll and mergeInPlace bytes == fromEntries over the union") {
+    // two 5,000-entry filters sharing 4,900 fingerprints: 5,100 distinct
+    // entries fit q=13, while the 10,000 input entries alone would ask for 14
+    val h = 34; val c = 6
+    val rng = new Random(4900)
+    val fps = Iterator.continually(rng.nextLong() & Bits.maskRight(h)).distinct.take(5100).toVector
+    val (left, right) = (fps.take(5000), fps.drop(100))
+    def filter(xs: Seq[Long]) = bulk(xs.map(_ -> 1L), 7, c, h)
+    val union = bulk(fps.take(100).map(_ -> 1L) ++ fps.slice(100, 5000).map(_ -> 2L) ++
+      fps.drop(5000).map(_ -> 1L), 7, c, h)
+    assert(union.quotientBits == 13)
+    assertTablesIdentical(BackpackFilter.mergeAll(Seq(filter(left), filter(right))), union, "mergeAll")
+    assertTablesIdentical(filter(left).mergeInPlace(filter(right)), union, "mergeInPlace")
+    // a small overlapping delta folds in incrementally, with the same bytes
+    val delta = fps.slice(4990, 5010)
+    val grown = bulk(fps.map(_ -> 1L) ++ delta.map(_ -> 1L), 7, c, h)
+    assertTablesIdentical(filter(fps).mergeInPlace(filter(delta)), grown, "incremental mergeInPlace")
+  }
+
+  test("a duplicate insert at the 95% cap does not grow the table") {
+    val h = 30
+    val cap = ((1L << 7) * 0.95).toLong // 121
+    val fps = (1L to cap - 1).map(i => Fingerprint.splitmix64(i) & Bits.maskRight(h))
+    val f = incremental(fps.map(_ -> 1L), 7, 5, h)
+    assert(f.quotientBits == 7 && f.distinctCount == cap - 1)
+    f.add(fps.head, 1L)
+    assert(f.quotientBits == 7 && f.abundance(fps.head) == 2L)
+    assertTablesIdentical(f, bulk((fps.head -> 1L) +: fps.map(_ -> 1L), 7, 5, h), "duplicate at cap")
+    f.add(Fingerprint.splitmix64(0L) & Bits.maskRight(h), 1L) // a new entry does grow it
+    assert(f.quotientBits == 8)
+  }
+
   test("fromEntries handles empty and single-entry inputs") {
     val e = BackpackFilter.fromEntries(7, 5, 20, CountMode.Exact, 0, 0, 0L,
       Array.emptyLongArray, Array.emptyLongArray, 0)
