@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * Output contract: stdout carries ONE compact JSON line (<= 1.5 KB — the
   * driver's tail capture truncated round 4's 3.4 KB line to unparseable);
   * the per-query map, per-phase GC, raw scaling sweeps and fp detail go to
-  * a detail JSON file (SPARK_GRAFT_DETAIL_PATH, default
-  * /root/repo/BENCH/DETAIL.json) and to stderr, both BEFORE the stdout line.
+  * a detail JSON file (SPARK_GRAFT_DETAIL_PATH, default BENCH/DETAIL.json
+  * under the working directory) and to stderr, both BEFORE the stdout line.
   */
 object Bench {
   private def session(cpus: Int): SparkSession = {
@@ -165,13 +165,14 @@ object Bench {
       // carries ONLY the headline fields — budget <= 1.5 KB. The 35-entry
       // per-query map, per-phase GC deltas, full scaling levels, and every
       // raw sweep go to the detail artifact: a written JSON file (default
-      // BENCH/DETAIL.json in the repo, committed per round as DETAIL_rN.json)
-      // AND stderr, both emitted BEFORE the stdout line so a combined-stream
-      // tail capture always ends with the parseable headline.
+      // BENCH/DETAIL.json under the working directory, committed per round
+      // as DETAIL_rN.json) AND stderr, both emitted BEFORE the stdout line
+      // so a combined-stream tail capture always ends with the parseable
+      // headline.
       val detailJson =
         s"""{"queries":$qs,"phase_gc_ms":$gcJson,"sf":"$sfDir","cpus":$cpus""" +
         (if (detailExtra.isEmpty) "" else detailExtra.mkString(",", ",", "")) + "}"
-      val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL_PATH", "/root/repo/BENCH/DETAIL.json")
+      val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL_PATH", "BENCH/DETAIL.json")
       def writeDetail(): Unit = {
         try {
           val p = java.nio.file.Paths.get(detailPath)

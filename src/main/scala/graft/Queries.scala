@@ -188,6 +188,7 @@ object Queries {
   /** Membership over a mixed present/absent probe set. */
   def q03BqfMembership(spark: SparkSession, dir: String): DataFrame = {
     val q = buildTextSketch(spark, dir)
+    // no spread() before this scan: measured and removed (OPTIMIZATION_r08 #12)
     val present = docs(spark, dir)
       .filter(col("doc_id") % 7 === 0 && length(col("text")) >= ShingleN)
       .select(col("text"), explode(sequence(lit(1), length(col("text")) - (ShingleN - 1))).as("u"))

@@ -1145,10 +1145,12 @@ object BackpackFilter {
     * `combine`: how to fold duplicate fingerprints' stored counts
     * (saturating add for exact, max for oom).
     *
-    * `counts == null` means ALL-ONES stored counts (the plain index build):
-    * the sort then moves keys only (half the radix memory traffic) and the
-    * combine run-length-counts duplicates — results identical to passing an
-    * explicit ones array.
+    * `counts == null` means every entry is ONE occurrence (the plain index
+    * build): each stores the encoded count 1 (`encodeCount(1)`: 1 exact, 0
+    * order-of-magnitude), exactly what `add(fp)` stores. The sort then
+    * moves keys only (half the radix memory traffic) and the combine folds
+    * duplicates as above — results identical to passing an explicit array
+    * of encoded ones.
     */
   def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
                   kTokens: Int, zTokens: Int, seed: Long,
@@ -1173,13 +1175,17 @@ object BackpackFilter {
 
     // 2. combine duplicate fingerprints
     val cMax = (1L << countBits) - 1
+    val one = mode match { // encodeCount(1)
+      case CountMode.Exact            => 1L
+      case CountMode.OrderOfMagnitude => 0L
+    }
     var w = 0
     i = 0
     while (i < n0) {
-      var c = if (allOnes) 1L else vals(i)
+      var c = if (allOnes) one else vals(i)
       var j = i + 1
       while (j < n0 && keys(j) == keys(i)) {
-        val cj = if (allOnes) 1L else vals(j)
+        val cj = if (allOnes) one else vals(j)
         c = mode match {
           case CountMode.Exact            => math.min(c + cj, cMax)
           case CountMode.OrderOfMagnitude => math.max(c, cj)

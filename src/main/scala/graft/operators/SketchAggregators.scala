@@ -53,8 +53,8 @@ final case class BqfParams(
 final class BqfShards(var live: BackpackFilter,
                       var pending: List[BackpackFilter]) extends Serializable
     with com.esotericsoftware.kryo.KryoSerializable {
-  // buffered entries; `counts == null` while every stored count is 1 (the
-  // keys-only sort of fromEntries). Kryo instantiates this class without
+  // buffered entries; `counts == null` while every entry is one occurrence
+  // (the keys-only sort of fromEntries). Kryo instantiates this class without
   // running the constructor, so `read` resets these fields itself.
   private var fps: Array[Long] = null
   private var counts: Array[Long] = null
@@ -71,7 +71,7 @@ final class BqfShards(var live: BackpackFilter,
   def addOnes(xs: Array[Long]): BqfShards = {
     reserve(xs.length)
     System.arraycopy(xs, 0, fps, n, xs.length)
-    if (counts != null) java.util.Arrays.fill(counts, n, n + xs.length, 1L)
+    if (counts != null) java.util.Arrays.fill(counts, n, n + xs.length, live.encodeCount(1L))
     n += xs.length
     if (n >= BqfShards.FlushAt) flush()
     this
@@ -82,7 +82,7 @@ final class BqfShards(var live: BackpackFilter,
     reserve(1)
     if (counts == null) {
       counts = new Array[Long](fps.length)
-      java.util.Arrays.fill(counts, 0, n, 1L)
+      java.util.Arrays.fill(counts, 0, n, live.encodeCount(1L))
     }
     fps(n) = fp
     counts(n) = stored

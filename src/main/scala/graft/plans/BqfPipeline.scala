@@ -91,7 +91,8 @@ object BqfPipeline {
       .toDF("bucket", "sketch")
   }
 
-  /** Map-side bucketizer of [[sortedBuild]]: groups each task's entries
+  /** Map-side bucketizer of [[sortedBuild]] and of
+    * [[graft.streaming.IndexIngest.ingestBatch]]: groups each task's entries
     * by destination bucket into (bucket, fingerprints, stored counts) chunk
     * rows; the counts array is null unless `counted`.
     *
@@ -103,7 +104,7 @@ object BqfPipeline {
     * fingerprint arrays (a null text/tokens row upstream) contribute
     * nothing, matching the old explode path's semantics.
     */
-  private def chunkByBucket(entries: Iterator[(Array[Long], Array[Long])], nBuckets: Int,
+  private[graft] def chunkByBucket(entries: Iterator[(Array[Long], Array[Long])], nBuckets: Int,
                             shift: Int, counted: Boolean): Iterator[(Long, Array[Long], Array[Long])] =
     new Iterator[(Long, Array[Long], Array[Long])] {
       private type Builder = scala.collection.mutable.ArrayBuilder.ofLong
@@ -182,7 +183,7 @@ object BqfPipeline {
     * possibly null for the all-ones build) into one contiguous pair of
     * arrays per bucket — plain arraycopies, no per-entry work.
     */
-  private def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
+  private[graft] def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
       : Iterator[(Long, Array[Long], Array[Long])] = {
     val chunks = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Long])]]

@@ -76,11 +76,12 @@ object StreamingOps {
 
   /** Continuous ingest of a fingerprint stream into a PERSISTED sharded BQF
     * index — the unbounded twin of [[graft.plans.BqfPipeline.buildIndexSorted]]:
-    * each micro-batch pre-aggregates its fingerprints, builds per-bucket
-    * partial sketches (buckets = fingerprint high bits, the same routing the
-    * batch index and its point queries use), merges them with the store's
-    * current shards, and appends the new shard versions tagged with the
-    * batch id.
+    * each micro-batch chunks its fingerprints map-side by bucket
+    * (fingerprint high bits, the same routing the batch index and its point
+    * queries use), one exchange brings every touched bucket's chunks
+    * together with its live shard, and each reduce task builds the bucket's
+    * batch partial, merges it into the live shard and appends the new shard
+    * version tagged with the batch id.
     *
     * Exactly-once: the streaming checkpoint replays an uncommitted batch
     * with the SAME batchId, and [[IndexIngest.ingestBatch]] skips a batchId
@@ -181,15 +182,12 @@ object IndexIngest {
       .groupBy("bucket").agg(max("batch_id").as("batch_id"))
       .select("batch_id").distinct().collect().map(_.getLong(0))
 
-  private def latestRows(store: DataFrame, liveIds: Array[Long]): DataFrame =
-    store.filter(col("batch_id").isin(liveIds.map(Long.box): _*))
+  private def latestRows(store: DataFrame): DataFrame =
+    store.filter(col("batch_id").isin(liveBatchIds(store).map(Long.box): _*))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("bucket")).orderBy(col("batch_id").desc)))
       .filter(col("__rn") === 1)
       .drop("__rn")
-
-  private def latestRows(store: DataFrame): DataFrame =
-    latestRows(store, liveBatchIds(store))
 
   /** Latest shard version per bucket — the live (bucket, sketch) index,
     * directly consumable by [[graft.plans.BqfPipeline.enumerateIndex]] and
@@ -203,11 +201,6 @@ object IndexIngest {
     latestRows(spark.read.parquet(storeDir))
       .select(col("bucket"), col("sketch"))
   }
-
-  /** Has `batchId` already committed to the store? (replay guard) */
-  def committed(spark: SparkSession, storeDir: String, batchId: Long): Boolean =
-    storeExists(spark, storeDir) &&
-      spark.read.parquet(storeDir).filter(col("batch_id") === batchId).head(1).nonEmpty
 
   /** Rewrite the store to only the LATEST version of each bucket (batch_id
     * preserved, so the replay guard still sees every committed id it needs:
@@ -227,7 +220,7 @@ object IndexIngest {
     // store renamed aside (complete — the aside rename happens only after
     // the tmp write commits, and a crash can strike between the two
     // renames). storeExists itself restores the aside — here and at every
-    // other store access (ingestBatch/currentShards/committed), so no
+    // other store access (ingestBatch/currentShards), so no
     // caller can start a fresh store on top of a recoverable one; the tmp
     // from the crashed run is discarded below like any other stale tmp.
     if (!storeExists(spark, storeDir)) return
@@ -264,6 +257,14 @@ object IndexIngest {
 
   /** Merge one batch of fingerprints (column `fp`) into the store. Safe to
     * replay: a batchId already in the store is a no-op.
+    *
+    * After the store metadata job, two jobs around one exchange. The map
+    * side chunks the batch by bucket with
+    * [[graft.plans.BqfPipeline.chunkByBucket]] (no exchange) and caches
+    * the chunks, whose buckets are collected as the touched set. The chunks
+    * and the touched buckets' live shard versions then meet in one shuffle
+    * by bucket, and each reduce task builds every bucket's batch partial
+    * and merges it with that bucket's latest version ([[mergeTouched]]).
     */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   params: graft.operators.BqfParams, nBuckets: Int,
@@ -288,11 +289,9 @@ object IndexIngest {
           "a mismatched ingest would corrupt the store silently")
     }
     // ONE store read and ONE driver-side metadata job serve both the replay
-    // guard and the live-shard file pruning (separate committed() +
-    // currentShards() calls would scan the store three times per
-    // micro-batch). The agg touches only the two tiny columns — parquet
-    // column pruning keeps the sketch blobs out of it — and its collect is
-    // bounded by nBuckets rows.
+    // guard and the live-shard file pruning. The agg touches only the two
+    // tiny columns — parquet column pruning keeps the sketch blobs out of
+    // it — and its collect is bounded by nBuckets rows.
     val meta =
       if (store == null) Array.empty[org.apache.spark.sql.Row]
       else store.groupBy("bucket").agg(
@@ -300,68 +299,107 @@ object IndexIngest {
         max(when(col("batch_id") === batchId, 1L).otherwise(0L)).as("seen")).collect()
     if (meta.exists(_.getLong(2) == 1L)) return // replay: batchId already committed
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    // pre-aggregate: the exchange carries one (fp, count) per distinct
-    // fingerprint per batch, and the counted UDAF builds each bucket's
-    // partial from those entries.
-    val bqf = graft.operators.SketchAggregators.bqfOverCountedFingerprints(params)
-    val partials = batch.select(col("fp"))
-      .groupBy("fp").agg(count(lit(1)).as("cnt"))
-      .withColumn("bucket", shiftrightunsigned(col("fp"), shift))
-      .groupBy("bucket").agg(bqf(col("fp"), col("cnt")).as("partial"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // TOUCHED-BUCKET pruning: the left-outer join below discards every live
-    // row whose bucket this batch doesn't touch, so restricting the live
-    // side up front is a pure optimization — and the one that matters at
-    // scale: without it each micro-batch reads the sketch blobs of the
-    // WHOLE live store (O(store) I/O per batch); with it only the touched
-    // buckets' blobs are scanned, and because every appended file (and the
-    // bucket-clustered compact output) carries tight bucket min/max footer
-    // stats, the literal isin skips untouched FILES entirely. Per-batch
-    // cost becomes O(batch + touched shards), independent of store width.
-    // The collect is bounded by nBuckets rows; the partials cache also
-    // feeds the join, so the aggregation runs once.
-    val touched = partials.select("bucket").as[Long].collect()
-    val touchedSet = touched.toSet
-    val liveIds = meta.collect {
-      case r if touchedSet.contains(r.getLong(0)) => r.getLong(1)
-    }.distinct
-    val live =
-      if (store == null)
-        spark.emptyDataFrame
-          .withColumn("bucket", lit(0L)).withColumn("sketch", lit(Array.empty[Byte]))
-          .limit(0)
-      else latestRows(store.filter(col("bucket").isin(touched.map(Long.box): _*)), liveIds)
-        .select(col("bucket"), col("sketch"))
-    val merged = partials
-      .join(live, Seq("bucket"), "left_outer")
-      .select(col("bucket"), col("partial"), col("sketch"))
-      .as[(Long, Array[Byte], Array[Byte])]
-      .map { case (bucket, partial, old) =>
-        val sketch =
-          if (old == null) partial
-          else {
-            // big absorbs small: steady-state batches are deltas against a
-            // much larger shard, and mergeInPlace folds the small side in
-            // incrementally — O(batch) per bucket, not O(store)
-            val a = BackpackFilter.deserialize(old)
-            val b = BackpackFilter.deserialize(partial)
-            (if (a.distinctCount >= b.distinctCount) a.mergeInPlace(b)
-             else b.mergeInPlace(a)).serialize()
-          }
-        (bucket, sketch)
+    // map side: one (bucket, fingerprints) chunk row per touched bucket per
+    // input task and 4M-fingerprint flush, cached so the touched-bucket
+    // collect and the merge job read the batch once
+    val chunks = batch.select(col("fp")).as[Long]
+      .mapPartitions { it =>
+        val blocks = it.grouped(1 << 16).map(g => (g.toArray, null: Array[Long]))
+        graft.plans.BqfPipeline.chunkByBucket(blocks, nBuckets, shift, counted = false)
+          .map { case (bucket, fps, _) => (bucket, fps) }
       }
-      .toDF("bucket", "sketch")
-      .withColumn("batch_id", lit(batchId))
-    // write unconditionally: a prior head(1) emptiness probe computed the
-    // full merge job (store scan, window dedup, sketch deserialize+merge)
-    // TWICE per micro-batch. An empty batch writes only parquet metadata,
-    // and the committed() guard already makes replays no-ops either way.
-    merged.write.mode("append").parquet(storeDir)
-    partials.unpersist(blocking = false)
+      .toDF("bucket", "fps")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // TOUCHED-BUCKET pruning: only the touched buckets' live shards take
+      // part in the merge, so the live-side scan is restricted to them up
+      // front. Without it each micro-batch reads the sketch blobs of the
+      // WHOLE live store (O(store) I/O per batch); with it only the touched
+      // buckets' blobs are scanned. Every ingest file holds one batch_id
+      // and the compact output is bucket-clustered, so the literal isin
+      // filters on both columns skip files by their footer min/max stats:
+      // per-batch cost is O(batch + touched shards), independent of store
+      // width. The collect is bounded by tasks x nBuckets rows.
+      val touched = chunks.select("bucket").as[Long].collect().distinct
+      val touchedSet = touched.toSet
+      val liveIds = meta.collect {
+        case r if touchedSet.contains(r.getLong(0)) => r.getLong(1)
+      }.distinct
+      val batchRows = chunks.select(col("bucket"), col("fps"),
+        lit(null).cast("binary").as("sketch"), lit(-1L).as("batch_id"))
+      val rows =
+        if (store == null) batchRows
+        else batchRows.union(store
+          .filter(col("bucket").isin(touched.map(Long.box): _*))
+          .filter(col("batch_id").isin(liveIds.map(Long.box): _*))
+          .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"),
+            col("sketch"), col("batch_id")))
+      // write unconditionally: an empty batch writes only parquet metadata,
+      // and the replay guard above makes replays no-ops either way
+      rows.repartition(col("bucket"))
+        .as[(Long, Array[Long], Array[Byte], Long)]
+        .mapPartitions(mergeTouched(_, params))
+        .toDF("bucket", "sketch")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(storeDir)
+    } finally chunks.unpersist(blocking = false)
     // same routing sidecar the CLI's build-index writes: it makes the
     // ingest store directly queryable by `graft.Cli query-index` (which
     // otherwise refuses to guess nBuckets) and guards against a future
     // ingest with mismatched routing.
     if (stored.isEmpty) graft.plans.IndexSidecar.write(spark, storeDir, sidecar)
+  }
+
+  /** One reduce task of [[ingestBatch]]. Its rows are batch chunks
+    * (bucket, fps, null, -1) and live shard versions (bucket, null, sketch,
+    * batch_id) of the same buckets; versions that share a surviving file's
+    * batch id can come along, so each bucket keeps its max-batch_id row.
+    * Every bucket with batch fingerprints gets its new shard version.
+    */
+  private def mergeTouched(rows: Iterator[(Long, Array[Long], Array[Byte], Long)],
+                           params: graft.operators.BqfParams): Iterator[(Long, Array[Byte])] = {
+    val latest = scala.collection.mutable.LongMap.empty[(Long, Array[Byte])]
+    val chunks = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Array[Long])]
+    rows.foreach { case (bucket, fps, sketch, id) =>
+      if (fps != null) chunks += ((bucket, fps, null))
+      else if (latest.get(bucket).forall(_._1 < id)) latest(bucket) = (id, sketch)
+    }
+    graft.plans.BqfPipeline.gatherChunks(chunks.iterator).map { case (bucket, fps, _) =>
+      val partial = batchPartial(fps, params)
+      val sketch = latest.get(bucket) match {
+        case None => partial
+        case Some((_, old)) =>
+          // big absorbs small: steady-state batches are deltas against a
+          // much larger shard, and mergeInPlace folds the small side in
+          // incrementally — O(batch) per bucket, not O(store)
+          val live = BackpackFilter.deserialize(old)
+          if (live.distinctCount >= partial.distinctCount) live.mergeInPlace(partial)
+          else partial.mergeInPlace(live)
+      }
+      (bucket, sketch.serialize())
+    }
+  }
+
+  /** One bucket's batch partial: each distinct fingerprint stores the
+    * encoded count of its occurrences in this batch (order-of-magnitude
+    * stores floor(log2) of the batch count, so batches combine by max of
+    * their own counts). Sorts `fps` in place.
+    */
+  private def batchPartial(fps: Array[Long], params: graft.operators.BqfParams): BackpackFilter = {
+    java.util.Arrays.sort(fps)
+    val codec = params.fresh()
+    val stored = new Array[Long](fps.length)
+    var n = 0
+    var i = 0
+    while (i < fps.length) {
+      var j = i + 1
+      while (j < fps.length && fps(j) == fps(i)) j += 1
+      fps(n) = fps(i)
+      stored(n) = codec.encodeCount(j - i)
+      n += 1
+      i = j
+    }
+    BackpackFilter.fromEntries(7, params.countBits, params.hashBits, params.mode,
+      params.kTokens, params.zTokens, params.seed, fps, stored, n)
   }
 }

@@ -80,6 +80,19 @@ class BulkBuildSpec extends AnyFunSuite {
     assertTablesIdentical(inc, blk, "oom")
   }
 
+  test("order-of-magnitude all-ones build == per-entry add: each occurrence stores encodeCount(1)") {
+    val h = 30
+    val rng = new Random(11)
+    val distinct = Iterator.continually(rng.nextLong() & Bits.maskRight(h)).distinct.take(200).toVector
+    val fps = (distinct ++ distinct.take(50) ++ distinct.take(10)).toArray // duplicates included
+    val inc = BackpackFilter(qBits = 7, countBits = 4, hashBits = h, mode = CountMode.OrderOfMagnitude)
+    fps.foreach(fp => inc.add(fp))
+    val blk = BackpackFilter.fromEntries(7, 4, h, CountMode.OrderOfMagnitude, inc.kTokens, inc.zTokens,
+      inc.seed, fps, null, fps.length)
+    assertTablesIdentical(inc, blk, "oom all-ones")
+    assert(distinct.forall(fp => blk.abundance(fp) == 1L))
+  }
+
   test("mergeAll == sequential mergeInPlace results (enumerate equality)") {
     val h = 34
     val rng = new Random(77)

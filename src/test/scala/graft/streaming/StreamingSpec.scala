@@ -330,6 +330,30 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
+  test("order-of-magnitude ingest: a batch stores its encoded count, batches merge by max") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 4, hashBits = 32,
+      mode = graft.core.CountMode.OrderOfMagnitude, kTokens = 8, zTokens = 0, seed = 0L)
+    val nBuckets = 4
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-oom").toString
+    val store = s"$tmp/idx"
+    val hot = graft.core.Fingerprint.splitmix64(7L) & 0xffffffffL
+    val others = (100L to 160L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
+    def live: Map[Long, Long] = graft.plans.BqfPipeline.enumerateIndex(
+        IndexIngest.currentShards(spark, store))
+      .as[(Long, Long)].collect().toMap
+    // batch 0: 100 occurrences answer 2^floor(log2 100) = 64, singletons 1
+    IndexIngest.ingestBatch((Seq.fill(100)(hot) ++ others).toDF("fp"), batchId = 0L,
+      params, nBuckets, store)
+    assert(live == (others.map(_ -> 1L) :+ (hot -> 64L)).toMap)
+    // batch 1: 3 more occurrences encode to 2 on their own; max(64, 2) = 64,
+    // and a repeated singleton reaches 2 through its own batch's count
+    IndexIngest.ingestBatch((Seq.fill(3)(hot) ++ Seq.fill(2)(others.head)).toDF("fp"), batchId = 1L,
+      params, nBuckets, store)
+    assert(live == (others.map(_ -> 1L) :+ (hot -> 64L) :+ (others.head -> 2L)).toMap)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("windowed streaming aggregation with watermark over events") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
