@@ -47,8 +47,9 @@ object BqfPipeline {
     * how the build survives 100 TB: Spark's shuffle machinery moves 8-byte
     * fingerprints; the sketch is only materialized once per shard.
     *
-    * Returns (bucket, serialized sketch) rows; `nBuckets` must be a power
-    * of two.
+    * Returns (bucket, serialized sketch) rows in ascending bucket order,
+    * in min(nBuckets, defaultParallelism) partitions of contiguous bucket
+    * ranges; `nBuckets` must be a power of two.
     */
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: BqfParams,
                        nBuckets: Int): DataFrame = {
@@ -66,6 +67,16 @@ object BqfPipeline {
     * chunks, and each reduce task gathers its buckets and builds every
     * shard with [[graft.core.BackpackFilter.fromEntries]].
     *
+    * Routing: with p = min(nBuckets, defaultParallelism) reduce tasks,
+    * bucket b goes to task b * p / nBuckets (integer division), so task t
+    * owns the contiguous buckets [t * nBuckets / p, (t+1) * nBuckets / p):
+    * balanced, none empty, one bucket-clustered output file each, and
+    * exactly one bucket per task when the cluster has nBuckets cores or
+    * more. A hash exchange of nBuckets ids into nBuckets partitions would
+    * collide instead (at 32 buckets on 4 cores: 12 empty tasks, several
+    * holding 2-3 shards, one file per non-empty task). Each task sorts its
+    * chunk rows by bucket, so [[gatherChunks]] holds one shard at a time.
+    *
     * Why chunks: a profile of the index build at 155M k-grams showed
     * fingerprint extraction itself costs ~2 s at 8 cores while shuffling
     * the fingerprints as individual rows cost ~21 s and re-reading them
@@ -80,10 +91,13 @@ object BqfPipeline {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = in.sparkSession
     import spark.implicits._
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    val log2 = java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    val shift = params.hashBits - log2
+    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
     in.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted))
       .toDF("bucket", "fps", "stored")
-      .repartition(nBuckets, col("bucket"))
+      .repartitionById(p, shiftright(col("bucket") * p, log2).cast("int")) // bucket * p / nBuckets
+      .sortWithinPartitions("bucket")
       .as[(Long, Array[Long], Array[Long])]
       .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
         (bucket, buildShard(fps, stored, params))
@@ -168,49 +182,55 @@ object BqfPipeline {
       override def next(): (Long, Array[Long], Array[Long]) = { fill(); queue.dequeue() }
     }
 
-  /** Reduce-task memory guard: a shard build gathers its whole shard
-    * (~16 B per fingerprint + radix buffers), so an under-sharded huge
-    * corpus would OOM the executor mid-stage with no hint. Fail FAST with
-    * the actionable fix instead (measured on the 620 M-k-gram run: 128
-    * shards x 32 tasks broke an 8 GiB heap; 256 x 16 built fine). The cap
-    * is a per-task fingerprint budget, overridable via the
-    * `graft.maxShardFps` system property.
+  /** Shard memory guard: a shard build gathers its whole shard (~16 B per
+    * fingerprint + radix buffers), so an under-sharded huge corpus would
+    * OOM the executor mid-stage with no hint. Fail FAST with the actionable
+    * fix instead. Since a reduce task gathers its buckets one at a time,
+    * the cap bounds ONE shard, whatever the number of buckets a task owns;
+    * overridable via the `graft.maxShardFps` system property.
     */
   private def maxShardFps: Long =
     java.lang.Long.getLong("graft.maxShardFps", 96L << 20) // ~1.5 GB gathered
 
   /** Concatenate per-bucket chunk rows ((bucket, fps, stored?) with stored
-    * possibly null for the all-ones build) into one contiguous pair of
-    * arrays per bucket — plain arraycopies, no per-entry work.
+    * possibly null for the all-ones build), which must arrive sorted by
+    * bucket, into one contiguous pair of arrays per bucket — plain
+    * arraycopies, no per-entry work. Streams: a bucket is emitted as soon
+    * as the next bucket's first row arrives, so only one shard is held.
     */
   private[graft] def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
-      : Iterator[(Long, Array[Long], Array[Long])] = {
-    val chunks = scala.collection.mutable.LongMap
-      .empty[scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Long])]]
-    var gathered = 0L
-    val cap = maxShardFps
-    it.foreach { case (b, fps, stored) =>
-      gathered += fps.length
-      if (gathered > cap) throw new IllegalStateException(
-        s"shard gather exceeds $cap fingerprints in one task — the corpus is " +
-        "under-sharded for this executor memory; raise nBuckets (shard size = " +
-        "total fingerprints / nBuckets must fit task memory at ~16 B each) or " +
-        "-Dgraft.maxShardFps to raise the guard")
-      chunks.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += ((fps, stored))
-    }
-    chunks.iterator.map { case (bucket, parts) =>
-      val n = parts.iterator.map(_._1.length).sum
-      val fps = new Array[Long](n)
-      val stored = if (parts.head._2 == null) null else new Array[Long](n)
-      var off = 0
-      parts.foreach { case (f, s) =>
-        System.arraycopy(f, 0, fps, off, f.length)
-        if (stored != null) System.arraycopy(s, 0, stored, off, s.length)
-        off += f.length
+      : Iterator[(Long, Array[Long], Array[Long])] =
+    new Iterator[(Long, Array[Long], Array[Long])] {
+      private val in = it.buffered
+      private val cap = maxShardFps
+      override def hasNext: Boolean = in.hasNext
+      override def next(): (Long, Array[Long], Array[Long]) = {
+        val bucket = in.head._1
+        val parts = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Array[Long])]
+        var n = 0L
+        while (in.hasNext && in.head._1 == bucket) {
+          val (_, f, s) = in.next()
+          n += f.length
+          if (n > cap) throw new IllegalStateException(
+            s"shard $bucket exceeds $cap fingerprints — the corpus is under-sharded " +
+            "for this executor memory; raise nBuckets (shard size = total " +
+            "fingerprints / nBuckets must fit task memory at ~16 B each) or " +
+            "-Dgraft.maxShardFps to raise the guard")
+          parts += ((f, s))
+        }
+        if (in.hasNext && in.head._1 < bucket) throw new IllegalStateException(
+          s"chunk rows out of bucket order (${in.head._1} after $bucket)")
+        val fps = new Array[Long](n.toInt)
+        val stored = if (parts.head._2 == null) null else new Array[Long](fps.length)
+        var off = 0
+        parts.foreach { case (f, s) =>
+          System.arraycopy(f, 0, fps, off, f.length)
+          if (stored != null) System.arraycopy(s, 0, stored, off, s.length)
+          off += f.length
+        }
+        (bucket, fps, stored)
       }
-      (bucket, fps, stored)
     }
-  }
 
   private def buildShard(fps: Array[Long], stored: Array[Long], params: BqfParams): Array[Byte] =
     graft.core.BackpackFilter.fromEntries(

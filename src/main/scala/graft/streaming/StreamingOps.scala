@@ -354,7 +354,8 @@ object IndexIngest {
     * (bucket, fps, null, -1) and live shard versions (bucket, null, sketch,
     * batch_id) of the same buckets; versions that share a surviving file's
     * batch id can come along, so each bucket keeps its max-batch_id row.
-    * Every bucket with batch fingerprints gets its new shard version.
+    * Every bucket with batch fingerprints gets its new shard version; the
+    * few buffered chunk rows are sorted by bucket for the streaming gather.
     */
   private def mergeTouched(rows: Iterator[(Long, Array[Long], Array[Byte], Long)],
                            params: graft.operators.BqfParams): Iterator[(Long, Array[Byte])] = {
@@ -364,7 +365,7 @@ object IndexIngest {
       if (fps != null) chunks += ((bucket, fps, null))
       else if (latest.get(bucket).forall(_._1 < id)) latest(bucket) = (id, sketch)
     }
-    graft.plans.BqfPipeline.gatherChunks(chunks.iterator).map { case (bucket, fps, _) =>
+    graft.plans.BqfPipeline.gatherChunks(chunks.sortInPlaceBy(_._1).iterator).map { case (bucket, fps, _) =>
       val partial = batchPartial(fps, params)
       val sketch = latest.get(bucket) match {
         case None => partial

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The distributed re-shard merge must be a pure repartitioning of sketch
   * contents: every (fingerprint, abundance) entry survives verbatim, output
   * shards nest by fingerprint-range prefix, and collapsing to one shard is
-  * value-identical to the serial treeMerge blob.
+  * value-identical to the serial treeMerge blob. The sorted build routes
+  * contiguous bucket ranges to min(nBuckets, cores) tasks and gathers one
+  * shard at a time.
   */
 class ReshardMergeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -72,5 +74,41 @@ class ReshardMergeSpec extends AnyFunSuite {
     val viaTree = BackpackFilter.deserialize(BqfPipeline.treeMerge(i16, 16, 4)).enumerate()
     assert(viaReshard == viaTree)
     i16.unpersist()
+  }
+
+  test("sorted build routes contiguous bucket ranges to min(nBuckets, cores) tasks") {
+    val df = TokensTable.dataframe(spark, 300, partitions = 4)
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val shards = BqfPipeline.buildIndexSorted(df, fps, params, 32).rdd
+    assert(shards.getNumPartitions == 4)
+    val byTask = shards
+      .mapPartitionsWithIndex((t, rows) => Iterator(t -> rows.map(_.getLong(0)).toVector))
+      .collect().sortBy(_._1).map(_._2)
+    // task t owns buckets [8t, 8t + 8), ascending, and no bucket twice
+    for ((buckets, t) <- byTask.zipWithIndex)
+      assert(buckets == (8L * t until 8L * (t + 1)), s"task $t")
+    for (n <- Seq(2, 1))
+      assert(BqfPipeline.buildIndexSorted(df, fps, params, n).rdd.getNumPartitions == n, s"nBuckets=$n")
+  }
+
+  test("the gather's memory guard bounds one shard, not one task") {
+    def chunks(sizes: (Long, Int)*) = sizes.iterator.map { case (b, n) =>
+      (b, Array.tabulate(n)(i => (b << 40) | i.toLong), null: Array[Long])
+    }
+    val key = "graft.maxShardFps"
+    val saved = System.getProperty(key)
+    System.setProperty(key, "100")
+    try {
+      // 3 x 80 fingerprints: each shard under the cap, the task over it
+      val shards = BqfPipeline.gatherChunks(chunks(0L -> 50, 0L -> 30, 1L -> 80, 2L -> 40, 2L -> 40)).toList
+      assert(shards.map(s => (s._1, s._2.length)) == List(0L -> 80, 1L -> 80, 2L -> 80))
+      assert(shards.head._2.toSeq == (0 until 50).map(_.toLong) ++ (0 until 30).map(_.toLong))
+      val e = intercept[IllegalStateException](
+        BqfPipeline.gatherChunks(chunks(0L -> 80, 1L -> 60, 1L -> 60)).toList)
+      assert(e.getMessage.contains("raise nBuckets"))
+    } finally {
+      if (saved == null) System.clearProperty(key) else System.setProperty(key, saved)
+    }
   }
 }
