@@ -87,7 +87,7 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1620").toDouble
     def remainingSec(): Double = budgetSec - (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = SparkEntry.cpus
     val benchRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "200000").toLong
     val nBuckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "128").toInt
     val phases = sys.env.getOrElse("SPARK_GRAFT_PHASES",

@@ -56,9 +56,9 @@ object Cli {
     val verb = args.head
     val opts = parseArgs(args.tail)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${SparkEntry.cpus}]"))
       .appName(s"graft-$verb")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.kryoserializer.buffer.max", "512m")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
@@ -76,9 +76,8 @@ object Cli {
       case "build" =>
         val df = spark.read.parquet(opts("-i"))
         val t0 = System.nanoTime()
-        val bytes = BqfPipeline.buildSharded(df,
-          sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
-          col("doc_id"), params, nBuckets = 64)
+        val bytes = BqfPipeline.buildGlobal(df,
+          sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed), params)
         BackpackFilter.saveToFile(BackpackFilter.deserialize(bytes), opts("-o"))
         println(s"Construction time = ${(System.nanoTime() - t0) / 1000000}ms " +
           s"(${BackpackFilter.deserialize(bytes).distinctCount} distinct s-grams)")

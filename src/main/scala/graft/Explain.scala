@@ -14,9 +14,9 @@ object Explain {
     val name = if (args.nonEmpty) args(0) else "entry"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .master(s"local[${SparkEntry.cpus}]")
       .appName(s"graft-explain-$name")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.kryoserializer.buffer.max", "512m")

@@ -15,8 +15,8 @@ object ProfileQuery {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.kryoserializer.buffer.max", "512m")

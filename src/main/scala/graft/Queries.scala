@@ -56,7 +56,7 @@ object Queries {
        |  SELECT doc_id, text, unnest(generate_series(1, length(text)-${n - 1}))::INT AS u
        |  FROM documents WHERE length(text) >= $n)""".stripMargin
 
-  /** JVM-wide cache of built sketch blobs, keyed on (input dir, params):
+  /** JVM-wide cache of built sketch blobs, keyed on (input files, params):
     * catalog entries stay self-contained (any entry run alone still builds
     * what it needs) while a full catalog pass stops rebuilding the same text
     * sketch for q01/q02/q03 — the catalog then measures query cost, not
@@ -65,13 +65,30 @@ object Queries {
     */
   private val sketchCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
 
+  /** The cache-key form of an input dir: the dir plus a digest of every
+    * leaf file's (path, length, mtime), so a dir rewritten with another
+    * corpus gets a new key instead of the results of its old files.
+    */
+  private def dirKey(spark: SparkSession, dir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def walk(p: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(p).sortBy(_.getPath.toString).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else md.update(s"${st.getPath}|${st.getLen}|${st.getModificationTime}\n".getBytes("UTF-8"))
+      }
+    walk(root)
+    s"$dir@${md.digest().take(8).map(b => f"$b%02x").mkString}"
+  }
+
   /** Build the text-shingle BQF for a scale dir and return a query handle:
-    * the cached sorted index shards folded in one merge level, the same
-    * blob [[BqfPipeline.buildGlobal]] builds.
+    * the cached sorted index shards folded by [[BqfPipeline.mergeShards]],
+    * the same blob [[BqfPipeline.buildGlobal]] builds.
     */
   def buildTextSketch(spark: SparkSession, dir: String): BqfQuery = {
-    val bytes = sketchCache.computeIfAbsent(s"text|$dir|$TextParams|$ShingleN", _ =>
-      BqfPipeline.treeMerge(textShards(spark, dir), 32, fanout = 32))
+    val bytes = sketchCache.computeIfAbsent(s"text|${dirKey(spark, dir)}|$TextParams|$ShingleN", _ =>
+      BqfPipeline.mergeShards(textShards(spark, dir)))
     new BqfQuery(spark, bytes)
   }
 
@@ -83,7 +100,7 @@ object Queries {
     * indistinguishable from a rebuild — same rationale as [[shingleDict]].
     */
   private def textShards(spark: SparkSession, dir: String): DataFrame =
-    sessionCached(spark, s"textshards|$dir|$TextParams|$ShingleN") {
+    sessionCached(spark, s"textshards|${dirKey(spark, dir)}|$TextParams|$ShingleN") {
       val fps = shingle_fingerprints(col("text"), ShingleN, TextParams.hashBits, TextParams.seed)
       BqfPipeline.buildIndexSorted(
         spread(docs(spark, dir)).filter(length(col("text")) >= ShingleN), fps, TextParams, nBuckets = 32)
@@ -134,7 +151,7 @@ object Queries {
     * (the standard shared-scan materialization, same at 1000 executors).
     */
   private def shingleDict(spark: SparkSession, dir: String): DataFrame =
-    sessionCached(spark, s"dict|$dir|$ShingleN") {
+    sessionCached(spark, s"dict|${dirKey(spark, dir)}|$ShingleN") {
       // dedup keyed on the 8-byte kernel fingerprint with the string riding
       // as first(shingle) (r8): the aggregation hash table and the exchange
       // then key on longs instead of 8-char strings — the map-side partial
@@ -162,7 +179,7 @@ object Queries {
     * same immutable files through their own fresh checkpoints/stores.
     */
   private def stagedTextDir(spark: SparkSession, dir: String): String =
-    sessionCached(spark, s"staged|$dir|$ShingleN") {
+    sessionCached(spark, s"staged|${dirKey(spark, dir)}|$ShingleN") {
       val inDir = java.nio.file.Files.createTempDirectory("graft-stage").toString + "/in"
       docs(spark, dir).filter(length(col("text")) >= ShingleN)
         .select("text").repartition(2).write.parquet(inDir)
@@ -271,7 +288,7 @@ object Queries {
     * asserted by the two-sf no-broadcast A/B in SparkE2ESpec.
     */
   private def q05RareShingles(spark: SparkSession, dir: String): DataFrame =
-    sessionCached(spark, s"q05rare|$dir") {
+    sessionCached(spark, s"q05rare|${dirKey(spark, dir)}") {
       val sh = spread(docs(spark, dir)).filter(length(col("text")) >= 12)
         .select(col("doc_id"),
           explode(shingle_fingerprints(col("text"), 12, 64, 0L)).as("s")).distinct()
@@ -292,7 +309,7 @@ object Queries {
     // cost, and the self-join below otherwise re-runs it for EACH side
     // (and the recall audit re-runs the whole entry right after the
     // catalog pass). ~(8 + 64*8) B/doc — far smaller than the corpus.
-    val sig = sessionCached(spark, s"q06sig|$dir") {
+    val sig = sessionCached(spark, s"q06sig|${dirKey(spark, dir)}") {
       spread(docs(spark, dir))
         .select(col("doc_id"), minhash_signature(col("text"), 12, 64, 0L).as("sig"))
         .localCheckpoint()
@@ -517,7 +534,7 @@ object Queries {
     // side, re-rank side): without it each side re-reads the parquet and
     // re-runs the 64-plane signature kernel — the dominant per-row cost —
     // and the recall audit re-runs the whole entry right after the catalog
-    val emb = sessionCached(spark, s"q18emb|$dir") {
+    val emb = sessionCached(spark, s"q18emb|${dirKey(spark, dir)}") {
       spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"),
           sqrt(float_dot(col("embedding"), col("embedding"))).as("nrm"),
@@ -606,7 +623,7 @@ object Queries {
     // assignment materialized once (session-cached): probes and the
     // assigned side both consume it, and the recall audit re-runs the
     // entry right after the catalog pass
-    val base = sessionCached(spark, s"q24base|$dir") {
+    val base = sessionCached(spark, s"q24base|${dirKey(spark, dir)}") {
       emb.select(col("vec_id"), col("embedding"),
         sqrt(float_dot(col("embedding"), col("embedding"))).as("nrm"), cellStructs.as("cs"))
         .localCheckpoint()
@@ -730,7 +747,7 @@ object Queries {
   def q25OomAbundance(spark: SparkSession, dir: String): DataFrame = {
     val OomParams = BqfParams(qBits = 15, countBits = 6, hashBits = 48,
       mode = graft.core.CountMode.OrderOfMagnitude, kTokens = 8, zTokens = 0, seed = 0L)
-    val bytes = sketchCache.computeIfAbsent(s"oom|$dir|$OomParams|$ShingleN", _ => {
+    val bytes = sketchCache.computeIfAbsent(s"oom|${dirKey(spark, dir)}|$OomParams|$ShingleN", _ => {
       // hash BEFORE the count: the exchange moves 8-byte fingerprints, not
       // shingle strings (fp<->shingle is 1:1 at 48 bits and these
       // cardinalities, so per-fp counts == per-shingle counts)
@@ -1067,7 +1084,7 @@ object Queries {
     * false positives on these probe cardinalities vanishingly unlikely.
     */
   def q34Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val bytes = sketchCache.computeIfAbsent(s"decon|$dir|$TextParams|$ShingleN", _ => {
+    val bytes = sketchCache.computeIfAbsent(s"decon|${dirKey(spark, dir)}|$TextParams|$ShingleN", _ => {
       val fps = shingle_fingerprints(col("text"), ShingleN, TextParams.hashBits, TextParams.seed)
       BqfPipeline.buildGlobal(
         spread(docs(spark, dir)).filter(col("doc_id") % 13 === 0 && length(col("text")) >= ShingleN),

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object RecallAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = SparkEntry.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-recall")

@@ -22,4 +22,10 @@ object SparkEntry {
     * families replayed in closed form), carries a hash-exact oracle.
     */
   def oracleSql: Map[String, String] = Queries.oracles
+
+  /** Cores of the mains' `local[n]` sessions: `SPARK_GRAFT_CPUS`, else
+    * every core the JVM sees.
+    */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 }

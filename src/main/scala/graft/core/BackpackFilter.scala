@@ -1298,7 +1298,7 @@ object BackpackFilter {
   }
 
   /** Merge many filters into a fresh one via the bulk path: O(total) gather
-    * + sort + single-pass build. This is what shuffle-boundary tree merges
+    * + sort + single-pass build. This is what shuffle-boundary merges
     * use — per-entry insert cost independent of load factor. q follows
     * [[fromEntries]]' rule with the inputs' largest q as the floor; the sum
     * of input counts only guesses the sort quotient, so disjoint inputs

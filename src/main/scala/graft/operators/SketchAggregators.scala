@@ -46,9 +46,9 @@ final case class BqfParams(
   * filters merged in from other partials. The buffer flushes through
   * [[BackpackFilter.fromEntries]] every [[BqfShards.FlushAt]] entries, so
   * task heap stays bounded; `pending` folds in ONE k-way bulk merge, and
-  * `cap` bounds how many built filters wait for it. No path inserts per
-  * row, so the result depends only on the entries, never on how Spark
-  * split them.
+  * [[BqfShards.MergeCap]] bounds how many built filters wait for it. No
+  * path inserts per row, so the result depends only on the entries, never
+  * on how Spark split them.
   */
 final class BqfShards(var live: BackpackFilter,
                       var pending: List[BackpackFilter]) extends Serializable
@@ -104,18 +104,18 @@ final class BqfShards(var live: BackpackFilter,
     fps = null; counts = null; n = 0
   }
 
-  def absorb(other: BqfShards, cap: Int = 16): BqfShards = {
+  def absorb(other: BqfShards): BqfShards = {
     other.flush()
     if (other.live != null) push(other.live)
     other.pending.foreach(push)
-    if (pending.size >= cap) consolidate()
+    if (pending.size >= BqfShards.MergeCap) consolidate()
     this
   }
 
   /** Add one built shard (the merge aggregator's input). */
-  def absorbShard(f: BackpackFilter, cap: Int): BqfShards = {
+  def absorbShard(f: BackpackFilter): BqfShards = {
     push(f)
-    if (pending.size >= cap) consolidate()
+    if (pending.size >= BqfShards.MergeCap) consolidate()
     this
   }
 
@@ -159,6 +159,13 @@ object BqfShards {
     * index build's map-side chunker uses.
     */
   final val FlushAt = 4 << 20
+
+  /** Built filters waiting before a consolidating bulk merge: a 32-shard
+    * index folds in ONE `mergeAll` instead of two partial passes. The
+    * shards all reach the merging task regardless, so the cap sets the
+    * number of folds, not the memory order.
+    */
+  final val MergeCap = 32
 }
 
 /** The central mergeable UDAF of the library: each partition's fingerprint
@@ -196,21 +203,15 @@ class BqfCountedAggregator(params: BqfParams)
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 
-/** Merges already-serialized shard sketches (tree-merge / checkpoint resume
-  * stages). Null live filter until the first shard arrives.
+/** Merges already-serialized shard sketches (the one-blob fold of
+  * `BqfPipeline.mergeShards`, per-source merges). The live filter stays
+  * null until the first shard arrives, so a merge of no rows is null.
   */
-/** `cap` bounds how many deserialized shards are buffered before a
-  * consolidating bulk merge. A merge of exactly `width` blobs should pass
-  * cap >= width so the entries are gathered and sorted ONCE instead of in
-  * two partial passes — the blobs all arrive at the reducer regardless, so
-  * the cap changes fold count, not the memory order.
-  */
-class BqfMergeAggregator(cap: Int = 16)
-    extends Aggregator[Array[Byte], BqfShards, Array[Byte]] {
+class BqfMergeAggregator extends Aggregator[Array[Byte], BqfShards, Array[Byte]] {
   override def zero: BqfShards = new BqfShards(null, Nil)
   override def reduce(b: BqfShards, bytes: Array[Byte]): BqfShards =
-    b.absorbShard(BackpackFilter.deserialize(bytes), cap)
-  override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b, cap)
+    b.absorbShard(BackpackFilter.deserialize(bytes))
+  override def merge(a: BqfShards, b: BqfShards): BqfShards = a.absorb(b)
   override def finish(r: BqfShards): Array[Byte] =
     if (r.live == null) null else r.result()
   override def bufferEncoder: Encoder[BqfShards] = Encoders.kryo[BqfShards]
@@ -295,8 +296,7 @@ object SketchAggregators {
   def bqfOverCountedFingerprints(params: BqfParams): UserDefinedFunction =
     udaf(new BqfCountedAggregator(params), longPairEnc)
 
-  def bqfMerge(cap: Int = 16): UserDefinedFunction =
-    udaf(new BqfMergeAggregator(cap), Encoders.BINARY)
+  def bqfMerge: UserDefinedFunction = udaf(new BqfMergeAggregator, Encoders.BINARY)
 
   def hllOverFingerprintArrays(p: Int = 14, rehash: Boolean = true): UserDefinedFunction =
     udaf(new HllArrayAggregator(p, rehash), longArrayEnc)

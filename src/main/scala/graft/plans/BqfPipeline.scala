@@ -6,38 +6,40 @@ import org.apache.spark.sql.functions._
 
 /** Distributed build plans for BQF sketches.
   *
-  * Scale design (100 TB / 1000 executors): per-partition partial sketches are
-  * produced by Catalyst's partial aggregation (ObjectHashAggregate keeps the
-  * filter as a JVM object per group); only serialized sketch blobs cross
-  * shuffle boundaries. The sharded path buckets rows by a deterministic
-  * xxhash64 of the row id, so shard membership is independent of Spark's
-  * physical partitioning — the property that makes checkpoints resumable and
-  * replays idempotent. Hot `source` values are handled by salt fan-out
-  * before the per-source merge (two-level aggregation), and wide merges fold
-  * through a bounded-fanout tree so no single reducer receives all blobs.
+  * Scale design (100 TB / 1000 executors): only serialized sketch blobs
+  * and map-side fingerprint chunks cross shuffle boundaries. One sorted
+  * plan ([[sortedBuild]]) builds every fingerprint-range sharded index, and
+  * every one-blob build is that index folded by [[mergeShards]]: one global
+  * merge aggregation whose partial step folds each input task's shards
+  * map-side, so the final task sees one buffer per input partition. The
+  * keyed producers bucket rows by a deterministic xxhash64 of the row id
+  * (checkpoint resume) or fan hot `source` values out over salts before
+  * the per-source merge (two-level aggregation).
+  *
+  * Scale ceilings: one sketch holds at most `Int.MaxValue - 8` entries
+  * ([[graft.core.BackpackFilter.mergeAll]]); a one-blob build ends in one
+  * merge task and then the driver, so it suits sketches that fit one task
+  * and a broadcast; beyond that, [[buildIndexSorted]] and
+  * [[reshardMerge]] keep the index sharded and every level parallel; the
+  * `graft.maxShardFps` guard bounds one shard of the sorted plan.
   */
 object BqfPipeline {
 
   /** One-shot global build: fingerprint arrays -> single serialized sketch,
-    * as the 32-shard sorted index folded in one merge level. An empty input
+    * the 32-shard sorted index folded by [[mergeShards]]. An empty input
     * gives the empty q=7 sketch.
     */
   def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] =
-    Option(treeMerge(buildIndexSorted(df, fpCol, params, 32), 32, 32))
+    Option(mergeShards(buildIndexSorted(df, fpCol, params, 32)))
       .getOrElse(params.fresh().serialize())
 
-  /** Deterministic-bucket sharded build with bounded-fanout tree merge.
-    * `idCol` must be a stable row identifier (e.g. doc_id).
+  /** The blob of [[buildGlobal]], which it forwards to: the layout is
+    * canonical, so bucketing rows by `idCol` first never changed a byte.
+    * `idCol` and `nBuckets` are ignored.
     */
+  @deprecated("use buildGlobal; idCol and nBuckets are ignored", "0.1.0")
   def buildSharded(df: DataFrame, fpCol: Column, idCol: Column, params: BqfParams,
-                   nBuckets: Int, fanout: Int = 16): Array[Byte] = {
-    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    val shards = df
-      .withColumn("bucket", pmod(xxhash64(idCol), lit(nBuckets)))
-      .groupBy(col("bucket"))
-      .agg(bqf(fpCol).as("sketch"))
-    treeMerge(shards, nBuckets, fanout)
-  }
+                   nBuckets: Int): Array[Byte] = buildGlobal(df, fpCol, params)
 
   /** Scale-path index build: shuffle fingerprints to fingerprint-range
     * buckets (high bits, so quotients inside each shard stay uniform), and
@@ -240,9 +242,9 @@ object BqfPipeline {
   /** Distributed merge / re-shard: every input task reads its shard
     * sketches' raw (fingerprint, storedCount) entries, and the same sorted
     * build as [[buildIndexSorted]] routes them to `nOut` fingerprint-range
-    * buckets and bulk-rebuilds one sketch per output bucket. This is the scale form of the final merge
-    * level: where [[treeMerge]] ends in one serial reducer producing a
-    * driver blob, reshardMerge's last level is `nOut` independent O(n)
+    * buckets and bulk-rebuilds one sketch per output bucket. This is the
+    * scale form of the merge: where [[mergeShards]] ends in one task
+    * producing a driver blob, reshardMerge ends in `nOut` independent O(n)
     * sorted builds, so merge wall time scales with cores. Output bucket b
     * of nOut is exactly the merge of input shards covering that fingerprint
     * range (high-bit prefix nesting), regardless of how the inputs were
@@ -314,22 +316,15 @@ object BqfPipeline {
     }.toDF("fp", "abundance")
   }
 
-  /** Fold (bucket, sketch) rows into one sketch through a merge tree with
-    * bounded fanout, so the final reducer never sees more than `fanout`
-    * blobs per level.
+  /** Fold the `sketch` column of any shard rows into one serialized
+    * sketch (null for no rows) with one global [[SketchAggregators.bqfMerge]]
+    * aggregation. Spark's partial aggregation folds each input task's
+    * shards map-side, so the one final task merges at most one buffer per
+    * input partition; the result is the same bytes however the rows were
+    * sharded or partitioned.
     */
-  def treeMerge(shards0: DataFrame, width0: Int, fanout: Int): Array[Byte] = {
-    val merge = SketchAggregators.bqfMerge(cap = math.max(16, fanout))
-    var shards = shards0
-    var width = width0
-    while (width > fanout) {
-      width = (width + fanout - 1) / fanout
-      shards = shards
-        .groupBy(pmod(col("bucket"), lit(width)).as("bucket"))
-        .agg(merge(col("sketch")).as("sketch"))
-    }
-    shards.agg(merge(col("sketch")).as("sketch")).head().getAs[Array[Byte]](0)
-  }
+  def mergeShards(shards: DataFrame): Array[Byte] =
+    shards.agg(SketchAggregators.bqfMerge(col("sketch"))).head().getAs[Array[Byte]](0)
 
   /** Two-level skew-safe per-source build: hot `source` values fan out over
     * `salts` deterministic salt buckets before the per-source merge, so no
@@ -338,7 +333,7 @@ object BqfPipeline {
   def buildPerSource(df: DataFrame, fpCol: Column, idCol: Column, sourceCol: Column,
                      params: BqfParams, salts: Int = 8): DataFrame = {
     val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    val merge = SketchAggregators.bqfMerge()
+    val merge = SketchAggregators.bqfMerge
     df.withColumn("__salt", pmod(xxhash64(idCol), lit(salts)))
       .groupBy(sourceCol.as("source"), col("__salt"))
       .agg(bqf(fpCol).as("partial"))
@@ -403,8 +398,6 @@ object CheckpointedBuild {
   }
 
   /** Merge all committed shards into the final sketch. */
-  def result(spark: SparkSession, dir: String, nBuckets: Int, fanout: Int = 16): Array[Byte] = {
-    val shards = spark.read.parquet(dir).select("bucket", "sketch")
-    BqfPipeline.treeMerge(shards, nBuckets, fanout)
-  }
+  def result(spark: SparkSession, dir: String): Array[Byte] =
+    BqfPipeline.mergeShards(spark.read.parquet(dir))
 }

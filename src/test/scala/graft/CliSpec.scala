@@ -38,6 +38,22 @@ class CliSpec extends AnyFunSuite {
     assert(res.filter(col("presence_ratio") < 1.0).count() == 0)
   }
 
+  test("build writes buildGlobal's bytes in buildGlobal's stages") {
+    val in = s"$dir/tokens.parquet"
+    val out = s"$dir/identity.bqf"
+    // Cli's flags below; hashBits 48 and seed 0 are its defaults
+    val params = graft.operators.BqfParams(qBits = 14, countBits = 8, kTokens = 8, zTokens = 2)
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    val (want, globalStages) = SparkTestSession.stagesOf(
+      graft.plans.BqfPipeline.buildGlobal(spark.read.parquet(in), fps, params))
+    val (_, cliStages) = SparkTestSession.stagesOf(
+      Cli.main(Array("build", "-i", in, "-o", out, "-q", "14", "-c", "8", "-k", "8", "-z", "2")))
+    assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)).sameElements(want),
+      "Cli build file != buildGlobal bytes")
+    assert(cliStages.map(_.numTasks) == globalStages.map(_.numTasks),
+      s"Cli build stages ${cliStages.map(_.numTasks)} vs buildGlobal ${globalStages.map(_.numTasks)}")
+  }
+
   test("query text surface: plain + FASTA inputs emit reference-format stat lines") {
     // the reference's query verb is text-in/text-out: SequenceN lines with
     // (min, max, average, presence ratio) per input sequence

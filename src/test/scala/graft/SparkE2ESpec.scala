@@ -58,13 +58,18 @@ class SparkE2ESpec extends AnyFunSuite {
       "order-of-magnitude counted build depends on partitioning")
   }
 
-  test("sharded tree-merge build equals global build") {
+  test("mergeShards of 64 UDAF shards == global build") {
+    // id-bucketed shards overlap in fingerprint range, and 64 partitions
+    // hand the one merge task more inputs than a 32-shard index does
     val df = TokensTable.dataframe(spark, 400, partitions = 4)
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
-    val global = BackpackFilter.deserialize(BqfPipeline.buildGlobal(df, fps, params))
-    val sharded = BackpackFilter.deserialize(
-      BqfPipeline.buildSharded(df, fps, col("doc_id"), params, nBuckets = 64, fanout = 4))
-    assert(sharded.enumerate() == global.enumerate())
+    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
+    val shards = df.groupBy(pmod(xxhash64(col("doc_id")), lit(64)).as("bucket"))
+      .agg(bqf(fps).as("sketch")).repartitionById(64, col("bucket").cast("int")).cache()
+    assert(shards.count() == 64 && shards.rdd.getNumPartitions == 64)
+    assert(BqfPipeline.mergeShards(shards).sameElements(BqfPipeline.buildGlobal(df, fps, params)),
+      "merged UDAF shards != buildGlobal bytes")
+    shards.unpersist()
   }
 
   test("per-source salted build: every source sketch matches its oracle") {
@@ -97,7 +102,7 @@ class SparkE2ESpec extends AnyFunSuite {
     val shardCols = spark.read.parquet(dir).columns.toSet
     assert(CheckpointedBuild.LineageColumns.toSet.subsetOf(shardCols))
     // final result identical to an uninterrupted global build
-    val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir, nBuckets))
+    val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir))
     val direct = BackpackFilter.deserialize(BqfPipeline.buildGlobal(df, fps, params))
     assert(resumed.enumerate() == direct.enumerate())
   }

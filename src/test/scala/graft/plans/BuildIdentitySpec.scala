@@ -29,6 +29,7 @@ class BuildIdentitySpec extends AnyFunSuite {
       params.kTokens, params.zTokens, params.seed, all, null, all.length).serialize()
   }
 
+  @scala.annotation.nowarn("cat=deprecation") // pins buildSharded's forwarding
   private def producers(df: DataFrame): Seq[(String, Array[Byte])] = {
     val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
     def sketchOf(rows: DataFrame): Array[Byte] = rows.select("sketch").as[Array[Byte]].head()
@@ -37,10 +38,10 @@ class BuildIdentitySpec extends AnyFunSuite {
     CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, ckpt, batchBuckets = 2)
     Seq(
       "buildGlobal" -> BqfPipeline.buildGlobal(df, fps, params),
-      "buildSharded 64/4" -> BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 64, 4),
-      "buildSharded 16/16" -> BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 16, 16),
-      "CheckpointedBuild resumed" -> CheckpointedBuild.result(spark, ckpt, 16),
-      "treeMerge(buildIndexSorted)" -> BqfPipeline.treeMerge(BqfPipeline.buildIndexSorted(df, fps, params, 16), 16, 4),
+      "buildSharded 64" -> BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 64),
+      "buildSharded 16" -> BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 16),
+      "CheckpointedBuild resumed" -> CheckpointedBuild.result(spark, ckpt),
+      "mergeShards(buildIndexSorted)" -> BqfPipeline.mergeShards(BqfPipeline.buildIndexSorted(df, fps, params, 16)),
       "reshardMerge to 1" -> sketchOf(BqfPipeline.reshardMerge(BqfPipeline.buildIndexSorted(df, fps, params, 16), params, 1)),
       "UDAF over 2 partitions" -> df.repartition(2).agg(bqf(fps).as("sketch")).head().getAs[Array[Byte]](0),
       "UDAF over 8 partitions" -> df.repartition(8).agg(bqf(fps).as("sketch")).head().getAs[Array[Byte]](0),

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The distributed re-shard merge must be a pure repartitioning of sketch
   * contents: every (fingerprint, abundance) entry survives verbatim, output
   * shards nest by fingerprint-range prefix, and collapsing to one shard is
-  * value-identical to the serial treeMerge blob. The sorted build routes
+  * value-identical to a local merge of the shards. The sorted build routes
   * contiguous bucket ranges to min(nBuckets, cores) tasks and gathers one
   * shard at a time.
   */
@@ -52,7 +52,7 @@ class ReshardMergeSpec extends AnyFunSuite {
     val viaIndex = BqfPipeline.queryIndex(shards, probes, params, nBuckets)
       .as[(Long, Long)].collect().toMap
     // broadcast twin: one merged blob answers the same probes
-    val blob = BqfPipeline.treeMerge(shards, nBuckets, 16)
+    val blob = BqfPipeline.mergeShards(shards)
     val f = BackpackFilter.deserialize(blob)
     val expected = probes.as[Long].collect().map(fp => fp -> f.abundance(fp)).toMap
     assert(viaIndex == expected, s"${viaIndex.size} answers vs ${expected.size}")
@@ -64,15 +64,17 @@ class ReshardMergeSpec extends AnyFunSuite {
     shards.unpersist(); probes.unpersist()
   }
 
-  test("reshardMerge to one shard == serial treeMerge blob") {
+  test("reshardMerge to one shard == local mergeAll") {
     val df = TokensTable.dataframe(spark, 200, partitions = 4)
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
     val i16 = BqfPipeline.buildIndexSorted(df, fps, params, 16).cache()
     val one = BqfPipeline.reshardMerge(i16, params, 1).collect()
     assert(one.length == 1)
     val viaReshard = BackpackFilter.deserialize(one(0).getAs[Array[Byte]]("sketch")).enumerate()
-    val viaTree = BackpackFilter.deserialize(BqfPipeline.treeMerge(i16, 16, 4)).enumerate()
-    assert(viaReshard == viaTree)
+    // the reference merge runs on the driver, with no Spark plan in it
+    val local = BackpackFilter.mergeAll(i16.collect().toSeq.map(r =>
+      BackpackFilter.deserialize(r.getAs[Array[Byte]]("sketch"))))
+    assert(viaReshard == local.enumerate())
     i16.unpersist()
   }
 

@@ -1,6 +1,10 @@
 package graft.plans
 
 import graft.SparkTestSession
+import graft.functions.GraftFunctions._
+import graft.operators.BqfParams
+import graft.sources.TokensTable
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class StageMetricsSpec extends AnyFunSuite {
@@ -21,5 +25,19 @@ class StageMetricsSpec extends AnyFunSuite {
       assert(m.jsonLines.forall(l => l.startsWith("{") && l.endsWith("}")))
       assert(m.snapshot(spark).count() == stages.size)
     } finally m.detach(spark)
+  }
+
+  test("buildSharded runs buildGlobal's stages, the last on one task") {
+    val spark = SparkTestSession.spark
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val params = BqfParams(qBits = 14, countBits = 16, hashBits = 48, kTokens = 8, zTokens = 2)
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    val df = TokensTable.dataframe(spark, 200, partitions = 4)
+    val (_, gStages) = SparkTestSession.stagesOf(BqfPipeline.buildGlobal(df, fps, params))
+    val (_, sStages) = SparkTestSession.stagesOf(
+      BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 64): @scala.annotation.nowarn("cat=deprecation"))
+    assert(sStages.size == gStages.size,
+      s"buildSharded ran ${sStages.size} stages, buildGlobal ${gStages.size}: ${sStages.map(_.numTasks)}")
+    assert(sStages.last.numTasks == 1 && gStages.last.numTasks == 1)
   }
 }
