@@ -579,10 +579,11 @@ object Queries {
     * oracle can read the very rows the query consumed (the table is a pure
     * function of (seed, rowIndex), so this is just a cache). The path
     * encodes the row count: runs at different scale factors never clobber
-    * the oracle's sf0.01 table.
+    * the oracle's sf0.01 table. It resolves against the working directory,
+    * so each checkout reads and writes its own `target/`.
     */
   private[graft] def tokensOraclePath(nRows: Long): String =
-    s"/root/repo/target/tokens_oracle_$nRows.parquet"
+    java.nio.file.Paths.get("target", s"tokens_oracle_$nRows.parquet").toAbsolutePath.toString
 
   private def ensureTokensParquet(spark: SparkSession, nRows: Long): Unit = {
     val path = tokensOraclePath(nRows)

@@ -93,24 +93,38 @@ object BqfPipeline {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = in.sparkSession
     import spark.implicits._
-    val log2 = java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val shift = params.hashBits - log2
+    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
     val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
     in.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted))
       .toDF("bucket", "fps", "stored")
-      .repartitionById(p, shiftright(col("bucket") * p, log2).cast("int")) // bucket * p / nBuckets
+      .repartitionById(p, rangeRoute(col("bucket"), nBuckets, p))
       .sortWithinPartitions("bucket")
       .as[(Long, Array[Long], Array[Long])]
       .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
+        require(bucket >= 0, s"fingerprints above hashBits=${params.hashBits} have no bucket")
         (bucket, buildShard(fps, stored, params))
       })
       .toDF("bucket", "sketch")
   }
 
-  /** Map-side bucketizer of [[sortedBuild]] and of
+  /** The range rule of [[sortedBuild]], [[queryIndex]] and
+    * [[graft.streaming.IndexIngest.compact]]: bucket b of `nBuckets` (a
+    * power of two) goes to task b * p / nBuckets of `p`, so task t owns the
+    * contiguous buckets [t * nBuckets / p, (t+1) * nBuckets / p). Buckets
+    * outside [0, nBuckets) — the -1 of [[chunkByBucket]]'s strays — clamp
+    * to the edge tasks.
+    */
+  private[graft] def rangeRoute(bucket: Column, nBuckets: Int, p: Int): Column =
+    least(greatest(shiftright(bucket * p, java.lang.Integer.numberOfTrailingZeros(nBuckets)), lit(0L)),
+      lit(p - 1L)).cast("int")
+
+  /** Map-side bucketizer of [[sortedBuild]], [[queryIndex]] and
     * [[graft.streaming.IndexIngest.ingestBatch]]: groups each task's entries
     * by destination bucket into (bucket, fingerprints, stored counts) chunk
-    * rows; the counts array is null unless `counted`.
+    * rows; the counts array is null unless `counted`. Fingerprints whose
+    * bucket falls outside [0, nBuckets) (bits above hashBits) are strays:
+    * they come out under bucket -1, which no shard has, and each caller
+    * decides what a stray means (a query answers it 0, a build refuses it).
     *
     * Bounded buffering: builders flush to chunk rows every ~4M buffered
     * fingerprints (32 MB), so task heap is independent of input-partition
@@ -124,8 +138,9 @@ object BqfPipeline {
                             shift: Int, counted: Boolean): Iterator[(Long, Array[Long], Array[Long])] =
     new Iterator[(Long, Array[Long], Array[Long])] {
       private type Builder = scala.collection.mutable.ArrayBuilder.ofLong
-      private val fpB = new Array[Builder](nBuckets)
-      private val countB = if (counted) new Array[Builder](nBuckets) else null
+      // slot nBuckets collects the strays
+      private val fpB = new Array[Builder](nBuckets + 1)
+      private val countB = if (counted) new Array[Builder](nBuckets + 1) else null
       private val queue = scala.collection.mutable.Queue.empty[(Long, Array[Long], Array[Long])]
       private var nBuffered = 0L
       private val flushAt = 4L << 20
@@ -142,12 +157,17 @@ object BqfPipeline {
         }
         bb
       }
+      private def slot(fp: Long): Int = {
+        val b = fp >>> shift
+        if (b >= 0 && b < nBuckets) b.toInt else nBuckets
+      }
       private def flush(): Unit = {
         var b = 0
-        while (b < nBuckets) {
+        while (b <= nBuckets) {
           val bb = fpB(b)
           if (bb != null) {
-            queue.enqueue((b.toLong, bb.result(), if (counted) countB(b).result() else null))
+            queue.enqueue((if (b == nBuckets) -1L else b.toLong, bb.result(),
+              if (counted) countB(b).result() else null))
             fpB(b) = null
             if (counted) countB(b) = null
           }
@@ -163,7 +183,7 @@ object BqfPipeline {
               var i = 0
               if (counted) {
                 while (i < fps.length) {
-                  val b = (fps(i) >>> shift).toInt
+                  val b = slot(fps(i))
                   builder(fpB, b).addOne(fps(i))
                   builder(countB, b).addOne(stored(i))
                   i += 1
@@ -171,7 +191,7 @@ object BqfPipeline {
               } else {
                 while (i < fps.length) {
                   val fp = fps(i)
-                  builder(fpB, (fp >>> shift).toInt).addOne(fp)
+                  builder(fpB, slot(fp)).addOne(fp)
                   i += 1
                 }
               }
@@ -183,6 +203,21 @@ object BqfPipeline {
       override def hasNext: Boolean = { fill(); queue.nonEmpty }
       override def next(): (Long, Array[Long], Array[Long]) = { fill(); queue.dequeue() }
     }
+
+  /** The fingerprints of column `fp` as (bucket, fps) chunk rows, one per
+    * bucket per input task and [[chunkByBucket]] flush: the map side of
+    * [[queryIndex]] and of [[graft.streaming.IndexIngest.ingestBatch]].
+    */
+  private[graft] def fpChunks(df: DataFrame, hashBits: Int, nBuckets: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    val shift = hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    df.select(col("fp")).as[Long]
+      .mapPartitions { it =>
+        val blocks = it.grouped(1 << 16).map(g => (g.toArray, null: Array[Long]))
+        chunkByBucket(blocks, nBuckets, shift, counted = false).map { case (bucket, fps, _) => (bucket, fps) }
+      }
+      .toDF("bucket", "fps")
+  }
 
   /** Shard memory guard: a shard build gathers its whole shard (~16 B per
     * fingerprint + radix buffers), so an under-sharded huge corpus would
@@ -281,39 +316,58 @@ object BqfPipeline {
   /** Distributed point queries against a sharded index — the query path
     * once the index exceeds broadcast size (a 100 TB corpus's index is
     * GBs-to-TBs of shards; no single sketch can ride a broadcast variable).
-    * Probes are routed to their shard by the same high-bit bucketing the
-    * build used, co-grouped with the shard blob, and answered task-locally:
-    * the shuffle moves 8-byte probe fingerprints plus each shard blob
-    * exactly once; each reducer deserializes its shard once and probes all
-    * of its fingerprints. Probes whose bucket has no shard answer 0
-    * (nothing was ever inserted there). Returns (fp, abundance).
+    * The map side chunks the probes by bucket with [[chunkByBucket]] (the
+    * high-bit bucketing the build used), and the chunk rows and the shard
+    * rows meet in one exchange under [[sortedBuild]]'s range rule
+    * ([[rangeRoute]], p = min(nBuckets, defaultParallelism) tasks). Each
+    * reduce task sorts its rows by bucket, shard row first, and streams
+    * bucket by bucket: it deserializes each shard once and answers every
+    * probe chunk of that bucket against it. The shuffle moves 8-byte probe
+    * fingerprints in array chunks plus each shard blob exactly once.
+    *
+    * Returns (fp, abundance), one row per probe row (repeated probes are
+    * answered once each). A probe whose bucket has no shard — including a
+    * fingerprint with bits above hashBits — answers 0 (nothing was ever
+    * inserted there). `shards` must hold one (bucket, sketch) row per
+    * bucket: a repeated bucket fails the query.
     */
   def queryIndex(shards: DataFrame, probes: DataFrame, params: BqfParams,
                  nBuckets: Int): DataFrame = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = shards.sparkSession
     import spark.implicits._
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val probesByBucket = probes.select(col("fp")).as[Long].groupByKey(fp => fp >>> shift)
-    val shardsByBucket = shards.select(col("bucket"), col("sketch"))
-      .as[(Long, Array[Byte])].groupByKey(_._1)
-    probesByBucket.cogroup(shardsByBucket) { (bucket, ps, ss) =>
-      if (!ss.hasNext) ps.map(fp => (fp, 0L))
-      else {
-        val first = ss.next()._2
-        // Multiple rows for one bucket are ambiguous: a multi-version ingest
-        // store (bucket, sketch, batch_id) holds SUPERSEDED versions whose
-        // merge would double-count, while answering from an arbitrary row
-        // would silently answer from a stale version. Refuse instead of
-        // guessing — read ingest stores through IndexIngest.currentShards
-        // (Cli query-index does this automatically) or compact first.
-        require(!ss.hasNext,
-          s"queryIndex: multiple sketch rows for bucket $bucket -- this looks like a " +
-            "multi-version ingest store; query IndexIngest.currentShards(...) or compact it first")
-        val f = graft.core.BackpackFilter.deserialize(first)
-        ps.map(fp => (fp, f.abundance(fp)))
+    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
+    fpChunks(probes, params.hashBits, nBuckets).withColumn("sketch", lit(null).cast("binary"))
+      .union(shards.select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
+      .repartitionById(p, rangeRoute(col("bucket"), nBuckets, p))
+      .sortWithinPartitions(col("bucket"), col("fps").isNotNull)
+      .as[(Long, Array[Long], Array[Byte])]
+      .mapPartitions { rows =>
+        var bucket = Long.MinValue
+        var shard: graft.core.BackpackFilter = null
+        rows.flatMap { case (b, fps, sketch) =>
+          if (b != bucket) { bucket = b; shard = null }
+          if (fps == null) {
+            // Multiple rows for one bucket are ambiguous: a multi-version
+            // ingest store (bucket, sketch, batch_id) holds SUPERSEDED
+            // versions whose merge would double-count, while answering
+            // from an arbitrary row would silently answer from a stale
+            // version. Refuse instead of guessing — read ingest stores
+            // through IndexIngest.currentShards (Cli query-index does this
+            // automatically) or compact first.
+            require(shard == null,
+              s"queryIndex: multiple sketch rows for bucket $b -- this looks like a " +
+                "multi-version ingest store; query IndexIngest.currentShards(...) or compact it first")
+            shard = graft.core.BackpackFilter.deserialize(sketch)
+            Iterator.empty
+          } else {
+            val f = shard
+            if (f == null) fps.iterator.map(fp => (fp, 0L))
+            else fps.iterator.map(fp => (fp, f.abundance(fp)))
+          }
+        }
       }
-    }.toDF("fp", "abundance")
+      .toDF("fp", "abundance")
   }
 
   /** Fold the `sketch` column of any shard rows into one serialized

@@ -129,7 +129,6 @@ object StreamingOps {
   */
 object IndexIngest {
   import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.expressions.Window
 
   /** A store "exists" only once it holds committed parquet data. Path
     * existence alone is not enough: a crash during the FIRST batch's write
@@ -166,39 +165,75 @@ object IndexIngest {
     hasData
   }
 
-  /** Latest (bucket, sketch, batch_id) row per bucket, blob scan pruned to
-    * candidate files first: every ingest batch appends its own parquet
-    * file(s) with a CONSTANT batch_id, so footer min==max stats let a
-    * literal `isin` filter over the per-bucket max ids skip every
-    * superseded file entirely. Without it, each steady-state batch re-reads
-    * the sketch blobs of ALL versions ever written (O(batches) per batch
-    * until compaction); with it the blob scan is O(live shards). The id
-    * collect is bounded by min(nBuckets, live batches) longs. The window
-    * dedup still runs — different buckets peak at different ids and an old
-    * version can share a surviving file's id — but over ~|live| rows.
+  /** Every store read uses this fixed schema: no read pays a schema
+    * inference job, and a file without `batch_id` (a
+    * [[graft.plans.BqfPipeline.buildIndexSorted]] output, say) reads back
+    * as null ids, which [[liveVersions]] refuses.
     */
-  private def liveBatchIds(store: DataFrame): Array[Long] =
-    store.select(col("bucket"), col("batch_id"))
-      .groupBy("bucket").agg(max("batch_id").as("batch_id"))
-      .select("batch_id").distinct().collect().map(_.getLong(0))
+  private val StoreSchema = new org.apache.spark.sql.types.StructType()
+    .add("bucket", "bigint").add("sketch", "binary").add("batch_id", "bigint")
 
-  private def latestRows(store: DataFrame): DataFrame =
-    store.filter(col("batch_id").isin(liveBatchIds(store).map(Long.box): _*))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("bucket")).orderBy(col("batch_id").desc)))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+  private def readStore(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(StoreSchema).parquet(dir)
+
+  /** The live view's metadata, in one single-stage job over the two small
+    * columns (parquet column pruning keeps the sketch blobs out of it):
+    * each bucket's live batch id (its max), and whether batch `replayOf` is
+    * already committed. Each input task folds its rows to per-bucket max
+    * ids and the driver folds the tasks' maps, so no exchange runs and the
+    * collect is bounded by tasks x nBuckets pairs.
+    */
+  private def liveVersions(store: DataFrame, dir: String,
+                           replayOf: Option[Long]): (Map[Long, Long], Boolean) = {
+    import store.sparkSession.implicits._
+    val parts = store.select(col("bucket"), col("batch_id")).as[(Long, Option[Long])]
+      .mapPartitions { rows =>
+        val live = scala.collection.mutable.LongMap.empty[Long]
+        var unversioned, seen = false
+        rows.foreach {
+          case (bucket, Some(id)) =>
+            if (live.get(bucket).forall(_ < id)) live(bucket) = id
+            seen ||= replayOf.contains(id)
+          case (_, None) => unversioned = true
+        }
+        Iterator.single((live.toArray, unversioned, seen))
+      }
+      .collect()
+    require(!parts.exists(_._2),
+      s"$dir holds shard rows without a batch_id, so it is not an ingest store; " +
+        "read a batch-built index directly, without currentShards or compact")
+    (parts.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(math.max), parts.exists(_._3))
+  }
+
+  /** Exactly the live (bucket, sketch, batch_id) row of each bucket in
+    * `live`, with no exchange. Every ingest batch appends its own parquet
+    * file(s) with a CONSTANT batch_id, so footer min==max stats let the
+    * literal `batch_id isin` filter skip every superseded file: the blob
+    * scan is O(live shards), not O(versions ever written). That filter
+    * alone can keep old versions (buckets peak at different ids, and an
+    * old version can share a surviving file's id); the exact (bucket,
+    * batch_id) membership test over the captured map drops them row by row.
+    */
+  private def liveRows(store: DataFrame, live: Map[Long, Long]): DataFrame = {
+    val isLive = udf((bucket: Long, id: Long) => live.get(bucket).contains(id))
+    store.filter(col("batch_id").isin(live.values.toSeq.distinct.map(Long.box): _*))
+      .filter(isLive(col("bucket"), col("batch_id")))
+  }
 
   /** Latest shard version per bucket — the live (bucket, sketch) index,
-    * directly consumable by [[graft.plans.BqfPipeline.enumerateIndex]] and
-    * by bucket-routed point queries.
+    * one row per bucket, directly consumable by
+    * [[graft.plans.BqfPipeline.queryIndex]] and
+    * [[graft.plans.BqfPipeline.enumerateIndex]]. Runs the store metadata
+    * job; the shard scan itself is lazy. Throws IllegalArgumentException
+    * for a directory whose rows carry no batch_id.
     */
   def currentShards(spark: SparkSession, storeDir: String): DataFrame = {
     if (!storeExists(spark, storeDir))
       return spark.emptyDataFrame
         .withColumn("bucket", lit(0L)).withColumn("sketch", lit(Array.empty[Byte]))
         .limit(0)
-    latestRows(spark.read.parquet(storeDir))
+    val store = readStore(spark, storeDir)
+    liveRows(store, liveVersions(store, storeDir, None)._1)
       .select(col("bucket"), col("sketch"))
   }
 
@@ -209,7 +244,8 @@ object IndexIngest {
     * one shard version per touched bucket per batch — run this periodically
     * or when the store's size bothers you. Maintenance op: readers racing a
     * compaction may transiently fail and should retry; the streaming query
-    * itself must be stopped (same rule as any parquet rewrite).
+    * itself must be stopped (same rule as any parquet rewrite). Throws
+    * IllegalArgumentException for a directory whose rows carry no batch_id.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val store = new org.apache.hadoop.fs.Path(storeDir)
@@ -232,13 +268,18 @@ object IndexIngest {
     // The tmp write fully materializes before the swap (parquet jobs
     // commit before returning), so there is no read-after-delete lineage
     // hazard below.
-    latestRows(spark.read.parquet(storeDir))
-      .select(col("bucket"), col("sketch"), col("batch_id"))
-      // bucket-clustered output: the global sort range-partitions by bucket,
-      // so each compacted file covers a narrow bucket interval and its
-      // parquet footer min/max lets ingestBatch's touched-bucket isin skip
-      // whole files. Distributed (range shuffle), a maintenance-op cost.
-      .sort("bucket")
+    val rows = readStore(spark, storeDir)
+    val live = liveVersions(rows, storeDir, None)._1
+    // bucket-clustered output: the sorted build's range rule over the
+    // store's bucket span sends contiguous bucket ranges to
+    // min(span, cores) tasks, each writing one file sorted by bucket, so
+    // each file's parquet footer min/max covers a disjoint bucket interval
+    // and ingestBatch's touched-bucket isin skips whole files
+    val span = Integer.highestOneBit(2 * live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
+    val p = math.min(span, spark.sparkContext.defaultParallelism)
+    liveRows(rows, live)
+      .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), span, p))
+      .sortWithinPartitions("bucket")
       .write.mode("overwrite").parquet(tmp.toString)
     // carry the routing sidecar (underscore files are invisible to the
     // parquet read above) across the swap
@@ -272,7 +313,7 @@ object IndexIngest {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
     import spark.implicits._
-    val store = if (storeExists(spark, storeDir)) spark.read.parquet(storeDir) else null
+    val store = if (storeExists(spark, storeDir)) readStore(spark, storeDir) else null
     // An existing sidecar is a routing CONTRACT, not just documentation: a
     // second ingest with a different nBuckets (or k/z/hash/seed) would
     // silently append rows routed by a different shift — currentShards then
@@ -289,26 +330,14 @@ object IndexIngest {
           "a mismatched ingest would corrupt the store silently")
     }
     // ONE store read and ONE driver-side metadata job serve both the replay
-    // guard and the live-shard file pruning. The agg touches only the two
-    // tiny columns — parquet column pruning keeps the sketch blobs out of
-    // it — and its collect is bounded by nBuckets rows.
-    val meta =
-      if (store == null) Array.empty[org.apache.spark.sql.Row]
-      else store.groupBy("bucket").agg(
-        max("batch_id").as("mx"),
-        max(when(col("batch_id") === batchId, 1L).otherwise(0L)).as("seen")).collect()
-    if (meta.exists(_.getLong(2) == 1L)) return // replay: batchId already committed
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    // map side: one (bucket, fingerprints) chunk row per touched bucket per
-    // input task and 4M-fingerprint flush, cached so the touched-bucket
-    // collect and the merge job read the batch once
-    val chunks = batch.select(col("fp")).as[Long]
-      .mapPartitions { it =>
-        val blocks = it.grouped(1 << 16).map(g => (g.toArray, null: Array[Long]))
-        graft.plans.BqfPipeline.chunkByBucket(blocks, nBuckets, shift, counted = false)
-          .map { case (bucket, fps, _) => (bucket, fps) }
-      }
-      .toDF("bucket", "fps")
+    // guard and the live view of the touched buckets
+    val (live, seen) =
+      if (store == null) (Map.empty[Long, Long], false)
+      else liveVersions(store, storeDir, Some(batchId))
+    if (seen) return // replay: batchId already committed
+    // map side, cached so the touched-bucket collect and the merge job read
+    // the batch once
+    val chunks = graft.plans.BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // TOUCHED-BUCKET pruning: only the touched buckets' live shards take
@@ -321,23 +350,20 @@ object IndexIngest {
       // per-batch cost is O(batch + touched shards), independent of store
       // width. The collect is bounded by tasks x nBuckets rows.
       val touched = chunks.select("bucket").as[Long].collect().distinct
+      require(!touched.contains(-1L),
+        s"ingestBatch: fingerprints above hashBits=${params.hashBits} have no bucket of $storeDir")
       val touchedSet = touched.toSet
-      val liveIds = meta.collect {
-        case r if touchedSet.contains(r.getLong(0)) => r.getLong(1)
-      }.distinct
-      val batchRows = chunks.select(col("bucket"), col("fps"),
-        lit(null).cast("binary").as("sketch"), lit(-1L).as("batch_id"))
+      val batchRows = chunks.select(col("bucket"), col("fps"), lit(null).cast("binary").as("sketch"))
       val rows =
         if (store == null) batchRows
-        else batchRows.union(store
-          .filter(col("bucket").isin(touched.map(Long.box): _*))
-          .filter(col("batch_id").isin(liveIds.map(Long.box): _*))
-          .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"),
-            col("sketch"), col("batch_id")))
+        else batchRows.union(
+          liveRows(store.filter(col("bucket").isin(touched.toSeq.map(Long.box): _*)),
+            live.filter { case (bucket, _) => touchedSet(bucket) })
+            .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
       // write unconditionally: an empty batch writes only parquet metadata,
       // and the replay guard above makes replays no-ops either way
       rows.repartition(col("bucket"))
-        .as[(Long, Array[Long], Array[Byte], Long)]
+        .as[(Long, Array[Long], Array[Byte])]
         .mapPartitions(mergeTouched(_, params))
         .toDF("bucket", "sketch")
         .withColumn("batch_id", lit(batchId))
@@ -351,25 +377,27 @@ object IndexIngest {
   }
 
   /** One reduce task of [[ingestBatch]]. Its rows are batch chunks
-    * (bucket, fps, null, -1) and live shard versions (bucket, null, sketch,
-    * batch_id) of the same buckets; versions that share a surviving file's
-    * batch id can come along, so each bucket keeps its max-batch_id row.
-    * Every bucket with batch fingerprints gets its new shard version; the
-    * few buffered chunk rows are sorted by bucket for the streaming gather.
+    * (bucket, fps, null) and the live shard versions (bucket, null, sketch)
+    * of the same buckets, at most one per bucket ([[liveRows]] is exact; a
+    * second one means a corrupt store and fails the task). Every bucket
+    * with batch fingerprints gets its new shard version; the few buffered
+    * chunk rows are sorted by bucket for the streaming gather.
     */
-  private def mergeTouched(rows: Iterator[(Long, Array[Long], Array[Byte], Long)],
+  private def mergeTouched(rows: Iterator[(Long, Array[Long], Array[Byte])],
                            params: graft.operators.BqfParams): Iterator[(Long, Array[Byte])] = {
-    val latest = scala.collection.mutable.LongMap.empty[(Long, Array[Byte])]
+    val latest = scala.collection.mutable.LongMap.empty[Array[Byte]]
     val chunks = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Array[Long])]
-    rows.foreach { case (bucket, fps, sketch, id) =>
+    rows.foreach { case (bucket, fps, sketch) =>
       if (fps != null) chunks += ((bucket, fps, null))
-      else if (latest.get(bucket).forall(_._1 < id)) latest(bucket) = (id, sketch)
+      else if (latest.contains(bucket))
+        throw new IllegalStateException(s"ingestBatch: bucket $bucket has more than one live shard row")
+      else latest(bucket) = sketch
     }
     graft.plans.BqfPipeline.gatherChunks(chunks.sortInPlaceBy(_._1).iterator).map { case (bucket, fps, _) =>
       val partial = batchPartial(fps, params)
       val sketch = latest.get(bucket) match {
         case None => partial
-        case Some((_, old)) =>
+        case Some(old) =>
           // big absorbs small: steady-state batches are deltas against a
           // much larger shard, and mergeInPlace folds the small side in
           // incrementally — O(batch) per bucket, not O(store)

@@ -30,4 +30,11 @@ class QueryCacheSpec extends AnyFunSuite {
     writeCorpus(dir, second)
     assert(q01(dir) == exact(second), "q01 answered from the replaced corpus")
   }
+
+  test("q20's tokens table is cached under the working directory") {
+    val cwd = java.nio.file.Paths.get(System.getProperty("user.dir")).toAbsolutePath
+    val path = java.nio.file.Paths.get(Queries.tokensOraclePath(2000))
+    assert(path.isAbsolute && path.startsWith(cwd.resolve("target")), s"$path lies outside $cwd/target")
+    assert(path.getFileName.toString == "tokens_oracle_2000.parquet")
+  }
 }

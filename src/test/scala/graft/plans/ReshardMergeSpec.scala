@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shards nest by fingerprint-range prefix, and collapsing to one shard is
   * value-identical to a local merge of the shards. The sorted build routes
   * contiguous bucket ranges to min(nBuckets, cores) tasks and gathers one
-  * shard at a time.
+  * shard at a time; queryIndex routes its probe chunks by the same rule.
   */
 class ReshardMergeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -92,6 +92,52 @@ class ReshardMergeSpec extends AnyFunSuite {
       assert(buckets == (8L * t until 8L * (t + 1)), s"task $t")
     for (n <- Seq(2, 1))
       assert(BqfPipeline.buildIndexSorted(df, fps, params, n).rdd.getNumPartitions == n, s"nBuckets=$n")
+  }
+
+  test("queryIndex: one answer row per probe row, zeros where no shard, min(nBuckets, cores) reduce tasks") {
+    import spark.implicits._
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val rnd = new scala.util.Random(11)
+    val mask = (1L << params.hashBits) - 1
+    for (nBuckets <- Seq(1, 2, 64)) {
+      val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+      // every other bucket holds fingerprints (with repeats), so at 2 and 64
+      // buckets half the buckets have no shard; at 1 bucket every probe
+      // meets the one shard
+      val inserted = Seq.fill(3000)(rnd.nextLong() & mask)
+        .filter(fp => nBuckets == 1 || (fp >>> shift) % 2 == 0)
+      val docs = inserted.grouped(100).map(_.toArray).toSeq.toDF("fps")
+      val shards = BqfPipeline.buildIndexSorted(docs, col("fps"), params, nBuckets).cache()
+      val byBucket = shards.as[(Long, Array[Byte])].collect()
+        .map { case (b, bytes) => b -> BackpackFilter.deserialize(bytes) }.toMap
+      // repeated probes, never-inserted probes in every bucket, and strays
+      // whose bits above hashBits give them no bucket at all
+      val strays = Seq(1L << params.hashBits, -1L, Long.MinValue, mask + 12345)
+      val probeFps = inserted.take(500) ++ inserted.take(200) ++
+        Seq.fill(1000)(rnd.nextLong() & mask) ++ strays
+      val probes = probeFps.toDF("fp").repartition(3)
+      def expect(fp: Long): Long =
+        if ((fp >>> shift) >= nBuckets) 0L
+        else byBucket.get(fp >>> shift).fold(0L)(_.abundance(fp))
+      val (answers, stages) = SparkTestSession.stagesOf(
+        BqfPipeline.queryIndex(shards, probes, params, nBuckets).as[(Long, Long)].collect())
+      assert(answers.toSeq.sorted == probeFps.map(fp => fp -> expect(fp)).sorted, s"nBuckets=$nBuckets")
+      assert(strays.forall(fp => answers.filter(_._1 == fp).forall(_._2 == 0L)))
+      assert(inserted.take(500).forall(fp => expect(fp) >= 1L))
+      assert(stages.last.numTasks == math.min(nBuckets, 4),
+        s"nBuckets=$nBuckets: reduce stage ran ${stages.last.numTasks} tasks")
+      // task t answers only probes of its own contiguous bucket range
+      val p = math.min(nBuckets, 4)
+      val ranges = BqfPipeline.queryIndex(shards, probes, params, nBuckets).rdd
+        .mapPartitionsWithIndex((t, rows) => rows.map(r => t -> (r.getLong(0) >>> shift)))
+        .collect().filter(_._2 < nBuckets)
+      assert(ranges.forall { case (t, b) => b * p / nBuckets == t }, s"nBuckets=$nBuckets routing")
+      // no probes: no rows; no shards: every probe answers 0
+      assert(BqfPipeline.queryIndex(shards, probes.limit(0), params, nBuckets).count() == 0)
+      val none = BqfPipeline.queryIndex(shards.limit(0), probes, params, nBuckets).as[(Long, Long)].collect()
+      assert(none.map(_._1).sorted.toSeq == probeFps.sorted && none.forall(_._2 == 0L))
+      shards.unpersist()
+    }
   }
 
   test("the gather's memory guard bounds one shard, not one task") {

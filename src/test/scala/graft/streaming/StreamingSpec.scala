@@ -330,6 +330,94 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
+  test("live view: each bucket's latest version, exactly, through currentShards, queryIndex and compact") {
+    // batch 0 touches buckets {A, B}, batch 1 touches {A}: the literal
+    // batch_id isin {0, 1} keeps (A,0), (B,0) and (A,1), and the exact
+    // (bucket, batch_id) filter must drop the superseded (A,0)
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val nBuckets = 8
+    val (a, b) = (2L, 5L)
+    def fpsIn(bucket: Long, from: Long, n: Int) = (from until from + n).map(i => (bucket << 29) | (i * 7919L))
+    val batch0 = fpsIn(a, 1, 40) ++ fpsIn(a, 1, 10) ++ fpsIn(b, 1, 30)
+    val batch1 = fpsIn(a, 21, 40)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-live-view").toString
+    val store = s"$tmp/idx"
+    IndexIngest.ingestBatch(batch0.toDF("fp"), batchId = 0L, params, nBuckets, store)
+    IndexIngest.ingestBatch(batch1.toDF("fp"), batchId = 1L, params, nBuckets, store)
+    def rows(): Map[(Long, Long), Vector[Byte]] = spark.read.parquet(store)
+      .select("bucket", "batch_id", "sketch").as[(Long, Long, Array[Byte])].collect()
+      .map { case (bk, id, s) => (bk, id) -> s.toVector }.toMap
+    val raw = rows()
+    assert(raw.keySet == Set((a, 0L), (b, 0L), (a, 1L)))
+    val live = IndexIngest.currentShards(spark, store).as[(Long, Array[Byte])].collect()
+    assert(live.length == 2)
+    assert(live.map { case (bk, s) => bk -> s.toVector }.toMap == Map(a -> raw((a, 1L)), b -> raw((b, 0L))))
+    val all = batch0 ++ batch1
+    val answered = graft.plans.BqfPipeline.queryIndex(IndexIngest.currentShards(spark, store),
+      all.toDF("fp"), params, nBuckets).as[(Long, Long)].collect()
+    val want = all.groupBy(identity).map { case (fp, occ) => fp -> occ.size.toLong }
+    assert(answered.length == all.length && answered.toMap == want)
+    IndexIngest.compact(spark, store)
+    assert(rows() == Map((a, 1L) -> raw((a, 1L)), (b, 0L) -> raw((b, 0L))))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("compact writes bucket-clustered files: disjoint bucket ranges") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val nBuckets = 16
+    val tmp = java.nio.file.Files.createTempDirectory("graft-compact-ranges").toString
+    val store = s"$tmp/idx"
+    val rnd = new scala.util.Random(5)
+    (0 until 3).foreach { i =>
+      IndexIngest.ingestBatch(Seq.fill(3000)(rnd.nextLong() & 0xffffffffL).toDF("fp"),
+        batchId = i.toLong, params, nBuckets, store)
+    }
+    val before = IndexIngest.currentShards(spark, store).as[(Long, Array[Byte])].collect()
+      .map { case (bk, s) => bk -> s.toVector }.toMap
+    IndexIngest.compact(spark, store)
+    val ranges = spark.read.parquet(store)
+      .groupBy(input_file_name()).agg(min("bucket"), max("bucket"))
+      .as[(String, Long, Long)].collect().map(r => (r._2, r._3)).sorted
+    // min(16 buckets, 4 cores) tasks, one file each
+    assert(ranges.length == 4, s"compacted files: ${ranges.mkString(" ")}")
+    assert(ranges.sliding(2).forall { case Array((_, hi), (lo, _)) => hi < lo },
+      s"overlapping bucket ranges: ${ranges.mkString(" ")}")
+    val after = IndexIngest.currentShards(spark, store).as[(Long, Array[Byte])].collect()
+      .map { case (bk, s) => bk -> s.toVector }.toMap
+    assert(after == before && after.size == nBuckets)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("misuse fails loudly: a store without batch_id, fingerprints above hashBits") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-misuse").toString
+    // a batch-built index has no batch_id column: read with the fixed store
+    // schema its ids are null, and every live-view entry point refuses it
+    val built = s"$tmp/built"
+    val fps = (1L to 500L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
+    graft.plans.BqfPipeline.buildIndexSorted(Seq(fps.toArray).toDF("fps"), col("fps"), params, 8)
+      .write.parquet(built)
+    for ((what, call) <- Seq[(String, () => Any)](
+      "currentShards" -> (() => IndexIngest.currentShards(spark, built)),
+      "compact" -> (() => IndexIngest.compact(spark, built)),
+      "ingestBatch" -> (() => IndexIngest.ingestBatch(fps.toDF("fp"), 0L, params, 8, built)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(built) && e.getMessage.contains("batch_id"), s"$what: ${e.getMessage}")
+    }
+    // a fingerprint above hashBits has no bucket: ingest refuses it
+    val store = s"$tmp/idx"
+    val e = intercept[IllegalArgumentException](
+      IndexIngest.ingestBatch((fps :+ (1L << 32)).toDF("fp"), 0L, params, 8, store))
+    assert(e.getMessage.contains("hashBits"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("order-of-magnitude ingest: a batch stores its encoded count, batches merge by max") {
     import spark.implicits._
     val params = graft.operators.BqfParams(qBits = 10, countBits = 4, hashBits = 32,
