@@ -764,8 +764,66 @@ final class BackpackFilter(
     * Public visitor form: `(Long, Long) => Unit` is @specialized, so bulk
     * consumers (the distributed re-shard merge) pay zero boxing per entry —
     * unlike the tuple iterator [[rawEntries]].
+    *
+    * Order: layout order (quotient, then remainder) read circularly from
+    * the first block whose offset is zero. That block's first slot is
+    * empty, so no run crosses it, and the walk pairs the occupied
+    * quotients with the runends in order — one linear pass, no rank/select
+    * per quotient. A table with no zero-offset block falls back to the
+    * per-quotient walk from quotient 0.
     */
   def foreachRaw(f: (Long, Long) => Unit): Unit = {
+    var startBlock = 0L
+    while (startBlock < numBlocks && offsetAt(startBlock) != 0) startBlock += 1
+    if (startBlock == numBlocks) foreachRawByQuotient(f)
+    else foreachRawLinear(startBlock, f)
+  }
+
+  /** The linear walk of [[foreachRaw]], in linear slot coordinates from
+    * `startBlock`'s first slot: each run starts at max(its quotient, the
+    * previous runend + 1), the canonical placement, and ends at the next
+    * runend bit.
+    */
+  private def foreachRawLinear(startBlock: Long, f: (Long, Long) => Unit): Unit = {
+    val slotMask = numSlots - 1
+    val start = startBlock << 6
+    val end = start + numSlots
+    var nextFree = start
+    var rel = 0L
+    while (rel < numBlocks) {
+      val blockLin = (startBlock + rel) << 6
+      var occ = occWordAt((startBlock + rel) & (numBlocks - 1))
+      while (occ != 0) {
+        val quotLin = blockLin + java.lang.Long.numberOfTrailingZeros(occ)
+        occ &= occ - 1
+        val quot = quotLin & slotMask
+        val runStart = math.max(quotLin, nextFree)
+        var pos = runStart
+        // the runend at or after pos, a word at a time
+        var runEnd = -1L
+        while (runEnd < 0) {
+          if (pos >= end) throw new IllegalStateException(s"foreachRaw: run of quotient $quot has no runend")
+          val p = pos & slotMask
+          val w = runWordAt(p >>> 6) >>> (p & 63L).toInt
+          if (w != 0) runEnd = pos + java.lang.Long.numberOfTrailingZeros(w)
+          else pos = (pos | 63L) + 1
+        }
+        var s = runStart
+        while (s <= runEnd) {
+          val sv = slotValue(s & slotMask)
+          f(rebuildFingerprint(quot, sv >>> countBits, qBits), sv & countMask)
+          s += 1
+        }
+        nextFree = runEnd + 1
+      }
+      rel += 1
+    }
+  }
+
+  /** Per-quotient form of [[foreachRaw]] (rank/select per occupied
+    * quotient), for a table with no zero-offset block.
+    */
+  private def foreachRawByQuotient(f: (Long, Long) => Unit): Unit = {
     var block = 0L
     while (block < numBlocks) {
       var occ = occWordAt(block)
@@ -884,13 +942,7 @@ final class BackpackFilter(
   def resize(n: Int): Unit = {
     if (n <= 0) return
     require(hashBits - (qBits + n) >= 1, s"cannot resize: remainder would vanish (q=$qBits n=$n hash=$hashBits)")
-    val fps = new Array[Long](nDistinct.toInt)
-    val counts = new Array[Long](nDistinct.toInt)
-    var i = 0
-    foreachRaw { (fp, stored) => fps(i) = fp; counts(i) = stored; i += 1 }
-    val rebuilt = BackpackFilter.fromEntries(qBits + n, countBits, hashBits, mode,
-      kTokens, zTokens, seed, fps, counts, i)
-    adopt(rebuilt)
+    adopt(BackpackFilter.mergeAtLeast(Seq(this), qBits + n))
   }
 
   /** Take over another (parameter-compatible) filter's state. */
@@ -1049,86 +1101,120 @@ object BackpackFilter {
     (rem << q) | quot
   }
 
-  /** Stable LSD radix sort of `keys` (unsigned order, `keyBits` significant
-    * bits) carrying `vals` along — O(n * keyBits/12), no recursion, immune
-    * to adversarial orders (merge inputs arrive pre-sorted per shard).
-    * 12-bit digits measured ~30% faster than 8-bit on shard-sized inputs on
-    * this host (4 passes instead of 6 for 48-bit keys; the 4096-entry
-    * histogram still lives in L1/L2, unlike 16-bit digits which thrash the
-    * TLB with 65k write streams).
+  /** Stable LSD radix sort of `keys` by their bits [lowBit, highBit)
+    * (unsigned order), carrying `vals` along unless it is null —
+    * O(n * (highBit - lowBit)/12), no recursion, immune to adversarial
+    * orders. The keys-only form (`vals == null`) serves the all-ones build
+    * path: carrying a value array of uniform ones through every pass would
+    * double the sort's memory traffic, and shard builds are bound by
+    * memory bandwidth. 12-bit digits measured ~30% faster than 8-bit on
+    * shard-sized inputs (4 passes instead of 6 for 48-bit keys; the
+    * 4096-entry histogram still lives in L1/L2, unlike 16-bit digits which
+    * thrash the TLB with 65k write streams).
     */
-  private def sortPairs(keys: Array[Long], vals: Array[Long], n: Int, keyBits: Int): Unit = {
+  private def radixSort(keys: Array[Long], vals: Array[Long], n: Int, lowBit: Int, highBit: Int): Unit = {
     if (n <= 1) return
-    val digit = 12
+    // at most 12-bit digits, balanced: 20 quotient bits sort in two
+    // 10-bit passes, not a 12-bit and an 8-bit one
+    val passes = (highBit - lowBit + 11) / 12
+    val digit = (highBit - lowBit + passes - 1) / passes
     val buckets = 1 << digit
     val mask = (buckets - 1).toLong
-    val tmpK = new Array[Long](n)
-    val tmpV = new Array[Long](n)
-    var src = (keys, vals)
-    var dst = (tmpK, tmpV)
-    val passes = (keyBits + digit - 1) / digit
+    var srcK = keys; var dstK = new Array[Long](n)
+    var srcV = vals; var dstV = if (vals == null) null else new Array[Long](n)
     var pass = 0
     while (pass < passes) {
-      val shift = pass * digit
+      val shift = lowBit + pass * digit
       val count = new Array[Int](buckets + 1)
       var i = 0
-      while (i < n) { count((((src._1(i) >>> shift) & mask) + 1).toInt) += 1; i += 1 }
+      while (i < n) { count((((srcK(i) >>> shift) & mask) + 1).toInt) += 1; i += 1 }
       i = 1
       while (i <= buckets) { count(i) += count(i - 1); i += 1 }
       i = 0
-      while (i < n) {
-        val b = ((src._1(i) >>> shift) & mask).toInt
+      if (vals == null) while (i < n) {
+        val b = ((srcK(i) >>> shift) & mask).toInt
         val at = count(b)
-        dst._1(at) = src._1(i)
-        dst._2(at) = src._2(i)
+        dstK(at) = srcK(i)
+        count(b) = at + 1
+        i += 1
+      } else while (i < n) {
+        val b = ((srcK(i) >>> shift) & mask).toInt
+        val at = count(b)
+        dstK(at) = srcK(i)
+        dstV(at) = srcV(i)
         count(b) = at + 1
         i += 1
       }
-      val t = src; src = dst; dst = t
+      val tk = srcK; srcK = dstK; dstK = tk
+      val tv = srcV; srcV = dstV; dstV = tv
       pass += 1
     }
-    if (src._1 ne keys) {
-      System.arraycopy(src._1, 0, keys, 0, n)
-      System.arraycopy(src._2, 0, vals, 0, n)
+    if (srcK ne keys) {
+      System.arraycopy(srcK, 0, keys, 0, n)
+      if (vals != null) System.arraycopy(srcV, 0, vals, 0, n)
     }
   }
 
-  /** Keys-only variant of [[sortPairs]] for the all-ones build path: the
-    * bulk index build's stored counts are uniformly 1, so carrying a value
-    * array through every radix pass would double the sort's memory traffic
-    * for nothing — on this host the reduce stage is bandwidth-bound, so
-    * that factor shows directly in shard-build wall time.
+  /** Finish a merge's sort after [[radixSort]] over the quotient bits
+    * alone: each input enumerates in its own layout order with a quotient
+    * no wider than the target's, so the stable pass leaves every quotient
+    * group a concatenation of ascending runs, one per input. Groups already
+    * ascending stay as they are; the rest take a merge sort, O(m log m) for
+    * a group of m — so even input where every entry shares one quotient
+    * sorts in O(n log n). Keys of one group share their top bits, so
+    * signed comparison orders them as unsigned.
     */
-  private def sortKeys(keys: Array[Long], n: Int, keyBits: Int): Unit = {
-    if (n <= 1) return
-    val digit = 12
-    val buckets = 1 << digit
-    val mask = (buckets - 1).toLong
-    val tmp = new Array[Long](n)
-    var src = keys
-    var dst = tmp
-    val passes = (keyBits + digit - 1) / digit
-    var pass = 0
-    while (pass < passes) {
-      val shift = pass * digit
-      val count = new Array[Int](buckets + 1)
-      var i = 0
-      while (i < n) { count((((src(i) >>> shift) & mask) + 1).toInt) += 1; i += 1 }
-      i = 1
-      while (i <= buckets) { count(i) += count(i - 1); i += 1 }
-      i = 0
-      while (i < n) {
-        val b = ((src(i) >>> shift) & mask).toInt
-        val at = count(b)
-        dst(at) = src(i)
-        count(b) = at + 1
-        i += 1
+  private def sortGroups(keys: Array[Long], vals: Array[Long], n: Int, remShift: Int): Unit = {
+    var tmpK: Array[Long] = null
+    var tmpV: Array[Long] = null
+    var i = 0
+    while (i < n) {
+      val quot = keys(i) >>> remShift
+      var ascending = true
+      var j = i + 1
+      while (j < n && (keys(j) >>> remShift) == quot) {
+        if (keys(j) < keys(j - 1)) ascending = false
+        j += 1
       }
-      val t = src; src = dst; dst = t
-      pass += 1
+      if (!ascending) {
+        val half = (j - i + 1) / 2
+        if (tmpK == null || tmpK.length < half) { tmpK = new Array[Long](half); tmpV = new Array[Long](half) }
+        mergeSort(keys, vals, i, j, tmpK, tmpV)
+      }
+      i = j
     }
-    if (src ne keys) System.arraycopy(src, 0, keys, 0, n)
   }
+
+  /** Stable top-down merge sort of keys[lo, hi) carrying vals; `tmpK` and
+    * `tmpV` hold at least (hi - lo + 1) / 2 entries.
+    */
+  private def mergeSort(keys: Array[Long], vals: Array[Long], lo: Int, hi: Int,
+                        tmpK: Array[Long], tmpV: Array[Long]): Unit =
+    if (hi - lo > 1) {
+      val mid = (lo + hi) >>> 1
+      mergeSort(keys, vals, lo, mid, tmpK, tmpV)
+      mergeSort(keys, vals, mid, hi, tmpK, tmpV)
+      if (keys(mid - 1) > keys(mid)) {
+        val len = mid - lo
+        System.arraycopy(keys, lo, tmpK, 0, len)
+        System.arraycopy(vals, lo, tmpV, 0, len)
+        var a = 0; var b = mid; var o = lo
+        while (a < len && b < hi) {
+          if (keys(b) < tmpK(a)) { keys(o) = keys(b); vals(o) = vals(b); b += 1 }
+          else { keys(o) = tmpK(a); vals(o) = tmpV(a); a += 1 }
+          o += 1
+        }
+        while (a < len) { keys(o) = tmpK(a); vals(o) = tmpV(a); a += 1; o += 1 }
+      }
+    }
+
+  /** The sort quotient of a build: the q the quotient rule gives `n`
+    * entries if none are duplicates, at least `floorQ` and below
+    * `hashBits`. It is the final q unless duplicates shrink the entry
+    * count across a 95% cap, so most builds sort once.
+    */
+  private def sortQuotient(floorQ: Int, n: Long, hashBits: Int): Int =
+    math.max(floorQ, math.min(tightQBits(n), hashBits - 1))
 
   /** Bulk-build a filter from (fingerprint, storedCount) entry arrays in a
     * single sequential pass — the one construction path behind every built
@@ -1142,6 +1228,11 @@ object BackpackFilter {
     * admits the deduplicated entry count. Producers pass qBits = 7, so a
     * sketch's bytes depend only on its parameters and its entries.
     *
+    * Sort quotient: the entries are sorted once, in the layout order of the
+    * q the rule gives `n0` distinct entries ([[sortQuotient]]); they are
+    * re-sorted once only when duplicates shrink the entry count across a
+    * 95% cap.
+    *
     * `combine`: how to fold duplicate fingerprints' stored counts
     * (saturating add for exact, max for oom).
     *
@@ -1154,24 +1245,32 @@ object BackpackFilter {
     */
   def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
                   kTokens: Int, zTokens: Int, seed: Long,
-                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter =
-    build(qBits, qBits, countBits, hashBits, mode, kTokens, zTokens, seed, fps, counts, n0)
-
-  /** [[fromEntries]] with the sort quotient `sortQ` (a guess at the final
-    * q) apart from the floor `floorQ`: entries are sorted once when the
-    * guess holds and re-sorted once when deduplication moves q.
-    */
-  private def build(floorQ: Int, sortQ: Int, countBits: Int, hashBits: Int, mode: CountMode,
-                    kTokens: Int, zTokens: Int, seed: Long,
-                    fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
-    // 1. sort by physical layout order
+                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
+    val sortQ = sortQuotient(qBits, n0, hashBits)
     val keys = new Array[Long](n0)
     var i = 0
     while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), sortQ, hashBits); i += 1 }
-    val allOnes = counts == null
-    val vals =
-      if (allOnes) { sortKeys(keys, n0, hashBits); new Array[Long](n0) }
-      else { val v = java.util.Arrays.copyOf(counts, n0); sortPairs(keys, v, n0, hashBits); v }
+    build(qBits, sortQ, countBits, hashBits, mode, kTokens, zTokens, seed,
+      keys, if (counts == null) null else java.util.Arrays.copyOf(counts, n0), n0, grouped = false)
+  }
+
+  /** The build behind [[fromEntries]] and [[mergeAll]]. `keys` holds the
+    * entries' [[rotKey]]s at the sort quotient `sortQ` and `vals` their
+    * stored counts (null: all ones); both are owned and overwritten.
+    * `grouped`: the entries are layout-order enumerations of filters whose
+    * quotients are at most `sortQ`, so sorting by the quotient bits and
+    * then the out-of-order groups ([[sortGroups]]) sorts them in full.
+    */
+  private def build(floorQ: Int, sortQ: Int, countBits: Int, hashBits: Int, mode: CountMode,
+                    kTokens: Int, zTokens: Int, seed: Long,
+                    keys: Array[Long], vals0: Array[Long], n0: Int, grouped: Boolean): BackpackFilter = {
+    // 1. sort by physical layout order
+    val allOnes = vals0 == null
+    if (grouped) {
+      radixSort(keys, vals0, n0, hashBits - sortQ, hashBits)
+      sortGroups(keys, vals0, n0, hashBits - sortQ)
+    } else radixSort(keys, vals0, n0, 0, hashBits)
+    val vals = if (allOnes) new Array[Long](n0) else vals0
 
     // 2. combine duplicate fingerprints
     val cMax = (1L << countBits) - 1
@@ -1180,7 +1279,7 @@ object BackpackFilter {
       case CountMode.OrderOfMagnitude => 0L
     }
     var w = 0
-    i = 0
+    var i = 0
     while (i < n0) {
       var c = if (allOnes) one else vals(i)
       var j = i + 1
@@ -1202,11 +1301,10 @@ object BackpackFilter {
     while ((((1L << q) * 0.95).toLong) <= n) q += 1
     require(hashBits - q >= 1, s"entries exceed hash space (n=$n hashBits=$hashBits)")
     if (q != sortQ) {
-      // quotient width changed: keys must be re-rotated; recurse once
-      val fx = new Array[Long](n)
+      // quotient width changed: keys must be re-rotated; re-sort once
       i = 0
-      while (i < n) { fx(i) = unrotate(keys(i), sortQ, hashBits); i += 1 }
-      return build(q, q, countBits, hashBits, mode, kTokens, zTokens, seed, fx, vals, n)
+      while (i < n) { keys(i) = rotKey(unrotate(keys(i), sortQ, hashBits), q, hashBits); i += 1 }
+      return build(q, q, countBits, hashBits, mode, kTokens, zTokens, seed, keys, vals, n, grouped = false)
     }
 
     val f = new BackpackFilter(q, countBits, hashBits, mode, kTokens, zTokens, seed)
@@ -1300,12 +1398,22 @@ object BackpackFilter {
   /** Merge many filters into a fresh one via the bulk path: O(total) gather
     * + sort + single-pass build. This is what shuffle-boundary merges
     * use — per-entry insert cost independent of load factor. q follows
-    * [[fromEntries]]' rule with the inputs' largest q as the floor; the sum
-    * of input counts only guesses the sort quotient, so disjoint inputs
-    * sort once and overlapping ones re-sort when they shrink across a
-    * capacity boundary.
+    * [[fromEntries]]' rule with the inputs' largest q as the floor.
+    *
+    * Sort quotient: [[sortQuotient]] of the summed input counts, so
+    * disjoint inputs sort once and overlapping ones re-sort when they
+    * shrink across a capacity boundary. Every input's q is at most the
+    * sort quotient and [[foreachRaw]] enumerates in layout order, so the
+    * sort is a radix over the quotient bits only plus a merge sort of the
+    * quotient groups whose inputs interleave ([[sortGroups]]).
     */
-  def mergeAll(filters: Seq[BackpackFilter]): BackpackFilter = {
+  def mergeAll(filters: Seq[BackpackFilter]): BackpackFilter =
+    mergeAtLeast(filters, filters.map(_.quotientBits).max)
+
+  /** [[mergeAll]] with the quotient floor `floorQ` (at least every input's
+    * q): the merge itself and, for one input, [[BackpackFilter.resize]].
+    */
+  private def mergeAtLeast(filters: Seq[BackpackFilter], floorQ: Int): BackpackFilter = {
     require(filters.nonEmpty)
     val h = filters.head
     filters.tail.foreach(o => require(
@@ -1313,13 +1421,14 @@ object BackpackFilter {
       o.kTokens == h.kTokens && o.zTokens == h.zTokens, "parameter mismatch in mergeAll"))
     val total = filters.map(_.distinctCount).sum
     require(total <= Int.MaxValue - 8, s"mergeAll too large: $total")
-    val fps = new Array[Long](total.toInt)
+    val hashBits = h.hashBits
+    val sortQ = sortQuotient(floorQ, total, hashBits)
+    val keys = new Array[Long](total.toInt)
     val counts = new Array[Long](total.toInt)
     var i = 0
-    filters.foreach(_.foreachRaw { (fp, c) => fps(i) = fp; counts(i) = c; i += 1 })
-    val q = filters.map(_.quotientBits).max
-    build(q, math.max(q, tightQBits(total)), h.countBits, h.hashBits, h.mode,
-      h.kTokens, h.zTokens, h.seed, fps, counts, i)
+    filters.foreach(_.foreachRaw { (fp, c) => keys(i) = rotKey(fp, sortQ, hashBits); counts(i) = c; i += 1 })
+    build(floorQ, sortQ, h.countBits, hashBits, h.mode, h.kTokens, h.zTokens, h.seed,
+      keys, counts, i, grouped = true)
   }
 
   def apply(qBits: Int, countBits: Int, hashBits: Int = 64, mode: CountMode = CountMode.Exact,

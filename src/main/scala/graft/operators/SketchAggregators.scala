@@ -203,9 +203,11 @@ class BqfCountedAggregator(params: BqfParams)
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 
-/** Merges already-serialized shard sketches (the one-blob fold of
-  * `BqfPipeline.mergeShards`, per-source merges). The live filter stays
-  * null until the first shard arrives, so a merge of no rows is null.
+/** Merges already-serialized shard sketches inside an aggregation, as the
+  * per-source merge of `BqfPipeline.buildPerSource` does (the one-blob
+  * fold `BqfPipeline.mergeShards` merges on the driver instead). The live
+  * filter stays null until the first shard arrives, so a merge of no rows
+  * is null.
   */
 class BqfMergeAggregator extends Aggregator[Array[Byte], BqfShards, Array[Byte]] {
   override def zero: BqfShards = new BqfShards(null, Nil)

@@ -9,19 +9,21 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB / 1000 executors): only serialized sketch blobs
   * and map-side fingerprint chunks cross shuffle boundaries. One sorted
   * plan ([[sortedBuild]]) builds every fingerprint-range sharded index, and
-  * every one-blob build is that index folded by [[mergeShards]]: one global
-  * merge aggregation whose partial step folds each input task's shards
-  * map-side, so the final task sees one buffer per input partition. The
+  * every one-blob build is that index folded by [[mergeShards]]: the shard
+  * blobs are collected and merged by one
+  * [[graft.core.BackpackFilter.mergeAll]] on the driver, a single sort of
+  * the shard entries with no stage after the sorted build's reduce. The
   * keyed producers bucket rows by a deterministic xxhash64 of the row id
   * (checkpoint resume) or fan hot `source` values out over salts before
   * the per-source merge (two-level aggregation).
   *
   * Scale ceilings: one sketch holds at most `Int.MaxValue - 8` entries
-  * ([[graft.core.BackpackFilter.mergeAll]]); a one-blob build ends in one
-  * merge task and then the driver, so it suits sketches that fit one task
-  * and a broadcast; beyond that, [[buildIndexSorted]] and
-  * [[reshardMerge]] keep the index sharded and every level parallel; the
-  * `graft.maxShardFps` guard bounds one shard of the sorted plan.
+  * ([[graft.core.BackpackFilter.mergeAll]]); a one-blob build folds on the
+  * driver, which holds the shard blobs plus ~48 B per distinct entry while
+  * the merge runs, so it suits sketches that fit the driver and a
+  * broadcast; beyond that, [[buildIndexSorted]] and [[reshardMerge]] keep
+  * the index sharded and every level parallel; the `graft.maxShardFps`
+  * guard bounds one shard of the sorted plan.
   */
 object BqfPipeline {
 
@@ -278,8 +280,8 @@ object BqfPipeline {
     * sketches' raw (fingerprint, storedCount) entries, and the same sorted
     * build as [[buildIndexSorted]] routes them to `nOut` fingerprint-range
     * buckets and bulk-rebuilds one sketch per output bucket. This is the
-    * scale form of the merge: where [[mergeShards]] ends in one task
-    * producing a driver blob, reshardMerge ends in `nOut` independent O(n)
+    * scale form of the merge: where [[mergeShards]] ends in one merge on
+    * the driver, reshardMerge ends in `nOut` independent O(n)
     * sorted builds, so merge wall time scales with cores. Output bucket b
     * of nOut is exactly the merge of input shards covering that fingerprint
     * range (high-bit prefix nesting), regardless of how the inputs were
@@ -371,14 +373,24 @@ object BqfPipeline {
   }
 
   /** Fold the `sketch` column of any shard rows into one serialized
-    * sketch (null for no rows) with one global [[SketchAggregators.bqfMerge]]
-    * aggregation. Spark's partial aggregation folds each input task's
-    * shards map-side, so the one final task merges at most one buffer per
-    * input partition; the result is the same bytes however the rows were
-    * sharded or partitioned.
+    * sketch (null for no rows): collect the shard blobs and run one
+    * [[graft.core.BackpackFilter.mergeAll]] on the driver, which sorts the
+    * shard entries once. The job ends at the stage that produces `shards`
+    * — no aggregation buffers, no extra exchange, no one-task final stage
+    * — and the result is the same bytes however the rows were sharded or
+    * partitioned. The driver holds the blobs plus ~48 B per distinct entry
+    * while the merge runs. Null sketches contribute nothing.
     */
-  def mergeShards(shards: DataFrame): Array[Byte] =
-    shards.agg(SketchAggregators.bqfMerge(col("sketch"))).head().getAs[Array[Byte]](0)
+  def mergeShards(shards: DataFrame): Array[Byte] = {
+    import shards.sparkSession.implicits._
+    val blobs = shards.select("sketch").as[Array[Byte]].collect()
+    val filters = blobs.indices.flatMap { i =>
+      val b = blobs(i)
+      blobs(i) = null // each blob is garbage once deserialized
+      Option(b).map(graft.core.BackpackFilter.deserialize)
+    }
+    if (filters.isEmpty) null else graft.core.BackpackFilter.mergeAll(filters).serialize()
+  }
 
   /** Two-level skew-safe per-source build: hot `source` values fan out over
     * `salts` deterministic salt buckets before the per-source merge, so no

@@ -148,21 +148,21 @@ object IndexIngest {
   private def storeExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath.getName
-        found = f.endsWith(".parquet") && !f.startsWith("_") && !f.startsWith(".")
-      }
-      found
+    // a plain listStatus walk: fs.listFiles builds a LocatedFileStatus per
+    // file, which reads its permissions — without native libhadoop, a
+    // forked `ls -ld` per file on every store access
+    def hasData(d: org.apache.hadoop.fs.Path): Boolean = fs.listStatus(d).exists { s =>
+      val f = s.getPath.getName
+      if (s.isDirectory) hasData(s.getPath)
+      else f.endsWith(".parquet") && !f.startsWith("_") && !f.startsWith(".")
     }
     val aside = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    if (!hasData && fs.exists(aside)) {
+    if (fs.exists(p) && hasData(p)) true
+    else if (fs.exists(aside)) {
       fs.delete(p, true) // at most an empty shell from the failed swap
       fs.rename(aside, p)
-    }
-    hasData
+      fs.exists(p) && hasData(p)
+    } else false
   }
 
   /** Every store read uses this fixed schema: no read pays a schema

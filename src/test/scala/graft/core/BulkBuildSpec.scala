@@ -148,4 +148,166 @@ class BulkBuildSpec extends AnyFunSuite {
       Array(0x1234L), Array(7L), 1)
     assert(s.enumerate() == Map(0x1234L -> 7L))
   }
+
+  // ---- kernel properties: one sort per build, quotient-only merge sort,
+  // linear enumeration ----
+
+  private val Widths = Seq(20, 32, 48, 64)
+  private val Modes = Seq(CountMode.Exact, CountMode.OrderOfMagnitude)
+
+  /** Floor quotient: 7, or higher where the slot would exceed 63 bits. */
+  private def floorQ(h: Int, c: Int): Int = math.max(7, h - 63 + c)
+
+  private def randomFp(rng: Random, h: Int): Long = rng.nextLong() & Bits.maskRight(h)
+
+  /** Per-entry `add` oracle over encoded stored counts (null: all ones).
+    * Duplicates fold first, as a merge folds them (saturating sum exact,
+    * max order-of-magnitude); `add` then stores each distinct entry's raw
+    * count, whose encoding is the folded stored count.
+    */
+  private def viaAdd(fps: Array[Long], stored: Array[Long], c: Int, h: Int, mode: CountMode,
+                     q0: Int): BackpackFilter = {
+    val cMax = (1L << c) - 1
+    val one = if (mode == CountMode.Exact) 1L else 0L
+    val folded = mutable.LinkedHashMap.empty[Long, Long]
+    for (i <- fps.indices) {
+      val s = if (stored == null) one else stored(i)
+      folded(fps(i)) = folded.get(fps(i)).fold(s)(o =>
+        if (mode == CountMode.Exact) math.min(o + s, cMax) else math.max(o, s))
+    }
+    val f = BackpackFilter(qBits = q0, countBits = c, hashBits = h, mode = mode)
+    folded.foreach { case (fp, s) => f.add(fp, if (mode == CountMode.Exact) s else 1L << s) }
+    f
+  }
+
+  private def fromEntries(fps: Array[Long], stored: Array[Long], c: Int, h: Int, mode: CountMode,
+                          q0: Int): BackpackFilter =
+    BackpackFilter.fromEntries(q0, c, h, mode, 0, 0, 0L, fps, stored, fps.length)
+
+  /** Random encoded counts: anything up to the counter maximum. */
+  private def storedCounts(rng: Random, n: Int, c: Int, mode: CountMode): Array[Long] =
+    Array.fill(n)(if (mode == CountMode.Exact) rng.nextInt(1 << c).toLong else rng.nextInt(c + 1).toLong)
+
+  test("fromEntries == per-entry add across hash widths, modes, all-ones and counted input") {
+    for (h <- Widths; mode <- Modes; allOnes <- Seq(true, false); seed <- 1 to 3) {
+      val rng = new Random(h * 100 + seed)
+      val c = if (mode == CountMode.Exact) 6 else 4
+      val distinct = Array.fill(50 + rng.nextInt(2500))(randomFp(rng, h))
+      val fps = distinct ++ Array.fill(rng.nextInt(distinct.length))(distinct(rng.nextInt(distinct.length)))
+      val stored = if (allOnes) null else storedCounts(rng, fps.length, c, mode)
+      val q0 = floorQ(h, c)
+      assertTablesIdentical(fromEntries(fps, stored, c, h, mode, q0), viaAdd(fps, stored, c, h, mode, q0),
+        s"h=$h $mode allOnes=$allOnes seed=$seed")
+    }
+  }
+
+  test("duplicates that cross a cap boundary re-sort to the smaller quotient") {
+    // 1,900 distinct entries fit q=11 (cap 1,945); with 300 duplicates the
+    // 2,200 entries alone would ask for q=12, the quotient the first sort uses
+    for (h <- Widths; mode <- Modes; allOnes <- Seq(true, false)) {
+      val rng = new Random(h + 7)
+      val c = 4
+      val distinct = Iterator.continually(randomFp(rng, h)).distinct.take(1900).toArray
+      val fps = rng.shuffle((distinct ++ distinct.take(300)).toSeq).toArray
+      val stored = if (allOnes) null else storedCounts(rng, fps.length, c, mode)
+      val got = fromEntries(fps, stored, c, h, mode, floorQ(h, c))
+      assert(got.quotientBits == 11, s"h=$h: q=${got.quotientBits}")
+      assertTablesIdentical(got, viaAdd(fps, stored, c, h, mode, floorQ(h, c)), s"h=$h $mode allOnes=$allOnes")
+    }
+  }
+
+  test("mergeAll == fromEntries of the union: overlapping and range-disjoint inputs in shuffled order") {
+    for (h <- Widths; mode <- Modes; seed <- 1 to 2) {
+      val rng = new Random(h * 31 + seed)
+      val c = if (mode == CountMode.Exact) 6 else 4
+      val q0 = floorQ(h, c)
+      val fps = Array.fill(4000)(randomFp(rng, h))
+      val stored = storedCounts(rng, fps.length, c, mode)
+      def part(idx: Seq[Int], q: Int): BackpackFilter =
+        fromEntries(idx.map(fps).toArray, idx.map(stored).toArray, c, h, mode, q)
+      val union = fromEntries(fps ++ fps.take(1500), stored ++ stored.take(1500), c, h, mode, q0)
+      // overlapping: every occurrence (the first 1,500 entries twice) goes
+      // to one of 5 parts with skewed odds, so parts share fingerprints and
+      // differ in size and quotient
+      val overlapParts = (fps.indices ++ (0 until 1500))
+        .groupBy(_ => math.min(rng.nextInt(8), 4)).values.map(part(_, q0)).toSeq
+      assertTablesIdentical(BackpackFilter.mergeAll(rng.shuffle(overlapParts)), union,
+        s"overlapping h=$h $mode seed=$seed")
+      // range-disjoint by the top bits, as index shards are
+      val bits = 1 + rng.nextInt(4)
+      val disjoint = (0 until 4000).groupBy(i => fps(i) >>> (h - bits)).values.map(part(_, q0)).toSeq
+      val distinctOnly = fromEntries(fps, stored, c, h, mode, q0)
+      assertTablesIdentical(BackpackFilter.mergeAll(rng.shuffle(disjoint)), distinctOnly,
+        s"range-disjoint h=$h $mode seed=$seed")
+      assertTablesIdentical(distinctOnly, viaAdd(fps, stored, c, h, mode, q0), s"add h=$h $mode seed=$seed")
+      // an input built at a raised floor carries its quotient into the merge
+      val raised = part(0 until 100, 14)
+      assertTablesIdentical(BackpackFilter.mergeAll(Seq(disjoint.head, raised)),
+        fromEntries((disjoint.head.rawEntries().map(_._1) ++ (0 until 100).map(fps)).toArray,
+          (disjoint.head.rawEntries().map(_._2) ++ (0 until 100).map(stored)).toArray, c, h, mode, 14),
+        s"raised floor h=$h $mode seed=$seed")
+    }
+  }
+
+  private def sortedRaw(f: BackpackFilter): Seq[(Long, Long)] = {
+    val b = Vector.newBuilder[(Long, Long)]
+    f.foreachRaw((fp, s) => b += fp -> s)
+    b.result().sorted
+  }
+
+  private def offsets(f: BackpackFilter): Seq[Long] =
+    "offset=\\s*(\\d+)".r.findAllMatchIn(f.debugDump(0, Long.MaxValue)).map(_.group(1).toLong).toSeq
+
+  test("foreachRaw enumerates runs across the toric seam and tables with no zero-offset block") {
+    val h = 32; val c = 5
+    // runs of the last quotients wrap past the last slot into block 0
+    val top = (1L << 7) - 3
+    val wrapping = ((0 until 12).map(r => ((r + 1).toLong << 7) | top) ++
+      (0 until 8).map(r => ((r + 1).toLong << 7) | (top + 2)) ++
+      (0 until 5).map(r => ((r + 1).toLong << 7) | 1L)).toArray
+    // both blocks of a q=7 table start with an occupied slot
+    val noZero = ((0 until 20).map(r => ((r + 1).toLong << 7) | 0L) ++
+      (0 until 20).map(r => ((r + 1).toLong << 7) | 64L) ++
+      (0 until 30).map(r => ((r + 1).toLong << 7) | 100L)).toArray
+    for ((label, fps, anyZero) <- Seq(("toric seam", wrapping, true), ("no zero-offset block", noZero, false))) {
+      val f = viaAdd(fps, null, c, h, CountMode.Exact, 7)
+      assert(f.quotientBits == 7, label)
+      assert(offsets(f).size == 2 && offsets(f).contains(0L) == anyZero, s"$label: offsets ${offsets(f)}")
+      assert(sortedRaw(f) == f.rawEntries().toVector.sorted, label)
+      assert(sortedRaw(f) == fps.map(_ -> 1L).toVector.sorted, label)
+      // merge and resize enumerate through foreachRaw
+      assertTablesIdentical(BackpackFilter.mergeAll(Seq(f, f)), viaAdd(fps ++ fps, null, c, h, CountMode.Exact, 7),
+        s"$label: mergeAll")
+      val grown = viaAdd(fps, null, c, h, CountMode.Exact, 7)
+      grown.resize(2)
+      assertTablesIdentical(grown, viaAdd(fps, null, c, h, CountMode.Exact, 9), s"$label: resize")
+    }
+    // dense tables of every width: the linear walk agrees with the
+    // per-quotient iterator
+    for (h <- Widths; n <- Seq(100, 121, 1900, 1945)) {
+      val rng = new Random(h * n)
+      val f = viaAdd(Array.fill(n)(randomFp(rng, h)), null, 4, h, CountMode.Exact, floorQ(h, 4))
+      assert(sortedRaw(f) == f.rawEntries().toVector.sorted, s"h=$h n=$n")
+    }
+  }
+
+  test("mergeAll of inputs whose every entry shares one quotient sorts in O(n log n)") {
+    // 2 x 200,000 entries with equal low 20 bits and interleaved high bits:
+    // one quotient group that an insertion sort would take ~10^10 steps on
+    val h = 48; val c = 4
+    val quot = 0x5a5a5L
+    val rng = new Random(3)
+    val fps = Iterator.continually(((rng.nextLong() & Bits.maskRight(h - 20)) << 20) | quot)
+      .distinct.take(400000).toArray.sorted
+    val evens = fps.indices.filter(_ % 2 == 0).map(fps).toArray
+    val odds = fps.indices.filter(_ % 2 == 1).map(fps).toArray
+    val a = fromEntries(evens, null, c, h, CountMode.Exact, 7)
+    val b = fromEntries(odds, null, c, h, CountMode.Exact, 7)
+    val t0 = System.nanoTime()
+    val merged = BackpackFilter.mergeAll(Seq(b, a))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 5, s"mergeAll took $secs s")
+    assertTablesIdentical(merged, fromEntries(fps, null, c, h, CountMode.Exact, 7), "one quotient")
+    assert(merged.distinctCount == 400000 && merged.abundance(fps(12345)) == 1L)
+  }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import graft.SparkTestSession
 import graft.core.BackpackFilter
 import graft.functions.GraftFunctions._
-import graft.operators.BqfParams
+import graft.operators.{BqfParams, SketchAggregators}
 import graft.sources.TokensTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The distributed re-shard merge must be a pure repartitioning of sketch
   * contents: every (fingerprint, abundance) entry survives verbatim, output
   * shards nest by fingerprint-range prefix, and collapsing to one shard is
-  * value-identical to a local merge of the shards. The sorted build routes
+  * value-identical to a local merge of the shards, as is the one-blob
+  * fold [[BqfPipeline.mergeShards]]. The sorted build routes
   * contiguous bucket ranges to min(nBuckets, cores) tasks and gathers one
   * shard at a time; queryIndex routes its probe chunks by the same rule.
   */
@@ -76,6 +77,30 @@ class ReshardMergeSpec extends AnyFunSuite {
       BackpackFilter.deserialize(r.getAs[Array[Byte]]("sketch"))))
     assert(viaReshard == local.enumerate())
     i16.unpersist()
+  }
+
+  test("mergeShards == local mergeAll of range-disjoint and of overlapping UDAF shards; no rows give null") {
+    // every doc twice, under a second id, so doc buckets share s-grams
+    val once = TokensTable.dataframe(spark, 200, partitions = 4)
+    val df = once.union(once.withColumn("doc_id", concat(col("doc_id"), lit("-copy"))))
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    def local(shards: org.apache.spark.sql.DataFrame): Array[Byte] =
+      BackpackFilter.mergeAll(shards.select("sketch").collect().toSeq.map(r =>
+        BackpackFilter.deserialize(r.getAs[Array[Byte]](0)))).serialize()
+    // range-disjoint: the sorted index's shards split the fingerprint range
+    val disjoint = BqfPipeline.buildIndexSorted(df, fps, params, 16).cache()
+    // overlapping: doc-bucketed UDAF shards share every s-gram two docs share
+    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
+    val overlapping = df.groupBy(pmod(xxhash64(col("doc_id")), lit(8)).as("bucket"))
+      .agg(bqf(fps).as("sketch")).cache()
+    val shardFps = overlapping.select("sketch").collect().map(r =>
+      BackpackFilter.deserialize(r.getAs[Array[Byte]](0)).distinctCount).sum
+    assert(shardFps > BackpackFilter.deserialize(local(overlapping)).distinctCount, "UDAF shards do not overlap")
+    for ((label, shards) <- Seq("range-disjoint" -> disjoint, "overlapping" -> overlapping))
+      assert(java.util.Arrays.equals(BqfPipeline.mergeShards(shards), local(shards)), label)
+    assert(java.util.Arrays.equals(BqfPipeline.mergeShards(disjoint), BqfPipeline.mergeShards(overlapping)))
+    assert(BqfPipeline.mergeShards(disjoint.limit(0)) == null)
+    disjoint.unpersist(); overlapping.unpersist()
   }
 
   test("sorted build routes contiguous bucket ranges to min(nBuckets, cores) tasks") {

@@ -27,7 +27,7 @@ class StageMetricsSpec extends AnyFunSuite {
     } finally m.detach(spark)
   }
 
-  test("buildSharded runs buildGlobal's stages, the last on one task") {
+  test("buildSharded runs buildGlobal's stages, none after the sorted reduce") {
     val spark = SparkTestSession.spark
     assert(spark.sparkContext.defaultParallelism == 4)
     val params = BqfParams(qBits = 14, countBits = 16, hashBits = 48, kTokens = 8, zTokens = 2)
@@ -38,6 +38,13 @@ class StageMetricsSpec extends AnyFunSuite {
       BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 64): @scala.annotation.nowarn("cat=deprecation"))
     assert(sStages.size == gStages.size,
       s"buildSharded ran ${sStages.size} stages, buildGlobal ${gStages.size}: ${sStages.map(_.numTasks)}")
-    assert(sStages.last.numTasks == 1 && gStages.last.numTasks == 1)
+    // the fold runs on the driver: the last stage is the sorted build's
+    // reduce, min(32 buckets, 4 cores) tasks that read the chunk shuffle
+    // and write no shuffle of their own
+    for (stages <- Seq(gStages, sStages)) {
+      val last = stages.last
+      assert(last.numTasks == 4 && last.shuffleReadBytes > 0 && last.shuffleWriteBytes == 0,
+        s"last stage: ${last.numTasks} tasks, read ${last.shuffleReadBytes} B, wrote ${last.shuffleWriteBytes} B")
+    }
   }
 }
