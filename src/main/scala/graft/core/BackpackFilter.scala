@@ -120,6 +120,8 @@ final class BackpackFilter(
   }
   @inline private def isOccupied(quot: Long): Boolean =
     ((occWordAt(quot >>> 6) >>> (quot & 63L).toInt) & 1L) != 0L
+  @inline private def isRunEnd(p: Long): Boolean =
+    ((runWordAt(p >>> 6) >>> (p & 63L).toInt) & 1L) != 0L
 
   // =====================================================================
   // slot accessors
@@ -136,6 +138,7 @@ final class BackpackFilter(
 
   // circular navigation
   @inline private def nextSlot(p: Long): Long = if (p + 1 < numSlots) p + 1 else 0L
+  @inline private def prevSlot(p: Long): Long = if (p > 0) p - 1 else numSlots - 1
   @inline private def nextBlock(b: Long): Long = if (b + 1 < numBlocks) b + 1 else 0L
   @inline private def prevBlock(b: Long): Long = if (b > 0) b - 1 else numBlocks - 1
 
@@ -158,17 +161,17 @@ final class BackpackFilter(
   // run navigation (rank/select over occupieds/runends with block offsets)
   // =====================================================================
 
+  /** A slot position with a boolean flag packed into bit 62 (positions are
+    * < 2^q <= 2^62).
+    */
+  @inline private def packed(pos: Long, flag: Boolean): Long =
+    if (flag) pos | BackpackFilter.FlagBit else pos
+
   /** Position of the runend of `quot`'s run, plus whether the walk crossed
     * out of `quot`'s block (toricity marker). Requires a consistent table;
     * mirrors the offset-jump + select walk of the reference
     * (/root/reference/src/rsqf.cpp:762-815).
     */
-  /** Packed result flag: bit 62 set when the runend walk crossed out of
-    * the quotient's block (positions are < 2^q <= 2^62).
-    */
-  @inline private def packed(pos: Long, flag: Boolean): Long =
-    if (flag) pos | BackpackFilter.FlagBit else pos
-
   private def runEndOf(quot: Long): Long = {
     val block = quot >>> 6
     val shift = (quot & 63L).toInt
@@ -283,10 +286,12 @@ final class BackpackFilter(
 
   @inline private def runEndPos(quot: Long): Long = runEndOf(quot) & ~BackpackFilter.FlagBit
 
-  /** First free slot at/after `quot` — the right edge of the shift window an
-    * insertion at `quot` must move (/root/reference/src/rsqf.cpp:730-759).
+  /** The right edge of the shift window an update at `quot` moves. For an
+    * insert, the first free slot at/after `quot`
+    * (reference src/rsqf.cpp:730-759); for a delete, the first slot
+    * that is unused or starts its own run (reference src/rsqf.cpp:696-728).
     */
-  private def firstUnusedSlot(quot0: Long): Long = {
+  private def shiftWindowEnd(quot0: Long, forDelete: Boolean): Long = {
     val Flag = BackpackFilter.FlagBit
     var quot = quot0
     var r = runEndOf(quot)
@@ -296,38 +301,14 @@ final class BackpackFilter(
       (p & 63L) == 0 && !c && offsetAt(p >>> 6) == 0
     if (emptyShift0(endPos, crossed)) return quot
     var guard = numSlots + 2
-    while (crossed || quot <= endPos) {
+    while (crossed || quot < endPos || (!forDelete && quot == endPos)) {
       quot = nextSlot(endPos)
+      if (forDelete && runStartOf(quot, isOccupied(quot)) == quot) return endPos
       r = runEndOf(quot)
       endPos = r & ~Flag; crossed = (r & Flag) != 0
       if (emptyShift0(endPos, crossed)) return quot
       guard -= 1
-      if (guard < 0) throw new IllegalStateException("firstUnusedSlot did not terminate (filter full?)")
-    }
-    quot
-  }
-
-  /** Deletion twin of [[firstUnusedSlot]]: first slot that is unused or
-    * starts its own run (/root/reference/src/rsqf.cpp:696-728).
-    */
-  private def firstUnshiftableSlot(quot0: Long): Long = {
-    val Flag = BackpackFilter.FlagBit
-    var quot = quot0
-    var r = runEndOf(quot)
-    var endPos = r & ~Flag
-    var crossed = (r & Flag) != 0
-    @inline def emptyShift0(p: Long, c: Boolean): Boolean =
-      (p & 63L) == 0 && !c && offsetAt(p >>> 6) == 0
-    if (emptyShift0(endPos, crossed)) return quot
-    var guard = numSlots + 2
-    while (crossed || quot < endPos) {
-      quot = nextSlot(endPos)
-      if (runStartOf(quot, isOccupied(quot)) == quot) return endPos
-      r = runEndOf(quot)
-      endPos = r & ~Flag; crossed = (r & Flag) != 0
-      if (emptyShift0(endPos, crossed)) return quot
-      guard -= 1
-      if (guard < 0) throw new IllegalStateException("firstUnshiftableSlot did not terminate")
+      if (guard < 0) throw new IllegalStateException("shiftWindowEnd did not terminate (filter full?)")
     }
     quot
   }
@@ -409,24 +390,31 @@ final class BackpackFilter(
     setBits(table, (curWord << 6) + curShift, 0L, sb)
   }
 
-  /** Insert-path metadata shift: runends move one position right across
-    * [startPos, endPos], offsets of every crossed block are bumped, and
-    * `occupiedShiftBit` (1 when a brand-new run begins exactly at its
-    * quotient) is threaded in (/root/reference/src/rsqf.cpp:952-1033).
+  /** Offset update of an insert (`grow`) or delete at `quot` whose shift
+    * window ends at `endPos`: the run covering each block's first slot in
+    * [quot, endPos] (circularly from `quot`) now ends one slot later or
+    * earlier.
     */
-  private def shiftRunendsForInsert(quot: Long, newRunBit: Long, startPos: Long, endPos: Long): Unit = {
-    var curBlock = quot >>> 6
+  private def shiftOffsets(quot: Long, endPos: Long, grow: Boolean): Unit = {
+    val slotMask = numSlots - 1
+    val endLin = quot + ((endPos - quot) & slotMask)
+    var s = (quot + 63L) & ~63L
+    while (s <= endLin) {
+      if (grow) bumpOffset((s & slotMask) >>> 6) else dropOffset((s & slotMask) >>> 6)
+      s += 64
+    }
+  }
+
+  /** Insert-path runend shift: the runends in [startPos, endPos) move one
+    * slot right, and `newRunBit` (1 when the insert starts a run) enters at
+    * `startPos` (reference src/rsqf.cpp:952-1033).
+    */
+  private def shiftRunendsForInsert(newRunBit: Long, startPos: Long, endPos: Long): Unit = {
+    var curBlock = startPos >>> 6
     var curShift = (startPos & 63L).toInt
-    val startBlock = startPos >>> 6
     val endBlock = endPos >>> 6
     val endShift = (endPos & 63L).toInt
     var overflow = newRunBit
-
-    if ((quot & 63L) == 0) bumpOffset(curBlock)
-    while (curBlock != startBlock) {
-      curBlock = nextBlock(curBlock)
-      bumpOffset(curBlock)
-    }
 
     @inline def shiftWholeWordTail(): Unit = {
       val w = runWordAt(curBlock)
@@ -437,7 +425,6 @@ final class BackpackFilter(
       overflow = w >>> 63
       curBlock = nextBlock(curBlock)
       curShift = 0
-      bumpOffset(curBlock)
     }
 
     // run starting near the end of the filter wrapping to the front: shift
@@ -454,36 +441,28 @@ final class BackpackFilter(
   }
 
   /** Shift one runend word left by 1 over [startShift, endShift], pulling in
-    * the overflow bit from the next block when the window touches bit 63
-    * (/root/reference/src/rsqf.cpp:1036-1053).
+    * the next block's first runend bit when the window runs on into that
+    * block (reference src/rsqf.cpp:1036-1053).
     */
-  private def shiftRunWordBack(startShift: Int, endShift: Int, block: Long): Unit = {
+  private def shiftRunWordBack(startShift: Int, endShift: Int, block: Long, pullNext: Boolean): Unit = {
     var w = runWordAt(block)
     val saveRight = w & maskRight(startShift)
     val saveLeft = w & maskLeft(64 - endShift - 1)
     w &= maskLeft(64 - startShift)
     w &= maskRight(endShift + 1)
     w >>>= 1
-    var overflow = 0L
-    if (endShift == 63)
-      overflow = shl(runWordAt(nextBlock(block)) & 1L, 63)
+    val overflow = if (pullNext) shl(runWordAt(nextBlock(block)) & 1L, 63) else 0L
     setRunWordAt(block, w | saveRight | saveLeft | overflow)
   }
 
-  /** Delete-path metadata shift (/root/reference/src/rsqf.cpp:1055-1109). */
-  private def shiftRunendsForDelete(quot: Long, startPos: Long, endPos: Long): Unit = {
-    var curBlock = quot >>> 6
-    var curShift = (quot & 63L).toInt
-    val startBlock = startPos >>> 6
+  /** Delete-path runend shift: the runends in [startPos, endPos] move one
+    * slot left; nothing past `endPos` moves
+    * (reference src/rsqf.cpp:1055-1109).
+    */
+  private def shiftRunendsForDelete(startPos: Long, endPos: Long): Unit = {
+    var curBlock = startPos >>> 6
+    var curShift = (startPos & 63L).toInt
     val endBlock = endPos >>> 6
-    val endShift = (endPos & 63L).toInt
-
-    if (curShift == 0) dropOffset(curBlock)
-    while (curBlock != startBlock) {
-      curBlock = nextBlock(curBlock)
-      dropOffset(curBlock)
-    }
-    curShift = (startPos & 63L).toInt
 
     if (curShift == 0) {
       val prev = prevBlock(curBlock)
@@ -492,18 +471,16 @@ final class BackpackFilter(
     }
 
     if (curBlock == endBlock && startPos > endPos) {
-      shiftRunWordBack(curShift, 63, curBlock)
+      shiftRunWordBack(curShift, 63, curBlock, pullNext = true)
       curBlock = nextBlock(curBlock)
       curShift = 0
-      dropOffset(curBlock)
     }
     while (curBlock != endBlock) {
-      shiftRunWordBack(curShift, 63, curBlock)
+      shiftRunWordBack(curShift, 63, curBlock, pullNext = true)
       curBlock = nextBlock(curBlock)
-      dropOffset(curBlock)
       curShift = 0
     }
-    shiftRunWordBack(curShift, endShift, curBlock)
+    shiftRunWordBack(curShift, (endPos & 63L).toInt, curBlock, pullNext = false)
   }
 
   // =====================================================================
@@ -562,123 +539,109 @@ final class BackpackFilter(
   // =====================================================================
 
   /** Binary search for `rem` inside a run, exploiting the ascending order of
-    * remainders; returns (position, found) where position is the insertion
-    * point when not found (/root/reference/src/abstract_bqf.cpp:59-97).
+    * remainders: its position flagged [[found]], or else the insertion
+    * point, flagged `EndsRun` when that follows the run's last remainder
+    * (reference src/abstract_bqf.cpp:59-97).
     */
   private def findInRun(runStart: Long, runEnd: Long, rem: Long): Long = {
     val qMask = maskRight(qBits)
+    val last = if (runEnd < runStart) runEnd | (1L << qBits) else runEnd
     var left = runStart
-    var right = if (runEnd < runStart) runEnd | (1L << qBits) else runEnd
+    var right = last
     var position = 0L
+    var flag = 0L
     var continue = true
-    var found = false
     while (continue) {
       val middle = (left + right) >>> 1
       position = middle & qMask
       val inFilter = remAt(position)
       val cmp = java.lang.Long.compareUnsigned(inFilter, rem)
-      if (cmp == 0) { found = true; continue = false }
+      if (cmp == 0) { flag = BackpackFilter.FlagBit; continue = false }
       else if (left == right) {
-        if (cmp < 0) position = nextSlot(position)
+        if (cmp < 0) {
+          if (middle == last) flag = BackpackFilter.EndsRun
+          position = nextSlot(position)
+        }
         continue = false
       }
       else if (cmp > 0) right = middle
       else left = middle + 1
       if (continue && left > right) continue = false
     }
-    packed(position, found)
+    position | flag
+  }
+
+  @inline private def found(hit: Long): Boolean = (hit & BackpackFilter.FlagBit) != 0
+  @inline private def slotOf(hit: Long): Long = hit & BackpackFilter.PosMask
+
+  /** The one run lookup behind every point operation: [[findInRun]] over
+    * `fp`'s quotient's run. An unoccupied quotient answers `Vacant` alone,
+    * so a miss there reads one bit.
+    */
+  private def lookup(fp: Long): Long = {
+    val quot = fp & maskRight(qBits)
+    if (!isOccupied(quot)) return BackpackFilter.Vacant
+    findInRun(runStartOf(quot, occupied = true), runEndPos(quot), (fp & maskRight(hashBits)) >>> qBits)
+  }
+
+  /** Find `fp`, inserting it with the encoded count `stored` when absent;
+    * the [[lookup]] result says which (found: the caller updates the
+    * counter). The table grows before an insert that would reach the 95%
+    * cap. A duplicate only bumps its counter, so it never grows the table:
+    * the quotient then depends on the distinct count alone, as in
+    * [[BackpackFilter.fromEntries]].
+    */
+  private def upsert(fp: Long, stored: Long): Long = {
+    var hit = lookup(fp)
+    if (!found(hit)) {
+      if (nDistinct + 1 >= sizeLimit) { resize(1); hit = lookup(fp) }
+      insert(fp, hit, stored)
+    }
+    hit
+  }
+
+  /** Insert the absent `fp` where the [[lookup]] miss `hit` puts it: shift
+    * the cluster one slot right up to the first free slot, carrying the
+    * runends and block offsets along (reference src/abstract_bqf.cpp:101-167).
+    */
+  private def insert(fp: Long, hit: Long, stored: Long): Unit = {
+    val quot = fp & maskRight(qBits)
+    val newRun = hit == BackpackFilter.Vacant
+    val pos = if (newRun) runStartOf(quot, occupied = false) else slotOf(hit)
+    val fus = shiftWindowEnd(quot, forDelete = false)
+    if (newRun) setOccBit(quot >>> 6, (quot & 63L).toInt, 1L)
+    // a new run ends at its one slot; a remainder past the run's last one
+    // takes the runend over, so the runends shift from its predecessor
+    val runendsFrom = if ((hit & BackpackFilter.EndsRun) != 0) prevSlot(pos) else pos
+    shiftOffsets(quot, fus, grow = true)
+    shiftRunendsForInsert(if (newRun) 1L else 0L, runendsFrom, fus)
+    nDistinct += 1
+    shiftSlotsAndSet(pos, fus, ((fp & maskRight(hashBits)) >>> qBits << countBits) | (stored & countMask))
   }
 
   /** Insert `count` occurrences of fingerprint `fp` (auto-resizes at the 95%
     * load cap). Duplicate fingerprints accumulate in the counter
-    * (/root/reference/src/abstract_bqf.cpp:101-167).
+    * (reference src/abstract_bqf.cpp:101-167).
     */
-  def add(fp: Long, count: Long = 1L): Unit = addEncoded(fp, encodeCount(count), mergePath = false)
-
-  /** Raw insert with an already-encoded stored count (merge/rebuild path). */
-  private def addEncoded(fp0: Long, storedCount: Long, mergePath: Boolean): Unit = {
-    growFor(fp0)
-    val fp = fp0 & maskRight(hashBits)
-    val quot = fp & maskRight(qBits)
-    val rem = fp >>> qBits
-    val slotVal = (rem << countBits) | (storedCount & countMask)
-
-    if (!isOccupied(quot)) {
-      val fus = firstUnusedSlot(quot)
-      val start = runStartOf(quot, occupied = false)
-      setOccBit(quot >>> 6, (quot & 63L).toInt, 1L)
-      shiftRunendsForInsert(quot, 1L, start, fus)
-      nDistinct += 1
-      shiftSlotsAndSet(start, fus, slotVal)
-    } else {
-      val rs = runStartOf(quot, occupied = true)
-      val re = runEndPos(quot)
-      val pf = findInRun(rs, re, rem)
-      val pos = pf & ~BackpackFilter.FlagBit
-      if ((pf & BackpackFilter.FlagBit) != 0) {
-        // duplicate: counter update only — no shift window needed
-        if (mergePath) mergeCounter(pos, storedCount) else bumpCounter(pos, slotVal)
-      } else {
-        val fus = firstUnusedSlot(quot)
-        shiftRunendsForInsert(quot, 0L, rs, fus)
-        nDistinct += 1
-        shiftSlotsAndSet(pos, fus, slotVal)
-      }
-    }
-  }
-
-  /** Resize before an insert that would reach the 95% cap. A duplicate only
-    * bumps its counter, so it never grows the table: the quotient then
-    * depends on the distinct count alone, as in [[BackpackFilter.fromEntries]].
-    */
-  private def growFor(fp0: Long): Unit =
-    if (nDistinct + 1 >= sizeLimit && !holds(fp0)) resize(1)
-
-  /** Is `fp` stored (whatever its counter holds)? */
-  private def holds(fp0: Long): Boolean = {
-    val fp = fp0 & maskRight(hashBits)
-    val quot = fp & maskRight(qBits)
-    isOccupied(quot) &&
-      (findInRun(runStartOf(quot, occupied = true), runEndPos(quot), fp >>> qBits) & BackpackFilter.FlagBit) != 0
+  def add(fp: Long, count: Long = 1L): Unit = {
+    val stored = encodeCount(count)
+    val hit = upsert(fp, stored)
+    if (found(hit)) bumpCounter(slotOf(hit), stored)
   }
 
   /** Counting-filter insert: returns true exactly on the *second* insertion
     * of `fp` (count bit 0 -> 1). Requires countBits == 1; the streaming
     * "seen at least twice" filter (/root/reference/src/bqf_cf.cpp:119-183).
     */
-  def addReturningSecond(fp0: Long): Boolean = {
+  def addReturningSecond(fp: Long): Boolean = {
     require(countBits == 1, "addReturningSecond requires countBits == 1")
-    growFor(fp0)
-    val fp = fp0 & maskRight(hashBits)
-    val quot = fp & maskRight(qBits)
-    val rem = fp >>> qBits
-    val slotVal = rem << 1 // first occurrence stores count bit 0
-
-    if (!isOccupied(quot)) {
-      val fus = firstUnusedSlot(quot)
-      val start = runStartOf(quot, occupied = false)
-      setOccBit(quot >>> 6, (quot & 63L).toInt, 1L)
-      shiftRunendsForInsert(quot, 1L, start, fus)
-      nDistinct += 1
-      shiftSlotsAndSet(start, fus, slotVal)
-      false
-    } else {
-      val rs = runStartOf(quot, occupied = true)
-      val re = runEndPos(quot)
-      val pf = findInRun(rs, re, rem)
-      val pos = pf & ~BackpackFilter.FlagBit
-      if ((pf & BackpackFilter.FlagBit) != 0) {
-        val old = slotValue(pos)
-        val second = (old & 1L) == 0L
-        if (second) setBits(table, slotBitPos(pos), old | 1L, slotBits)
-        second
-      } else {
-        val fus = firstUnusedSlot(quot)
-        shiftRunendsForInsert(quot, 0L, rs, fus)
-        nDistinct += 1
-        shiftSlotsAndSet(pos, fus, slotVal)
-        false
-      }
+    val hit = upsert(fp, 0L) // a first occurrence stores count bit 0
+    found(hit) && {
+      val pos = slotOf(hit)
+      val old = slotValue(pos)
+      val second = (old & 1L) == 0L
+      if (second) setBits(table, slotBitPos(pos), old | 1L, slotBits)
+      second
     }
   }
 
@@ -686,18 +649,10 @@ final class BackpackFilter(
     * (/root/reference/src/abstract_bqf.cpp:250-262). Subject to the 2^-r
     * false-positive bound: an absent fp may alias a present one's count.
     */
-  def abundance(fp0: Long): Long = {
+  def abundance(fp: Long): Long = {
     if (nDistinct == 0) return 0L
-    val fp = fp0 & maskRight(hashBits)
-    val quot = fp & maskRight(qBits)
-    val rem = fp >>> qBits
-    if (!isOccupied(quot)) return 0L
-    val rs = runStartOf(quot, occupied = true)
-    val re = runEndPos(quot)
-    val pf = findInRun(rs, re, rem)
-    if ((pf & BackpackFilter.FlagBit) != 0)
-      decodeCount(slotValue(pf & ~BackpackFilter.FlagBit) & countMask)
-    else 0L
+    val hit = lookup(fp)
+    if (found(hit)) decodeCount(slotValue(slotOf(hit)) & countMask) else 0L
   }
 
   /** Membership test (abundance > 0). */
@@ -707,146 +662,101 @@ final class BackpackFilter(
     * structurally removes the slot when the full abundance is removed
     * (/root/reference/src/bqf_ec.cpp:30-115).
     */
-  def remove(fp0: Long, count: Long = 1L): Boolean = {
+  def remove(fp: Long, count: Long = 1L): Boolean = {
     if (nDistinct == 0) return false
-    val fp = fp0 & maskRight(hashBits)
+    val hit = lookup(fp)
+    if (!found(hit)) return false
+    val pos = slotOf(hit)
     val quot = fp & maskRight(qBits)
-    val rem = fp >>> qBits
-    if (!isOccupied(quot)) return false
-    val rs = runStartOf(quot, occupied = true)
-    val re = runEndPos(quot)
-    val pf = findInRun(rs, re, rem)
-    if ((pf & BackpackFilter.FlagBit) == 0) return false
-    val pos = pf & ~BackpackFilter.FlagBit
 
-    val stored = slotValue(pos) & countMask
+    val old = slotValue(pos)
+    val stored = old & countMask
     if (mode == CountMode.Exact && count < stored) {
-      val old = slotValue(pos)
       setBits(table, slotBitPos(pos), (old & ~countMask) | (stored - count), slotBits)
       return true
     }
 
-    val endSlot = firstUnshiftableSlot(quot)
-    if (rs == re) {
-      // last element of its run: clear the occupied bit
-      setOccBit(quot >>> 6, (quot & 63L).toInt, 0L)
-      if (re == endSlot) {
-        // isolated run: fix metadata manually
-        if ((quot & 63L) == 0) dropOffset(quot >>> 6)
-        // Every block boundary crossed in (quot, re] has its offset pointing
-        // at THIS run's end (the cluster is contiguous, so the covering
-        // runend after removal is re-1): decrement each, exactly as the
-        // shifting path does. The reference misses this walk
-        // (rsqf.cpp:355-361 decrements only at shift 0) and silently
-        // corrupts block offsets when an isolated run sits in a later block
-        // than its quotient — found by the round-4 churn differential,
-        // fixed here rather than replicated (SURVEY §7.4).
-        var b = quot >>> 6
-        val reBlock = re >>> 6
-        while (b != reBlock) {
-          b = nextBlock(b)
-          dropOffset(b)
-        }
-        setRunBit(endSlot >>> 6, (endSlot & 63L).toInt, 0L)
-      } else {
-        shiftRunendsForDelete(quot, pos, endSlot)
-      }
-    } else {
-      shiftRunendsForDelete(quot, pos, endSlot)
-    }
+    val endSlot = shiftWindowEnd(quot, forDelete = true)
+    // a run's only remainder is both its runend and its run's start, which
+    // is the quotient's own slot or follows another run's runend
+    val onlyInRun = isRunEnd(pos) && (pos == quot || isRunEnd(prevSlot(pos)))
+    if (onlyInRun) setOccBit(quot >>> 6, (quot & 63L).toInt, 0L)
+    // Every block boundary in [quot, endSlot] loses a slot of its covering
+    // run — also for an isolated run, whose offsets the reference leaves
+    // stale when it sits in a later block than its quotient
+    // (rsqf.cpp:355-361 decrements only at shift 0; found by the round-4
+    // churn differential, fixed here rather than replicated, SURVEY §7.4).
+    shiftOffsets(quot, endSlot, grow = false)
+    // an isolated run only drops its runend
+    if (onlyInRun && pos == endSlot) setRunBit(endSlot >>> 6, (endSlot & 63L).toInt, 0L)
+    else shiftRunendsForDelete(pos, endSlot)
     shiftSlotsBackAndClear(pos, endSlot)
     nDistinct -= 1
     true
   }
 
+  /** The one table walk, as a resumable cursor over every stored entry in
+    * layout order: quotients ascending from slot 0, remainders ascending
+    * within a run. Runs sit canonically, each starting at max(its quotient,
+    * the previous runend + 1), so the walk pairs the occupied quotients with
+    * the runends in order — one linear pass, no rank/select per quotient.
+    * It starts where quotient 0's run starts (or would start), just past
+    * the runs that wrap over the last slot; those are read when their
+    * quotients come up, at linear positions past `numSlots` under the slot
+    * mask.
+    */
+  private final class Walk {
+    private val slotMask = numSlots - 1
+    private var nextFree = runStartOf(0L, isOccupied(0L))
+    private val limit = nextFree + numSlots
+    private var block = 0L
+    private var occ = occWordAt(0L) // occupied quotients of `block` not yet visited
+    private var slot = 0L           // linear position of the current entry
+    private var runEnd = -1L        // linear runend of the current run
+    /** Quotient of the current entry. */
+    var quot = 0L
+
+    /** Step to the next entry; false once every entry has been visited. */
+    def next(): Boolean = {
+      if (slot < runEnd) { slot += 1; return true }
+      while (occ == 0) {
+        block += 1
+        if (block >= numBlocks) return false
+        occ = occWordAt(block)
+      }
+      quot = (block << 6) + java.lang.Long.numberOfTrailingZeros(occ)
+      occ &= occ - 1
+      slot = math.max(quot, nextFree)
+      // the runend at or after slot, a word at a time
+      var pos = slot
+      runEnd = -1L
+      while (runEnd < 0) {
+        if (pos >= limit) throw new IllegalStateException(s"table walk: run of quotient $quot has no runend")
+        val p = pos & slotMask
+        val w = runWordAt(p >>> 6) >>> (p & 63L).toInt
+        if (w != 0) runEnd = pos + java.lang.Long.numberOfTrailingZeros(w)
+        else pos = (pos | 63L) + 1
+      }
+      nextFree = runEnd + 1
+      true
+    }
+
+    /** Slot value (remainder << countBits | stored count) of the current entry. */
+    def value: Long = slotValue(slot & slotMask)
+  }
+
   /** Visit every (fingerprint, storedCount) pair — the raw enumeration the
-    * merge and resize paths build on (/root/reference/src/abstract_bqf.cpp:264-300).
+    * merge and resize paths build on (reference src/abstract_bqf.cpp:264-300).
     * Public visitor form: `(Long, Long) => Unit` is @specialized, so bulk
     * consumers (the distributed re-shard merge) pay zero boxing per entry —
-    * unlike the tuple iterator [[rawEntries]].
-    *
-    * Order: layout order (quotient, then remainder) read circularly from
-    * the first block whose offset is zero. That block's first slot is
-    * empty, so no run crosses it, and the walk pairs the occupied
-    * quotients with the runends in order — one linear pass, no rank/select
-    * per quotient. A table with no zero-offset block falls back to the
-    * per-quotient walk from quotient 0.
+    * unlike the tuple iterator [[rawEntries]]. Both ride the one linear
+    * walk, in quotient order from slot 0.
     */
   def foreachRaw(f: (Long, Long) => Unit): Unit = {
-    var startBlock = 0L
-    while (startBlock < numBlocks && offsetAt(startBlock) != 0) startBlock += 1
-    if (startBlock == numBlocks) foreachRawByQuotient(f)
-    else foreachRawLinear(startBlock, f)
-  }
-
-  /** The linear walk of [[foreachRaw]], in linear slot coordinates from
-    * `startBlock`'s first slot: each run starts at max(its quotient, the
-    * previous runend + 1), the canonical placement, and ends at the next
-    * runend bit.
-    */
-  private def foreachRawLinear(startBlock: Long, f: (Long, Long) => Unit): Unit = {
-    val slotMask = numSlots - 1
-    val start = startBlock << 6
-    val end = start + numSlots
-    var nextFree = start
-    var rel = 0L
-    while (rel < numBlocks) {
-      val blockLin = (startBlock + rel) << 6
-      var occ = occWordAt((startBlock + rel) & (numBlocks - 1))
-      while (occ != 0) {
-        val quotLin = blockLin + java.lang.Long.numberOfTrailingZeros(occ)
-        occ &= occ - 1
-        val quot = quotLin & slotMask
-        val runStart = math.max(quotLin, nextFree)
-        var pos = runStart
-        // the runend at or after pos, a word at a time
-        var runEnd = -1L
-        while (runEnd < 0) {
-          if (pos >= end) throw new IllegalStateException(s"foreachRaw: run of quotient $quot has no runend")
-          val p = pos & slotMask
-          val w = runWordAt(p >>> 6) >>> (p & 63L).toInt
-          if (w != 0) runEnd = pos + java.lang.Long.numberOfTrailingZeros(w)
-          else pos = (pos | 63L) + 1
-        }
-        var s = runStart
-        while (s <= runEnd) {
-          val sv = slotValue(s & slotMask)
-          f(rebuildFingerprint(quot, sv >>> countBits, qBits), sv & countMask)
-          s += 1
-        }
-        nextFree = runEnd + 1
-      }
-      rel += 1
-    }
-  }
-
-  /** Per-quotient form of [[foreachRaw]] (rank/select per occupied
-    * quotient), for a table with no zero-offset block.
-    */
-  private def foreachRawByQuotient(f: (Long, Long) => Unit): Unit = {
-    var block = 0L
-    while (block < numBlocks) {
-      var occ = occWordAt(block)
-      if (occ != 0) {
-        var i = 0
-        while (i < 64) {
-          if ((occ & 1L) != 0) {
-            val quot = (block << 6) + i
-            val rs = runStartOf(quot, occupied = true)
-            val re = runEndPos(quot)
-            var cursor = rs
-            var done = false
-            while (!done) {
-              val sv = slotValue(cursor)
-              f(rebuildFingerprint(quot, sv >>> countBits, qBits), sv & countMask)
-              if (cursor == re) done = true else cursor = nextSlot(cursor)
-            }
-          }
-          occ >>>= 1
-          i += 1
-        }
-      }
-      block += 1
+    val w = new Walk
+    while (w.next()) {
+      val sv = w.value
+      f(rebuildFingerprint(w.quot, sv >>> countBits, qBits), sv & countMask)
     }
   }
 
@@ -886,44 +796,18 @@ final class BackpackFilter(
   /** Lazy raw enumeration — (fingerprint, storedCount) streamed without
     * materializing the sketch's contents anywhere: the form the distributed
     * explode/merge operators flatMap over (a 2^q-entry shard would otherwise
-    * cost ~6x its own size in boxed tuples per task).
+    * cost ~6x its own size in boxed tuples per task). The same linear walk
+    * and order as [[foreachRaw]].
     */
   def rawEntries(): Iterator[(Long, Long)] = new Iterator[(Long, Long)] {
-    private var block = 0L
-    private var occ = if (numBlocks > 0) occWordAt(0) else 0L
-    private var bit = 0
-    private var quot = 0L
-    private var cursor = 0L
-    private var runEnd = 0L
-    private var inRun = false
-    advance()
-
-    private def advance(): Unit = {
-      if (inRun) {
-        if (cursor == runEnd) inRun = false
-        else { cursor = nextSlot(cursor); return }
-      }
-      while (!inRun && block < numBlocks) {
-        if (occ == 0) {
-          block += 1; bit = 0
-          if (block < numBlocks) occ = occWordAt(block)
-        } else if ((occ & 1L) == 0) {
-          occ >>>= 1; bit += 1
-        } else {
-          quot = (block << 6) + bit
-          cursor = runStartOf(quot, occupied = true)
-          runEnd = runEndPos(quot)
-          inRun = true
-          occ >>>= 1; bit += 1
-        }
-      }
-    }
-
-    def hasNext: Boolean = inRun
+    private val w = new Walk
+    private var ready = w.next()
+    def hasNext: Boolean = ready
     def next(): (Long, Long) = {
-      val sv = slotValue(cursor)
-      val out = (rebuildFingerprint(quot, sv >>> countBits, qBits), sv & countMask)
-      advance()
+      if (!ready) throw new NoSuchElementException("rawEntries: no more entries")
+      val sv = w.value
+      val out = (rebuildFingerprint(w.quot, sv >>> countBits, qBits), sv & countMask)
+      ready = w.next()
       out
     }
   }
@@ -976,7 +860,10 @@ final class BackpackFilter(
     // applies when `other` does not carry a larger one)
     if (other.nDistinct > math.max(4096L, nDistinct / 8) || other.qBits > qBits)
       adopt(BackpackFilter.mergeAll(Seq(this, other)))
-    else other.foreachRaw((fp, stored) => this.addEncoded(fp, stored, mergePath = true))
+    else other.foreachRaw { (fp, stored) =>
+      val hit = upsert(fp, stored)
+      if (found(hit)) mergeCounter(slotOf(hit), stored)
+    }
     this
   }
 
@@ -1073,6 +960,12 @@ final class BackpackFilter(
 object BackpackFilter {
   /** High bit used to pack a boolean flag next to a slot position. */
   final val FlagBit: Long = 1L << 62
+  /** The lookup's two flags beside FlagBit (found): an absent remainder's
+    * insert slot ends its run; the quotient is unoccupied.
+    */
+  private final val EndsRun: Long = 1L << 61
+  private final val Vacant: Long = 1L << 60
+  private final val PosMask: Long = Vacant - 1
 
   /** Quotient sizing rule from the reference help text: one bit of headroom
     * over the expected distinct count (q = ceil(log2(n)) + 1, min 7).
@@ -1426,7 +1319,14 @@ object BackpackFilter {
     val keys = new Array[Long](total.toInt)
     val counts = new Array[Long](total.toInt)
     var i = 0
-    filters.foreach(_.foreachRaw { (fp, c) => keys(i) = rotKey(fp, sortQ, hashBits); counts(i) = c; i += 1 })
+    filters.foreach { f =>
+      val end = i + f.distinctCount
+      f.foreachRaw { (fp, c) =>
+        if (i == end) throw new IllegalArgumentException(
+          s"mergeAll: an input holds more entries than its distinct count ${f.distinctCount}")
+        keys(i) = rotKey(fp, sortQ, hashBits); counts(i) = c; i += 1
+      }
+    }
     build(floorQ, sortQ, h.countBits, hashBits, h.mode, h.kTokens, h.zTokens, h.seed,
       keys, counts, i, grouped = true)
   }
@@ -1534,6 +1434,10 @@ object BackpackFilter {
     val f = new BackpackFilter(q, c, hashBits, mode, k, z, seed)
     require(f.slotBits == slotBits && f.numBlocks == nBlocks && f.table.length == expectWords,
       "corrupt sketch header")
+    // the load cap follows from q; a copied-in cap could disable the resize
+    require(sizeLimit == f.sizeLimit, s"corrupt sketch header: sizeLimit=$sizeLimit != ${f.sizeLimit} (q=$q)")
+    require(nDistinct >= 0 && nDistinct < sizeLimit,
+      s"corrupt sketch header: nDistinct=$nDistinct outside [0, $sizeLimit)")
     if (java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.LITTLE_ENDIAN)
       org.apache.spark.unsafe.Platform.copyMemory(
         bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + 8 * 11,
@@ -1543,7 +1447,6 @@ object BackpackFilter {
       var i = 0
       while (i < f.table.length) { f.table(i) = bb.getLong; i += 1 }
     }
-    f.sizeLimit = sizeLimit
     f.nDistinct = nDistinct
     f
   }

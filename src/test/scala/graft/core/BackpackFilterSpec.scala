@@ -305,6 +305,67 @@ class BackpackFilterSpec extends AnyFunSuite {
       assert(second == (seen == 1), s"fp=$fp seen=$seen")
       oracle(fp) = seen + 1
     }
+    // from q=7 across several auto-resizes, byte for byte: the bulk build
+    // of the distinct fingerprints, stored 1 for those seen at least twice
+    val g = BackpackFilter(qBits = 7, countBits = 1, hashBits = 24)
+    val universe = Array.fill(600)(rng.nextLong() & Bits.maskRight(24))
+    val seen = mutable.LinkedHashMap.empty[Long, Int]
+    for (_ <- 1 to 1500) {
+      val fp = universe(rng.nextInt(universe.length))
+      assert(g.addReturningSecond(fp) == (seen.getOrElse(fp, 0) == 1), s"fp=$fp")
+      seen(fp) = seen.getOrElse(fp, 0) + 1
+    }
+    assert(g.quotientBits >= 9, s"only grew to q=${g.quotientBits}")
+    val fps = seen.keys.toArray
+    val want = BackpackFilter.fromEntries(7, 1, 24, CountMode.Exact, 0, 0, 0L,
+      fps, fps.map(fp => if (seen(fp) >= 2) 1L else 0L), fps.length)
+    assert(java.util.Arrays.equals(g.serialize(), want.serialize()), "second-insert filter bytes != bulk build")
+  }
+
+  /** The bytes of a filter holding exactly `model` (fingerprint -> stored
+    * count) at quotient `q`: the canonical layout every path must produce.
+    */
+  private def canonical(model: collection.Map[Long, Long], q: Int, c: Int, h: Int): Array[Byte] = {
+    val fps = model.keys.toArray
+    BackpackFilter.fromEntries(q, c, h, CountMode.Exact, 0, 0, 0L, fps, fps.map(model), fps.length).serialize()
+  }
+
+  test("add and remove keep the canonical layout on clusters that lap their own block") {
+    // quotient 100's run starts a whole lap after quotient 99's, back in
+    // its own block: the offsets of every block the window crosses move
+    for ((n99, n100) <- Seq((93, 5), (100, 20))) {
+      val f = BackpackFilter(qBits = 7, countBits = 4, hashBits = 16)
+      val model = mutable.LinkedHashMap.empty[Long, Long]
+      for (fp <- (1L to n99).map(r => (r << 7) | 99L) ++ (1L to n100).map(r => (r << 7) | 100L)) {
+        f.add(fp); model(fp) = 1L
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7, 4, 16)), s"add $fp ($n99, $n100)")
+      }
+      for (fp <- new Random(n99).shuffle(model.keys.toVector)) {
+        assert(f.remove(fp)); model.remove(fp)
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7, 4, 16)), s"remove $fp ($n99, $n100)")
+      }
+    }
+    // churn over a few hot quotients near the table end: long wrapping
+    // clusters whose delete windows end on a block's last slot
+    for (seed <- 1 to 40) {
+      val rng = new Random(seed)
+      val f = BackpackFilter(qBits = 7, countBits = 4, hashBits = 16)
+      val model = mutable.LinkedHashMap.empty[Long, Long]
+      val hot = Array.fill(3)(127L - rng.nextInt(40))
+      for (step <- 1 to 400) {
+        if (rng.nextInt(3) > 0 || model.isEmpty) {
+          val quot = if (rng.nextInt(10) < 7) hot(rng.nextInt(3)) else rng.nextInt(128).toLong
+          val fp = (rng.nextInt(512).toLong << 7) | quot
+          f.add(fp); model(fp) = math.min(model.getOrElse(fp, 0L) + 1, 15L)
+        } else {
+          val fp = model.keys.toVector(rng.nextInt(model.size))
+          assert(f.remove(fp))
+          if (model(fp) > 1) model(fp) -= 1 else model.remove(fp)
+        }
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, f.quotientBits, 4, 16)),
+          s"seed=$seed step=$step")
+      }
+    }
   }
 
   test("resize differential: enumerate-rebuild preserves every entry") {
@@ -383,6 +444,22 @@ class BackpackFilterSpec extends AnyFunSuite {
     // hashBits <= qBits rejected
     val badH = good.clone(); badH(64) = 3 // hashBits field (9th u64, offset 8*8)
     intercept[IllegalArgumentException](BackpackFilter.deserialize(badH))
+    // header fields the blob length does not pin: the load cap follows
+    // from q, and the distinct count must fit under it
+    def withField(i: Int, v: Long): Array[Byte] = {
+      val b = good.clone()
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(8 * i, v)
+      b
+    }
+    val e3 = intercept[IllegalArgumentException](BackpackFilter.deserialize(withField(5, 1L << 40)))
+    assert(e3.getMessage.contains("sizeLimit"))
+    val e4 = intercept[IllegalArgumentException](BackpackFilter.deserialize(withField(7, -5L)))
+    assert(e4.getMessage.contains("nDistinct"))
+    intercept[IllegalArgumentException](BackpackFilter.deserialize(withField(7, f.capacity)))
+    // a distinct count below the stored entries loads, but a merge over it
+    // fails with a clear error rather than an array overrun
+    val e5 = intercept[IllegalArgumentException](BackpackFilter.mergeAll(Seq(BackpackFilter.deserialize(withField(7, 3L)), f)))
+    assert(e5.getMessage.contains("distinct count"))
     // the untouched blob still round-trips
     assert(BackpackFilter.deserialize(good).enumerate() == f.enumerate())
   }

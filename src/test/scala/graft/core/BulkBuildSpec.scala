@@ -249,10 +249,19 @@ class BulkBuildSpec extends AnyFunSuite {
     }
   }
 
-  private def sortedRaw(f: BackpackFilter): Seq[(Long, Long)] = {
+  /** The table walk through both its faces: `foreachRaw` and `rawEntries`
+    * must yield the same sequence, in layout order (quotient, then
+    * remainder, ascending).
+    */
+  private def walked(f: BackpackFilter, label: String): Vector[(Long, Long)] = {
     val b = Vector.newBuilder[(Long, Long)]
     f.foreachRaw((fp, s) => b += fp -> s)
-    b.result().sorted
+    val seq = b.result()
+    assert(seq == f.rawEntries().toVector, s"$label: foreachRaw and rawEntries differ")
+    val q = f.quotientBits
+    val layout = seq.map { case (fp, _) => (fp & Bits.maskRight(q), fp >>> q) }
+    assert(layout == layout.sorted, s"$label: walk out of layout order")
+    seq
   }
 
   private def offsets(f: BackpackFilter): Seq[Long] =
@@ -273,8 +282,7 @@ class BulkBuildSpec extends AnyFunSuite {
       val f = viaAdd(fps, null, c, h, CountMode.Exact, 7)
       assert(f.quotientBits == 7, label)
       assert(offsets(f).size == 2 && offsets(f).contains(0L) == anyZero, s"$label: offsets ${offsets(f)}")
-      assert(sortedRaw(f) == f.rawEntries().toVector.sorted, label)
-      assert(sortedRaw(f) == fps.map(_ -> 1L).toVector.sorted, label)
+      assert(walked(f, label).sorted == fps.map(_ -> 1L).toVector.sorted, label)
       // merge and resize enumerate through foreachRaw
       assertTablesIdentical(BackpackFilter.mergeAll(Seq(f, f)), viaAdd(fps ++ fps, null, c, h, CountMode.Exact, 7),
         s"$label: mergeAll")
@@ -282,12 +290,17 @@ class BulkBuildSpec extends AnyFunSuite {
       grown.resize(2)
       assertTablesIdentical(grown, viaAdd(fps, null, c, h, CountMode.Exact, 9), s"$label: resize")
     }
-    // dense tables of every width: the linear walk agrees with the
-    // per-quotient iterator
+    // dense tables of every width: the walk yields exactly the inserted
+    // multiset, and abundance's rank/select navigation reads every stored
+    // count back
     for (h <- Widths; n <- Seq(100, 121, 1900, 1945)) {
       val rng = new Random(h * n)
-      val f = viaAdd(Array.fill(n)(randomFp(rng, h)), null, 4, h, CountMode.Exact, floorQ(h, 4))
-      assert(sortedRaw(f) == f.rawEntries().toVector.sorted, s"h=$h n=$n")
+      val fps = Array.fill(n)(randomFp(rng, h))
+      val f = viaAdd(fps, null, 4, h, CountMode.Exact, floorQ(h, 4))
+      val raw = walked(f, s"h=$h n=$n")
+      val inserted = fps.groupBy(identity).map { case (fp, occ) => fp -> math.min(occ.length, 15L) }
+      assert(raw.size == inserted.size && raw.toMap == inserted, s"h=$h n=$n: walk != inserted multiset")
+      raw.foreach { case (fp, s) => assert(f.abundance(fp) == s, s"h=$h n=$n: abundance($fp)") }
     }
   }
 

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** The lazy [[BackpackFilter.rawEntries]] iterator must visit exactly the
-  * same (fingerprint, storedCount) set the recursive [[enumerate]] walk
-  * produces — including after removes, resizes, and on toric-wrap layouts.
+  * (fingerprint, storedCount) set [[BackpackFilter.enumerate]] collects
+  * through [[BackpackFilter.foreachRaw]] — including after removes, resizes,
+  * and on toric-wrap layouts.
   */
 class EnumerateSpec extends AnyFunSuite {
 
