@@ -322,27 +322,29 @@ class BackpackFilterSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(g.serialize(), want.serialize()), "second-insert filter bytes != bulk build")
   }
 
-  /** The bytes of a filter holding exactly `model` (fingerprint -> stored
-    * count) at quotient `q`: the canonical layout every path must produce.
+  /** The bytes of a c=4, 16-bit filter holding exactly `model`
+    * (fingerprint -> stored count) at quotient `q`: the canonical layout
+    * every path must produce.
     */
-  private def canonical(model: collection.Map[Long, Long], q: Int, c: Int, h: Int): Array[Byte] = {
+  private def canonical(model: collection.Map[Long, Long], q: Int): Array[Byte] = {
     val fps = model.keys.toArray
-    BackpackFilter.fromEntries(q, c, h, CountMode.Exact, 0, 0, 0L, fps, fps.map(model), fps.length).serialize()
+    BackpackFilter.fromEntries(q, 4, 16, CountMode.Exact, 0, 0, 0L, fps, fps.map(model), fps.length).serialize()
   }
 
   test("add and remove keep the canonical layout on clusters that lap their own block") {
-    // quotient 100's run starts a whole lap after quotient 99's, back in
-    // its own block: the offsets of every block the window crosses move
+    // quotient 99's remainders push quotient 100's run a whole lap round,
+    // back into its own block: the offset of every block boundary the
+    // shift window crosses moves
     for ((n99, n100) <- Seq((93, 5), (100, 20))) {
       val f = BackpackFilter(qBits = 7, countBits = 4, hashBits = 16)
       val model = mutable.LinkedHashMap.empty[Long, Long]
       for (fp <- (1L to n99).map(r => (r << 7) | 99L) ++ (1L to n100).map(r => (r << 7) | 100L)) {
         f.add(fp); model(fp) = 1L
-        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7, 4, 16)), s"add $fp ($n99, $n100)")
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7)), s"add $fp ($n99, $n100)")
       }
       for (fp <- new Random(n99).shuffle(model.keys.toVector)) {
         assert(f.remove(fp)); model.remove(fp)
-        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7, 4, 16)), s"remove $fp ($n99, $n100)")
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, 7)), s"remove $fp ($n99, $n100)")
       }
     }
     // churn over a few hot quotients near the table end: long wrapping
@@ -362,7 +364,7 @@ class BackpackFilterSpec extends AnyFunSuite {
           assert(f.remove(fp))
           if (model(fp) > 1) model(fp) -= 1 else model.remove(fp)
         }
-        assert(java.util.Arrays.equals(f.serialize(), canonical(model, f.quotientBits, 4, 16)),
+        assert(java.util.Arrays.equals(f.serialize(), canonical(model, f.quotientBits)),
           s"seed=$seed step=$step")
       }
     }
