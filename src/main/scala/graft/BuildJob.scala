@@ -3,7 +3,6 @@ package graft
 import graft.functions.GraftFunctions._
 import graft.operators.BqfParams
 import graft.sources.TokensTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One isolated headline-build measurement, meant to run in a fresh JVM so
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object BuildJob {
   def main(args: Array[String]): Unit = {
     val Array(cpus, rows, nBuckets) = args.take(3).map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-build-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+    val spark = GraftSession.builder(cpus, s"graft-build-$cpus")
       // xxhash64 fingerprints are high-entropy by construction: LZ4 on the
       // shuffle saved 11% bytes but cost ~20 s/core per 93M k-grams
       // (measured via StageMetrics) — 2.4x the map stage. Off for THIS job;
@@ -93,51 +86,5 @@ object BuildJob {
       } catch { case _: Exception => () }
       d.toString
     } else System.getProperty("java.io.tmpdir")
-  }
-
-  /** Fork a fresh JVM running this main; returns (seconds, kgrams, gcMs). */
-  def forked(cpus: Int, rows: Long, nBuckets: Int, heap: String): (Double, Long, Long) = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    // GC matters more than anything else for comparable scaling numbers on
-    // this host: G1 young pauses reach 5-23 s on heaps > ~10 GB (slow
-    // memory), which round 1 measured as local[8] *slower* than local[2].
-    // ParallelGC + a fixed pre-touched heap + pretenured large arrays keep
-    // pause time flat across core counts; pretouch happens before the timed
-    // section (BuildJob times only the Spark job itself).
-    // executor-sized fork (same rationale as CoreScale.forked): GC threads
-    // and ActiveProcessorCount scale with the measured core count — a
-    // cluster executor pinned to N cores gets N cores for GC/JIT/netty,
-    // and a fixed-8-GC-thread fork lends small levels hidden parallelism
-    val cmd = Seq(javaBin) ++ opens ++ Seq(
-      s"-Xms$heap", s"-Xmx$heap",
-      "-XX:+UseParallelGC", s"-XX:ParallelGCThreads=${math.min(8, math.max(2, cpus))}",
-      s"-XX:ActiveProcessorCount=$cpus",
-      "-XX:+AlwaysPreTouch", "-XX:PretenureSizeThreshold=1048576",
-      "-Dspark.ui.enabled=false",
-      // shuffle spill/files on tmpfs: this microVM's virtio disk sustains
-      // ~360 MB/s, so at 4+ cores the ~750 MB shuffle write saturates it
-      // and the map tasks stall off-CPU (run_ms >> cpu_ms in the stage
-      // metrics) — measuring the disk, not the engine. A real cluster
-      // executor has provisioned NVMe for exactly this; /dev/shm restores
-      // that contract (bytes moved are identical).
-      s"-Dspark.local.dir=$shmLocalDir",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.BuildJob", cpus.toString, rows.toString, nBuckets.toString)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
-    proc.waitFor()
-    val json = out.find(_.startsWith("""{"sec":"""))
-      .getOrElse(throw new RuntimeException(s"BuildJob produced no result; tail: ${out.takeRight(5).mkString(" | ")}"))
-    val sec = """"sec":([0-9.Ee+-]+)""".r.findFirstMatchIn(json).get.group(1).toDouble
-    val kg = """"kgrams":([0-9]+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    val gc = """"gc_ms":([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    (sec, kg, gc)
   }
 }

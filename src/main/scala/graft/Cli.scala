@@ -4,7 +4,6 @@ import graft.core.{BackpackFilter, SequenceStats}
 import graft.functions.GraftFunctions._
 import graft.operators.{BqfParams, BqfQuery}
 import graft.plans.BqfPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spark-native analogue of the reference CLI's three verbs
@@ -55,13 +54,9 @@ object Cli {
     }
     val verb = args.head
     val opts = parseArgs(args.tail)
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(SparkEntry.cpus, s"graft-$verb")
+      // a deployment setting: SPARK_MASTER points the verbs at a cluster
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[${SparkEntry.cpus}]"))
-      .appName(s"graft-$verb")
-      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

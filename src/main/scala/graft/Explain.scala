@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: prints the formatted physical plan of one
   * catalog query (or `entry`) without executing it — the iterate-on-explain
   * loop for plan hygiene (broadcast sides, exchange reuse, pushed filters,
@@ -13,15 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "entry"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${SparkEntry.cpus}]")
-      .appName(s"graft-explain-$name")
-      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
+    val spark = GraftSession.builder(SparkEntry.cpus, s"graft-explain-$name").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = if (name == "entry") SparkEntry.entry(spark)
              else SparkEntry.queries(name)(spark, sfDir)

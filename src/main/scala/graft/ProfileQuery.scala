@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level profiling harness for catalog entries — the measurement tool
   * behind OPTIMIZATION_r08.md: runs one query N times in a warm session
   * (run 1 pays codegen + session-cache derivations, later runs show the
@@ -15,13 +13,9 @@ object ProfileQuery {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master(s"local[${SparkEntry.cpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(SparkEntry.cpus, s"graft-profile-$name")
+      // shuffle scratch on tmpfs, as in Bench: the stage times then show
+      // the engine, not the virtio disk
       .config("spark.local.dir", BuildJob.shmLocalDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

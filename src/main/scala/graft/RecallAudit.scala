@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Committed recall evidence for the probabilistic catalog entries, measured
@@ -17,40 +17,48 @@ import org.apache.spark.sql.functions._
   * MEASURED, whatever it is, instead of asserted in-suite only.
   */
 object RecallAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = SparkEntry.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The answers every recall figure is computed from: q05's exact pairs
+    * and q17's exact top-3 edges, and how many of each q06, q18 and q24
+    * recall.
+    */
+  private[graft] case class Counts(
+      exactPairs: Long, q06Hits: Long, exactEdges: Long, q18Hits: Long, q24Hits: Long)
 
+  private[graft] def ratio(h: Long, n: Long): Double = if (n == 0) 1.0 else h.toDouble / n
+
+  /** Join q06/q18/q24's answers against their exact twins on `sfDir`. */
+  private[graft] def counts(spark: SparkSession, sfDir: String): Counts = {
     // ---- text near-dup: q06 candidates vs q05 exact pairs -------------
     val exactPairs = Queries.q05NgramJaccard(spark, sfDir)
       .select(col("a_id"), col("b_id")).cache()
-    val lshPairs = Queries.q06MinhashLsh(spark, sfDir)
-      .select(col("a_id"), col("b_id")).cache()
     val nExact = exactPairs.count()
-    val nCand = lshPairs.count()
-    val nHit = exactPairs.join(lshPairs, Seq("a_id", "b_id")).count()
-
+    val nHit = exactPairs.join(
+      Queries.q06MinhashLsh(spark, sfDir).select(col("a_id"), col("b_id")),
+      Seq("a_id", "b_id")).count()
     // ---- embeddings: q18 buckets and q24 IVF vs q17 exact top-3 -------
+    // q18 emits (qid, rank, nid) top-3 after banded-LSH candidate generation
+    // + exact re-rank — same shape as q17, so recall is a direct edge join.
     val exactTopK = Queries.q17EmbeddingTopK(spark, sfDir)
       .select(col("qid"), col("nid")).cache()
     val nEdges = exactTopK.count()
-    // q18 emits (qid, rank, nid) top-3 after banded-LSH candidate generation
-    // + exact re-rank — same shape as q17, so recall is a direct edge join.
+    def edgeHits(approx: DataFrame): Long =
+      exactTopK.join(approx.select(col("qid"), col("nid")), Seq("qid", "nid")).count()
+    val nLshHit = edgeHits(Queries.q18EmbeddingLsh(spark, sfDir))
+    val nIvfHit = edgeHits(Queries.q24EmbeddingIvf(spark, sfDir))
+    exactPairs.unpersist(); exactTopK.unpersist()
+    Counts(nExact, nHit, nEdges, nLshHit, nIvfHit)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val spark = GraftSession.builder(SparkEntry.cpus, "graft-recall").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
+    val c = counts(spark, sfDir)
+    val nCand = Queries.q06MinhashLsh(spark, sfDir).count()
     // The candidate fraction (how much of the corpus each probe touches) is
     // the honest cost of LSH at this similarity gap; recomputed here with
-    // the same 16x4 banding.
-    val lshTopK = Queries.q18EmbeddingLsh(spark, sfDir).select(col("qid"), col("nid"))
-    val nLshHit = exactTopK.join(lshTopK, Seq("qid", "nid")).count()
+    // q18's 16x4 banding.
     val (candTotal, corpusN) = {
       import graft.functions.GraftFunctions.hyperplane_sig
       val sigs = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -64,17 +72,14 @@ object RecallAudit {
         .select("qid", "vec_id").distinct().count()
       (cand, sigs.count())
     }
-    val ivfTopK = Queries.q24EmbeddingIvf(spark, sfDir).select(col("qid"), col("nid"))
-    val nIvfHit = exactTopK.join(ivfTopK, Seq("qid", "nid")).count()
 
-    def ratio(h: Long, n: Long): Double = if (n == 0) 1.0 else h.toDouble / n
     println(
-      s"""{"sf":"$sfDir","q06_vs_q05":{"exact_pairs":$nExact,"candidate_pairs":$nCand,""" +
-      s""""recalled":$nHit,"recall":${ratio(nHit, nExact)},"precision":${ratio(nHit, nCand)}},""" +
-      s""""q18_vs_q17":{"exact_edges":$nEdges,"recalled":$nLshHit,"recall":${ratio(nLshHit, nEdges)},""" +
+      s"""{"sf":"$sfDir","q06_vs_q05":{"exact_pairs":${c.exactPairs},"candidate_pairs":$nCand,""" +
+      s""""recalled":${c.q06Hits},"recall":${ratio(c.q06Hits, c.exactPairs)},"precision":${ratio(c.q06Hits, nCand)}},""" +
+      s""""q18_vs_q17":{"exact_edges":${c.exactEdges},"recalled":${c.q18Hits},"recall":${ratio(c.q18Hits, c.exactEdges)},""" +
       s""""candidates_per_probe":${candTotal / 20.0},"corpus":$corpusN,""" +
       s""""candidate_fraction":${ratio(candTotal, 20 * corpusN)}},""" +
-      s""""q24_vs_q17":{"exact_edges":$nEdges,"recalled":$nIvfHit,"recall":${ratio(nIvfHit, nEdges)}}}""")
+      s""""q24_vs_q17":{"exact_edges":${c.exactEdges},"recalled":${c.q24Hits},"recall":${ratio(c.q24Hits, c.exactEdges)}}}""")
     spark.stop()
   }
 }

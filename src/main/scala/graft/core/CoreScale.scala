@@ -57,34 +57,4 @@ object CoreScale {
     val total = shardsTotal.toLong * perShard
     println(s"""{"sec":$sec,"entries":$total,"entries_per_sec":${(total / sec).toLong},"threads":$threads,"mode":"core"}""")
   }
-
-  /** Fork a fresh GC-pinned JVM running this probe; returns seconds.
-    *
-    * The fork is EXECUTOR-SIZED: `ActiveProcessorCount` and the GC thread
-    * count scale with the measured thread count, because that is what the
-    * north rule's "same job at two cluster sizes" means — a cluster
-    * executor pinned to N cores gets N cores for GC and JIT too. A fixed
-    * 8-GC-thread / unrestricted-APC fork (rounds 1-4) lends SMALL levels
-    * hidden extra parallelism, deflating every measured pair; A/B on this
-    * host: level-1 flat, level-4 ~5% faster under its own sizing (8 GC
-    * threads oversubscribe a 4-thread workload on a time-shared box).
-    */
-  def forked(threads: Int, shardsTotal: Int, perShard: Int, heap: String): Double = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cmd = Seq(javaBin,
-      s"-Xms$heap", s"-Xmx$heap",
-      "-XX:+UseParallelGC", s"-XX:ParallelGCThreads=${math.min(8, math.max(2, threads))}",
-      s"-XX:ActiveProcessorCount=$threads",
-      "-XX:+AlwaysPreTouch", "-XX:PretenureSizeThreshold=1048576",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.core.CoreScale", threads.toString, shardsTotal.toString, perShard.toString)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
-    proc.waitFor()
-    val json = out.find(_.startsWith("""{"sec":"""))
-      .getOrElse(throw new RuntimeException(s"CoreScale produced no result; tail: ${out.takeRight(5).mkString(" | ")}"))
-    """"sec":([0-9.Ee+-]+)""".r.findFirstMatchIn(json).get.group(1).toDouble
-  }
 }

@@ -18,17 +18,25 @@ class QueryCacheSpec extends AnyFunSuite {
     texts.flatMap(_.sliding(Queries.ShingleN).filter(_.length == Queries.ShingleN))
       .groupBy(identity).map { case (s, occ) => s -> occ.size.toLong }
 
-  private def q01(dir: String): Map[String, Long] =
-    Queries.q01BqfAbundance(spark, dir).as[(String, Long)].collect().toMap
-
-  test("q01 answers for a corpus rewritten in place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cache").toString
-    val first = Seq("the quick brown fox jumps over the lazy dog", "the lazy dog sleeps")
-    val second = Seq("pack my box with five dozen liquor jugs", "sphinx of black quartz, judge my vow")
-    writeCorpus(dir, first)
-    assert(q01(dir) == exact(first))
-    writeCorpus(dir, second)
-    assert(q01(dir) == exact(second), "q01 answered from the replaced corpus")
+  // one rewrite-in-place case per dir-keyed cache: q01 reads the text
+  // sketch blob, q25 the order-of-magnitude (oom) one, which decodes each
+  // count to its highest power of two
+  Seq[(String, String => Map[String, Long], Long => Long)](
+    ("q01", dir => Queries.q01BqfAbundance(spark, dir).as[(String, Long)].collect().toMap, identity),
+    ("q25", dir => Queries.q25OomAbundance(spark, dir).as[(String, Long)].collect().toMap,
+      java.lang.Long.highestOneBit)
+  ).foreach { case (name, answers, decode) =>
+    test(s"$name answers for a corpus rewritten in place") {
+      def want(texts: Seq[String]) = exact(texts).map { case (s, n) => s -> decode(n) }
+      val dir = java.nio.file.Files.createTempDirectory("graft-cache").toString
+      val first = Seq("the quick brown fox jumps over the lazy dog", "the lazy dog sleeps",
+        "abcdefghij abcdefghij abcdefghij abcdefghij")
+      val second = Seq("pack my box with five dozen liquor jugs", "sphinx of black quartz, judge my vow")
+      writeCorpus(dir, first)
+      assert(answers(dir) == want(first))
+      writeCorpus(dir, second)
+      assert(answers(dir) == want(second), s"$name answered from the replaced corpus")
+    }
   }
 
   test("q20's tokens table is cached under the working directory") {

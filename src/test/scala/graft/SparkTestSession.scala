@@ -7,16 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
+    val s = GraftSession.builder(4, "graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
