@@ -35,8 +35,13 @@ import org.apache.spark.sql.functions._
   * under the working directory) and to stderr, both BEFORE the stdout line.
   */
 object Bench {
+  /** One fork's result: the seconds it reports for its timed work, and the
+    * wall clock from its start to its exit.
+    */
+  private[graft] final case class ForkTime(sec: Double, wallSec: Double)
+
   /** Run `main` in a fresh GC-pinned JVM and return its first `{"sec":`
-    * stdout line.
+    * stdout line with the fork's wall seconds.
     *
     * GC matters more than anything else for comparable scaling numbers on
     * this host: G1 young pauses reach 5-23 s on heaps > ~10 GB (slow
@@ -53,7 +58,8 @@ object Bench {
     * hidden extra parallelism, deflating every measured pair.
     */
   private def forkJvm(main: String, cpus: Int, heap: String, flags: Seq[String],
-                      args: Seq[Any]): String = {
+                      args: Seq[Any]): (String, Double) = {
+    val t0 = System.nanoTime()
     val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ flags ++ Seq(
       s"-Xms$heap", s"-Xmx$heap",
       "-XX:+UseParallelGC", s"-XX:ParallelGCThreads=${math.min(8, math.max(2, cpus))}",
@@ -63,15 +69,16 @@ object Bench {
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
     proc.waitFor()
-    out.find(_.startsWith("""{"sec":"""))
+    val line = out.find(_.startsWith("""{"sec":"""))
       .getOrElse(throw new RuntimeException(s"$main produced no result; tail: ${out.takeRight(5).mkString(" | ")}"))
+    (line, (System.nanoTime() - t0) / 1e9)
   }
 
   private def jsonNum(line: String, key: String): String =
     ("\"" + key + "\":([0-9.Ee+-]+)").r.findFirstMatchIn(line).get.group(1)
 
-  /** One [[BuildJob]] fork: (seconds, kgrams, the fork's GC ms). */
-  private def buildFork(cpus: Int, rows: Long, nBuckets: Int, heap: String): (Double, Long, Long) = {
+  /** One [[BuildJob]] fork: (its times, kgrams, the fork's GC ms). */
+  private def buildFork(cpus: Int, rows: Long, nBuckets: Int, heap: String): (ForkTime, Long, Long) = {
     val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
       "java.net", "java.nio", "java.util", "java.util.concurrent",
       "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
@@ -83,14 +90,21 @@ object Bench {
     // measuring the disk, not the engine. A real cluster executor has
     // provisioned NVMe for exactly this; /dev/shm restores that contract
     // (bytes moved are identical).
-    val line = forkJvm("graft.BuildJob", cpus, heap,
+    val (line, wall) = forkJvm("graft.BuildJob", cpus, heap,
       opens :+ s"-Dspark.local.dir=${BuildJob.shmLocalDir}", Seq(cpus, rows, nBuckets))
-    (jsonNum(line, "sec").toDouble, jsonNum(line, "kgrams").toLong, jsonNum(line, "gc_ms").toLong)
+    (ForkTime(jsonNum(line, "sec").toDouble, wall), jsonNum(line, "kgrams").toLong, jsonNum(line, "gc_ms").toLong)
   }
 
-  /** One [[graft.core.CoreScale]] fork (128 shards of 1.2M entries): seconds. */
-  private def coreFork(threads: Int, heap: String): Double =
-    jsonNum(forkJvm("graft.core.CoreScale", threads, heap, Nil, Seq(threads, 128, 1200000)), "sec").toDouble
+  /** One [[graft.core.CoreScale]] fork (128 shards of 1.2M entries). */
+  private def coreFork(threads: Int, heap: String): ForkTime = {
+    val (line, wall) = forkJvm("graft.core.CoreScale", threads, heap, Nil, Seq(threads, 128, 1200000))
+    ForkTime(jsonNum(line, "sec").toDouble, wall)
+  }
+
+  /** The core series' default levels: the powers of two up to `cpus`.
+    * Higher levels would measure oversubscription, not the kernel.
+    */
+  private[graft] def coreLevelsFor(cpus: Int): Seq[Int] = Iterator.iterate(1)(_ * 2).takeWhile(_ <= cpus).toSeq
 
   /** Median over complete sweeps of the same-sweep ratio
     * `(t(c1)/t(c2)) / (c2/c1)`; sweeps missing either level are skipped.
@@ -112,6 +126,16 @@ object Bench {
       val ex = est.collect { case ((s, cc), w) if s == series => w * cc / c.toDouble }
       if (ex.isEmpty) 0.0 else ex.min
     })
+
+  /** Record one fork in the estimates that [[estimateWall]] reads: its
+    * wall clock, the best per (series, level). The seconds a fork reports
+    * leave out its JVM start, heap pretouch, Spark session and shutdown: a
+    * BuildJob fork at 100k rows on a 4-CPU host reported 3.3 s and took
+    * 13.9 s.
+    */
+  private[graft] def observe(est: collection.mutable.Map[(String, Int), Double], series: String, c: Int,
+                             t: ForkTime): Unit =
+    est((series, c)) = math.min(est.getOrElse((series, c), Double.MaxValue), t.wallSec)
 
   /** The one budget gate: a fork runs only while the remaining budget
     * exceeds 1.5x its estimate plus the emission reserve.
@@ -289,11 +313,11 @@ object Bench {
       val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "6").toInt
       val headline = (1 to trials).map { i =>
         val r = buildFork(cpus, benchRows, nBuckets, heap)
-        System.err.println(f"[bench] build trial $i: ${r._1}%.2f s (forked-JVM gc ${r._3} ms)")
+        System.err.println(f"[bench] build trial $i: ${r._1.sec}%.2f s (forked-JVM gc ${r._3} ms)")
         r
       }
-      val best = headline.minBy(_._1)
-      buildSec = best._1
+      val best = headline.minBy(_._1.sec)
+      buildSec = best._1.sec
       kgrams = headline.head._2
       results += "build_tokens_bqf" -> buildSec
       // GC of the MIN-time trial: the capability estimate's own collector cost
@@ -638,7 +662,8 @@ object Bench {
     //       that a thread curve measures the host, not the library.
     //   (b) core: the reduce-side kernel (independent shard builds:
     //       generate -> radix sort -> canonical construction) with plain
-    //       threads at 1..16 — the library's own scaling, no Spark
+    //       threads at each power of two up to the session's cores
+    //       (SPARK_GRAFT_CORE_CPUS overrides) — the library's own scaling, no Spark
     //       machinery; on a real cluster the per-executor picture.
     // Both series run through one sweep loop (sweepSeries) and report one
     // estimator, medianPairEff: each sweep measures every level back to
@@ -657,8 +682,8 @@ object Bench {
       val scaleRows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "2400000").toLong
       val e2eLevels = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS", "1,2,4")
         .split(",").map(_.trim.toInt).distinct.sorted
-      val coreLevels = sys.env.getOrElse("SPARK_GRAFT_CORE_CPUS", "1,2,4,8,16")
-        .split(",").map(_.trim.toInt).distinct.sorted
+      val coreLevels = sys.env.get("SPARK_GRAFT_CORE_CPUS").fold(coreLevelsFor(cpus).toArray)(
+        _.split(",").map(_.trim.toInt)).distinct.sorted
       val coreTrials = sys.env.getOrElse("SPARK_GRAFT_CORE_TRIALS", "4").toInt
       val scaleTrials = sys.env.getOrElse("SPARK_GRAFT_SCALE_TRIALS", "5").toInt
       val levels = (e2eLevels ++ coreLevels).distinct.sorted
@@ -725,7 +750,7 @@ object Bench {
       val estWall = scala.collection.mutable.Map.empty[(String, Int), Double]
       def sweepSeries(series: String, ls: Array[Int], trials: Int,
                       sweeps: scala.collection.mutable.ArrayBuffer[Map[Int, Double]],
-                      fork: Int => Double): Unit = {
+                      fork: Int => ForkTime): Unit = {
         def gate(c: Int): Boolean = {
           val e = estimateWall(estWall, series, c)
           val ok = fits(remainingSec(), e, reserveSec)
@@ -742,8 +767,9 @@ object Bench {
         // observation it enters at half weight and no estimator sees it.
         if (!gate(ls.max)) return
         val warm = fork(ls.max)
-        estWall((series, ls.max)) = warm * 0.5
-        System.err.println(f"[bench] scaling warm-up (discarded): $series@${ls.max} $warm%.1f s")
+        estWall((series, ls.max)) = warm.wallSec * 0.5
+        System.err.println(f"[bench] scaling warm-up (discarded): $series@${ls.max} ${warm.sec}%.1f s " +
+          f"(wall ${warm.wallSec}%.1f s)")
         // Levels run PAIR-FIRST, CHEAP ENDPOINT FIRST: the N->4N endpoints
         // (max level, then min level) before any middle level, so a budget
         // death mid-sweep strands the cheap fork, not the expensive one.
@@ -755,9 +781,9 @@ object Bench {
           order.foreach { c =>
             if (!stop) {
               if (gate(c)) {
-                val w = fork(c)
-                estWall((series, c)) = math.min(estWall.getOrElse((series, c), Double.MaxValue), w)
-                sweeps(sweeps.length - 1) += c -> w
+                val t = fork(c)
+                observe(estWall, series, c, t)
+                sweeps(sweeps.length - 1) += c -> t.sec
                 renderScaling()
               } else if (c == ls.max) stop = true
             }
@@ -773,9 +799,9 @@ object Bench {
       // e2e FIRST: it is the named north-rule obligation, core is
       // supplementary, so the pair draws on the freshest budget.
       sweepSeries("e2e", e2eLevels, scaleTrials, e2eSweeps, { c =>
-        val (sec, kg, _) = buildFork(c, scaleRows, nBuckets, heap)
+        val (t, kg, _) = buildFork(c, scaleRows, nBuckets, heap)
         scaleKgrams = kg
-        sec
+        t
       })
       sweepSeries("core", coreLevels, coreTrials, coreSweeps, coreFork(_, heap))
       renderScaling()

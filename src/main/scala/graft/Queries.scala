@@ -116,7 +116,7 @@ object Queries {
   private val sessionCache =
     new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, Any]]()
 
-  private def sessionCached[T](spark: SparkSession, key: String)(make: => T): T = {
+  private[graft] def sessionCached[T](spark: SparkSession, key: String)(make: => T): T = {
     val m = sessionCache.synchronized {
       // a cached DataFrame strongly references its session, which pins the
       // weak key — so weak keys alone never collect an entry. Evict stopped

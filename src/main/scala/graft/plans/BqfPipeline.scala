@@ -110,7 +110,7 @@ object BqfPipeline {
   }
 
   /** The range rule of [[sortedBuild]], [[queryIndex]] and
-    * [[graft.streaming.IndexIngest.compact]]: bucket b of `nBuckets` (a
+    * [[graft.streaming.IndexIngest]]'s writes: bucket b of `nBuckets` (a
     * power of two) goes to task b * p / nBuckets of `p`, so task t owns the
     * contiguous buckets [t * nBuckets / p, (t+1) * nBuckets / p). Buckets
     * outside [0, nBuckets) — the -1 of [[chunkByBucket]]'s strays — clamp
@@ -119,6 +119,10 @@ object BqfPipeline {
   private[graft] def rangeRoute(bucket: Column, nBuckets: Int, p: Int): Column =
     least(greatest(shiftright(bucket * p, java.lang.Integer.numberOfTrailingZeros(nBuckets)), lit(0L)),
       lit(p - 1L)).cast("int")
+
+  /** [[rangeRoute]] of one bucket, on the driver. */
+  private[graft] def rangeTask(bucket: Long, nBuckets: Int, p: Int): Int =
+    math.min(math.max((bucket * p) >> java.lang.Integer.numberOfTrailingZeros(nBuckets), 0L), p - 1L).toInt
 
   /** Map-side bucketizer of [[sortedBuild]], [[queryIndex]] and
     * [[graft.streaming.IndexIngest.ingestBatch]]: groups each task's entries

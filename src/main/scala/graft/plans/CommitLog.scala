@@ -1,0 +1,139 @@
+package graft.plans
+
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+/** One shard version a log entry names: its bucket, the batch that wrote it,
+  * and its lineage — the fingerprint rows merged into the shard over all its
+  * versions, and how many batch merges built it.
+  */
+final case class LoggedShard(bucket: Long, batchId: Long, rowsConsumed: Long, mergeDepth: Int)
+
+/** One data file of the store directory, with the shard rows it holds. */
+final case class LoggedFile(name: String, bytes: Long, shards: Seq[LoggedShard])
+
+/** One commit of an ingest store: the files batch `batchId` added or, for a
+  * checkpoint, every live file as of `batchId`, superseding each entry at or
+  * below it.
+  */
+final case class LogEntry(batchId: Long, checkpoint: Boolean, files: Seq[LoggedFile]) {
+  def fileName: String = if (checkpoint) s"$batchId.checkpoint.json" else s"$batchId.json"
+}
+
+/** The log folded on the driver: the newest checkpoint, then the batch
+  * entries above it in id order, each shard replacing its bucket's last.
+  */
+final case class LogState(entries: Seq[LogEntry]) {
+  private val base = entries.filter(_.checkpoint).maxByOption(_.batchId)
+  /** Every id at or below this is committed by the newest checkpoint. */
+  val through: Long = base.fold(-1L)(_.batchId)
+  /** Entries the newest checkpoint replaced; a compaction deletes them. */
+  val superseded: Seq[LogEntry] = entries.filter(e => e.batchId <= through && !base.contains(e))
+  /** The batch entries above the newest checkpoint, in id order. */
+  val pending: Seq[LogEntry] = entries.filter(e => !e.checkpoint && e.batchId > through).sortBy(_.batchId)
+  /** bucket -> (its live shard version, the file holding it). */
+  val live: Map[Long, (LoggedShard, LoggedFile)] =
+    (base.toSeq ++ pending).flatMap(_.files.flatMap(f => f.shards.map(s => s.bucket -> (s, f)))).toMap
+  /** The data files the live view may read: every file a current entry names. */
+  val files: Set[String] = (base.toSeq ++ pending).flatMap(_.files.map(_.name)).toSet
+  val lastId: Long = entries.map(_.batchId).maxOption.getOrElse(-1L)
+
+  def committed(batchId: Long): Boolean = batchId <= through || pending.exists(_.batchId == batchId)
+}
+
+/** The `_graft_log` commit log of an ingest store: one JSON entry per
+  * committed batch or compaction, `<batchId>.json` or
+  * `<batchId>.checkpoint.json`. An entry is written to a hidden temp file
+  * and renamed into place without overwrite, so a second commit of the same
+  * name throws `FileAlreadyExistsException` and the first one stands. Like
+  * [[IndexSidecar]], entries are read and written through the raw Hadoop
+  * file system with Jackson, and the underscore prefix keeps the log out of
+  * parquet reads of the store.
+  */
+object CommitLog {
+  final val DirName = "_graft_log"
+  private val EntryName = """(\d+)(\.checkpoint)?\.json""".r
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def dir(storeDir: String): Path = new Path(storeDir, DirName)
+
+  private def json(e: LogEntry): String = {
+    val root = mapper.createObjectNode().put("batch_id", e.batchId).put("checkpoint", e.checkpoint)
+    val files = root.putArray("files")
+    e.files.foreach { f =>
+      val fn = files.addObject().put("name", f.name).put("rows", f.shards.size).put("bytes", f.bytes)
+      val shards = fn.putArray("shards")
+      f.shards.foreach(s => shards.addObject().put("bucket", s.bucket).put("batch_id", s.batchId)
+        .put("rows_consumed", s.rowsConsumed).put("merge_depth", s.mergeDepth))
+    }
+    mapper.writeValueAsString(root)
+  }
+
+  /** Parse one entry; IllegalArgumentException when a field is missing or
+    * mistyped, or a file's `rows` disagrees with its shard list.
+    */
+  private def parse(name: String, text: String): LogEntry = {
+    def field(n: JsonNode, f: String): JsonNode = {
+      val v = if (n == null) null else n.get(f)
+      require(v != null, s"$DirName/$name lacks field $f")
+      v
+    }
+    def long(n: JsonNode, f: String): Long = {
+      val v = field(n, f)
+      require(v.isIntegralNumber && v.canConvertToLong, s"$DirName/$name field $f is not an integer: $v")
+      v.longValue
+    }
+    val root =
+      try mapper.readTree(text)
+      catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw new IllegalArgumentException(s"$DirName/$name is not valid JSON: ${e.getOriginalMessage}", e)
+      }
+    val files = field(root, "files").elements().asScala.map { f =>
+      val shards = field(f, "shards").elements().asScala.map(s => LoggedShard(long(s, "bucket"),
+        long(s, "batch_id"), long(s, "rows_consumed"), long(s, "merge_depth").toInt)).toVector
+      require(long(f, "rows") == shards.size, s"$DirName/$name: rows of ${field(f, "name").asText} disagree with its shards")
+      LoggedFile(field(f, "name").asText, long(f, "bytes"), shards)
+    }.toVector
+    LogEntry(long(root, "batch_id"), field(root, "checkpoint").asBoolean, files)
+  }
+
+  /** The store's folded log, or None when it has no log directory. */
+  def read(spark: SparkSession, storeDir: String): Option[LogState] = {
+    val d = dir(storeDir)
+    val fs = IndexSidecar.fileSystem(spark, d)
+    if (!fs.exists(d)) None
+    else Some(LogState(fs.listStatus(d).toSeq.map(_.getPath.getName).collect { case n @ EntryName(_, _) =>
+      val in = fs.open(new Path(d, n))
+      try parse(n, new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
+    }))
+  }
+
+  /** Make the (empty) log directory of a new store. */
+  def create(spark: SparkSession, storeDir: String): Unit = {
+    val d = dir(storeDir)
+    IndexSidecar.fileSystem(spark, d).mkdirs(d)
+  }
+
+  /** Commit `e`: throws FileAlreadyExistsException when an entry of the
+    * same name is already committed, which then stays as it was.
+    */
+  def commit(spark: SparkSession, storeDir: String, e: LogEntry): Unit = {
+    val d = dir(storeDir)
+    val fs = IndexSidecar.fileSystem(spark, d)
+    val tmp = new Path(d, s".${e.fileName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(json(e).getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    try FileContext.getFileContext(d.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, new Path(d, e.fileName), Options.Rename.NONE)
+    finally fs.delete(tmp, false)
+  }
+
+  def delete(spark: SparkSession, storeDir: String, entries: Seq[LogEntry]): Unit = {
+    val d = dir(storeDir)
+    val fs = IndexSidecar.fileSystem(spark, d)
+    entries.foreach(e => fs.delete(new Path(d, e.fileName), false))
+  }
+}

@@ -68,9 +68,10 @@ object IndexSidecar {
 
   private def path(storeDir: String): Path = new Path(storeDir, FileName)
 
-  // no checksum side file: the sidecar is a small hand-readable record, and
-  // a hand edit must not turn into a ChecksumException on the next read
-  private def fileSystem(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
+  // no checksum side file: the sidecar and the commit log are small
+  // hand-readable records, and a hand edit must not turn into a
+  // ChecksumException on the next read
+  private[plans] def fileSystem(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case fs => fs

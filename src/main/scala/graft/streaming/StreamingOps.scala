@@ -81,18 +81,21 @@ object StreamingOps {
     * queries use), one exchange brings every touched bucket's chunks
     * together with its live shard, and each reduce task builds the bucket's
     * batch partial, merges it into the live shard and appends the new shard
-    * version tagged with the batch id.
+    * version tagged with the batch id. The batch's files count once its
+    * entry in the store's commit log (`_graft_log/<batchId>.json`) commits.
     *
     * Exactly-once: the streaming checkpoint replays an uncommitted batch
     * with the SAME batchId, and [[IndexIngest.ingestBatch]] skips a batchId
-    * already present in the store — so a crash between store-append and
-    * checkpoint-commit cannot double-count. Readers take the latest version
-    * per bucket ([[IndexIngest.currentShards]]), which is always a complete
-    * prefix of the stream.
+    * the log already holds, with no Spark job — so a crash between the log
+    * commit and the checkpoint commit cannot double-count, and a crash
+    * before the log commit leaves files no reader opens. Readers take the
+    * latest version per bucket from the log ([[IndexIngest.currentShards]]),
+    * which is always a complete prefix of the stream.
     *
     * At 100 TB this is the continuous-corpus story: ingest never rewrites
-    * more than the touched buckets, the store is append-only parquet (object
-    * -store friendly), and query/enumerate route by the same bucket bits.
+    * more than the touched buckets, the store is append-only parquet plus
+    * small log entries committed by a no-overwrite rename (object-store
+    * friendly), and query/enumerate route by the same bucket bits.
     */
   def indexIngest(fps: Dataset[Long], params: graft.operators.BqfParams,
                   nBuckets: Int, storeDir: String, checkpointDir: String)
@@ -121,191 +124,168 @@ object StreamingOps {
   }
 }
 
-/** Store mechanics of [[StreamingOps.indexIngest]] — an append-only parquet
-  * shard store with per-batch versioning. Layout: rows
-  * (bucket, sketch, batch_id); the live index is the max-batch_id row per
-  * bucket. Also usable standalone for incremental BATCH ingest (call
-  * [[IndexIngest.ingestBatch]] with your own monotonic batch ids).
+/** Store mechanics of [[StreamingOps.indexIngest]]: a flat parquet directory
+  * of shard rows (bucket, sketch, batch_id) and its commit log
+  * ([[graft.plans.CommitLog]], `_graft_log/`). Each batch adds files that
+  * hold its touched buckets' new shard versions and commits one log entry
+  * naming them. Readers fold the log on the driver into bucket -> (live
+  * batch_id, file) and scan exactly those files, so no access lists the
+  * store or runs a metadata job, and a file no entry names (a crashed
+  * attempt's leftover) is never read. The max-batch_id row per bucket of
+  * the directory is the live one. Also usable standalone for incremental
+  * BATCH ingest (call [[IndexIngest.ingestBatch]] with your own increasing
+  * batch ids).
   */
 object IndexIngest {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import graft.plans.{CommitLog, IndexSidecar, LogEntry, LogState, LoggedFile, LoggedShard}
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-  /** A store "exists" only once it holds committed parquet data. Path
-    * existence alone is not enough: a crash during the FIRST batch's write
-    * can leave the directory present with no data files, and a raw
-    * spark.read.parquet on it throws 'Unable to infer schema' on every
-    * checkpoint replay — the ingest query could never self-recover.
-    *
-    * Before answering, heal a compact() that crashed mid-swap: the original
-    * store sits complete at `<dir>.compact-old` with the store path absent
-    * (or an empty shell). If only compact() ran this recovery, an
-    * ingestBatch or currentShards arriving FIRST would see "no store",
-    * silently start fresh, and — once one new batch appended — make the
-    * pre-compact data unrecoverable (the aside-restore condition
-    * `!storeExists && aside exists` could never fire again). Running it at
-    * every store access closes that window.
-    */
-  private def storeExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a plain listStatus walk: fs.listFiles builds a LocatedFileStatus per
-    // file, which reads its permissions — without native libhadoop, a
-    // forked `ls -ld` per file on every store access
-    def hasData(d: org.apache.hadoop.fs.Path): Boolean = fs.listStatus(d).exists { s =>
-      val f = s.getPath.getName
-      if (s.isDirectory) hasData(s.getPath)
-      else f.endsWith(".parquet") && !f.startsWith("_") && !f.startsWith(".")
-    }
-    val aside = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    if (fs.exists(p) && hasData(p)) true
-    else if (fs.exists(aside)) {
-      fs.delete(p, true) // at most an empty shell from the failed swap
-      fs.rename(aside, p)
-      fs.exists(p) && hasData(p)
-    } else false
-  }
+  /** Each write attempt's files are staged here, then moved into the store. */
+  private val StagingDir = "_graft_staging"
 
   /** Every store read uses this fixed schema: no read pays a schema
-    * inference job, and a file without `batch_id` (a
-    * [[graft.plans.BqfPipeline.buildIndexSorted]] output, say) reads back
-    * as null ids, which [[liveVersions]] refuses.
+    * inference job.
     */
   private val StoreSchema = new org.apache.spark.sql.types.StructType()
     .add("bucket", "bigint").add("sketch", "binary").add("batch_id", "bigint")
 
-  private def readStore(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(StoreSchema).parquet(dir)
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
-  /** The live view's metadata, in one single-stage job over the two small
-    * columns (parquet column pruning keeps the sketch blobs out of it):
-    * each bucket's live batch id (its max), and whether batch `replayOf` is
-    * already committed. Each input task folds its rows to per-bucket max
-    * ids and the driver folds the tasks' maps, so no exchange runs and the
-    * collect is bounded by tasks x nBuckets pairs.
+  private def fileSystem(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store's folded log; None for a store not written yet. A directory
+    * that holds data files but no log (a batch-built index, say) is refused.
     */
-  private def liveVersions(store: DataFrame, dir: String,
-                           replayOf: Option[Long]): (Map[Long, Long], Boolean) = {
-    import store.sparkSession.implicits._
-    val parts = store.select(col("bucket"), col("batch_id")).as[(Long, Option[Long])]
-      .mapPartitions { rows =>
-        val live = scala.collection.mutable.LongMap.empty[Long]
-        var unversioned, seen = false
-        rows.foreach {
-          case (bucket, Some(id)) =>
-            if (live.get(bucket).forall(_ < id)) live(bucket) = id
-            seen ||= replayOf.contains(id)
-          case (_, None) => unversioned = true
-        }
-        Iterator.single((live.toArray, unversioned, seen))
-      }
-      .collect()
-    require(!parts.exists(_._2),
-      s"$dir holds shard rows without a batch_id, so it is not an ingest store; " +
-        "read a batch-built index directly, without currentShards or compact")
-    (parts.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(math.max), parts.exists(_._3))
-  }
+  private def log(spark: SparkSession, dir: String): Option[LogState] =
+    CommitLog.read(spark, dir).orElse {
+      val fs = fileSystem(spark, dir)
+      val p = new Path(dir)
+      require(!fs.exists(p) || fs.listStatus(p).forall(s => hidden(s.getPath.getName)),
+        s"$dir holds shard rows but no ${CommitLog.DirName}, so no batch_id of it is committed and it is " +
+          "not an ingest store; read a batch-built index directly, without currentShards or compact")
+      None
+    }
 
   /** Exactly the live (bucket, sketch, batch_id) row of each bucket in
-    * `live`, with no exchange. Every ingest batch appends its own parquet
-    * file(s) with a CONSTANT batch_id, so footer min==max stats let the
-    * literal `batch_id isin` filter skip every superseded file: the blob
-    * scan is O(live shards), not O(versions ever written). That filter
-    * alone can keep old versions (buckets peak at different ids, and an
-    * old version can share a surviving file's id); the exact (bucket,
-    * batch_id) membership test over the captured map drops them row by row.
+    * `live`, with no exchange, read from the files that hold them and no
+    * other. A live file can also hold superseded versions (batch 0 wrote
+    * buckets A and B, batch 1 rewrote A), so the exact (bucket, batch_id)
+    * membership test over the captured map drops those row by row.
     */
-  private def liveRows(store: DataFrame, live: Map[Long, Long]): DataFrame = {
-    val isLive = udf((bucket: Long, id: Long) => live.get(bucket).contains(id))
-    store.filter(col("batch_id").isin(live.values.toSeq.distinct.map(Long.box): _*))
-      .filter(isLive(col("bucket"), col("batch_id")))
+  private def liveRows(spark: SparkSession, dir: String,
+                       live: Map[Long, (LoggedShard, LoggedFile)]): DataFrame = {
+    val ids = live.map { case (bucket, (shard, _)) => bucket -> shard.batchId }
+    val isLive = udf((bucket: Long, id: Long) => ids.get(bucket).contains(id))
+    val files = live.values.map(f => new Path(dir, f._2.name).toString).toSeq.distinct
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), StoreSchema)
+    else spark.read.schema(StoreSchema).parquet(files: _*).filter(isLive(col("bucket"), col("batch_id")))
   }
 
   /** Latest shard version per bucket — the live (bucket, sketch) index,
     * one row per bucket, directly consumable by
     * [[graft.plans.BqfPipeline.queryIndex]] and
-    * [[graft.plans.BqfPipeline.enumerateIndex]]. Runs the store metadata
-    * job; the shard scan itself is lazy. Throws IllegalArgumentException
-    * for a directory whose rows carry no batch_id.
+    * [[graft.plans.BqfPipeline.enumerateIndex]]. Reads the commit log on
+    * the driver; the shard scan itself is lazy. Throws
+    * IllegalArgumentException for a directory with data but no commit log.
     */
-  def currentShards(spark: SparkSession, storeDir: String): DataFrame = {
-    if (!storeExists(spark, storeDir))
-      return spark.emptyDataFrame
-        .withColumn("bucket", lit(0L)).withColumn("sketch", lit(Array.empty[Byte]))
-        .limit(0)
-    val store = readStore(spark, storeDir)
-    liveRows(store, liveVersions(store, storeDir, None)._1)
+  def currentShards(spark: SparkSession, storeDir: String): DataFrame =
+    liveRows(spark, storeDir, log(spark, storeDir).fold(Map.empty[Long, (LoggedShard, LoggedFile)])(_.live))
       .select(col("bucket"), col("sketch"))
+
+  /** Write `routed` (rows bucket, sketch, batch_id, split into `p` tasks by
+    * `rangeRoute(bucket, span, p)`) to a fresh staging directory, move its
+    * part files into the store and return them with the `shards` each
+    * holds. repartitionById keeps exactly `p` partitions (AQE does not
+    * coalesce them), and each task's part file carries its partition
+    * number, so the routing names each file's buckets without reading it.
+    */
+  private def writeShards(spark: SparkSession, storeDir: String, routed: DataFrame, span: Int, p: Int,
+                          shards: Iterable[LoggedShard]): Seq[LoggedFile] = {
+    val staging = new Path(new Path(storeDir, StagingDir), java.util.UUID.randomUUID.toString)
+    routed.write.option("maxRecordsPerFile", 0L).parquet(staging.toString)
+    val fs = fileSystem(spark, storeDir)
+    val byPart = shards.groupBy(s => graft.plans.BqfPipeline.rangeTask(s.bucket, span, p))
+    val files = fs.listStatus(staging).toSeq.filter(_.getPath.getName.startsWith("part-")).map { st =>
+      val name = st.getPath.getName
+      fs.rename(st.getPath, new Path(storeDir, name))
+      LoggedFile(name, st.getLen, byPart.getOrElse(name.drop(5).takeWhile(_.isDigit).toInt, Nil).toSeq.sortBy(_.bucket))
+    }
+    fs.delete(staging, true)
+    if (files.map(_.shards.size).sum != shards.size)
+      throw new IllegalStateException(s"$storeDir: ${files.size} written files do not hold the ${shards.size} " +
+        s"routed shards once each: ${files.map(_.name).mkString(", ")}")
+    files
   }
 
-  /** Rewrite the store to only the LATEST version of each bucket (batch_id
-    * preserved, so the replay guard still sees every committed id it needs:
-    * the max id; older ids were superseded and can never replay once the
-    * streaming checkpoint has advanced past them). Append-only stores grow
-    * one shard version per touched bucket per batch — run this periodically
-    * or when the store's size bothers you. Maintenance op: readers racing a
-    * compaction may transiently fail and should retry; the streaming query
-    * itself must be stopped (same rule as any parquet rewrite). Throws
-    * IllegalArgumentException for a directory whose rows carry no batch_id.
+  /** Delete what the newest checkpoint superseded: the data files only
+    * earlier entries name, then those entries.
+    */
+  private def sweep(spark: SparkSession, storeDir: String, state: LogState): Unit = {
+    val fs = fileSystem(spark, storeDir)
+    state.superseded.flatMap(_.files.map(_.name)).distinct.filterNot(state.files)
+      .foreach(n => fs.delete(new Path(storeDir, n), false))
+    CommitLog.delete(spark, storeDir, state.superseded)
+  }
+
+  /** Rewrite the live shard versions into bucket-clustered files and commit
+    * them as one checkpoint entry that supersedes every earlier entry; then
+    * delete those entries, the files they named and every data file no
+    * entry names (crashed attempts' leftovers) before returning. batch_id
+    * is preserved, so the directory's max-batch_id row per bucket stays the
+    * live one and the replay guard still knows every committed id. A crash
+    * at any point leaves the pre- or the post-compaction view: the new
+    * files count only once the checkpoint commits, and the old ones go only
+    * after it. Maintenance op: the streaming query must be stopped while it
+    * runs. Throws IllegalArgumentException for a directory with data but no
+    * commit log.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val tmp = new org.apache.hadoop.fs.Path(storeDir + ".compact-tmp")
-    val aside = new org.apache.hadoop.fs.Path(storeDir + ".compact-old")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a prior compact that died mid-swap left the original
-    // store renamed aside (complete — the aside rename happens only after
-    // the tmp write commits, and a crash can strike between the two
-    // renames). storeExists itself restores the aside — here and at every
-    // other store access (ingestBatch/currentShards), so no
-    // caller can start a fresh store on top of a recoverable one; the tmp
-    // from the crashed run is discarded below like any other stale tmp.
-    if (!storeExists(spark, storeDir)) return
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // distributed end to end: "one row per bucket" bounds the ROW count,
-    // not the bytes — live shards total GBs at scale (the committed 620 M-
-    // k-gram build's shards are ~5 GB), so funnelling them through a
-    // driver collect() is the one thing this maintenance op must not do.
-    // The tmp write fully materializes before the swap (parquet jobs
-    // commit before returning), so there is no read-after-delete lineage
-    // hazard below.
-    val rows = readStore(spark, storeDir)
-    val live = liveVersions(rows, storeDir, None)._1
-    // bucket-clustered output: the sorted build's range rule over the
-    // store's bucket span sends contiguous bucket ranges to
-    // min(span, cores) tasks, each writing one file sorted by bucket, so
-    // each file's parquet footer min/max covers a disjoint bucket interval
-    // and ingestBatch's touched-bucket isin skips whole files
-    val span = Integer.highestOneBit(2 * live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
-    val p = math.min(span, spark.sparkContext.defaultParallelism)
-    liveRows(rows, live)
-      .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), span, p))
-      .sortWithinPartitions("bucket")
-      .write.mode("overwrite").parquet(tmp.toString)
-    // carry the routing sidecar (underscore files are invisible to the
-    // parquet read above) across the swap
-    graft.plans.IndexSidecar.read(spark, storeDir)
-      .foreach(graft.plans.IndexSidecar.write(spark, tmp.toString, _))
-    // swap via rename-aside, never delete-then-rename: the original store
-    // stays intact on disk until the compacted tmp is in place, so no
-    // crash point loses data (worst case: store absent for the instant
-    // between the renames, with BOTH complete copies on disk — and the
-    // recovery block above heals it on the next compact call).
-    if (fs.exists(aside)) fs.delete(aside, true)
-    fs.rename(store, aside)
-    fs.rename(tmp, store)
-    fs.delete(aside, true)
+    val state = log(spark, storeDir).getOrElse(return)
+    val after =
+      if (state.pending.isEmpty) state // nothing above the newest checkpoint: only clean up
+      else {
+        val live = state.live
+        // distributed end to end: "one row per bucket" bounds the ROW
+        // count, not the bytes — live shards total GBs at scale, so
+        // funnelling them through a driver collect() is the one thing this
+        // maintenance op must not do. Bucket-clustered output: the sorted
+        // build's range rule over the store's bucket span sends contiguous
+        // bucket ranges to min(span, cores) tasks, each writing one file
+        // sorted by bucket.
+        val span = Integer.highestOneBit(2 * live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
+        val p = math.min(span, spark.sparkContext.defaultParallelism)
+        val files =
+          if (live.isEmpty) Nil
+          else writeShards(spark, storeDir, liveRows(spark, storeDir, live)
+            .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), span, p))
+            .sortWithinPartitions("bucket"), span, p, live.values.map(_._1))
+        val checkpoint = LogEntry(state.lastId, checkpoint = true, files)
+        CommitLog.commit(spark, storeDir, checkpoint)
+        LogState(state.entries :+ checkpoint)
+      }
+    sweep(spark, storeDir, after)
+    val fs = fileSystem(spark, storeDir)
+    fs.listStatus(new Path(storeDir)).collect { case f if f.isFile => f.getPath.getName }
+      .filterNot(n => hidden(n) || after.files(n)).foreach(n => fs.delete(new Path(storeDir, n), false))
+    fs.delete(new Path(storeDir, StagingDir), true)
   }
 
   /** Merge one batch of fingerprints (column `fp`) into the store. Safe to
-    * replay: a batchId already in the store is a no-op.
+    * replay: a batchId the log already holds returns at once, with no job
+    * and no write; a lower one that it does not hold is refused, because
+    * the live view is each bucket's highest batch_id.
     *
-    * After the store metadata job, two jobs around one exchange. The map
-    * side chunks the batch by bucket with
-    * [[graft.plans.BqfPipeline.chunkByBucket]] (no exchange) and caches
-    * the chunks, whose buckets are collected as the touched set. The chunks
-    * and the touched buckets' live shard versions then meet in one shuffle
-    * by bucket, and each reduce task builds every bucket's batch partial
-    * and merges it with that bucket's latest version ([[mergeTouched]]).
+    * Two jobs around one exchange. The map side chunks the batch by bucket
+    * with [[graft.plans.BqfPipeline.chunkByBucket]] (no exchange) and
+    * caches the chunks, whose buckets and sizes are collected as the
+    * touched set. The chunks and the touched buckets' live shard versions
+    * then meet in one shuffle by bucket range, and each reduce task builds
+    * every bucket's batch partial and merges it with that bucket's latest
+    * version ([[mergeTouched]]). The new files are staged, moved into the
+    * store and committed as the batch's log entry, with each new shard's
+    * lineage: fingerprint rows consumed and merge depth.
     */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   params: graft.operators.BqfParams, nBuckets: Int,
@@ -313,67 +293,68 @@ object IndexIngest {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
     import spark.implicits._
-    val store = if (storeExists(spark, storeDir)) readStore(spark, storeDir) else null
     // An existing sidecar is a routing CONTRACT, not just documentation: a
     // second ingest with a different nBuckets (or k/z/hash/seed) would
     // silently append rows routed by a different shift — currentShards then
     // mixes shard versions built under two routings and every query answers
     // wrong/zero counts with no error. Refuse up front, mirroring the
-    // query-index sidecar conflict check. (Read after storeExists, which
-    // restores a store a crashed compact left aside, sidecar included.)
-    val sidecar = graft.plans.IndexSidecar(nBuckets, params)
-    val stored = graft.plans.IndexSidecar.read(spark, storeDir)
+    // query-index sidecar conflict check.
+    val sidecar = IndexSidecar(nBuckets, params)
+    val stored = IndexSidecar.read(spark, storeDir)
     stored.foreach { s =>
       val conflicts = s.conflicts(sidecar)
       require(conflicts.isEmpty,
         s"ingestBatch routing conflicts with $storeDir's sidecar (${conflicts.mkString(", ")}); " +
           "a mismatched ingest would corrupt the store silently")
     }
-    // ONE store read and ONE driver-side metadata job serve both the replay
-    // guard and the live view of the touched buckets
-    val (live, seen) =
-      if (store == null) (Map.empty[Long, Long], false)
-      else liveVersions(store, storeDir, Some(batchId))
-    if (seen) return // replay: batchId already committed
+    val state = log(spark, storeDir).getOrElse { CommitLog.create(spark, storeDir); LogState(Nil) }
+    if (state.committed(batchId)) return // replay: batchId already committed
+    require(batchId > state.lastId,
+      s"ingestBatch: batch $batchId arrives after batch ${state.lastId} of $storeDir; batch ids must increase")
+    if (state.superseded.nonEmpty) sweep(spark, storeDir, state) // a compaction crashed before its clean-up
     // map side, cached so the touched-bucket collect and the merge job read
     // the batch once
     val chunks = graft.plans.BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // TOUCHED-BUCKET pruning: only the touched buckets' live shards take
-      // part in the merge, so the live-side scan is restricted to them up
-      // front. Without it each micro-batch reads the sketch blobs of the
-      // WHOLE live store (O(store) I/O per batch); with it only the touched
-      // buckets' blobs are scanned. Every ingest file holds one batch_id
-      // and the compact output is bucket-clustered, so the literal isin
-      // filters on both columns skip files by their footer min/max stats:
-      // per-batch cost is O(batch + touched shards), independent of store
-      // width. The collect is bounded by tasks x nBuckets rows.
-      val touched = chunks.select("bucket").as[Long].collect().distinct
+      // part in the merge, and the live-side scan opens only the files the
+      // log names for them: per-batch cost is O(batch + touched shards),
+      // independent of store width. The collect is bounded by tasks x
+      // nBuckets rows.
+      val touched = chunks.select(col("bucket"), size(col("fps")).cast("long")).as[(Long, Long)].collect()
+        .groupMapReduce(_._1)(_._2)(_ + _)
       require(!touched.contains(-1L),
         s"ingestBatch: fingerprints above hashBits=${params.hashBits} have no bucket of $storeDir")
-      val touchedSet = touched.toSet
+      val live = state.live.filter { case (bucket, _) => touched.contains(bucket) }
+      val shards = touched.map { case (bucket, n) =>
+        val prev = live.get(bucket).map(_._1)
+        LoggedShard(bucket, batchId, prev.fold(0L)(_.rowsConsumed) + n, prev.fold(0)(_.mergeDepth) + 1)
+      }
       val batchRows = chunks.select(col("bucket"), col("fps"), lit(null).cast("binary").as("sketch"))
       val rows =
-        if (store == null) batchRows
-        else batchRows.union(
-          liveRows(store.filter(col("bucket").isin(touched.toSeq.map(Long.box): _*)),
-            live.filter { case (bucket, _) => touchedSet(bucket) })
-            .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
-      // write unconditionally: an empty batch writes only parquet metadata,
-      // and the replay guard above makes replays no-ops either way
-      rows.repartition(col("bucket"))
-        .as[(Long, Array[Long], Array[Byte])]
-        .mapPartitions(mergeTouched(_, params))
-        .toDF("bucket", "sketch")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(storeDir)
+        if (live.isEmpty) batchRows
+        else batchRows.union(liveRows(spark, storeDir, live)
+          .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
+      // one merge task per ~64 MiB of input (AQE's default advisory
+      // partition size), at most one per touched bucket or core
+      val inputBytes = 8 * touched.values.sum + live.values.map { case (_, f) => f.bytes / f.shards.size }.sum
+      val p = Seq(touched.size, spark.sparkContext.defaultParallelism, (inputBytes >> 26).toInt + 1).min
+      val files =
+        if (touched.isEmpty) Nil
+        else writeShards(spark, storeDir, rows
+          .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), nBuckets, p))
+          .as[(Long, Array[Long], Array[Byte])]
+          .mapPartitions(mergeTouched(_, params))
+          .toDF("bucket", "sketch")
+          .withColumn("batch_id", lit(batchId)), nBuckets, p, shards)
+      CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, files))
     } finally chunks.unpersist(blocking = false)
     // same routing sidecar the CLI's build-index writes: it makes the
     // ingest store directly queryable by `graft.Cli query-index` (which
     // otherwise refuses to guess nBuckets) and guards against a future
     // ingest with mismatched routing.
-    if (stored.isEmpty) graft.plans.IndexSidecar.write(spark, storeDir, sidecar)
+    if (stored.isEmpty) IndexSidecar.write(spark, storeDir, sidecar)
   }
 
   /** One reduce task of [[ingestBatch]]. Its rows are batch chunks

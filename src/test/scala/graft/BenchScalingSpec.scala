@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no forks.
   */
 class BenchScalingSpec extends AnyFunSuite {
-  import Bench.{estimateWall, fits, medianPairEff}
+  import Bench.{ForkTime, coreLevelsFor, estimateWall, fits, medianPairEff, observe}
 
   private def near(a: Option[Double], b: Double, tol: Double = 1e-4): Boolean =
     a.exists(x => math.abs(x - b) < tol)
@@ -69,5 +69,29 @@ class BenchScalingSpec extends AnyFunSuite {
     val two = Map(("e2e", 4) -> 30.0, ("e2e", 2) -> 70.0)
     assert(estimateWall(two, "e2e", 2) == 70.0)
     assert(estimateWall(two, "e2e", 1) == 120.0)
+  }
+
+  test("forks are priced by their wall clock, not by the seconds they report") {
+    // a BuildJob fork at 100k rows on a 4-CPU host: 3.3 s reported, 13.9 s
+    // from start to exit; a level-1 fork then costs about 4x that
+    val est = scala.collection.mutable.Map.empty[(String, Int), Double]
+    observe(est, "e2e", 4, ForkTime(sec = 3.3, wallSec = 13.9))
+    assert(estimateWall(est, "e2e", 4) == 13.9)
+    assert(math.abs(estimateWall(est, "e2e", 1) - 55.6) < 1e-9)
+    // 100 s left: priced by the reported seconds (13.2 s at level 1) the
+    // gate would admit the fork; priced by the wall clock it refuses it
+    assert(fits(remainingSec = 100.0, estimate = 4 * 3.3, reserveSec = 60.0))
+    assert(!fits(remainingSec = 100.0, estimate = estimateWall(est, "e2e", 1), reserveSec = 60.0))
+    // a faster repeat lowers the estimate; a slower one leaves it
+    observe(est, "e2e", 4, ForkTime(sec = 3.1, wallSec = 12.0))
+    observe(est, "e2e", 4, ForkTime(sec = 2.0, wallSec = 20.0))
+    assert(estimateWall(est, "e2e", 4) == 12.0)
+  }
+
+  test("core levels default to the powers of two up to the session's cores") {
+    assert(coreLevelsFor(4) == Seq(1, 2, 4))
+    assert(coreLevelsFor(6) == Seq(1, 2, 4))
+    assert(coreLevelsFor(32) == Seq(1, 2, 4, 8, 16, 32))
+    assert(coreLevelsFor(1) == Seq(1))
   }
 }

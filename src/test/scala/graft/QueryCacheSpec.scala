@@ -39,6 +39,19 @@ class QueryCacheSpec extends AnyFunSuite {
     }
   }
 
+  test("sessionCached: a maker that reads another key of its own bin returns both values") {
+    // "Aa" and "BB" share a String hash, so the two keys share a
+    // ConcurrentHashMap bin at every table size; computeIfAbsent would throw
+    // "Recursive update" when A's maker caches B
+    val fresh = spark.newSession()
+    val (a, b) = ("trap|Aa", "trap|BB")
+    assert(a.hashCode == b.hashCode)
+    val got = Queries.sessionCached(fresh, a)(Queries.sessionCached(fresh, b)("b") + "a")
+    assert(got == "ba")
+    assert(Queries.sessionCached[String](fresh, a)(fail("A was not cached")) == "ba")
+    assert(Queries.sessionCached[String](fresh, b)(fail("B was not cached")) == "b")
+  }
+
   test("q20's tokens table is cached under the working directory") {
     val cwd = java.nio.file.Paths.get(System.getProperty("user.dir")).toAbsolutePath
     val path = java.nio.file.Paths.get(Queries.tokensOraclePath(2000))

@@ -8,6 +8,27 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** The data files of a store directory: every name without a `_` or `.` prefix. */
+  private def dataFiles(dir: String): Set[String] =
+    new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+
+  /** The store files the live view opens. */
+  private def opened(store: String): Set[String] =
+    IndexIngest.currentShards(spark, store).inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+
+  /** The live index's (fingerprint -> count) entries. */
+  private def counts(store: String): Map[Long, Long] = {
+    import spark.implicits._
+    graft.plans.BqfPipeline.enumerateIndex(IndexIngest.currentShards(spark, store)).as[(Long, Long)].collect().toMap
+  }
+
+  /** The multiset oracle. */
+  private def exact(fps: Seq[Long]): Map[Long, Long] =
+    fps.groupBy(identity).map { case (fp, occ) => fp -> occ.size.toLong }
+
+  private def copyDir(from: String, to: String): Unit =
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(from), new java.io.File(to))
+
   test("streaming second-occurrence filter matches batch HAVING count>=2") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -183,6 +204,8 @@ class StreamingSpec extends AnyFunSuite {
     // and the replay guard (max batch_id) are unchanged
     val liveBefore = IndexIngest.currentShards(spark, store)
       .as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toVector }.toMap
+    val pre = store + "-pre"
+    copyDir(store, pre)
     IndexIngest.compact(spark, store)
     val after = spark.read.parquet(store)
     assert(after.count() < before, "compaction did not shrink the store")
@@ -197,25 +220,26 @@ class StreamingSpec extends AnyFunSuite {
     // the routing sidecar survives the compaction rewrite
     assert(new java.io.File(store, "_graft_index.json").exists, "compact dropped the sidecar")
 
-    // crash-mid-swap recovery: compact's swap is rename-aside (store ->
-    // .compact-old, tmp -> store) — a crash between the two renames leaves
-    // the store path ABSENT with the complete original at .compact-old.
-    // Simulate exactly that state and assert the next compact heals it.
-    val storeP = new org.apache.hadoop.fs.Path(store)
-    val asideP = new org.apache.hadoop.fs.Path(store + ".compact-old")
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(storeP, asideP)
-    assert(!fs.exists(storeP))
-    IndexIngest.compact(spark, store)
-    assert(fs.exists(storeP) && !fs.exists(asideP), "mid-swap crash not healed")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store + ".compact-tmp")))
-    val liveHealed = IndexIngest.currentShards(spark, store)
-      .as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toVector }.toMap
-    assert(liveHealed == liveBefore, "live index changed across crash recovery")
+    // crash after compact's checkpoint commit, before its clean-up: the
+    // checkpoint and its files plus every superseded entry and file, put
+    // back from the pre-compaction copy. Readers see the post-compaction
+    // view, and the next ingest removes the old entries and files.
+    copyDir(pre, store)
+    val oldFiles = dataFiles(pre)
+    val checkpointFiles = graft.plans.CommitLog.read(spark, store).get.files
+    assert(dataFiles(store) == oldFiles ++ checkpointFiles)
+    assert(opened(store) == checkpointFiles, "readers opened a superseded file")
+    assert(counts(store) == want)
+    val extra = Vector.fill(500)(rnd.nextLong() & ((1L << 32) - 1))
+    IndexIngest.ingestBatch(extra.toDF("fp"), batchId = 1000L, params, nBuckets, store)
+    assert(dataFiles(store).intersect(oldFiles).isEmpty, "superseded files outlived the next ingest")
+    val log = graft.plans.CommitLog.read(spark, store).get
+    assert(log.entries.size == 2 && log.superseded.isEmpty, s"entries left: ${log.entries.map(_.fileName)}")
+    assert(counts(store) == exact(all ++ extra))
     assert(new java.io.File(store, "_graft_index.json").exists, "recovery dropped the sidecar")
   }
 
-  test("ingestBatch refuses mismatched routing params; aside-restore heals from any store access") {
+  test("ingestBatch refuses mismatched routing params; crash leftovers never enter the live view") {
     import spark.implicits._
     val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
@@ -239,28 +263,57 @@ class StreamingSpec extends AnyFunSuite {
     // matching params still ingest fine
     IndexIngest.ingestBatch(fps.take(50).toDF("fp"), batchId = 1L, params, nBuckets, store)
 
-    // crash-mid-swap state (store absent, complete copy at .compact-old):
-    // the FIRST access being currentShards — not compact — must still heal
-    // it; before the fix a fresh ingest would silently shadow the aside
-    // and strand the pre-compact data forever
-    val live = IndexIngest.currentShards(spark, store)
-      .as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toVector }.toMap
-    val storeP = new org.apache.hadoop.fs.Path(store)
-    val asideP = new org.apache.hadoop.fs.Path(store + ".compact-old")
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(storeP, asideP)
-    val healed = IndexIngest.currentShards(spark, store)
-      .as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toVector }.toMap
-    assert(fs.exists(storeP) && !fs.exists(asideP), "currentShards did not restore the aside")
-    assert(healed == live, "restored store diverged")
-    // and via ingestBatch as the first access
-    fs.rename(storeP, asideP)
-    IndexIngest.ingestBatch(fps.take(10).toDF("fp"), batchId = 2L, params, nBuckets, store)
-    assert(fs.exists(storeP) && !fs.exists(asideP), "ingestBatch did not restore the aside")
-    // batches 0 and 1 must still be present (nothing was stranded)
-    val ids = spark.read.parquet(store).select("batch_id").distinct()
-      .as[Long].collect().toSet
-    assert(ids == Set(0L, 1L, 2L), s"lost batches across recovery: $ids")
+    val (b0, b1, b2, b3) = (fps, fps.take(50), fps.take(10), fps.take(5))
+    def ingest(b: Seq[Long], id: Long, dir: String = store): Unit =
+      IndexIngest.ingestBatch(b.toDF("fp"), id, params, nBuckets, dir)
+
+    // a batch's files are in the store but its entry is not (a crash
+    // before the commit): readers see exactly the pre-batch view, the same
+    // id commits once, and the next compact deletes the orphan files
+    val committed = dataFiles(store)
+    ingest(b2, 2L)
+    val orphans = dataFiles(store) -- committed
+    assert(orphans.nonEmpty && new java.io.File(store, "_graft_log/2.json").delete())
+    assert(counts(store) == exact(b0 ++ b1) && opened(store).intersect(orphans).isEmpty)
+    ingest(b2, 2L)
+    ingest(b2, 2L) // a replay: no job, no write
+    assert(counts(store) == exact(b0 ++ b1 ++ b2))
+
+    // compact's files are in the store but its checkpoint is not: the
+    // files of a compacted copy, without its log. Readers see the
+    // pre-compact view.
+    copyDir(store, s"$tmp/compacted")
+    IndexIngest.compact(spark, s"$tmp/compacted")
+    val strays = dataFiles(s"$tmp/compacted")
+    strays.foreach(n => java.nio.file.Files.copy(java.nio.file.Paths.get(tmp, "compacted", n),
+      java.nio.file.Paths.get(store, n)))
+    assert(counts(store) == exact(b0 ++ b1 ++ b2) && opened(store).intersect(strays).isEmpty)
+    IndexIngest.compact(spark, store)
+    assert(dataFiles(store).intersect(orphans ++ strays).isEmpty, "compact kept unlogged files")
+    assert(dataFiles(store) == opened(store))
+    assert(counts(store) == exact(b0 ++ b1 ++ b2))
+
+    // a second commit of the same id (a rival writer's entry for batch 3,
+    // built in a copy) throws and leaves the first commit's view
+    copyDir(store, s"$tmp/rival")
+    ingest(fps.drop(100), 3L, s"$tmp/rival")
+    ingest(b3, 3L)
+    val rival = graft.plans.CommitLog.read(spark, s"$tmp/rival").get.pending.last
+    rival.files.foreach(f => java.nio.file.Files.copy(java.nio.file.Paths.get(tmp, "rival", f.name),
+      java.nio.file.Paths.get(store, f.name)))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](graft.plans.CommitLog.commit(spark, store, rival))
+    assert(counts(store) == exact(b0 ++ b1 ++ b2 ++ b3))
+
+    // an id below the newest committed one that the log does not hold
+    // would hide under the live view (each bucket's highest batch_id)
+    ingest(b3, 9L)
+    val late = intercept[IllegalArgumentException](ingest(b3, 7L))
+    assert(late.getMessage.contains("must increase"), late.getMessage)
+    assert(counts(store) == exact(b0 ++ b1 ++ b2 ++ b3 ++ b3))
+    // a malformed entry is refused, not skipped
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(store, "_graft_log", "10.json"), """{"batch_id":10}""")
+    val bad = intercept[IllegalArgumentException](IndexIngest.currentShards(spark, store))
+    assert(bad.getMessage.contains("10.json") && bad.getMessage.contains("files"), bad.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
@@ -327,6 +380,63 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     val want = all.groupBy(identity).map { case (fp, occ) => fp -> occ.size.toLong }
     assert(got == want, s"pruned ingest diverged: ${got.size} entries vs ${want.size}")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  /** numFiles of each parquet scan in the write command `f` runs. */
+  private def writeScans(f: => Unit): Seq[Long] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.put(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      // the listener bus is asynchronous: wait for the write's plan
+      var plan: SparkPlan = null
+      while (plan == null || Walk.find(plan)(_.isInstanceOf[DataWritingCommandExec]).isEmpty) {
+        plan = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(plan != null, "no write command reached the listener")
+      }
+      Walk.collect(plan) { case s: FileSourceScanExec => s.metrics("numFiles").value }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("exact pruning: the live-side scan opens the log's live files of the touched buckets, and no other") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val nBuckets = 8
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-prune").toString
+    val store = s"$tmp/idx"
+    // 2 of 8 buckets per batch. Before the compact: fresh pairs (no live
+    // file), then pairs whose live versions sit in two files. After it
+    // (4 files of 2 buckets each): a pair inside one file, one across two.
+    val pairs = Seq(Seq(0, 1), Seq(2, 3), Seq(4, 5), Seq(6, 7), Seq(1, 2), Seq(5, 6), Seq(0, 1), Seq(3, 4))
+    var all = Vector.empty[Long]
+    pairs.zipWithIndex.foreach { case (pair, i) =>
+      if (i == 6) IndexIngest.compact(spark, store)
+      val fps = pair.flatMap(b => (0 until 300).map(j =>
+        (b.toLong << 29) | (graft.core.Fingerprint.splitmix64(i * 1000L + j % 250) & ((1L << 29) - 1))))
+      val liveFiles = graft.plans.CommitLog.read(spark, store).toSeq
+        .flatMap(_.live.collect { case (b, (_, f)) if pair.contains(b.toInt) => f.name }).toSet
+      val scans = writeScans(IndexIngest.ingestBatch(fps.toDF("fp"), i.toLong, params, nBuckets, store))
+      assert(scans.sum == liveFiles.size && scans.size == liveFiles.size.sign,
+        s"batch $i over buckets $pair scanned $scans files; the log names ${liveFiles.size}")
+      all ++= fps
+      val log = graft.plans.CommitLog.read(spark, store).get
+      assert(opened(store) == log.live.values.map(_._2.name).toSet, s"currentShards after batch $i")
+    }
+    assert(counts(store) == exact(all))
+    // each logged file holds exactly the shard rows its entry names
+    for (f <- graft.plans.CommitLog.read(spark, store).get.live.values.map(_._2).toSeq.distinct) {
+      val rows = spark.read.parquet(s"$store/${f.name}").select("bucket", "batch_id").as[(Long, Long)].collect()
+      assert(rows.toSet == f.shards.map(s => (s.bucket, s.batchId)).toSet && rows.length == f.shards.size, f.name)
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
