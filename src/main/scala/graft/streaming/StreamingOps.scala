@@ -209,7 +209,8 @@ object IndexIngest {
     val byPart = shards.groupBy(s => graft.plans.BqfPipeline.rangeTask(s.bucket, span, p))
     val files = fs.listStatus(staging).toSeq.filter(_.getPath.getName.startsWith("part-")).map { st =>
       val name = st.getPath.getName
-      fs.rename(st.getPath, new Path(storeDir, name))
+      if (!fs.rename(st.getPath, new Path(storeDir, name)))
+        throw new java.io.IOException(s"could not move staged $name into $storeDir")
       LoggedFile(name, st.getLen, byPart.getOrElse(name.drop(5).takeWhile(_.isDigit).toInt, Nil).toSeq.sortBy(_.bucket))
     }
     fs.delete(staging, true)
