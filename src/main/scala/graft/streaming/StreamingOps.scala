@@ -78,11 +78,12 @@ object StreamingOps {
     * index — the unbounded twin of [[graft.plans.BqfPipeline.buildIndexSorted]]:
     * each micro-batch chunks its fingerprints map-side by bucket
     * (fingerprint high bits, the same routing the batch index and its point
-    * queries use), one exchange brings every touched bucket's chunks
-    * together with its live shard, and each reduce task builds the bucket's
-    * batch partial, merges it into the live shard and appends the new shard
-    * version tagged with the batch id. The batch's files count once its
-    * entry in the store's commit log (`_graft_log/<batchId>.json`) commits.
+    * queries use) and sends contiguous bucket ranges to merge tasks; each
+    * task reads its touched buckets' live shard versions from the files the
+    * store's commit log names, merges the batch into them and writes the new
+    * versions, tagged with the batch id, to one file of its own. The batch's
+    * files count once its entry in the commit log
+    * (`_graft_log/<batchId>.json`) commits.
     *
     * Exactly-once: the streaming checkpoint replays an uncommitted batch
     * with the SAME batchId, and [[IndexIngest.ingestBatch]] skips a batchId
@@ -124,25 +125,26 @@ object StreamingOps {
   }
 }
 
+
 /** Store mechanics of [[StreamingOps.indexIngest]]: a flat parquet directory
   * of shard rows (bucket, sketch, batch_id) and its commit log
   * ([[graft.plans.CommitLog]], `_graft_log/`). Each batch adds files that
   * hold its touched buckets' new shard versions and commits one log entry
   * naming them. Readers fold the log on the driver into bucket -> (live
-  * batch_id, file) and scan exactly those files, so no access lists the
-  * store or runs a metadata job, and a file no entry names (a crashed
-  * attempt's leftover) is never read. The max-batch_id row per bucket of
-  * the directory is the live one. Also usable standalone for incremental
-  * BATCH ingest (call [[IndexIngest.ingestBatch]] with your own increasing
-  * batch ids).
+  * batch_id, file) and read exactly those files, so no access lists the
+  * store or runs a metadata job, and a file no entry names (a crashed or
+  * refused attempt's leftover) is never read. The max-batch_id row per
+  * bucket of the directory is the live one. Writes run one job each: their
+  * tasks read the live versions they need and write their own files
+  * ([[ShardFiles]]), and the driver commits what the tasks report. Also
+  * usable standalone for incremental BATCH ingest (call
+  * [[IndexIngest.ingestBatch]] with your own increasing batch ids).
   */
 object IndexIngest {
-  import graft.plans.{CommitLog, IndexSidecar, LogEntry, LogState, LoggedFile, LoggedShard}
+  import graft.plans.{BqfPipeline, CommitLog, IndexSidecar, LogEntry, LogState, LoggedFile, LoggedShard}
   import org.apache.hadoop.fs.Path
+  import org.apache.parquet.hadoop.metadata.CompressionCodecName
   import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-
-  /** Each write attempt's files are staged here, then moved into the store. */
-  private val StagingDir = "_graft_staging"
 
   /** Every store read uses this fixed schema: no read pays a schema
     * inference job.
@@ -194,31 +196,72 @@ object IndexIngest {
     liveRows(spark, storeDir, log(spark, storeDir).fold(Map.empty[Long, (LoggedShard, LoggedFile)])(_.live))
       .select(col("bucket"), col("sketch"))
 
-  /** Write `routed` (rows bucket, sketch, batch_id, split into `p` tasks by
-    * `rangeRoute(bucket, span, p)`) to a fresh staging directory, move its
-    * part files into the store and return them with the `shards` each
-    * holds. repartitionById keeps exactly `p` partitions (AQE does not
-    * coalesce them), and each task's part file carries its partition
-    * number, so the routing names each file's buckets without reading it.
+  /** What a write task needs of the store: its directory, the Hadoop conf
+    * (broadcast once per job), the session's parquet codec, and the folded
+    * log as bucket -> (live batch_id, file name).
     */
-  private def writeShards(spark: SparkSession, storeDir: String, routed: DataFrame, span: Int, p: Int,
-                          shards: Iterable[LoggedShard]): Seq[LoggedFile] = {
-    val staging = new Path(new Path(storeDir, StagingDir), java.util.UUID.randomUUID.toString)
-    routed.write.option("maxRecordsPerFile", 0L).parquet(staging.toString)
-    val fs = fileSystem(spark, storeDir)
-    val byPart = shards.groupBy(s => graft.plans.BqfPipeline.rangeTask(s.bucket, span, p))
-    val files = fs.listStatus(staging).toSeq.filter(_.getPath.getName.startsWith("part-")).map { st =>
-      val name = st.getPath.getName
-      if (!fs.rename(st.getPath, new Path(storeDir, name)))
-        throw new java.io.IOException(s"could not move staged $name into $storeDir")
-      LoggedFile(name, st.getLen, byPart.getOrElse(name.drop(5).takeWhile(_.isDigit).toInt, Nil).toSeq.sortBy(_.bucket))
+  private final case class TaskStore(dir: String,
+                                     conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
+                                     codec: CompressionCodecName, live: Map[Long, (Long, String)]) {
+    /** Write `shards` to a new data file of write task `task` for
+      * `batchId`, named apart from every other attempt's by a UUID; its
+      * name and length in bytes.
+      */
+    def write(batchId: Long, task: Int, shards: Iterator[ShardFiles.Shard]): (String, Long) = {
+      val name = s"part-$batchId-$task-${java.util.UUID.randomUUID}${codec.getExtension}.parquet"
+      (name, ShardFiles.write(new Path(dir, name), shards, conf.value.value, codec))
     }
-    fs.delete(staging, true)
-    if (files.map(_.shards.size).sum != shards.size)
-      throw new IllegalStateException(s"$storeDir: ${files.size} written files do not hold the ${shards.size} " +
-        s"routed shards once each: ${files.map(_.name).mkString(", ")}")
-    files
+
+    /** The live sketch of each of `buckets` that has one, read from the files
+      * the log names for them and no other. A named file that is missing or
+      * unreadable, or that lacks a logged row or holds it twice, fails the
+      * task with an error naming the file.
+      */
+    def readLive(buckets: Iterable[Long]): scala.collection.mutable.LongMap[Array[Byte]] = {
+      val out = scala.collection.mutable.LongMap.empty[Array[Byte]]
+      buckets.flatMap(b => live.get(b).map(b -> _)).groupBy(_._2._2).foreach { case (name, wanted) =>
+        val ids = wanted.map { case (b, (id, _)) => b -> id }.toMap
+        val path = new Path(dir, name)
+        val rows =
+          try ShardFiles.read(path, conf.value.value)((b, id) => ids.get(b).contains(id))
+          catch {
+            case e: Exception =>
+              throw new java.io.IOException(s"live file $path, named by ${CommitLog.DirName}, cannot be read: $e", e)
+          }
+        rows.foreach { r =>
+          if (out.contains(r.bucket))
+            throw new IllegalStateException(s"live file $path holds bucket ${r.bucket}'s live row more than once")
+          out(r.bucket) = r.sketch
+        }
+        val lacking = ids.keys.filterNot(out.contains)
+        if (lacking.nonEmpty)
+          throw new IllegalStateException(s"live file $path lacks the logged rows of buckets ${lacking.toSeq.sorted.mkString(", ")}")
+      }
+      out
+    }
   }
+
+  private object TaskStore {
+    def apply(spark: SparkSession, dir: String, state: LogState): TaskStore = {
+      // no vectored reads: their I/O completes on other threads, out of
+      // sight of the thread statistics that feed the task's input metrics
+      val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+      conf.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
+      TaskStore(dir, spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(conf)),
+        CompressionCodecName.valueOf(org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
+          .getParquetCompressionCodecName(
+            spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase(java.util.Locale.ROOT))),
+        state.live.map { case (bucket, (shard, file)) => bucket -> (shard.batchId, file.name) })
+    }
+  }
+
+  /** What one merge task of [[ingestBatch]] reports: the file it wrote
+    * (null when it wrote none), the file's bytes, per shard its bucket and
+    * the batch fingerprint rows merged into it, and the fingerprints it
+    * received with no bucket (which no shard holds).
+    */
+  private[streaming] final case class Written(file: String, bytes: Long, buckets: Array[Long], rows: Array[Long],
+                                              strays: Long)
 
   /** Delete what the newest checkpoint superseded: the data files only
     * earlier entries name, then those entries.
@@ -230,17 +273,25 @@ object IndexIngest {
     CommitLog.delete(spark, storeDir, state.superseded)
   }
 
-  /** Rewrite the live shard versions into bucket-clustered files and commit
+  /** Rewrite the live shard versions into bucket-sorted files and commit
     * them as one checkpoint entry that supersedes every earlier entry; then
     * delete those entries, the files they named and every data file no
-    * entry names (crashed attempts' leftovers) before returning. batch_id
-    * is preserved, so the directory's max-batch_id row per bucket stays the
-    * live one and the replay guard still knows every committed id. A crash
-    * at any point leaves the pre- or the post-compaction view: the new
-    * files count only once the checkpoint commits, and the old ones go only
-    * after it. Maintenance op: the streaming query must be stopped while it
-    * runs. Throws IllegalArgumentException for a directory with data but no
-    * commit log.
+    * entry names (crashed or refused attempts' leftovers) before returning.
+    *
+    * One stage: the sorted build's range rule over the store's bucket span
+    * gives min(span, cores) tasks contiguous bucket ranges, and each task
+    * reads its range's live versions from the files the log names (no
+    * exchange: live shards total GBs at scale, so neither a driver collect
+    * nor a shuffle moves them) and writes them to one file sorted by
+    * bucket. batch_id and lineage are preserved, so the directory's
+    * max-batch_id row per bucket stays the live one and the replay guard
+    * still knows every committed id. A crash at any point leaves the pre-
+    * or the post-compaction view: the new files count only once the
+    * checkpoint commits, and the old ones go only after it. A live file
+    * that is missing or unreadable fails the compaction, naming it, before
+    * anything commits. Maintenance op: the streaming query must be stopped
+    * while it runs. Throws IllegalArgumentException for a directory with
+    * data but no commit log.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val state = log(spark, storeDir).getOrElse(return)
@@ -248,20 +299,23 @@ object IndexIngest {
       if (state.pending.isEmpty) state // nothing above the newest checkpoint: only clean up
       else {
         val live = state.live
-        // distributed end to end: "one row per bucket" bounds the ROW
-        // count, not the bytes — live shards total GBs at scale, so
-        // funnelling them through a driver collect() is the one thing this
-        // maintenance op must not do. Bucket-clustered output: the sorted
-        // build's range rule over the store's bucket span sends contiguous
-        // bucket ranges to min(span, cores) tasks, each writing one file
-        // sorted by bucket.
         val span = Integer.highestOneBit(2 * live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
         val p = math.min(span, spark.sparkContext.defaultParallelism)
+        val ranges = live.keys.toSeq.groupBy(BqfPipeline.rangeTask(_, span, p)).toSeq.sortBy(_._1)
         val files =
-          if (live.isEmpty) Nil
-          else writeShards(spark, storeDir, liveRows(spark, storeDir, live)
-            .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), span, p))
-            .sortWithinPartitions("bucket"), span, p, live.values.map(_._1))
+          if (ranges.isEmpty) Nil
+          else {
+            val store = TaskStore(spark, storeDir, state)
+            val lastId = state.lastId
+            try spark.sparkContext.parallelize(ranges, ranges.size).map { case (task, buckets) =>
+              val sorted = buckets.sorted
+              val sketches = store.readLive(sorted)
+              val (name, bytes) =
+                store.write(lastId, task, sorted.iterator.map(b => ShardFiles.Shard(b, sketches(b), store.live(b)._1)))
+              (name, bytes, sorted)
+            }.collect().toSeq.map { case (name, bytes, buckets) => LoggedFile(name, bytes, buckets.map(live(_)._1)) }
+            finally store.conf.destroy()
+          }
         val checkpoint = LogEntry(state.lastId, checkpoint = true, files)
         CommitLog.commit(spark, storeDir, checkpoint)
         LogState(state.entries :+ checkpoint)
@@ -270,7 +324,6 @@ object IndexIngest {
     val fs = fileSystem(spark, storeDir)
     fs.listStatus(new Path(storeDir)).collect { case f if f.isFile => f.getPath.getName }
       .filterNot(n => hidden(n) || after.files(n)).foreach(n => fs.delete(new Path(storeDir, n), false))
-    fs.delete(new Path(storeDir, StagingDir), true)
   }
 
   /** Merge one batch of fingerprints (column `fp`) into the store. Safe to
@@ -278,15 +331,24 @@ object IndexIngest {
     * and no write; a lower one that it does not hold is refused, because
     * the live view is each bucket's highest batch_id.
     *
-    * Two jobs around one exchange. The map side chunks the batch by bucket
-    * with [[graft.plans.BqfPipeline.chunkByBucket]] (no exchange) and
-    * caches the chunks, whose buckets and sizes are collected as the
-    * touched set. The chunks and the touched buckets' live shard versions
-    * then meet in one shuffle by bucket range, and each reduce task builds
-    * every bucket's batch partial and merges it with that bucket's latest
-    * version ([[mergeTouched]]). The new files are staged, moved into the
-    * store and committed as the batch's log entry, with each new shard's
-    * lineage: fingerprint rows consumed and merge depth.
+    * One job of two stages. The map side chunks the batch by bucket
+    * ([[graft.plans.BqfPipeline.fpChunks]]) and sends contiguous bucket
+    * ranges to min(nBuckets, cores) merge tasks, the range rule of the
+    * sorted build and of queryIndex. Each merge task reads the live
+    * versions of exactly the buckets it received, from the files the
+    * folded log names (touched-bucket pruning: per-batch cost is
+    * O(batch + touched shards), independent of store width), builds each
+    * bucket's batch partial, merges it into the live version and writes
+    * the new versions to one file of its own, straight into the store. The
+    * driver then commits the batch's log entry from the tasks' reports,
+    * with each new shard's lineage: fingerprint rows consumed and merge
+    * depth.
+    *
+    * A batch with fingerprints above hashBits (no bucket) is refused with
+    * an IllegalArgumentException and commits nothing; the files its tasks
+    * wrote are no entry's, so no reader opens them and the next [[compact]]
+    * deletes them. So does a live file that is missing or unreadable,
+    * failing the job with an error that names it.
     */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   params: graft.operators.BqfParams, nBuckets: Int,
@@ -313,44 +375,25 @@ object IndexIngest {
     require(batchId > state.lastId,
       s"ingestBatch: batch $batchId arrives after batch ${state.lastId} of $storeDir; batch ids must increase")
     if (state.superseded.nonEmpty) sweep(spark, storeDir, state) // a compaction crashed before its clean-up
-    // map side, cached so the touched-bucket collect and the merge job read
-    // the batch once
-    val chunks = graft.plans.BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // TOUCHED-BUCKET pruning: only the touched buckets' live shards take
-      // part in the merge, and the live-side scan opens only the files the
-      // log names for them: per-batch cost is O(batch + touched shards),
-      // independent of store width. The collect is bounded by tasks x
-      // nBuckets rows.
-      val touched = chunks.select(col("bucket"), size(col("fps")).cast("long")).as[(Long, Long)].collect()
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      require(!touched.contains(-1L),
-        s"ingestBatch: fingerprints above hashBits=${params.hashBits} have no bucket of $storeDir")
-      val live = state.live.filter { case (bucket, _) => touched.contains(bucket) }
-      val shards = touched.map { case (bucket, n) =>
-        val prev = live.get(bucket).map(_._1)
+    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
+    val store = TaskStore(spark, storeDir, state)
+    val written =
+      try BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
+        .repartitionById(p, BqfPipeline.rangeRoute(col("bucket"), nBuckets, p))
+        .as[(Long, Array[Long])]
+        .mapPartitions(mergeRange(store, batchId, params, _))
+        .collect()
+      finally store.conf.destroy()
+    val strays = written.map(_.strays).sum
+    require(strays == 0,
+      s"ingestBatch: $strays fingerprints above hashBits=${params.hashBits} have no bucket of $storeDir")
+    val files = written.toSeq.map { w =>
+      LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
+        val prev = state.live.get(bucket).map(_._1)
         LoggedShard(bucket, batchId, prev.fold(0L)(_.rowsConsumed) + n, prev.fold(0)(_.mergeDepth) + 1)
-      }
-      val batchRows = chunks.select(col("bucket"), col("fps"), lit(null).cast("binary").as("sketch"))
-      val rows =
-        if (live.isEmpty) batchRows
-        else batchRows.union(liveRows(spark, storeDir, live)
-          .select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
-      // one merge task per ~64 MiB of input (AQE's default advisory
-      // partition size), at most one per touched bucket or core
-      val inputBytes = 8 * touched.values.sum + live.values.map { case (_, f) => f.bytes / f.shards.size }.sum
-      val p = Seq(touched.size, spark.sparkContext.defaultParallelism, (inputBytes >> 26).toInt + 1).min
-      val files =
-        if (touched.isEmpty) Nil
-        else writeShards(spark, storeDir, rows
-          .repartitionById(p, graft.plans.BqfPipeline.rangeRoute(col("bucket"), nBuckets, p))
-          .as[(Long, Array[Long], Array[Byte])]
-          .mapPartitions(mergeTouched(_, params))
-          .toDF("bucket", "sketch")
-          .withColumn("batch_id", lit(batchId)), nBuckets, p, shards)
-      CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, files))
-    } finally chunks.unpersist(blocking = false)
+      }.toSeq)
+    }
+    CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, files))
     // same routing sidecar the CLI's build-index writes: it makes the
     // ingest store directly queryable by `graft.Cli query-index` (which
     // otherwise refuses to guess nBuckets) and guards against a future
@@ -358,24 +401,27 @@ object IndexIngest {
     if (stored.isEmpty) IndexSidecar.write(spark, storeDir, sidecar)
   }
 
-  /** One reduce task of [[ingestBatch]]. Its rows are batch chunks
-    * (bucket, fps, null) and the live shard versions (bucket, null, sketch)
-    * of the same buckets, at most one per bucket ([[liveRows]] is exact; a
-    * second one means a corrupt store and fails the task). Every bucket
-    * with batch fingerprints gets its new shard version; the few buffered
-    * chunk rows are sorted by bucket for the streaming gather.
+  /** One merge task of [[ingestBatch]]: the batch's chunk rows of one
+    * bucket range in, one written file's report out (none for an empty
+    * range). The buffered chunks are sorted by bucket for the streaming
+    * gather, each touched bucket's live version is read from the log's
+    * files, and every bucket with batch fingerprints gets its new shard
+    * version. Fingerprints with no bucket (chunk bucket -1) are counted,
+    * not written: the driver refuses the batch.
     */
-  private def mergeTouched(rows: Iterator[(Long, Array[Long], Array[Byte])],
-                           params: graft.operators.BqfParams): Iterator[(Long, Array[Byte])] = {
-    val latest = scala.collection.mutable.LongMap.empty[Array[Byte]]
-    val chunks = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Array[Long])]
-    rows.foreach { case (bucket, fps, sketch) =>
-      if (fps != null) chunks += ((bucket, fps, null))
-      else if (latest.contains(bucket))
-        throw new IllegalStateException(s"ingestBatch: bucket $bucket has more than one live shard row")
-      else latest(bucket) = sketch
-    }
-    graft.plans.BqfPipeline.gatherChunks(chunks.sortInPlaceBy(_._1).iterator).map { case (bucket, fps, _) =>
+  private def mergeRange(store: TaskStore, batchId: Long, params: graft.operators.BqfParams,
+                         rows: Iterator[(Long, Array[Long])]): Iterator[Written] = {
+    val (strays, chunks) = rows.map { case (bucket, fps) => (bucket, fps, null: Array[Long]) }.toVector
+      .sortBy(_._1).partition(_._1 < 0)
+    val stray = strays.map(_._2.length.toLong).sum
+    if (chunks.isEmpty)
+      return if (stray == 0) Iterator.empty else Iterator.single(Written(null, 0L, Array.empty, Array.empty, stray))
+    val latest = store.readLive(chunks.map(_._1).distinct)
+    val buckets = Array.newBuilder[Long]
+    val counts = Array.newBuilder[Long]
+    val shards = BqfPipeline.gatherChunks(chunks.iterator).map { case (bucket, fps, _) =>
+      buckets += bucket
+      counts += fps.length
       val partial = batchPartial(fps, params)
       val sketch = latest.get(bucket) match {
         case None => partial
@@ -387,8 +433,10 @@ object IndexIngest {
           if (live.distinctCount >= partial.distinctCount) live.mergeInPlace(partial)
           else partial.mergeInPlace(live)
       }
-      (bucket, sketch.serialize())
+      ShardFiles.Shard(bucket, sketch.serialize(), batchId)
     }
+    val (name, bytes) = store.write(batchId, org.apache.spark.TaskContext.getPartitionId(), shards)
+    Iterator.single(Written(name, bytes, buckets.result(), counts.result(), stray))
   }
 
   /** One bucket's batch partial: each distinct fingerprint stores the

@@ -384,31 +384,50 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
-  /** numFiles of each parquet scan in the write command `f` runs. */
-  private def writeScans(f: => Unit): Seq[Long] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+  /** Run `f`; the executed plan of every query it ran. The listener bus is
+    * asynchronous, so a marker query runs after `f`: its plan is delivered
+    * after every plan of `f`.
+    */
+  private def plansOf(f: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "graft_plan_marker"
+    val runs = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.put(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = runs.put(qe)
     }
     spark.listenerManager.register(listener)
     try {
       f
-      // the listener bus is asynchronous: wait for the write's plan
-      var plan: SparkPlan = null
-      while (plan == null || Walk.find(plan)(_.isInstanceOf[DataWritingCommandExec]).isEmpty) {
-        plan = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(plan != null, "no write command reached the listener")
+      spark.range(1).toDF(marker).collect()
+      val plans = Seq.newBuilder[org.apache.spark.sql.execution.SparkPlan]
+      var qe = runs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      while (qe != null && !qe.analyzed.output.exists(_.name == marker)) {
+        plans += qe.executedPlan
+        qe = runs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       }
-      Walk.collect(plan) { case s: FileSourceScanExec => s.metrics("numFiles").value }
+      assert(qe != null, "the marker query never reached the listener")
+      plans.result()
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Run `f`; the names of the data files of `store` opened meanwhile, as the
+    * file system saw them, with the plans of the queries `f` ran.
+    */
+  private def dataOpens(store: String)(f: => Unit): (Set[String], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val (plans, paths) = RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration)(plansOf(f))
+    (paths.map(new java.io.File(_)).filter(_.getParent == store).map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet, plans)
+  }
+
   test("exact pruning: the live-side scan opens the log's live files of the touched buckets, and no other") {
+    // The merge tasks read the live versions themselves, so the evidence is
+    // taken at the file system: the store data files a batch opens are
+    // exactly the files the log names for its touched buckets' live
+    // versions, and the batch runs one query, which scans no store file.
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import spark.implicits._
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
     val nBuckets = 8
@@ -425,9 +444,12 @@ class StreamingSpec extends AnyFunSuite {
         (b.toLong << 29) | (graft.core.Fingerprint.splitmix64(i * 1000L + j % 250) & ((1L << 29) - 1))))
       val liveFiles = graft.plans.CommitLog.read(spark, store).toSeq
         .flatMap(_.live.collect { case (b, (_, f)) if pair.contains(b.toInt) => f.name }).toSet
-      val scans = writeScans(IndexIngest.ingestBatch(fps.toDF("fp"), i.toLong, params, nBuckets, store))
-      assert(scans.sum == liveFiles.size && scans.size == liveFiles.size.sign,
-        s"batch $i over buckets $pair scanned $scans files; the log names ${liveFiles.size}")
+      val (opens, plans) = dataOpens(store)(IndexIngest.ingestBatch(fps.toDF("fp"), i.toLong, params, nBuckets, store))
+      assert(opens == liveFiles, s"batch $i over buckets $pair opened $opens; the log names $liveFiles")
+      assert(plans.size == 1, s"batch $i ran ${plans.size} queries")
+      val scans = plans.flatMap(Walk.collect(_) { case s: FileSourceScanExec => s.relation.location.rootPaths })
+        .flatten.filter(_.toUri.getPath.startsWith(store))
+      assert(scans.isEmpty, s"batch $i scanned the store: $scans")
       all ++= fps
       val log = graft.plans.CommitLog.read(spark, store).get
       assert(opened(store) == log.live.values.map(_._2.name).toSet, s"currentShards after batch $i")
@@ -438,6 +460,122 @@ class StreamingSpec extends AnyFunSuite {
       val rows = spark.read.parquet(s"$store/${f.name}").select("bucket", "batch_id").as[(Long, Long)].collect()
       assert(rows.toSet == f.shards.map(s => (s.bucket, s.batchId)).toSet && rows.length == f.shards.size, f.name)
     }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a refused batch leaves no trace: no entry, the pre-batch view, and compact deletes its files") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-refused").toString
+    val store = s"$tmp/idx"
+    val rnd = new scala.util.Random(61)
+    val Seq(b0, b1, b2) = Seq.fill(3)(Vector.fill(2000)(rnd.nextLong() & 0xffffffffL))
+    IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
+    IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, 8, store)
+    val entries = graft.plans.CommitLog.read(spark, store).get.entries.toSet
+    val before = dataFiles(store)
+    // the stray sits among fingerprints of every bucket, so every merge
+    // task writes its file before the driver sees the stray
+    val e = intercept[IllegalArgumentException](
+      IndexIngest.ingestBatch((b2 :+ (1L << 32)).toDF("fp"), 2L, params, 8, store))
+    assert(e.getMessage.contains("hashBits"), e.getMessage)
+    assert(graft.plans.CommitLog.read(spark, store).get.entries.toSet == entries, "the refused batch committed")
+    val wrote = dataFiles(store) -- before
+    assert(wrote.nonEmpty, "the refused batch's tasks wrote no file")
+    assert(counts(store) == exact(b0 ++ b1) && opened(store).intersect(wrote).isEmpty)
+    IndexIngest.compact(spark, store)
+    assert(dataFiles(store).intersect(wrote).isEmpty, s"compact kept ${dataFiles(store).intersect(wrote)}")
+    assert(dataFiles(store) == opened(store) && counts(store) == exact(b0 ++ b1))
+    // the same id commits once the batch holds no stray
+    IndexIngest.ingestBatch(b2.toDF("fp"), 2L, params, 8, store)
+    assert(counts(store) == exact(b0 ++ b1 ++ b2))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a missing or truncated live file fails ingestBatch and compact, naming the file, and commits nothing") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bad-live").toString
+    val rnd = new scala.util.Random(67)
+    val Seq(b0, b1, b2) = Seq.fill(3)(Vector.fill(1000)(rnd.nextLong() & 0xffffffffL))
+    def messages(t: Throwable): List[String] = if (t == null) Nil else String.valueOf(t.getMessage) :: messages(t.getCause)
+    val damages = Seq[(String, java.io.File => Unit)](
+      "missing" -> (f => assert(f.delete())),
+      // without its checksum file too, so that only the parquet reader can
+      // tell (as on a store with no client-side checksums)
+      "truncated" -> { f =>
+        val raf = new java.io.RandomAccessFile(f, "rw")
+        try raf.setLength(f.length / 2) finally raf.close()
+        new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+      })
+    for ((what, damage) <- damages; (op, run) <- Seq[(String, String => Unit)](
+      "ingestBatch" -> (s => IndexIngest.ingestBatch(b2.toDF("fp"), 2L, params, 8, s)),
+      "compact" -> (s => IndexIngest.compact(spark, s)))) {
+      val store = s"$tmp/$what-$op"
+      IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
+      IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, 8, store)
+      val log = graft.plans.CommitLog.read(spark, store).get
+      val victim = log.live.values.map(_._2.name).toSeq.sorted.head
+      damage(new java.io.File(store, victim))
+      val e = intercept[Exception](run(store))
+      assert(messages(e).exists(_.contains(victim)), s"$what live file, $op: ${messages(e).mkString(" <- ")}")
+      assert(graft.plans.CommitLog.read(spark, store).get.entries.toSet == log.entries.toSet, s"$what live file, $op committed")
+    }
+    // the failed jobs' other tasks may still be writing their files
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
+  test("a store written by Spark's parquet writer ingests, compacts and answers exactly") {
+    // every store written before ingest wrote its own files holds Spark's
+    // files, whose columns are optional; the task-side reader takes them,
+    // alone and beside the required-column files written since
+    import org.apache.parquet.schema.Type.Repetition
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val nBuckets = 8
+    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-old-store").toString
+    val store = s"$tmp/idx"
+    val rnd = new scala.util.Random(71)
+    val b0 = Vector.fill(3000)(rnd.nextInt(2000).toLong).map(graft.core.Fingerprint.splitmix64(_) & 0xffffffffL)
+    // batch 1 touches half the buckets, so its files and Spark's are live together
+    val Seq(b1, b2) = Seq.fill(2)(Vector.fill(1500)(rnd.nextInt(2000).toLong)
+      .map(graft.core.Fingerprint.splitmix64(_) & 0xffffffffL).filter(fp => (fp >>> shift) < nBuckets / 2))
+    graft.plans.BqfPipeline.buildIndexSorted(Seq(b0.toArray).toDF("fps"), col("fps"), params, nBuckets)
+      .withColumn("batch_id", lit(0L)).repartition(2).write.parquet(store)
+    def repetition(name: String): Repetition = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(store, name), spark.sparkContext.hadoopConfiguration))
+      try {
+        val schema = r.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("sketch")).getRepetition
+      } finally r.close()
+    }
+    val sparkFiles = dataFiles(store).toSeq.sorted
+    assert(sparkFiles.nonEmpty && sparkFiles.forall(repetition(_) == Repetition.OPTIONAL))
+    val logged = sparkFiles.map { name =>
+      val buckets = spark.read.parquet(s"$store/$name").select("bucket").as[Long].collect().sorted
+      graft.plans.LoggedFile(name, new java.io.File(store, name).length, buckets.toSeq.map(b =>
+        graft.plans.LoggedShard(b, 0L, b0.count(fp => (fp >>> shift) == b).toLong, 1)))
+    }
+    graft.plans.CommitLog.create(spark, store)
+    graft.plans.CommitLog.commit(spark, store, graft.plans.LogEntry(0L, checkpoint = false, logged))
+    assert(counts(store) == exact(b0))
+    IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, nBuckets, store)
+    val written = dataFiles(store) -- sparkFiles
+    assert(written.nonEmpty && written.forall(repetition(_) == Repetition.REQUIRED))
+    assert(opened(store).intersect(sparkFiles.toSet).nonEmpty, "no file of Spark's writer stayed live")
+    assert(counts(store) == exact(b0 ++ b1))
+    IndexIngest.compact(spark, store)
+    assert(dataFiles(store).intersect(sparkFiles.toSet).isEmpty && counts(store) == exact(b0 ++ b1))
+    IndexIngest.ingestBatch(b2.toDF("fp"), 2L, params, nBuckets, store)
+    val all = b0 ++ b1 ++ b2
+    val answered = graft.plans.BqfPipeline.queryIndex(IndexIngest.currentShards(spark, store),
+      all.toDF("fp"), params, nBuckets).as[(Long, Long)].collect()
+    assert(answered.length == all.length && answered.toMap == exact(all))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
