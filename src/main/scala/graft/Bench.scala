@@ -379,18 +379,7 @@ object Bench {
 
     // 4. operator catalog at the bench scale dir
     if (phases("catalog")) {
-      val catalog = Seq(
-        "q01_bqf_abundance", "q02_bqf_filter_ge2", "q03_bqf_membership",
-        "q04_dedup_exact", "q05_ngram_jaccard", "q06_minhash_lsh", "q07_simhash",
-        "q08_text_quality", "q09_token_counts", "q10_langid", "q11_doc_fingerprint",
-        "q12_lang_source_stats", "q13_pricing_summary", "q14_top_revenue",
-        "q15_sessionize", "q16_json_props", "q17_embedding_topk", "q18_embedding_lsh",
-        "q19_tokens_per_source", "q20_tokens_seq_stats", "q21_sketch_compare",
-        "q22_quantiles", "q23_enumerate_index", "q24_embedding_ivf",
-        "q25_bqf_oom_abundance", "q26_cf_second_emit", "q27_embedding_neardup",
-        "q28_bqf_remove", "q29_sketch_persist", "q30_index_query", "q31_oom_remove",
-        "q32_stream_ingest", "q33_stream_second_emit", "q34_decontaminate",
-        "q35_repetition", "q36_media_features")
+      val catalog = SparkEntry.queries.keys.toSeq.sorted
       val gCat0 = gcMs()
       catalog.foreach { name =>
         val fn = SparkEntry.queries(name)
@@ -634,22 +623,6 @@ object Bench {
       System.err.println(f"[bench] ingest skewed: $nFps fps / $skewBatches range-batches in $skewSec%.1f s " +
         f"(${nFps / skewSec / 1e6}%.2f M/s, ${perSlice.toDouble / ingestBuckets}%.3f of buckets per batch; " +
         f"store bytes skew ${storeEst(skewBytes) / 1e6}%.2f MB vs control ${storeEst(ctlBytes) / 1e6}%.2f MB)")
-      // regression tripwire (r6 verdict #6): at the default ingest shape the
-      // paired byte counts are deterministic parquet-store scans — r6
-      // committed skew 560,510 B vs control 4,257,926 B (7.6x, ~= the 1/8
-      // touched-bucket fraction). A 15% band absorbs parquet-footer jitter;
-      // outside it, the touched-bucket pruning (or the file-skip clustering)
-      // regressed. Warn loudly; flag rides in the headline.
-      if (ingestDocs == 20000L && ingestBatches == 5) {
-        val skewEst = storeEst(skewBytes); val ctlEst = storeEst(ctlBytes)
-        def off(v: Long, want: Long): Boolean =
-          v < want * 0.85 || v > want * 1.15
-        if (off(skewEst, 560510L) || off(ctlEst, 4257926L)) {
-          System.err.println(s"[bench] TRIPWIRE: ingest pruning bytes drifted from committed " +
-            s"constants (skew $skewEst vs 560510, control $ctlEst vs 4257926) — pruning regressed?")
-          ingestJson += s""","pruning_drift":true"""
-        }
-      }
       allFps.unpersist(blocking = false)
       org.apache.commons.io.FileUtils.deleteDirectory(tmpDir.toFile)
     }

@@ -846,7 +846,7 @@ final class BackpackFilter(
     */
   def mergeInPlace(other: BackpackFilter): BackpackFilter = {
     require(other.hashBits == hashBits && other.countBits == countBits && other.mode == mode
-      && other.kTokens == kTokens && other.zTokens == zTokens,
+      && other.kTokens == kTokens && other.zTokens == zTokens && other.seed == seed,
       "cannot merge filters with different parameters")
     // bulk path for real shard merges: gather + sort + one sequential build,
     // O(n) regardless of load factor (per-insert merge degrades badly on
@@ -1311,7 +1311,7 @@ object BackpackFilter {
     val h = filters.head
     filters.tail.foreach(o => require(
       o.hashBits == h.hashBits && o.countBits == h.countBits && o.mode == h.mode &&
-      o.kTokens == h.kTokens && o.zTokens == h.zTokens, "parameter mismatch in mergeAll"))
+      o.kTokens == h.kTokens && o.zTokens == h.zTokens && o.seed == h.seed, "parameter mismatch in mergeAll"))
     val total = filters.map(_.distinctCount).sum
     require(total <= Int.MaxValue - 8, s"mergeAll too large: $total")
     val hashBits = h.hashBits

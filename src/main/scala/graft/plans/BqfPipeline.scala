@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.operators.{BqfParams, SketchAggregators}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed build plans for BQF sketches.
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * blobs are collected and merged by one
   * [[graft.core.BackpackFilter.mergeAll]] on the driver, a single sort of
   * the shard entries with no stage after the sorted build's reduce. The
-  * keyed producers bucket rows by a deterministic xxhash64 of the row id
-  * (checkpoint resume) or fan hot `source` values out over salts before
-  * the per-source merge (two-level aggregation).
+  * per-source build fans hot `source` values out over salts before the
+  * per-source merge (two-level aggregation); the resumable build is
+  * [[graft.streaming.CheckpointedBuild]], on the ingest store.
   *
   * Scale ceilings: one sketch holds at most `Int.MaxValue - 8` entries
   * ([[graft.core.BackpackFilter.mergeAll]]); a one-blob build folds on the
@@ -410,64 +410,4 @@ object BqfPipeline {
       .groupBy(col("source"))
       .agg(merge(col("partial")).as("sketch"))
   }
-}
-
-/** Resumable checkpointed build: shard sketches persist to a Parquet
-  * checkpoint table carrying Iceberg-shaped lineage columns (partition id,
-  * rows consumed, fingerprints consumed, merge depth, params tag, wall
-  * time). No Iceberg runtime ships in this offline sandbox, so the store is
-  * plain Parquet behind this interface; the commit unit is one batch job
-  * (Spark's committer makes each append atomic), and buckets are
-  * deterministic functions of row ids, so re-running a lost batch is
-  * idempotent.
-  */
-object CheckpointedBuild {
-  final val LineageColumns = Seq("bucket", "sketch", "rows_consumed",
-    "fingerprints_consumed", "merge_depth", "params_tag", "committed_at_ms")
-
-  private def paramsTag(p: BqfParams): String =
-    s"q${p.qBits}c${p.countBits}h${p.hashBits}m${p.mode.tag}k${p.kTokens}z${p.zTokens}s${p.seed}"
-
-  def committedBuckets(spark: SparkSession, dir: String): Set[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else spark.read.parquet(dir).select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-  }
-
-  /** Build shard sketches for every bucket not yet committed, in batches of
-    * `batchBuckets` (each batch = one atomic Parquet append). A killed run
-    * resumes by skipping committed buckets.
-    */
-  def run(df: DataFrame, fpCol: Column, idCol: Column, params: BqfParams,
-          nBuckets: Int, dir: String, batchBuckets: Int = 8,
-          maxBatches: Int = Int.MaxValue): Unit = {
-    val spark = df.sparkSession
-    val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
-    val done = committedBuckets(spark, dir)
-    val missing = (0L until nBuckets.toLong).filterNot(done)
-    val tag = paramsTag(params)
-    val withBucket = df
-      .withColumn("__fps", fpCol)
-      .withColumn("bucket", pmod(xxhash64(idCol), lit(nBuckets)))
-    missing.grouped(batchBuckets).take(maxBatches).foreach { batch =>
-      withBucket
-        .filter(col("bucket").isin(batch: _*))
-        .groupBy(col("bucket"))
-        .agg(
-          bqf(col("__fps")).as("sketch"),
-          count(lit(1)).as("rows_consumed"),
-          sum(size(col("__fps"))).as("fingerprints_consumed"))
-        .withColumn("merge_depth", lit(0))
-        .withColumn("params_tag", lit(tag))
-        .withColumn("committed_at_ms", lit(System.currentTimeMillis()))
-        .select(LineageColumns.map(col): _*)
-        .write.mode("append").parquet(dir)
-    }
-  }
-
-  /** Merge all committed shards into the final sketch. */
-  def result(spark: SparkSession, dir: String): Array[Byte] =
-    BqfPipeline.mergeShards(spark.read.parquet(dir))
 }

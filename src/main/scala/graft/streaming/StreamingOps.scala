@@ -144,13 +144,7 @@ object IndexIngest {
   import graft.plans.{BqfPipeline, CommitLog, IndexSidecar, LogEntry, LogState, LoggedFile, LoggedShard}
   import org.apache.hadoop.fs.Path
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-
-  /** Every store read uses this fixed schema: no read pays a schema
-    * inference job.
-    */
-  private val StoreSchema = new org.apache.spark.sql.types.StructType()
-    .add("bucket", "bigint").add("sketch", "binary").add("batch_id", "bigint")
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
@@ -170,31 +164,41 @@ object IndexIngest {
       None
     }
 
-  /** Exactly the live (bucket, sketch, batch_id) row of each bucket in
-    * `live`, with no exchange, read from the files that hold them and no
-    * other. A live file can also hold superseded versions (batch 0 wrote
-    * buckets A and B, batch 1 rewrote A), so the exact (bucket, batch_id)
-    * membership test over the captured map drops those row by row.
+  /** The live view as one stage of ranged reads, shared by [[currentShards]]
+    * and [[compact]]: the sorted build's range rule over the store's bucket
+    * span gives min(span, cores) tasks contiguous bucket ranges, and each
+    * task reads its range's live sketches through [[TaskStore.readLive]],
+    * from the files the log names and no other, with no exchange (live
+    * shards total GBs at scale, so neither a driver collect nor a shuffle
+    * moves them). One element per task: (task, its buckets ascending,
+    * their sketches).
     */
-  private def liveRows(spark: SparkSession, dir: String,
-                       live: Map[Long, (LoggedShard, LoggedFile)]): DataFrame = {
-    val ids = live.map { case (bucket, (shard, _)) => bucket -> shard.batchId }
-    val isLive = udf((bucket: Long, id: Long) => ids.get(bucket).contains(id))
-    val files = live.values.map(f => new Path(dir, f._2.name).toString).toSeq.distinct
-    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), StoreSchema)
-    else spark.read.schema(StoreSchema).parquet(files: _*).filter(isLive(col("bucket"), col("batch_id")))
+  private def liveRanges(spark: SparkSession, store: TaskStore)
+      : org.apache.spark.rdd.RDD[(Int, Seq[Long], scala.collection.mutable.LongMap[Array[Byte]])] = {
+    val span = Integer.highestOneBit(2 * store.live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
+    val p = math.min(span, spark.sparkContext.defaultParallelism)
+    val ranges = store.live.keys.toSeq.groupBy(BqfPipeline.rangeTask(_, span, p)).toSeq.sortBy(_._1)
+    spark.sparkContext.parallelize(ranges, math.max(ranges.size, 1)).map { case (task, buckets) =>
+      val sorted = buckets.sorted
+      (task, sorted, store.readLive(sorted))
+    }
   }
 
   /** Latest shard version per bucket — the live (bucket, sketch) index,
     * one row per bucket, directly consumable by
     * [[graft.plans.BqfPipeline.queryIndex]] and
     * [[graft.plans.BqfPipeline.enumerateIndex]]. Reads the commit log on
-    * the driver; the shard scan itself is lazy. Throws
+    * the driver; the read itself is one lazy stage of [[liveRanges]]. A
+    * live file that is missing or unreadable, or that lacks a logged row,
+    * fails the read with an error naming the file. Throws
     * IllegalArgumentException for a directory with data but no commit log.
     */
-  def currentShards(spark: SparkSession, storeDir: String): DataFrame =
-    liveRows(spark, storeDir, log(spark, storeDir).fold(Map.empty[Long, (LoggedShard, LoggedFile)])(_.live))
-      .select(col("bucket"), col("sketch"))
+  def currentShards(spark: SparkSession, storeDir: String): DataFrame = {
+    import spark.implicits._
+    liveRanges(spark, TaskStore(spark, storeDir, log(spark, storeDir).getOrElse(LogState(Nil))))
+      .flatMap { case (_, buckets, sketches) => buckets.map(b => (b, sketches(b))) }
+      .toDF("bucket", "sketch")
+  }
 
   /** What a write task needs of the store: its directory, the Hadoop conf
     * (broadcast once per job), the session's parquet codec, and the folded
@@ -273,50 +277,62 @@ object IndexIngest {
     CommitLog.delete(spark, storeDir, state.superseded)
   }
 
+  /** Run `write`, whose jobs write files into a store, under a job tag of
+    * its own. If it fails, the tag's jobs are cancelled, and the failure is
+    * rethrown only once the status tracker shows each tagged job ended with
+    * no task of it still running: a failed write returns with no task left
+    * writing into the store. A tag, not a job group: a streaming query owns
+    * the job group of the batches it runs.
+    */
+  private def writing[T](spark: SparkSession)(write: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"graft-store-write-${java.util.UUID.randomUUID}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        val tracker = sc.statusTracker
+        def busy: Boolean = tracker.getJobIdsForTag(tag).exists(id => tracker.getJobInfo(id).exists(job =>
+          job.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+            job.stageIds.exists(s => tracker.getStageInfo(s).exists(_.numActiveTasks > 0))))
+        while (busy) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
+  }
+
   /** Rewrite the live shard versions into bucket-sorted files and commit
     * them as one checkpoint entry that supersedes every earlier entry; then
     * delete those entries, the files they named and every data file no
     * entry names (crashed or refused attempts' leftovers) before returning.
     *
-    * One stage: the sorted build's range rule over the store's bucket span
-    * gives min(span, cores) tasks contiguous bucket ranges, and each task
-    * reads its range's live versions from the files the log names (no
-    * exchange: live shards total GBs at scale, so neither a driver collect
-    * nor a shuffle moves them) and writes them to one file sorted by
-    * bucket. batch_id and lineage are preserved, so the directory's
-    * max-batch_id row per bucket stays the live one and the replay guard
-    * still knows every committed id. A crash at any point leaves the pre-
-    * or the post-compaction view: the new files count only once the
-    * checkpoint commits, and the old ones go only after it. A live file
-    * that is missing or unreadable fails the compaction, naming it, before
-    * anything commits. Maintenance op: the streaming query must be stopped
-    * while it runs. Throws IllegalArgumentException for a directory with
-    * data but no commit log.
+    * One stage: each task of [[liveRanges]] writes its range's live
+    * versions to one file sorted by bucket. batch_id and lineage are
+    * preserved, so the directory's max-batch_id row per bucket stays the
+    * live one and the replay guard still knows every committed id. A crash
+    * at any point leaves the pre- or the post-compaction view: the new
+    * files count only once the checkpoint commits, and the old ones go only
+    * after it. A live file that is missing or unreadable fails the
+    * compaction, naming it, before anything commits. Maintenance op: the
+    * streaming query must be stopped while it runs. Throws
+    * IllegalArgumentException for a directory with data but no commit log.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val state = log(spark, storeDir).getOrElse(return)
     val after =
       if (state.pending.isEmpty) state // nothing above the newest checkpoint: only clean up
       else {
-        val live = state.live
-        val span = Integer.highestOneBit(2 * live.keys.maxOption.fold(0)(_.toInt) + 1) // pow2 > max bucket
-        val p = math.min(span, spark.sparkContext.defaultParallelism)
-        val ranges = live.keys.toSeq.groupBy(BqfPipeline.rangeTask(_, span, p)).toSeq.sortBy(_._1)
+        val store = TaskStore(spark, storeDir, state)
+        val lastId = state.lastId
         val files =
-          if (ranges.isEmpty) Nil
-          else {
-            val store = TaskStore(spark, storeDir, state)
-            val lastId = state.lastId
-            try spark.sparkContext.parallelize(ranges, ranges.size).map { case (task, buckets) =>
-              val sorted = buckets.sorted
-              val sketches = store.readLive(sorted)
-              val (name, bytes) =
-                store.write(lastId, task, sorted.iterator.map(b => ShardFiles.Shard(b, sketches(b), store.live(b)._1)))
-              (name, bytes, sorted)
-            }.collect().toSeq.map { case (name, bytes, buckets) => LoggedFile(name, bytes, buckets.map(live(_)._1)) }
-            finally store.conf.destroy()
-          }
-        val checkpoint = LogEntry(state.lastId, checkpoint = true, files)
+          try writing(spark)(liveRanges(spark, store).map { case (task, buckets, sketches) =>
+            val (name, bytes) =
+              store.write(lastId, task, buckets.iterator.map(b => ShardFiles.Shard(b, sketches(b), store.live(b)._1)))
+            (name, bytes, buckets)
+          }.collect())
+          finally store.conf.destroy()
+        val checkpoint = LogEntry(lastId, checkpoint = true,
+          files.toSeq.map { case (name, bytes, buckets) => LoggedFile(name, bytes, buckets.map(state.live(_)._1)) })
         CommitLog.commit(spark, storeDir, checkpoint)
         LogState(state.entries :+ checkpoint)
       }
@@ -348,7 +364,8 @@ object IndexIngest {
     * an IllegalArgumentException and commits nothing; the files its tasks
     * wrote are no entry's, so no reader opens them and the next [[compact]]
     * deletes them. So does a live file that is missing or unreadable,
-    * failing the job with an error that names it.
+    * failing the job with an error that names it; a failed batch returns
+    * once none of its tasks is still writing ([[writing]]).
     */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   params: graft.operators.BqfParams, nBuckets: Int,
@@ -378,11 +395,11 @@ object IndexIngest {
     val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
     val store = TaskStore(spark, storeDir, state)
     val written =
-      try BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
+      try writing(spark)(BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
         .repartitionById(p, BqfPipeline.rangeRoute(col("bucket"), nBuckets, p))
         .as[(Long, Array[Long])]
         .mapPartitions(mergeRange(store, batchId, params, _))
-        .collect()
+        .collect())
       finally store.conf.destroy()
     val strays = written.map(_.strays).sum
     require(strays == 0,
@@ -461,4 +478,40 @@ object IndexIngest {
     BackpackFilter.fromEntries(7, params.countBits, params.hashBits, params.mode,
       params.kTokens, params.zTokens, params.seed, fps, stored, n)
   }
+}
+
+/** Resumable checkpointed build on an ingest store: rows go to `nBuckets`
+  * id buckets by a deterministic xxhash64 of their id, and id bucket j is
+  * ingested as batch j ([[IndexIngest.ingestBatch]]), in ascending order.
+  * Each committed batch is one commit-log entry, which carries every new
+  * shard version's lineage (fingerprint rows consumed, merge depth), so a
+  * killed run resumes where the log ends: the replay guard skips each
+  * committed id with no job. The store's routing sidecar records nBuckets
+  * and the sketch params, so a resume under others is refused.
+  */
+object CheckpointedBuild {
+  import graft.plans.{BqfPipeline, CommitLog}
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+  /** The id buckets whose batches the store's log has committed. */
+  def committedBuckets(spark: SparkSession, dir: String): Set[Long] =
+    CommitLog.read(spark, dir).fold(Set.empty[Long])(s => ((0L to s.through) ++ s.pending.map(_.batchId)).toSet)
+
+  /** Ingest id bucket j as batch j into store `dir`, for each j below both
+    * `nBuckets` (a power of two, also the store's bucket count) and
+    * `maxBatches` (a run cut short there, as a killed one would be); ids
+    * the log holds are skipped. A store written under another nBuckets or
+    * other params is refused with an IllegalArgumentException.
+    */
+  def run(df: DataFrame, fpCol: Column, idCol: Column, params: graft.operators.BqfParams,
+          nBuckets: Int, dir: String, maxBatches: Int = Int.MaxValue): Unit = {
+    val fps = df.select(pmod(xxhash64(idCol), lit(nBuckets)).as("id_bucket"), explode(fpCol).as("fp"))
+    (0 until math.min(nBuckets, maxBatches)).foreach { j =>
+      IndexIngest.ingestBatch(fps.filter(col("id_bucket") === j).select("fp"), j.toLong, params, nBuckets, dir)
+    }
+  }
+
+  /** Merge the store's live shards into the final sketch (null for none). */
+  def result(spark: SparkSession, dir: String): Array[Byte] =
+    BqfPipeline.mergeShards(IndexIngest.currentShards(spark, dir))
 }

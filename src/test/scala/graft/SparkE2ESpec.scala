@@ -3,7 +3,8 @@ package graft
 import graft.core.BackpackFilter
 import graft.functions.GraftFunctions._
 import graft.operators.{BqfParams, BqfQuery, SketchAggregators}
-import graft.plans.{BqfPipeline, CheckpointedBuild}
+import graft.plans.BqfPipeline
+import graft.streaming.CheckpointedBuild
 import graft.sources.TokensTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -91,20 +92,28 @@ class SparkE2ESpec extends AnyFunSuite {
     val df = TokensTable.dataframe(spark, 300, partitions = 4)
     val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
     val nBuckets = 16
-    // "killed" first run: only 2 batches (= 4 buckets) commit
-    CheckpointedBuild.run(df, fps, col("doc_id"), params, nBuckets, dir, batchBuckets = 2, maxBatches = 2)
+    // "killed" first run: only the batches of id buckets 0-3 commit
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, nBuckets, dir, maxBatches = 4)
     val afterKill = CheckpointedBuild.committedBuckets(spark, dir)
-    assert(afterKill.size == 4, s"expected 4 committed buckets, got ${afterKill.size}")
+    assert(afterKill == Set(0L, 1L, 2L, 3L), s"expected id buckets 0-3 committed, got $afterKill")
+    // a resume under another seed or another bucket count is refused, and
+    // commits nothing
+    for ((what, p, n) <- Seq(("seed", params.copy(seed = 1L), nBuckets), ("nBuckets", params, 8))) {
+      val e = intercept[IllegalArgumentException](CheckpointedBuild.run(df, fps, col("doc_id"), p, n, dir))
+      assert(e.getMessage.contains(what), e.getMessage)
+      assert(CheckpointedBuild.committedBuckets(spark, dir) == afterKill, what)
+    }
     // resume completes the rest, skipping committed buckets
-    CheckpointedBuild.run(df, fps, col("doc_id"), params, nBuckets, dir, batchBuckets = 2)
-    assert(CheckpointedBuild.committedBuckets(spark, dir).size == nBuckets)
-    // lineage columns present
-    val shardCols = spark.read.parquet(dir).columns.toSet
-    assert(CheckpointedBuild.LineageColumns.toSet.subsetOf(shardCols))
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, nBuckets, dir)
+    assert(CheckpointedBuild.committedBuckets(spark, dir) == (0L until nBuckets).toSet)
+    // lineage in the log: every fingerprint row consumed once, and each
+    // shard's merge depth counts the id buckets that reached it
+    val live = graft.plans.CommitLog.read(spark, dir).get.live.values.map(_._1)
+    val rows = df.select(explode(fps)).count()
+    assert(live.map(_.rowsConsumed).sum == rows)
+    assert(live.forall(s => s.mergeDepth >= 1 && s.mergeDepth <= nBuckets), live.map(_.mergeDepth).mkString(" "))
     // final result identical to an uninterrupted global build
-    val resumed = BackpackFilter.deserialize(CheckpointedBuild.result(spark, dir))
-    val direct = BackpackFilter.deserialize(BqfPipeline.buildGlobal(df, fps, params))
-    assert(resumed.enumerate() == direct.enumerate())
+    assert(java.util.Arrays.equals(CheckpointedBuild.result(spark, dir), BqfPipeline.buildGlobal(df, fps, params)))
   }
 
   test("broadcast query UDFs: abundance, membership, sequence stats") {

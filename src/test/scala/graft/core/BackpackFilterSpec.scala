@@ -517,6 +517,12 @@ class MergeSpec extends AnyFunSuite {
             entries.drop(cut).zipWithIndex.collect { case (e, i) if i % (shards - 1) == s => e })
       }
       val filters = parts.map(p => build(p, 10, 6, hashBits))
+      // a shard hashed under another seed holds other fingerprints of the
+      // same keys: both merges refuse it rather than keep the first seed
+      val reseeded = BackpackFilter(10, 6, hashBits, seed = 1L)
+      parts.head.foreach { case (fp, cnt) => reseeded.add(fp, cnt) }
+      intercept[IllegalArgumentException](BackpackFilter.mergeAll(filters :+ reseeded))
+      intercept[IllegalArgumentException](filters.head.mergeInPlace(reseeded))
       val merged = filters.reduce((a, b) => a.mergeInPlace(b))
       assert(merged.enumerate() == whole, s"shards=$shards style=$style")
     }

@@ -5,6 +5,7 @@ import graft.core.BackpackFilter
 import graft.functions.GraftFunctions._
 import graft.operators.{BqfParams, SketchAggregators}
 import graft.sources.TokensTable
+import graft.streaming.CheckpointedBuild
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,8 +35,8 @@ class BuildIdentitySpec extends AnyFunSuite {
     val bqf = SketchAggregators.bqfOverFingerprintArrays(params)
     def sketchOf(rows: DataFrame): Array[Byte] = rows.select("sketch").as[Array[Byte]].head()
     val ckpt = java.nio.file.Files.createTempDirectory("graft-identity").toString + "/shards"
-    CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, ckpt, batchBuckets = 2, maxBatches = 2)
-    CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, ckpt, batchBuckets = 2)
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, ckpt, maxBatches = 4)
+    CheckpointedBuild.run(df, fps, col("doc_id"), params, 16, ckpt)
     Seq(
       "buildGlobal" -> BqfPipeline.buildGlobal(df, fps, params),
       "buildSharded 64" -> BqfPipeline.buildSharded(df, fps, col("doc_id"), params, 64),

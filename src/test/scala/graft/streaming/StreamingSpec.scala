@@ -12,9 +12,15 @@ class StreamingSpec extends AnyFunSuite {
   private def dataFiles(dir: String): Set[String] =
     new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
 
-  /** The store files the live view opens. */
+  /** The store data files the live view opens, as the file system saw them. */
   private def opened(store: String): Set[String] =
-    IndexIngest.currentShards(spark, store).inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+    inStore(store)(RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration)(
+      IndexIngest.currentShards(spark, store).collect())._2)
+
+  /** The names of the data files of `store` among `paths`. */
+  private def inStore(store: String)(paths: Seq[String]): Set[String] =
+    paths.map(new java.io.File(_)).filter(_.getParent == store).map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
 
   /** The live index's (fingerprint -> count) entries. */
   private def counts(store: String): Map[Long, Long] = {
@@ -416,8 +422,7 @@ class StreamingSpec extends AnyFunSuite {
     */
   private def dataOpens(store: String)(f: => Unit): (Set[String], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
     val (plans, paths) = RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration)(plansOf(f))
-    (paths.map(new java.io.File(_)).filter(_.getParent == store).map(_.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet, plans)
+    (inStore(store)(paths), plans)
   }
 
   test("exact pruning: the live-side scan opens the log's live files of the touched buckets, and no other") {
@@ -501,6 +506,7 @@ class StreamingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(67)
     val Seq(b0, b1, b2) = Seq.fill(3)(Vector.fill(1000)(rnd.nextLong() & 0xffffffffL))
     def messages(t: Throwable): List[String] = if (t == null) Nil else String.valueOf(t.getMessage) :: messages(t.getCause)
+    val conf = spark.sparkContext.hadoopConfiguration
     val damages = Seq[(String, java.io.File => Unit)](
       "missing" -> (f => assert(f.delete())),
       // without its checksum file too, so that only the parquet reader can
@@ -509,11 +515,22 @@ class StreamingSpec extends AnyFunSuite {
         val raf = new java.io.RandomAccessFile(f, "rw")
         try raf.setLength(f.length / 2) finally raf.close()
         new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+      },
+      // a readable file that lacks one of the shard rows its entry names
+      "lacking a logged row" -> { f =>
+        val path = new org.apache.hadoop.fs.Path(f.getPath)
+        val rows = ShardFiles.read(path, conf)((_, _) => true)
+        assert(f.delete())
+        new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+        ShardFiles.write(path, rows.tail.iterator, conf,
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       })
     for ((what, damage) <- damages; (op, run) <- Seq[(String, String => Unit)](
       "ingestBatch" -> (s => IndexIngest.ingestBatch(b2.toDF("fp"), 2L, params, 8, s)),
-      "compact" -> (s => IndexIngest.compact(spark, s)))) {
-      val store = s"$tmp/$what-$op"
+      "compact" -> (s => IndexIngest.compact(spark, s)),
+      "currentShards -> queryIndex" -> (s => graft.plans.BqfPipeline.queryIndex(IndexIngest.currentShards(spark, s),
+        b2.toDF("fp"), params, 8).collect()))) {
+      val store = s"$tmp/${java.util.UUID.randomUUID}"
       IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
       IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, 8, store)
       val log = graft.plans.CommitLog.read(spark, store).get
@@ -523,8 +540,34 @@ class StreamingSpec extends AnyFunSuite {
       assert(messages(e).exists(_.contains(victim)), s"$what live file, $op: ${messages(e).mkString(" <- ")}")
       assert(graft.plans.CommitLog.read(spark, store).get.entries.toSet == log.entries.toSet, s"$what live file, $op committed")
     }
-    // the failed jobs' other tasks may still be writing their files
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a failed write returns only once none of its tasks is still writing into the store") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-failed-write").toString
+    val rnd = new scala.util.Random(73)
+    val Seq(b0, b1) = Seq.fill(2)(Vector.fill(1000)(rnd.nextLong() & 0xffffffffL))
+    for ((op, run) <- Seq[(String, String => Unit)](
+      "ingestBatch" -> (s => IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, 8, s)),
+      "compact" -> (s => IndexIngest.compact(spark, s)))) {
+      val store = s"$tmp/$op"
+      IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
+      val log = graft.plans.CommitLog.read(spark, store).get
+      assert(new java.io.File(store, log.live.values.map(_._2.name).toSeq.sorted.head).delete())
+      // the task of the lowest bucket range fails at its read; every other
+      // task is held at its file create while the failure reaches the driver
+      val (atReturn, _) = RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration, createDelayMs = 1000L) {
+        intercept[Exception](run(store))
+        dataFiles(store)
+      }
+      Thread.sleep(2000L)
+      assert(dataFiles(store) == atReturn, s"$op wrote ${dataFiles(store) -- atReturn} after it failed")
+      assert(atReturn.size > log.files.size - 1, s"$op: no task of the failed job wrote its file")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("a store written by Spark's parquet writer ingests, compacts and answers exactly") {
@@ -580,9 +623,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("live view: each bucket's latest version, exactly, through currentShards, queryIndex and compact") {
-    // batch 0 touches buckets {A, B}, batch 1 touches {A}: the literal
-    // batch_id isin {0, 1} keeps (A,0), (B,0) and (A,1), and the exact
-    // (bucket, batch_id) filter must drop the superseded (A,0)
+    // batch 0 touches buckets {A, B}, batch 1 touches {A}: the store holds
+    // (A,0), (B,0) and (A,1), and the live view must never read the
+    // superseded (A,0)
     import spark.implicits._
     val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
