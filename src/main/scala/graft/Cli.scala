@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *   filter      -i <tokens parquet> -o <out path> [-k K] [-f parquet|text|stream]
   *   enumerate   -b <sketch file> -o <out parquet>
   *   export      -b <sketch file (own or reference fmt)> -o <reference .bqf>
-  *   build-index -i <tokens parquet> -o <shards parquet> [-n BUCKETS ...]
-  *   query-index -b <shards parquet> -i <tokens parquet> -o <out parquet>
+  *   build-index -i <tokens parquet> -o <store dir> [-n BUCKETS ...]
+  *   query-index -b <store dir> -i <tokens parquet> -o <out parquet> [-n/-k/-z/-h to cross-check]
   *
   * `build` folds every s-gram fingerprint of the input's `tokens` column
   * into a distributed BQF and persists it; `query` loads + broadcasts the
@@ -231,62 +231,38 @@ object Cli {
         println(s"Exported ${bf.distinctCount} smers to reference format (q=${bf.quotientBits})")
 
       case "build-index" =>
-        // sharded index persisted as a (bucket, sketch) parquet store — the
-        // form that scales past broadcast size; query with `query-index`
+        // the sharded index, the form that scales past broadcast size, as
+        // checkpoint 0 of an index store whose log records the routing;
+        // query it with `query-index`, extend it with IndexIngest.ingestBatch.
+        // An existing -o is replaced.
         val nBuckets = opts.getOrElse("-n", "64").toInt
         val df = spark.read.parquet(opts("-i"))
         val t0 = System.nanoTime()
-        BqfPipeline.buildIndexSorted(df,
+        val out = new org.apache.hadoop.fs.Path(opts("-o"))
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+        graft.streaming.IndexIngest.build(df,
           sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed),
-          params, nBuckets)
-          .write.mode("overwrite").parquet(opts("-o"))
-        // sidecar records the routing params: a query-index run with a
-        // mismatched -n or -q would otherwise route probes to the wrong
-        // buckets and answer zeros SILENTLY
-        graft.plans.IndexSidecar.write(spark, opts("-o"), graft.plans.IndexSidecar(nBuckets, params))
+          params, nBuckets, opts("-o"))
         println(s"Index construction time = ${(System.nanoTime() - t0) / 1000000}ms ($nBuckets shards)")
 
       case "query-index" =>
         // point abundance of every distinct s-gram of the input, answered
-        // by bucket-routed probes against the sharded store (no broadcast).
-        // A store carrying a batch_id column is a streaming/incremental
-        // ingest store (multi-version: one row per touched bucket per
-        // batch) — the live index is the latest version per bucket, so
-        // route through IndexIngest.currentShards; a raw read would hand
-        // queryIndex superseded shard versions (it refuses them).
-        val raw = spark.read.parquet(opts("-b"))
-        val shards =
-          if (raw.columns.contains("batch_id"))
-            graft.streaming.IndexIngest.currentShards(spark, opts("-b"))
-          else raw
-        // routing params come from the build's sidecar when present (and a
-        // conflicting -n/-k/-z on the command line is an ERROR — wrong
-        // routing answers zeros silently); legacy stores without a sidecar
-        // fall back to an explicit -n, else REFUSE (no inference)
-        val meta = graft.plans.IndexSidecar.read(spark, opts("-b"))
-        meta.foreach { m =>
-          require(m.kTokens == params.kTokens && m.zTokens == params.zTokens &&
-            m.hashBits == params.hashBits && m.seed == params.seed,
-            s"query-index params (-k/-z/-h/seed) conflict with the index sidecar: ${m.json}")
-        }
-        val nBuckets = meta.map { m =>
-          opts.get("-n").map(_.toInt).foreach(cli =>
-            require(cli == m.nBuckets, s"-n $cli conflicts with the index's ${m.nBuckets} shards (sidecar)"))
-          m.nBuckets
-        }.orElse(opts.get("-n").map(_.toInt)).getOrElse {
-          // no sidecar, no -n: REFUSE rather than infer. next-pow-2 of
-          // max(bucket)+1 guesses low whenever the top buckets happen to be
-          // unoccupied, and a low guess routes every probe to the wrong
-          // shard — zero answers, silently (and head() on an empty store
-          // NPEs). Wrong-but-confident routing is the failure mode this
-          // verb's sidecar exists to prevent.
-          sys.error(s"query-index: ${opts("-b")} has no _graft_index.json sidecar; " +
-            "pass the index's shard count explicitly with -n (it must equal the build's -n)")
-        }
+        // by bucket-routed probes against the store's live shards (no
+        // broadcast). The routing comes from the store's log; -n/-k/-z/-h
+        // only cross-check it, since a wrong routing answers wrong counts
+        // silently.
+        val store = opts("-b")
+        val shards = graft.streaming.IndexIngest.currentShards(spark, store)
+        val r = graft.plans.CommitLog.read(spark, store).flatMap(_.routing).getOrElse(
+          throw new IllegalArgumentException(s"query-index: $store has no committed index; build it with build-index"))
+        val conflicts = Seq("-n" -> r.nBuckets, "-k" -> r.kTokens, "-z" -> r.zTokens, "-h" -> r.hashBits)
+          .collect { case (o, v) if opts.get(o).exists(_.toInt != v) => s"$o: store=$v call=${opts(o)}" }
+        require(conflicts.isEmpty, s"query-index routing conflicts with $store's log (${conflicts.mkString(", ")})")
+        val p = params.copy(hashBits = r.hashBits, kTokens = r.kTokens, zTokens = r.zTokens, seed = r.seed)
         val probes = spark.read.parquet(opts("-i"))
-          .select(explode(sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)).as("fp"))
+          .select(explode(sgram_fingerprints(col("tokens"), p.sTokens, p.hashBits, p.seed)).as("fp"))
           .distinct()
-        BqfPipeline.queryIndex(shards, probes, params, nBuckets)
+        BqfPipeline.queryIndex(shards, probes, p, r.nBuckets)
           .withColumnRenamed("fp", "kgram_fp")
           .write.mode("overwrite").parquet(opts("-o"))
 

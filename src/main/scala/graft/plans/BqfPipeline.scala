@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.operators.{BqfParams, SketchAggregators}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Distributed build plans for BQF sketches.
@@ -56,20 +56,38 @@ object BqfPipeline {
     * ranges; `nBuckets` must be a power of two.
     */
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: BqfParams,
-                       nBuckets: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+                       nBuckets: Int): DataFrame =
+    shardRows(indexChunks(df, fpCol, params, nBuckets), params)
+
+  /** The routed, bucket-sorted chunk rows of [[buildIndexSorted]]: its
+    * [[sortedBuild]] up to the shard build, which
+    * [[graft.streaming.IndexIngest.build]] writes into a logged store instead.
+    */
+  private[graft] def indexChunks(df: DataFrame, fpCol: Column, params: BqfParams,
+                                 nBuckets: Int): Dataset[(Long, Array[Long], Array[Long])] = {
+    import df.sparkSession.implicits._
     sortedBuild(df.select(fpCol.as("fps")).as[Array[Long]], params, nBuckets, counted = false)(
       docs => docs.map(fps => (fps, null)))
   }
 
-  /** The one sorted build plan behind [[buildIndexSorted]] and
-    * [[reshardMerge]]: each input task turns its rows into (fingerprints,
-    * stored counts) entry arrays (`counted = false`: counts are all 1 and
-    * stay null), the map-side chunker groups them by destination bucket
-    * (high fingerprint bits) into array-chunk rows, one exchange moves the
-    * chunks, and each reduce task gathers its buckets and builds every
-    * shard with [[graft.core.BackpackFilter.fromEntries]].
+  /** Each reduce task's chunk rows gathered ([[gatherChunks]]) and built into
+    * one (bucket, sketch) row per bucket.
+    */
+  private def shardRows(chunks: Dataset[(Long, Array[Long], Array[Long])], params: BqfParams): DataFrame = {
+    import chunks.sparkSession.implicits._
+    chunks.mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
+      (bucket, buildShard(bucket, fps, stored, params))
+    }).toDF("bucket", "sketch")
+  }
+
+  /** The one sorted build plan behind [[buildIndexSorted]],
+    * [[reshardMerge]] and [[graft.streaming.IndexIngest.build]]: each input
+    * task turns its rows into (fingerprints, stored counts) entry arrays
+    * (`counted = false`: counts are all 1 and stay null), the map-side
+    * chunker groups them by destination bucket (high fingerprint bits) into
+    * array-chunk rows, one exchange moves the chunks, and each reduce task
+    * sorts its chunk rows by bucket; the caller's reduce side gathers its
+    * buckets and builds every shard with [[buildShard]].
     *
     * Routing: with p = min(nBuckets, defaultParallelism) reduce tasks,
     * bucket b goes to task b * p / nBuckets (integer division), so task t
@@ -89,9 +107,8 @@ object BqfPipeline {
     * ~tasks x buckets rows instead of one per k-gram; array encode/decode
     * is a memcpy. Same shuffle BYTES, ~10^4x fewer shuffle ROWS.
     */
-  private def sortedBuild[T](in: org.apache.spark.sql.Dataset[T], params: BqfParams,
-                             nBuckets: Int, counted: Boolean)(
-      entries: Iterator[T] => Iterator[(Array[Long], Array[Long])]): DataFrame = {
+  private def sortedBuild[T](in: Dataset[T], params: BqfParams, nBuckets: Int, counted: Boolean)(
+      entries: Iterator[T] => Iterator[(Array[Long], Array[Long])]): Dataset[(Long, Array[Long], Array[Long])] = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = in.sparkSession
     import spark.implicits._
@@ -102,11 +119,6 @@ object BqfPipeline {
       .repartitionById(p, rangeRoute(col("bucket"), nBuckets, p))
       .sortWithinPartitions("bucket")
       .as[(Long, Array[Long], Array[Long])]
-      .mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
-        require(bucket >= 0, s"fingerprints above hashBits=${params.hashBits} have no bucket")
-        (bucket, buildShard(fps, stored, params))
-      })
-      .toDF("bucket", "sketch")
   }
 
   /** The range rule of [[sortedBuild]], [[queryIndex]] and
@@ -275,10 +287,15 @@ object BqfPipeline {
       }
     }
 
-  private def buildShard(fps: Array[Long], stored: Array[Long], params: BqfParams): Array[Byte] =
+  /** The serialized shard of one gathered bucket of a sorted build; a build
+    * refuses the strays of [[chunkByBucket]] (bucket -1).
+    */
+  private[graft] def buildShard(bucket: Long, fps: Array[Long], stored: Array[Long], params: BqfParams): Array[Byte] = {
+    require(bucket >= 0, s"fingerprints above hashBits=${params.hashBits} have no bucket")
     graft.core.BackpackFilter.fromEntries(
       7, params.countBits, params.hashBits, params.mode,
       params.kTokens, params.zTokens, params.seed, fps, stored, fps.length).serialize()
+  }
 
   /** Distributed merge / re-shard: every input task reads its shard
     * sketches' raw (fingerprint, storedCount) entries, and the same sorted
@@ -294,7 +311,7 @@ object BqfPipeline {
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    sortedBuild(shards.select("sketch").as[Array[Byte]], params, nOut, counted = true)(
+    shardRows(sortedBuild(shards.select("sketch").as[Array[Byte]], params, nOut, counted = true)(
       _.map { bytes =>
         val f = graft.core.BackpackFilter.deserialize(bytes)
         val fps = new Array[Long](f.distinctCount.toInt)
@@ -303,7 +320,7 @@ object BqfPipeline {
         // specialized visitor: zero boxing across the 10^8-entry stream
         f.foreachRaw { (fp, c) => fps(i) = fp; stored(i) = c; i += 1 }
         (fps, stored)
-      })
+      }), params)
   }
 
   /** The enumerate operator exposed relationally at scale: explode every
@@ -354,16 +371,14 @@ object BqfPipeline {
         rows.flatMap { case (b, fps, sketch) =>
           if (b != bucket) { bucket = b; shard = null }
           if (fps == null) {
-            // Multiple rows for one bucket are ambiguous: a multi-version
-            // ingest store (bucket, sketch, batch_id) holds SUPERSEDED
-            // versions whose merge would double-count, while answering
-            // from an arbitrary row would silently answer from a stale
-            // version. Refuse instead of guessing — read ingest stores
-            // through IndexIngest.currentShards (Cli query-index does this
-            // automatically) or compact first.
+            // Multiple rows for one bucket are ambiguous: an index store's
+            // data files, read raw, hold SUPERSEDED versions whose merge
+            // would double-count, while answering from an arbitrary row
+            // would silently answer from a stale version. Refuse instead of
+            // guessing: a store's live view is IndexIngest.currentShards.
             require(shard == null,
-              s"queryIndex: multiple sketch rows for bucket $b -- this looks like a " +
-                "multi-version ingest store; query IndexIngest.currentShards(...) or compact it first")
+              s"queryIndex: multiple sketch rows for bucket $b -- these look like an index store's " +
+                "data files read raw; query IndexIngest.currentShards(...) instead")
             shard = graft.core.BackpackFilter.deserialize(sketch)
             Iterator.empty
           } else {

@@ -1,9 +1,37 @@
 package graft.plans
 
 import com.fasterxml.jackson.databind.JsonNode
+import graft.operators.BqfParams
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
+
+/** The routing a sharded index store is built under: its bucket count and
+  * sketch params. The sketch addresses a fingerprint by its high bits, so a
+  * query or an ingest under another routing would answer or append wrong
+  * counts silently; every log entry records it, and readers and writers
+  * refuse a mismatch.
+  */
+final case class Routing(nBuckets: Int, qBits: Int, countBits: Int, hashBits: Int,
+                         kTokens: Int, zTokens: Int, seed: Long) {
+  private[plans] def values: Seq[(String, Long)] = Seq(
+    "nBuckets" -> nBuckets.toLong, "qBits" -> qBits.toLong, "countBits" -> countBits.toLong,
+    "hashBits" -> hashBits.toLong, "kTokens" -> kTokens.toLong, "zTokens" -> zTokens.toLong,
+    "seed" -> seed)
+
+  def json: String = values.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  /** "field: store=a call=b" for every field that differs from `call`. */
+  def conflicts(call: Routing): Seq[String] =
+    values.zip(call.values).collect { case ((k, a), (_, b)) if a != b => s"$k: store=$a call=$b" }
+}
+
+object Routing {
+  def apply(nBuckets: Int, p: BqfParams): Routing =
+    Routing(nBuckets, p.qBits, p.countBits, p.hashBits, p.kTokens, p.zTokens, p.seed)
+
+  private[plans] val Fields: Seq[String] = Routing(0, 0, 0, 0, 0, 0, 0L).values.map(_._1)
+}
 
 /** One shard version a log entry names: its bucket, the batch that wrote it,
   * and its lineage — the fingerprint rows merged into the shard over all its
@@ -14,18 +42,26 @@ final case class LoggedShard(bucket: Long, batchId: Long, rowsConsumed: Long, me
 /** One data file of the store directory, with the shard rows it holds. */
 final case class LoggedFile(name: String, bytes: Long, shards: Seq[LoggedShard])
 
-/** One commit of an ingest store: the files batch `batchId` added or, for a
-  * checkpoint, every live file as of `batchId`, superseding each entry at or
-  * below it.
+/** One commit of an index store, under the store's routing: the files batch
+  * `batchId` added or, for a checkpoint, every live file as of `batchId`,
+  * superseding each entry at or below it.
   */
-final case class LogEntry(batchId: Long, checkpoint: Boolean, files: Seq[LoggedFile]) {
+final case class LogEntry(batchId: Long, checkpoint: Boolean, routing: Routing, files: Seq[LoggedFile]) {
   def fileName: String = if (checkpoint) s"$batchId.checkpoint.json" else s"$batchId.json"
 }
 
 /** The log folded on the driver: the newest checkpoint, then the batch
   * entries above it in id order, each shard replacing its bucket's last.
+  * A log whose entries disagree on the routing is refused.
   */
 final case class LogState(entries: Seq[LogEntry]) {
+  /** The routing every entry records; None for a log with no entry. */
+  val routing: Option[Routing] = {
+    val by = entries.groupBy(_.routing)
+    require(by.size <= 1, s"${CommitLog.DirName} entries disagree on the store's routing: " +
+      by.map { case (r, es) => es.map(_.fileName).sorted.mkString("", ", ", s" record ${r.json}") }.toSeq.sorted.mkString("; "))
+    by.keys.headOption
+  }
   private val base = entries.filter(_.checkpoint).maxByOption(_.batchId)
   /** Every id at or below this is committed by the newest checkpoint. */
   val through: Long = base.fold(-1L)(_.batchId)
@@ -43,12 +79,13 @@ final case class LogState(entries: Seq[LogEntry]) {
   def committed(batchId: Long): Boolean = batchId <= through || pending.exists(_.batchId == batchId)
 }
 
-/** The `_graft_log` commit log of an ingest store: one JSON entry per
-  * committed batch or compaction, `<batchId>.json` or
-  * `<batchId>.checkpoint.json`. An entry is written to a hidden temp file
-  * and renamed into place without overwrite, so a second commit of the same
-  * name throws `FileAlreadyExistsException` and the first one stands. Like
-  * [[IndexSidecar]], entries are read and written through the raw Hadoop
+/** The `_graft_log` commit log of an index store, its only metadata: one
+  * JSON entry per committed batch or compaction, `<batchId>.json` or
+  * `<batchId>.checkpoint.json`, each with the store's [[Routing]]. An entry
+  * is written to a hidden temp file and renamed into place without
+  * overwrite, so a second commit of the same name throws
+  * `FileAlreadyExistsException` and the first one stands, and the routing
+  * commits with it. Entries are read and written through the raw Hadoop
   * file system with Jackson, and the underscore prefix keeps the log out of
   * parquet reads of the store.
   */
@@ -59,8 +96,18 @@ object CommitLog {
 
   private def dir(storeDir: String): Path = new Path(storeDir, DirName)
 
+  // no checksum side file: entries are small hand-readable records, and a
+  // hand edit must not turn into a ChecksumException on the next read
+  private def fileSystem(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
   private def json(e: LogEntry): String = {
     val root = mapper.createObjectNode().put("batch_id", e.batchId).put("checkpoint", e.checkpoint)
+    val routing = root.putObject("routing")
+    e.routing.values.foreach { case (k, v) => routing.put(k, v) }
     val files = root.putArray("files")
     e.files.foreach { f =>
       val fn = files.addObject().put("name", f.name).put("rows", f.shards.size).put("bytes", f.bytes)
@@ -72,7 +119,8 @@ object CommitLog {
   }
 
   /** Parse one entry; IllegalArgumentException when a field is missing or
-    * mistyped, or a file's `rows` disagrees with its shard list.
+    * mistyped, the routing record lacks a field or holds an unknown one, or
+    * a file's `rows` disagrees with its shard list.
     */
   private def parse(name: String, text: String): LogEntry = {
     def field(n: JsonNode, f: String): JsonNode = {
@@ -97,13 +145,28 @@ object CommitLog {
       require(long(f, "rows") == shards.size, s"$DirName/$name: rows of ${field(f, "name").asText} disagree with its shards")
       LoggedFile(field(f, "name").asText, long(f, "bytes"), shards)
     }.toVector
-    LogEntry(long(root, "batch_id"), field(root, "checkpoint").asBoolean, files)
+    require(root.has("routing"), s"$DirName/$name lacks field routing: a store written before its log " +
+      "recorded the routing is not read; rebuild it")
+    val r = field(root, "routing")
+    val names = if (r.isObject) r.fieldNames().asScala.toSet else Set.empty[String]
+    def listed(what: String, fs: Iterable[String]) =
+      if (fs.isEmpty) None else Some(fs.toSeq.sorted.mkString(s"$what [", ", ", "]"))
+    require(r.isObject && names == Routing.Fields.toSet, s"$DirName/$name routing fields do not match: " +
+      (listed("missing", Routing.Fields.filterNot(names)) ++ listed("unknown", names -- Routing.Fields)).mkString(", "))
+    def int(f: String): Int = {
+      val v = long(r, f)
+      require(v.isValidInt, s"$DirName/$name routing field $f out of range: $v")
+      v.toInt
+    }
+    LogEntry(long(root, "batch_id"), field(root, "checkpoint").asBoolean,
+      Routing(int("nBuckets"), int("qBits"), int("countBits"), int("hashBits"), int("kTokens"), int("zTokens"),
+        long(r, "seed")), files)
   }
 
   /** The store's folded log, or None when it has no log directory. */
   def read(spark: SparkSession, storeDir: String): Option[LogState] = {
     val d = dir(storeDir)
-    val fs = IndexSidecar.fileSystem(spark, d)
+    val fs = fileSystem(spark, d)
     if (!fs.exists(d)) None
     else Some(LogState(fs.listStatus(d).toSeq.map(_.getPath.getName).collect { case n @ EntryName(_, _) =>
       val in = fs.open(new Path(d, n))
@@ -114,7 +177,7 @@ object CommitLog {
   /** Make the (empty) log directory of a new store. */
   def create(spark: SparkSession, storeDir: String): Unit = {
     val d = dir(storeDir)
-    IndexSidecar.fileSystem(spark, d).mkdirs(d)
+    fileSystem(spark, d).mkdirs(d)
   }
 
   /** Commit `e`: throws FileAlreadyExistsException when an entry of the
@@ -122,7 +185,7 @@ object CommitLog {
     */
   def commit(spark: SparkSession, storeDir: String, e: LogEntry): Unit = {
     val d = dir(storeDir)
-    val fs = IndexSidecar.fileSystem(spark, d)
+    val fs = fileSystem(spark, d)
     val tmp = new Path(d, s".${e.fileName}.${java.util.UUID.randomUUID}.tmp")
     val out = fs.create(tmp, false)
     try out.write(json(e).getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
@@ -133,7 +196,7 @@ object CommitLog {
 
   def delete(spark: SparkSession, storeDir: String, entries: Seq[LogEntry]): Unit = {
     val d = dir(storeDir)
-    val fs = IndexSidecar.fileSystem(spark, d)
+    val fs = fileSystem(spark, d)
     entries.foreach(e => fs.delete(new Path(d, e.fileName), false))
   }
 }

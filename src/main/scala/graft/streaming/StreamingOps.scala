@@ -108,29 +108,16 @@ object StreamingOps {
         IndexIngest.ingestBatch(batch, batchId, params, nBuckets, storeDir)
       }
       .start()
-
-  /** Per-key abundance state maintained incrementally: updates a running
-    * (fingerprint -> count) with saturation, emitting (fp, newCount) deltas.
-    */
-  def runningAbundance(fps: Dataset[Long], maxCount: Long = 255L): Dataset[(Long, Long)] = {
-    fps.groupByKey(identity)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (fp: Long, batch: Iterator[Long], state: GroupState[Long]) =>
-          val prev = state.getOption.getOrElse(0L)
-          val next = math.min(prev + batch.size, maxCount)
-          state.update(next)
-          Iterator.single((fp, next))
-      }
-  }
 }
 
 
-/** Store mechanics of [[StreamingOps.indexIngest]]: a flat parquet directory
-  * of shard rows (bucket, sketch, batch_id) and its commit log
-  * ([[graft.plans.CommitLog]], `_graft_log/`). Each batch adds files that
-  * hold its touched buckets' new shard versions and commits one log entry
-  * naming them. Readers fold the log on the driver into bucket -> (live
+/** The sharded index store, written by [[IndexIngest.build]] (checkpoint 0,
+  * the `build-index` verb) and [[StreamingOps.indexIngest]]: a flat parquet
+  * directory of shard rows (bucket, sketch, batch_id) and its commit log
+  * ([[graft.plans.CommitLog]], `_graft_log/`), the store's only metadata,
+  * whose every entry records the store's routing. Each batch adds files
+  * that hold its touched buckets' new shard versions and commits one log
+  * entry naming them. Readers fold the log on the driver into bucket -> (live
   * batch_id, file) and read exactly those files, so no access lists the
   * store or runs a metadata job, and a file no entry names (a crashed or
   * refused attempt's leftover) is never read. The max-batch_id row per
@@ -141,10 +128,11 @@ object StreamingOps {
   * [[IndexIngest.ingestBatch]] with your own increasing batch ids).
   */
 object IndexIngest {
-  import graft.plans.{BqfPipeline, CommitLog, IndexSidecar, LogEntry, LogState, LoggedFile, LoggedShard}
+  import graft.operators.BqfParams
+  import graft.plans.{BqfPipeline, CommitLog, LogEntry, LogState, LoggedFile, LoggedShard, Routing}
   import org.apache.hadoop.fs.Path
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
   private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
@@ -152,15 +140,17 @@ object IndexIngest {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The store's folded log; None for a store not written yet. A directory
-    * that holds data files but no log (a batch-built index, say) is refused.
+    * that holds data files but no log is refused: it is no index store, or
+    * one written before the log recorded the routing, which is not read.
     */
   private def log(spark: SparkSession, dir: String): Option[LogState] =
     CommitLog.read(spark, dir).orElse {
       val fs = fileSystem(spark, dir)
       val p = new Path(dir)
       require(!fs.exists(p) || fs.listStatus(p).forall(s => hidden(s.getPath.getName)),
-        s"$dir holds shard rows but no ${CommitLog.DirName}, so no batch_id of it is committed and it is " +
-          "not an ingest store; read a batch-built index directly, without currentShards or compact")
+        s"$dir holds data files but no ${CommitLog.DirName}, so no batch_id of it is committed and it is " +
+          "not an index store; a build-index store written before the log recorded its routing is not " +
+          "read: rebuild it with build-index")
       None
     }
 
@@ -259,13 +249,54 @@ object IndexIngest {
     }
   }
 
-  /** What one merge task of [[ingestBatch]] reports: the file it wrote
-    * (null when it wrote none), the file's bytes, per shard its bucket and
-    * the batch fingerprint rows merged into it, and the fingerprints it
+  /** What one write task of [[build]] or [[ingestBatch]] reports: the file
+    * it wrote (null when it wrote none), the file's bytes, per shard its
+    * bucket and the fingerprint rows merged into it, and the fingerprints it
     * received with no bucket (which no shard holds).
     */
   private[streaming] final case class Written(file: String, bytes: Long, buckets: Array[Long], rows: Array[Long],
                                               strays: Long)
+
+  /** Write one task's new shard versions of `batchId`, each with the
+    * fingerprint rows merged into it, to one file of the task's; its report.
+    */
+  private def writeTask(store: TaskStore, batchId: Long, shards: Iterator[(ShardFiles.Shard, Long)],
+                        strays: Long): Written = {
+    val buckets = Array.newBuilder[Long]
+    val rows = Array.newBuilder[Long]
+    val (name, bytes) = store.write(batchId, org.apache.spark.TaskContext.getPartitionId(),
+      shards.map { case (s, n) => buckets += s.bucket; rows += n; s })
+    Written(name, bytes, buckets.result(), rows.result(), strays)
+  }
+
+  /** Build a new store from the fingerprint arrays of `fpCol`: the sorted
+    * build of [[graft.plans.BqfPipeline.buildIndexSorted]], whose reduce
+    * tasks write its shards, the same bytes, each task to one file of its
+    * own. The driver commits them as checkpoint 0, with each shard's
+    * lineage (the fingerprint rows gathered, merge depth 1) and the
+    * routing; [[ingestBatch]] then takes ids above 0. A fingerprint above
+    * hashBits fails the build and commits nothing. A directory that holds a
+    * committed entry, or data files but no log, is refused.
+    */
+  def build(df: DataFrame, fpCol: Column, params: BqfParams, nBuckets: Int, storeDir: String): Unit = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    require(log(spark, storeDir).forall(_.entries.isEmpty), s"$storeDir already holds an index store")
+    CommitLog.create(spark, storeDir)
+    val store = TaskStore(spark, storeDir, LogState(Nil))
+    val written =
+      try writing(spark)(BqfPipeline.indexChunks(df, fpCol, params, nBuckets).mapPartitions { it =>
+        val shards = BqfPipeline.gatherChunks(it).map { case (bucket, fps, stored) =>
+          (ShardFiles.Shard(bucket, BqfPipeline.buildShard(bucket, fps, stored, params), 0L), fps.length.toLong)
+        }
+        if (shards.hasNext) Iterator.single(writeTask(store, 0L, shards, 0L)) else Iterator.empty
+      }.collect())
+      finally store.conf.destroy()
+    CommitLog.commit(spark, storeDir, LogEntry(0L, checkpoint = true, Routing(nBuckets, params),
+      written.toSeq.map(w => LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
+        LoggedShard(bucket, 0L, n, 1)
+      }.toSeq))))
+  }
 
   /** Delete what the newest checkpoint superseded: the data files only
     * earlier entries name, then those entries.
@@ -331,7 +362,7 @@ object IndexIngest {
             (name, bytes, buckets)
           }.collect())
           finally store.conf.destroy()
-        val checkpoint = LogEntry(lastId, checkpoint = true,
+        val checkpoint = LogEntry(lastId, checkpoint = true, state.routing.get,
           files.toSeq.map { case (name, bytes, buckets) => LoggedFile(name, bytes, buckets.map(state.live(_)._1)) })
         CommitLog.commit(spark, storeDir, checkpoint)
         LogState(state.entries :+ checkpoint)
@@ -342,10 +373,12 @@ object IndexIngest {
       .filterNot(n => hidden(n) || after.files(n)).foreach(n => fs.delete(new Path(storeDir, n), false))
   }
 
-  /** Merge one batch of fingerprints (column `fp`) into the store. Safe to
-    * replay: a batchId the log already holds returns at once, with no job
-    * and no write; a lower one that it does not hold is refused, because
-    * the live view is each bucket's highest batch_id.
+  /** Merge one batch of fingerprints (column `fp`) into the store. A batch
+    * under another routing than the log's entries record is refused with an
+    * IllegalArgumentException naming the fields. Safe to replay: a batchId
+    * the log already holds returns at once, with no job and no write; a
+    * lower one that it does not hold is refused, because the live view is
+    * each bucket's highest batch_id.
     *
     * One job of two stages. The map side chunks the batch by bucket
     * ([[graft.plans.BqfPipeline.fpChunks]]) and sends contiguous bucket
@@ -367,27 +400,20 @@ object IndexIngest {
     * failing the job with an error that names it; a failed batch returns
     * once none of its tasks is still writing ([[writing]]).
     */
-  def ingestBatch(batch: DataFrame, batchId: Long,
-                  params: graft.operators.BqfParams, nBuckets: Int,
+  def ingestBatch(batch: DataFrame, batchId: Long, params: BqfParams, nBuckets: Int,
                   storeDir: String): Unit = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
     import spark.implicits._
-    // An existing sidecar is a routing CONTRACT, not just documentation: a
-    // second ingest with a different nBuckets (or k/z/hash/seed) would
-    // silently append rows routed by a different shift — currentShards then
-    // mixes shard versions built under two routings and every query answers
-    // wrong/zero counts with no error. Refuse up front, mirroring the
-    // query-index sidecar conflict check.
-    val sidecar = IndexSidecar(nBuckets, params)
-    val stored = IndexSidecar.read(spark, storeDir)
-    stored.foreach { s =>
-      val conflicts = s.conflicts(sidecar)
-      require(conflicts.isEmpty,
-        s"ingestBatch routing conflicts with $storeDir's sidecar (${conflicts.mkString(", ")}); " +
-          "a mismatched ingest would corrupt the store silently")
-    }
+    val routing = Routing(nBuckets, params)
     val state = log(spark, storeDir).getOrElse { CommitLog.create(spark, storeDir); LogState(Nil) }
+    // The log's routing is the store's contract: a batch under another
+    // nBuckets (or q/c/hash/k/z/seed) would commit shard versions routed by
+    // another shift, and every query would answer wrong counts with no
+    // error. Refuse it before the replay guard.
+    val conflicts = state.routing.toSeq.flatMap(_.conflicts(routing))
+    require(conflicts.isEmpty, s"ingestBatch routing conflicts with $storeDir's log " +
+      s"(${conflicts.mkString(", ")}); a mismatched ingest would corrupt the store silently")
     if (state.committed(batchId)) return // replay: batchId already committed
     require(batchId > state.lastId,
       s"ingestBatch: batch $batchId arrives after batch ${state.lastId} of $storeDir; batch ids must increase")
@@ -410,12 +436,7 @@ object IndexIngest {
         LoggedShard(bucket, batchId, prev.fold(0L)(_.rowsConsumed) + n, prev.fold(0)(_.mergeDepth) + 1)
       }.toSeq)
     }
-    CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, files))
-    // same routing sidecar the CLI's build-index writes: it makes the
-    // ingest store directly queryable by `graft.Cli query-index` (which
-    // otherwise refuses to guess nBuckets) and guards against a future
-    // ingest with mismatched routing.
-    if (stored.isEmpty) IndexSidecar.write(spark, storeDir, sidecar)
+    CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, routing, files))
   }
 
   /** One merge task of [[ingestBatch]]: the batch's chunk rows of one
@@ -426,7 +447,7 @@ object IndexIngest {
     * version. Fingerprints with no bucket (chunk bucket -1) are counted,
     * not written: the driver refuses the batch.
     */
-  private def mergeRange(store: TaskStore, batchId: Long, params: graft.operators.BqfParams,
+  private def mergeRange(store: TaskStore, batchId: Long, params: BqfParams,
                          rows: Iterator[(Long, Array[Long])]): Iterator[Written] = {
     val (strays, chunks) = rows.map { case (bucket, fps) => (bucket, fps, null: Array[Long]) }.toVector
       .sortBy(_._1).partition(_._1 < 0)
@@ -434,11 +455,7 @@ object IndexIngest {
     if (chunks.isEmpty)
       return if (stray == 0) Iterator.empty else Iterator.single(Written(null, 0L, Array.empty, Array.empty, stray))
     val latest = store.readLive(chunks.map(_._1).distinct)
-    val buckets = Array.newBuilder[Long]
-    val counts = Array.newBuilder[Long]
     val shards = BqfPipeline.gatherChunks(chunks.iterator).map { case (bucket, fps, _) =>
-      buckets += bucket
-      counts += fps.length
       val partial = batchPartial(fps, params)
       val sketch = latest.get(bucket) match {
         case None => partial
@@ -450,10 +467,9 @@ object IndexIngest {
           if (live.distinctCount >= partial.distinctCount) live.mergeInPlace(partial)
           else partial.mergeInPlace(live)
       }
-      ShardFiles.Shard(bucket, sketch.serialize(), batchId)
+      (ShardFiles.Shard(bucket, sketch.serialize(), batchId), fps.length.toLong)
     }
-    val (name, bytes) = store.write(batchId, org.apache.spark.TaskContext.getPartitionId(), shards)
-    Iterator.single(Written(name, bytes, buckets.result(), counts.result(), stray))
+    Iterator.single(writeTask(store, batchId, shards, stray))
   }
 
   /** One bucket's batch partial: each distinct fingerprint stores the
@@ -461,7 +477,7 @@ object IndexIngest {
     * stores floor(log2) of the batch count, so batches combine by max of
     * their own counts). Sorts `fps` in place.
     */
-  private def batchPartial(fps: Array[Long], params: graft.operators.BqfParams): BackpackFilter = {
+  private def batchPartial(fps: Array[Long], params: BqfParams): BackpackFilter = {
     java.util.Arrays.sort(fps)
     val codec = params.fresh()
     val stored = new Array[Long](fps.length)
@@ -486,8 +502,8 @@ object IndexIngest {
   * Each committed batch is one commit-log entry, which carries every new
   * shard version's lineage (fingerprint rows consumed, merge depth), so a
   * killed run resumes where the log ends: the replay guard skips each
-  * committed id with no job. The store's routing sidecar records nBuckets
-  * and the sketch params, so a resume under others is refused.
+  * committed id with no job. Every entry records the store's routing
+  * (nBuckets and the sketch params), so a resume under others is refused.
   */
 object CheckpointedBuild {
   import graft.plans.{BqfPipeline, CommitLog}

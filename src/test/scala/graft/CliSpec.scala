@@ -243,7 +243,9 @@ class CliSpec extends AnyFunSuite {
     Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", s"$dir/shards.parquet",
       "-n", "16", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
     val shards = spark.read.parquet(s"$dir/shards.parquet")
-    assert(shards.count() > 0 && shards.columns.toSet == Set("bucket", "sketch"))
+    assert(shards.count() > 0 && shards.columns.toSet == Set("bucket", "sketch", "batch_id"))
+    assert(graft.plans.CommitLog.read(spark, s"$dir/shards.parquet").get.routing.contains(
+      graft.plans.Routing(16, graft.operators.BqfParams(qBits = 12, countBits = 16, kTokens = 8, zTokens = 2))))
     Cli.main(Array("query-index", "-b", s"$dir/shards.parquet", "-i", s"$dir/tokens.parquet",
       "-o", s"$dir/idxq.parquet", "-n", "16", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
     val got = spark.read.parquet(s"$dir/idxq.parquet").as[(Long, Long)].collect().toMap
@@ -265,22 +267,59 @@ class CliSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("conflict"), s"got: ${e2.getMessage}")
   }
 
-  test("query-index and ingestBatch reject a sidecar with a missing or an unknown field") {
+  test("a build-index store is an ingest store: its live shards, compact, ingestBatch and query-index") {
+    import graft.streaming.IndexIngest
+    val params = graft.operators.BqfParams(qBits = 12, countBits = 16, kTokens = 8, zTokens = 2)
+    val store = s"$dir/built_store"
+    Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", store,
+      "-n", "16", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
+    val tokens = spark.read.parquet(s"$dir/tokens.parquet")
+    val fps = sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed)
+    def rows(shards: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
+      shards.select("bucket", "sketch").as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toSeq }.toMap
+    // checkpoint 0: buildIndexSorted's bytes, each shard's lineage its rows gathered at depth 1
+    assert(rows(IndexIngest.currentShards(spark, store)) == rows(graft.plans.BqfPipeline.buildIndexSorted(tokens, fps, params, 16)))
+    val log = graft.plans.CommitLog.read(spark, store).get
+    assert(log.entries.map(_.fileName) == Seq("0.checkpoint.json"))
+    assert(log.live.values.map(_._1.rowsConsumed).sum == tokens.select(explode(fps)).count())
+    assert(log.live.values.forall { case (s, _) => s.batchId == 0L && s.mergeDepth == 1 })
+    // query-index takes the routing from the log: no -n
+    Cli.main(Array("query-index", "-b", store, "-i", s"$dir/tokens.parquet", "-o", s"$dir/built_q.parquet"))
+    val sgramCounts = tokens.select(explode(fps).as("fp")).groupBy("fp").count().as[(Long, Long)].collect().toMap
+    assert(spark.read.parquet(s"$dir/built_q.parquet").as[(Long, Long)].collect().toMap == sgramCounts)
+    // compact has nothing to fold: it commits nothing and changes no file
+    def listing(): Seq[(String, Long, Long)] = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(store), null, true).toArray(Array.empty[java.io.File])
+      .map(f => (f.getPath, f.length, f.lastModified)).toSeq.sorted
+    val before = listing()
+    IndexIngest.compact(spark, store)
+    assert(listing() == before && graft.plans.CommitLog.read(spark, store).get == log)
+    // batch 1 merges into checkpoint 0's shards with exact counts
+    val extra = sgramCounts.keys.take(200).toSeq ++ Seq.tabulate(300)(i => graft.core.Fingerprint.splitmix64(i) >>> 16)
+    IndexIngest.ingestBatch(extra.toDF("fp"), 1L, params, 16, store)
+    val want = extra.foldLeft(sgramCounts)((m, fp) => m.updated(fp, m.getOrElse(fp, 0L) + 1))
+    assert(graft.plans.BqfPipeline.enumerateIndex(IndexIngest.currentShards(spark, store)).as[(Long, Long)].collect().toMap == want)
+  }
+
+  test("query-index and ingestBatch reject a log entry with a missing or an unknown routing field") {
     val params = graft.operators.BqfParams(qBits = 12, countBits = 16, hashBits = 48, kTokens = 8, zTokens = 2)
-    Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", s"$dir/sidecar_idx",
+    Cli.main(Array("build-index", "-i", s"$dir/tokens.parquet", "-o", s"$dir/routing_idx",
       "-n", "8", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
-    val ingestStore = s"$dir/sidecar_ingest"
+    val ingestStore = s"$dir/routing_ingest"
     graft.streaming.IndexIngest.ingestBatch(Seq(1L, 2L, 3L).toDF("fp"), 0L, params, 8, ingestStore)
-    val good = graft.plans.IndexSidecar(8, params).json
-    val bad = Seq(
-      "missing" -> good.replace(""","seed":0""", ""),
-      "unknown" -> good.replace("}", ""","extra":1}"""))
-    for ((label, text) <- bad) {
-      for (store <- Seq(s"$dir/sidecar_idx", ingestStore))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(store, "_graft_index.json"), text)
+    // each store's one entry: build-index's checkpoint 0, the ingest's batch 0
+    val entries = Seq(s"$dir/routing_idx" -> "0.checkpoint.json", ingestStore -> "0.json")
+      .map { case (store, name) => java.nio.file.Paths.get(store, "_graft_log", name) }
+    val good = entries.map(java.nio.file.Files.readString)
+    assert(good.forall(_.contains(""""routing":""" + graft.plans.Routing(8, params).json)), good.mkString("\n"))
+    val bad = Seq[(String, String => String)](
+      "missing" -> (_.replace(""","seed":0""", "")),
+      "unknown" -> (_.replace(""""seed":0}""", """"seed":0,"extra":1}""")))
+    for ((label, edit) <- bad) {
+      for ((path, text) <- entries.zip(good)) java.nio.file.Files.writeString(path, edit(text))
       val eq = intercept[IllegalArgumentException] {
-        Cli.main(Array("query-index", "-b", s"$dir/sidecar_idx", "-i", s"$dir/tokens.parquet",
-          "-o", s"$dir/sidecar_q_$label", "-n", "8", "-k", "8", "-z", "2"))
+        Cli.main(Array("query-index", "-b", s"$dir/routing_idx", "-i", s"$dir/tokens.parquet",
+          "-o", s"$dir/routing_q_$label", "-n", "8", "-k", "8", "-z", "2"))
       }
       assert(eq.getMessage.contains(label), s"query-index, $label field: ${eq.getMessage}")
       val ei = intercept[IllegalArgumentException] {

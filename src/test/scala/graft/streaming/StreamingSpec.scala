@@ -32,6 +32,10 @@ class StreamingSpec extends AnyFunSuite {
   private def exact(fps: Seq[Long]): Map[Long, Long] =
     fps.groupBy(identity).map { case (fp, occ) => fp -> occ.size.toLong }
 
+  /** The routing the store's log records. */
+  private def routing(store: String): Option[graft.plans.Routing] =
+    graft.plans.CommitLog.read(spark, store).flatMap(_.routing)
+
   private def copyDir(from: String, to: String): Unit =
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(from), new java.io.File(to))
 
@@ -178,9 +182,10 @@ class StreamingSpec extends AnyFunSuite {
     val want = all.groupBy(identity).map { case (fp, occ) => fp -> occ.size.toLong }
     assert(got == want, s"index diverged: ${got.size} entries vs ${want.size}")
 
-    // ingest writes the same routing sidecar as Cli build-index, so the
-    // store is directly consumable by query-index
-    assert(new java.io.File(store, "_graft_index.json").exists, "ingest store missing sidecar")
+    // every entry of the log records the routing, so the store is directly
+    // consumable by query-index
+    val wantRouting = Some(graft.plans.Routing(nBuckets, params))
+    assert(routing(store) == wantRouting, "ingest store's log lacks its routing")
 
     // the raw store is multi-version (one row per touched bucket per
     // batch): queryIndex must REFUSE it rather than answer from an
@@ -223,8 +228,8 @@ class StreamingSpec extends AnyFunSuite {
         IndexIngest.currentShards(spark, store))
       .as[(Long, Long)].collect().toMap
     assert(gotAfter == want)
-    // the routing sidecar survives the compaction rewrite
-    assert(new java.io.File(store, "_graft_index.json").exists, "compact dropped the sidecar")
+    // the log's routing survives the compaction rewrite
+    assert(routing(store) == wantRouting, "compact dropped the routing")
 
     // crash after compact's checkpoint commit, before its clean-up: the
     // checkpoint and its files plus every superseded entry and file, put
@@ -242,7 +247,7 @@ class StreamingSpec extends AnyFunSuite {
     val log = graft.plans.CommitLog.read(spark, store).get
     assert(log.entries.size == 2 && log.superseded.isEmpty, s"entries left: ${log.entries.map(_.fileName)}")
     assert(counts(store) == exact(all ++ extra))
-    assert(new java.io.File(store, "_graft_index.json").exists, "recovery dropped the sidecar")
+    assert(routing(store) == wantRouting, "recovery dropped the routing")
   }
 
   test("ingestBatch refuses mismatched routing params; crash leftovers never enter the live view") {
@@ -250,10 +255,16 @@ class StreamingSpec extends AnyFunSuite {
     val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
     val nBuckets = 8
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sidecar").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-routing").toString
     val store = s"$tmp/store"
     val fps = (1L to 300L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
     IndexIngest.ingestBatch(fps.toDF("fp"), batchId = 0L, params, nBuckets, store)
+    // the routing commits with the entry: the store holds nothing outside
+    // its log and its data files (with their checksum files), so no crash
+    // after the commit can leave the store without its routing
+    val logged = graft.plans.CommitLog.read(spark, store).get.files
+    val outside = new java.io.File(store).list().toSet -- logged -- logged.map(n => s".$n.crc") - "_graft_log"
+    assert(outside.isEmpty, s"files outside the log and its data files: ${outside.mkString(", ")}")
 
     // a second ingest with different routing must REFUSE (silent append
     // under a different shift would corrupt every future query)
@@ -317,6 +328,21 @@ class StreamingSpec extends AnyFunSuite {
     val late = intercept[IllegalArgumentException](ingest(b3, 7L))
     assert(late.getMessage.contains("must increase"), late.getMessage)
     assert(counts(store) == exact(b0 ++ b1 ++ b2 ++ b3 ++ b3))
+    // a log whose entries disagree on the routing is refused, naming them
+    val entry9 = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "_graft_log", "9.json"))
+    val entry11 = java.nio.file.Paths.get(store, "_graft_log", "11.json")
+    java.nio.file.Files.writeString(entry11,
+      entry9.replace(""""batch_id":9,""", """"batch_id":11,""").replace(""""nBuckets":8""", """"nBuckets":16"""))
+    val split = intercept[IllegalArgumentException](IndexIngest.currentShards(spark, store))
+    assert(split.getMessage.contains("9.json") && split.getMessage.contains("11.json") &&
+      split.getMessage.contains(""""nBuckets":16"""), split.getMessage)
+    // an entry without a routing record (a store written before the log
+    // recorded it) is refused, not migrated
+    java.nio.file.Files.writeString(entry11,
+      entry9.replace(""""batch_id":9,""", """"batch_id":11,""").replaceFirst(""""routing":\{[^}]*\},""", ""))
+    val old = intercept[IllegalArgumentException](IndexIngest.currentShards(spark, store))
+    assert(old.getMessage.contains("11.json lacks field routing"), old.getMessage)
+    java.nio.file.Files.delete(entry11)
     // a malformed entry is refused, not skipped
     java.nio.file.Files.writeString(java.nio.file.Paths.get(store, "_graft_log", "10.json"), """{"batch_id":10}""")
     val bad = intercept[IllegalArgumentException](IndexIngest.currentShards(spark, store))
@@ -391,20 +417,19 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Run `f`; the executed plan of every query it ran. The listener bus is
-    * asynchronous, so a marker query runs after `f`: its plan is delivered
-    * after every plan of `f`.
+    * asynchronous, so a marker query runs before `f` and another after it:
+    * a query that ended before `f` began is delivered before the first, and
+    * every plan of `f` before the second.
     */
   private def plansOf(f: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.QueryExecution
-    val marker = "graft_plan_marker"
     val runs = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.put(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = runs.put(qe)
     }
-    spark.listenerManager.register(listener)
-    try {
-      f
+    /** The plans delivered before the marker query `marker`. */
+    def until(marker: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
       spark.range(1).toDF(marker).collect()
       val plans = Seq.newBuilder[org.apache.spark.sql.execution.SparkPlan]
       var qe = runs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
@@ -412,8 +437,14 @@ class StreamingSpec extends AnyFunSuite {
         plans += qe.executedPlan
         qe = runs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       }
-      assert(qe != null, "the marker query never reached the listener")
+      assert(qe != null, s"the marker query $marker never reached the listener")
       plans.result()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      until("graft_plan_start")
+      f
+      until("graft_plan_marker")
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -605,7 +636,8 @@ class StreamingSpec extends AnyFunSuite {
         graft.plans.LoggedShard(b, 0L, b0.count(fp => (fp >>> shift) == b).toLong, 1)))
     }
     graft.plans.CommitLog.create(spark, store)
-    graft.plans.CommitLog.commit(spark, store, graft.plans.LogEntry(0L, checkpoint = false, logged))
+    graft.plans.CommitLog.commit(spark, store, graft.plans.LogEntry(0L, checkpoint = false,
+      graft.plans.Routing(nBuckets, params), logged))
     assert(counts(store) == exact(b0))
     IndexIngest.ingestBatch(b1.toDF("fp"), 1L, params, nBuckets, store)
     val written = dataFiles(store) -- sparkFiles
@@ -689,8 +721,9 @@ class StreamingSpec extends AnyFunSuite {
     val params = graft.operators.BqfParams(qBits = 10, countBits = 8, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
     val tmp = java.nio.file.Files.createTempDirectory("graft-misuse").toString
-    // a batch-built index has no batch_id column: read with the fixed store
-    // schema its ids are null, and every live-view entry point refuses it
+    // a store written before build-index wrote a log (buildIndexSorted's
+    // rows through Spark's writer, no batch_id column, no _graft_log):
+    // every live-view entry point refuses it
     val built = s"$tmp/built"
     val fps = (1L to 500L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
     graft.plans.BqfPipeline.buildIndexSorted(Seq(fps.toArray).toDF("fps"), col("fps"), params, 8)
