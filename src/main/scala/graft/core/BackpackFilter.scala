@@ -826,7 +826,7 @@ final class BackpackFilter(
   def resize(n: Int): Unit = {
     if (n <= 0) return
     require(hashBits - (qBits + n) >= 1, s"cannot resize: remainder would vanish (q=$qBits n=$n hash=$hashBits)")
-    adopt(BackpackFilter.mergeAtLeast(Seq(this), qBits + n))
+    adopt(BackpackFilter.mergeAtLeast(Seq(this), qBits + n, 1))
   }
 
   /** Take over another (parameter-compatible) filter's state. */
@@ -994,10 +994,12 @@ object BackpackFilter {
     (rem << q) | quot
   }
 
-  /** Stable LSD radix sort of `keys` by their bits [lowBit, highBit)
+  /** Stable LSD radix sort of keys[from, to) by their bits [lowBit, highBit)
     * (unsigned order), carrying `vals` along unless it is null —
     * O(n * (highBit - lowBit)/12), no recursion, immune to adversarial
-    * orders. The keys-only form (`vals == null`) serves the all-ones build
+    * orders. The passes ping-pong through the same range of `tmpK`/`tmpV`,
+    * which they overwrite, and the result ends in `keys`/`vals`. The
+    * keys-only form (`vals == null`) serves the all-ones build
     * path: carrying a value array of uniform ones through every pass would
     * double the sort's memory traffic, and shard builds are bound by
     * memory bandwidth. 12-bit digits measured ~30% faster than 8-bit on
@@ -1005,32 +1007,35 @@ object BackpackFilter {
     * 4096-entry histogram still lives in L1/L2, unlike 16-bit digits which
     * thrash the TLB with 65k write streams).
     */
-  private def radixSort(keys: Array[Long], vals: Array[Long], n: Int, lowBit: Int, highBit: Int): Unit = {
-    if (n <= 1) return
+  private def radixSort(keys: Array[Long], vals: Array[Long], tmpK: Array[Long], tmpV: Array[Long],
+                        from: Int, to: Int, lowBit: Int, highBit: Int): Unit = {
+    if (to - from <= 1) return
     // at most 12-bit digits, balanced: 20 quotient bits sort in two
     // 10-bit passes, not a 12-bit and an 8-bit one
     val passes = (highBit - lowBit + 11) / 12
     val digit = (highBit - lowBit + passes - 1) / passes
     val buckets = 1 << digit
     val mask = (buckets - 1).toLong
-    var srcK = keys; var dstK = new Array[Long](n)
-    var srcV = vals; var dstV = if (vals == null) null else new Array[Long](n)
+    var srcK = keys; var dstK = tmpK
+    var srcV = vals; var dstV = tmpV
+    val count = new Array[Int](buckets + 1)
     var pass = 0
     while (pass < passes) {
       val shift = lowBit + pass * digit
-      val count = new Array[Int](buckets + 1)
-      var i = 0
-      while (i < n) { count((((srcK(i) >>> shift) & mask) + 1).toInt) += 1; i += 1 }
+      java.util.Arrays.fill(count, 0)
+      var i = from
+      while (i < to) { count((((srcK(i) >>> shift) & mask) + 1).toInt) += 1; i += 1 }
+      count(0) = from
       i = 1
       while (i <= buckets) { count(i) += count(i - 1); i += 1 }
-      i = 0
-      if (vals == null) while (i < n) {
+      i = from
+      if (vals == null) while (i < to) {
         val b = ((srcK(i) >>> shift) & mask).toInt
         val at = count(b)
         dstK(at) = srcK(i)
         count(b) = at + 1
         i += 1
-      } else while (i < n) {
+      } else while (i < to) {
         val b = ((srcK(i) >>> shift) & mask).toInt
         val at = count(b)
         dstK(at) = srcK(i)
@@ -1043,29 +1048,29 @@ object BackpackFilter {
       pass += 1
     }
     if (srcK ne keys) {
-      System.arraycopy(srcK, 0, keys, 0, n)
-      if (vals != null) System.arraycopy(srcV, 0, vals, 0, n)
+      System.arraycopy(srcK, from, keys, from, to - from)
+      if (vals != null) System.arraycopy(srcV, from, vals, from, to - from)
     }
   }
 
-  /** Finish a merge's sort after [[radixSort]] over the quotient bits
-    * alone: each input enumerates in its own layout order with a quotient
-    * no wider than the target's, so the stable pass leaves every quotient
-    * group a concatenation of ascending runs, one per input. Groups already
-    * ascending stay as they are; the rest take a merge sort, O(m log m) for
-    * a group of m — so even input where every entry shares one quotient
-    * sorts in O(n log n). Keys of one group share their top bits, so
-    * signed comparison orders them as unsigned.
+  /** Finish a merge's sort of keys[from, to) after [[radixSort]] over the
+    * quotient bits alone: each input enumerates in its own layout order with
+    * a quotient no wider than the target's, so the stable pass leaves every
+    * quotient group a concatenation of ascending runs, one per input. Groups
+    * already ascending stay as they are; the rest take a merge sort,
+    * O(m log m) for a group of m — so even input where every entry shares
+    * one quotient sorts in O(n log n). Keys of one group share their top
+    * bits, so signed comparison orders them as unsigned.
     */
-  private def sortGroups(keys: Array[Long], vals: Array[Long], n: Int, remShift: Int): Unit = {
+  private def sortGroups(keys: Array[Long], vals: Array[Long], from: Int, to: Int, remShift: Int): Unit = {
     var tmpK: Array[Long] = null
     var tmpV: Array[Long] = null
-    var i = 0
-    while (i < n) {
+    var i = from
+    while (i < to) {
       val quot = keys(i) >>> remShift
       var ascending = true
       var j = i + 1
-      while (j < n && (keys(j) >>> remShift) == quot) {
+      while (j < to && (keys(j) >>> remShift) == quot) {
         if (keys(j) < keys(j - 1)) ascending = false
         j += 1
       }
@@ -1109,6 +1114,23 @@ object BackpackFilter {
   private def sortQuotient(floorQ: Int, n: Long, hashBits: Int): Int =
     math.max(floorQ, math.min(tightQBits(n), hashBits - 1))
 
+  /** Run `body(0)` .. `body(n - 1)`: inline for one, else the rest on the
+    * common fork-join pool while the caller runs `body(0)`. Returns once
+    * every one has ended, rethrowing a failure.
+    */
+  private def inParallel(n: Int)(body: Int => Unit): Unit =
+    if (n == 1) body(0)
+    else {
+      val rest = (1 until n).map(k => java.util.concurrent.ForkJoinTask.adapt(new Runnable {
+        def run(): Unit = body(k)
+      }).fork())
+      try body(0) finally rest.foreach(_.quietlyJoin())
+      rest.foreach(_.join())
+    }
+
+  /** Start of chunk `c` when [0, n) is cut into `chunks` even chunks. */
+  @inline private def cut(c: Int, chunks: Int, n: Int): Int = (c.toLong * n / chunks).toInt
+
   /** Bulk-build a filter from (fingerprint, storedCount) entry arrays in a
     * single sequential pass — the one construction path behind every built
     * sketch (shard builds, UDAF buffers, merge, resize). The RSQF layout is
@@ -1138,13 +1160,22 @@ object BackpackFilter {
     */
   def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
                   kTokens: Int, zTokens: Int, seed: Long,
-                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter = {
+                  fps: Array[Long], counts: Array[Long], n0: Int): BackpackFilter =
+    fromEntries(qBits, countBits, hashBits, mode, kTokens, zTokens, seed, fps, counts, n0, 1)
+
+  /** [[fromEntries]] built in up to `partitions` parallel parts ([[build]]):
+    * the same bytes for every count.
+    */
+  private[graft] def fromEntries(qBits: Int, countBits: Int, hashBits: Int, mode: CountMode,
+                                 kTokens: Int, zTokens: Int, seed: Long,
+                                 fps: Array[Long], counts: Array[Long], n0: Int,
+                                 partitions: Int): BackpackFilter = {
     val sortQ = sortQuotient(qBits, n0, hashBits)
     val keys = new Array[Long](n0)
     var i = 0
     while (i < n0) { keys(i) = rotKey(fps(i) & maskRight(hashBits), sortQ, hashBits); i += 1 }
     build(qBits, sortQ, countBits, hashBits, mode, kTokens, zTokens, seed,
-      keys, if (counts == null) null else java.util.Arrays.copyOf(counts, n0), n0, grouped = false)
+      keys, if (counts == null) null else java.util.Arrays.copyOf(counts, n0), n0, grouped = false, partitions)
   }
 
   /** The build behind [[fromEntries]] and [[mergeAll]]. `keys` holds the
@@ -1153,51 +1184,76 @@ object BackpackFilter {
     * `grouped`: the entries are layout-order enumerations of filters whose
     * quotients are at most `sortQ`, so sorting by the quotient bits and
     * then the out-of-order groups ([[sortGroups]]) sorts them in full.
+    *
+    * Parts: the table is laid out in quotient order, so a quotient range
+    * owns a contiguous range of 64-slot blocks. The entries split by the
+    * top bits of their sort quotient into up to `partitions` parts (a power
+    * of two, each at least one block of quotients), and every part is
+    * sorted, deduplicated and grouped into runs on its own, in parallel.
+    * Run placement stays one sequential pass: a prefix over the runs that
+    * carries each run's end into the next, and wraps the last runs past the
+    * table's end (the toric seam) onto its first slots. Then each part
+    * writes every word of its own block range ([[writeSlots]]), the runs
+    * that spill into it from earlier parts and the wrapped tail included.
+    * Every part count gives the same bytes.
     */
   private def build(floorQ: Int, sortQ: Int, countBits: Int, hashBits: Int, mode: CountMode,
                     kTokens: Int, zTokens: Int, seed: Long,
-                    keys: Array[Long], vals0: Array[Long], n0: Int, grouped: Boolean): BackpackFilter = {
-    // 1. sort by physical layout order
+                    keys0: Array[Long], vals0: Array[Long], n0: Int, grouped: Boolean,
+                    partitions: Int): BackpackFilter = {
     val allOnes = vals0 == null
-    if (grouped) {
-      radixSort(keys, vals0, n0, hashBits - sortQ, hashBits)
-      sortGroups(keys, vals0, n0, hashBits - sortQ)
-    } else radixSort(keys, vals0, n0, 0, hashBits)
-    val vals = if (allOnes) new Array[Long](n0) else vals0
+    val pBits = math.min(31 - Integer.numberOfLeadingZeros(partitions), sortQ - 6)
+    val nParts = 1 << pBits
+    val topBit = hashBits - pBits // the bits at and above it pick the part
 
-    // 2. combine duplicate fingerprints
-    val cMax = (1L << countBits) - 1
-    val one = mode match { // encodeCount(1)
-      case CountMode.Exact            => 1L
-      case CountMode.OrderOfMagnitude => 0L
+    // 1. split into parts, part k in [bounds(k), bounds(k + 1)); the sort's
+    //    scratch is the split's source, or fresh arrays when nothing splits
+    val bounds = new Array[Int](nParts + 1)
+    bounds(nParts) = n0
+    val keys = if (nParts == 1) keys0 else new Array[Long](n0)
+    val sortV = if (nParts == 1 || allOnes) vals0 else new Array[Long](n0)
+    if (nParts > 1) split(keys0, vals0, keys, sortV, n0, topBit, bounds)
+    val tmpK = if (nParts == 1) new Array[Long](n0) else keys0
+    val tmpV = if (allOnes) null else if (nParts == 1) new Array[Long](n0) else vals0
+    val vals = if (allOnes) new Array[Long](n0) else sortV
+
+    // 2. per part: sort by physical layout order, combine duplicate
+    //    fingerprints, count the runs at the sort quotient
+    val nIn = new Array[Int](nParts)
+    val runsIn = new Array[Int](nParts)
+    inParallel(nParts) { k =>
+      val from = bounds(k)
+      val to = bounds(k + 1)
+      if (grouped) {
+        radixSort(keys, sortV, tmpK, tmpV, from, to, hashBits - sortQ, topBit)
+        sortGroups(keys, sortV, from, to, hashBits - sortQ)
+      } else radixSort(keys, sortV, tmpK, tmpV, from, to, 0, topBit)
+      nIn(k) = combine(keys, sortV, vals, from, to, countBits, mode)
+      runsIn(k) = countRuns(keys, from, from + nIn(k), hashBits - sortQ)
     }
-    var w = 0
-    var i = 0
-    while (i < n0) {
-      var c = if (allOnes) one else vals(i)
-      var j = i + 1
-      while (j < n0 && keys(j) == keys(i)) {
-        val cj = if (allOnes) one else vals(j)
-        c = mode match {
-          case CountMode.Exact            => math.min(c + cj, cMax)
-          case CountMode.OrderOfMagnitude => math.max(c, cj)
-        }
-        j += 1
-      }
-      keys(w) = keys(i); vals(w) = math.min(c, cMax); w += 1
-      i = j
-    }
-    val n = w
+    val n = nIn.sum
     // smallest q >= floorQ with n < 0.95 * 2^q — exactly where incremental
     // insertion's resize trigger (nDistinct + 1 >= sizeLimit) lands
     var q = floorQ
     while ((((1L << q) * 0.95).toLong) <= n) q += 1
     require(hashBits - q >= 1, s"entries exceed hash space (n=$n hashBits=$hashBits)")
     if (q != sortQ) {
-      // quotient width changed: keys must be re-rotated; re-sort once
-      i = 0
+      // quotient width changed: gather the parts, re-rotate the keys and
+      // re-sort once
+      var at = 0
+      var k = 0
+      while (k < nParts) {
+        if (bounds(k) != at) {
+          System.arraycopy(keys, bounds(k), keys, at, nIn(k))
+          System.arraycopy(vals, bounds(k), vals, at, nIn(k))
+        }
+        at += nIn(k)
+        k += 1
+      }
+      var i = 0
       while (i < n) { keys(i) = rotKey(unrotate(keys(i), sortQ, hashBits), q, hashBits); i += 1 }
-      return build(q, q, countBits, hashBits, mode, kTokens, zTokens, seed, keys, vals, n, grouped = false)
+      return build(q, q, countBits, hashBits, mode, kTokens, zTokens, seed, keys, vals, n, grouped = false,
+        partitions)
     }
 
     val f = new BackpackFilter(q, countBits, hashBits, mode, kTokens, zTokens, seed)
@@ -1205,28 +1261,27 @@ object BackpackFilter {
     val numSlots = 1L << q
     val remShift = hashBits - q
 
-    // 3. group into runs (consecutive equal quotients)
-    var nRuns = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      val quot = keys(i) >>> remShift
-      while (j < n && (keys(j) >>> remShift) == quot) j += 1
-      nRuns += 1
-      i = j
-    }
+    // 3. group into runs (consecutive equal quotients); part k fills the
+    //    run slots [runStart(k), runStart(k + 1))
+    val runStart = new Array[Int](nParts + 1)
+    var k = 0
+    while (k < nParts) { runStart(k + 1) = runStart(k) + runsIn(k); k += 1 }
+    val nRuns = runStart(nParts)
     val runQuot = new Array[Long](nRuns)
     val runFrom = new Array[Int](nRuns)
     val runLen = new Array[Int](nRuns)
-    var r = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      val quot = keys(i) >>> remShift
-      while (j < n && (keys(j) >>> remShift) == quot) j += 1
-      runQuot(r) = quot; runFrom(r) = i; runLen(r) = j - i
-      r += 1
-      i = j
+    inParallel(nParts) { k =>
+      var r = runStart(k)
+      var i = bounds(k)
+      val end = bounds(k) + nIn(k)
+      while (i < end) {
+        var j = i + 1
+        val quot = keys(i) >>> remShift
+        while (j < end && (keys(j) >>> remShift) == quot) j += 1
+        runQuot(r) = quot; runFrom(r) = i; runLen(r) = j - i
+        r += 1
+        i = j
+      }
     }
 
     // 4. leftmost-feasible placement in linear coordinates, iterated until
@@ -1237,7 +1292,7 @@ object BackpackFilter {
     var guard = 0
     while (!stable) {
       var nextFree = carry
-      r = 0
+      var r = 0
       while (r < nRuns) {
         runPos(r) = math.max(runQuot(r), nextFree)
         nextFree = runPos(r) + runLen(r)
@@ -1251,41 +1306,156 @@ object BackpackFilter {
     }
     require(carry < runQuot(0) + numSlots, "placement overflow") // sanity at <95% load
 
-    // 5. write slots + metadata
-    r = 0
-    while (r < nRuns) {
-      val quot = runQuot(r)
-      val p = runPos(r)
-      val e = p + runLen(r) - 1
-      f.setOccBit(quot >>> 6, (quot & 63L).toInt, 1L)
-      val endSlot = e & (numSlots - 1)
-      f.setRunBit(endSlot >>> 6, (endSlot & 63L).toInt, 1L)
-      var k = 0
-      while (k < runLen(r)) {
-        val key = keys(runFrom(r) + k)
-        val rem = key & maskRight(remShift)
-        val slot = (p + k) & (numSlots - 1)
-        setBits(f.table, f.slotBitPos(slot), (rem << countBits) | vals(runFrom(r) + k), f.slotBits)
-        k += 1
-      }
-      // offsets: every 64-aligned linear position s in [quot, e] records how
-      // far the last run whose quotient precedes s (in circular cluster
-      // order) spills past s. All candidate runs for one boundary belong to
-      // the same cluster and their ends increase along cluster order, so the
-      // max spill is exactly the last such run — this also resolves the
-      // toric seam, where wrapped tail runs and front runs write the same
-      // block-0 boundary from different linear frames.
-      var s = (quot + 63L) & ~63L
-      while (s <= e) {
-        val block = (s & (numSlots - 1)) >>> 6
-        val spill = e - s + 1
-        if (spill > f.offsetAt(block)) f.setOffsetAt(block, spill)
-        s += 64
-      }
-      r += 1
-    }
+    // 5. write slots + metadata, each part its own blocks
+    val span = numSlots / nParts
+    inParallel(nParts)(k => writeSlots(f, k * span, (k + 1) * span, keys, vals, runQuot, runFrom, runLen, runPos))
     f.nDistinct = n
     f
+  }
+
+  /** Scatter keys[0, n) (and `vals`, unless null) stably into `toK`/`toV` by
+    * their bits at and above `topBit`, one part per value of those bits,
+    * writing each part's start into `bounds`. The input is cut into one
+    * chunk per part; the chunks are counted, then scattered, in parallel.
+    */
+  private def split(keys: Array[Long], vals: Array[Long], toK: Array[Long], toV: Array[Long],
+                    n: Int, topBit: Int, bounds: Array[Int]): Unit = {
+    val parts = bounds.length - 1
+    val next = Array.ofDim[Int](parts, parts) // chunk, part
+    inParallel(parts) { c =>
+      val h = next(c)
+      var i = cut(c, parts, n)
+      val end = cut(c + 1, parts, n)
+      while (i < end) { h((keys(i) >>> topBit).toInt) += 1; i += 1 }
+    }
+    // a part holds its chunks in chunk order
+    var at = 0
+    var k = 0
+    while (k < parts) {
+      bounds(k) = at
+      var c = 0
+      while (c < parts) { val m = next(c)(k); next(c)(k) = at; at += m; c += 1 }
+      k += 1
+    }
+    inParallel(parts) { c =>
+      val h = next(c)
+      var i = cut(c, parts, n)
+      val end = cut(c + 1, parts, n)
+      if (vals == null) while (i < end) {
+        val k = (keys(i) >>> topBit).toInt
+        toK(h(k)) = keys(i)
+        h(k) += 1
+        i += 1
+      } else while (i < end) {
+        val k = (keys(i) >>> topBit).toInt
+        toK(h(k)) = keys(i)
+        toV(h(k)) = vals(i)
+        h(k) += 1
+        i += 1
+      }
+    }
+  }
+
+  /** Fold the duplicate keys of the sorted keys[from, to) into the front of
+    * the range, with their stored counts (`in`, null: all ones) combined
+    * into `out`; the number of distinct keys.
+    */
+  private def combine(keys: Array[Long], in: Array[Long], out: Array[Long], from: Int, to: Int,
+                      countBits: Int, mode: CountMode): Int = {
+    val cMax = (1L << countBits) - 1
+    val one = mode match { // encodeCount(1)
+      case CountMode.Exact            => 1L
+      case CountMode.OrderOfMagnitude => 0L
+    }
+    var w = from
+    var i = from
+    while (i < to) {
+      var c = if (in == null) one else in(i)
+      var j = i + 1
+      while (j < to && keys(j) == keys(i)) {
+        val cj = if (in == null) one else in(j)
+        c = mode match {
+          case CountMode.Exact            => math.min(c + cj, cMax)
+          case CountMode.OrderOfMagnitude => math.max(c, cj)
+        }
+        j += 1
+      }
+      keys(w) = keys(i); out(w) = math.min(c, cMax); w += 1
+      i = j
+    }
+    w - from
+  }
+
+  /** Distinct quotients (keys >>> remShift) of the sorted keys[from, to). */
+  private def countRuns(keys: Array[Long], from: Int, to: Int, remShift: Int): Int = {
+    var runs = 0
+    var i = from
+    while (i < to) {
+      val quot = keys(i) >>> remShift
+      var j = i + 1
+      while (j < to && (keys(j) >>> remShift) == quot) j += 1
+      runs += 1
+      i = j
+    }
+    runs
+  }
+
+  /** Step 5 of [[build]] for the physical slots [lo, hi), a block range:
+    * every word of those blocks, written from the runs whose span [quot, e]
+    * (quotient to last slot, in linear coordinates) meets [lo, hi) or, past
+    * the toric seam, [numSlots + lo, numSlots + hi). Run ends grow with the
+    * run index, so the first such run is a binary search.
+    *
+    * Offsets: every 64-aligned linear position s in [quot, e] records how
+    * far the last run whose quotient precedes s (in circular cluster
+    * order) spills past s. All candidate runs for one boundary belong to
+    * the same cluster and their ends increase along cluster order, so the
+    * max spill is exactly the last such run — this also resolves the toric
+    * seam, where wrapped tail runs and front runs write the same block-0
+    * boundary from different linear frames.
+    */
+  private def writeSlots(f: BackpackFilter, lo: Long, hi: Long, keys: Array[Long], vals: Array[Long],
+                         runQuot: Array[Long], runFrom: Array[Int], runLen: Array[Int],
+                         runPos: Array[Long]): Unit = {
+    val numSlots = f.numSlots
+    val slotMask = numSlots - 1
+    val remMask = maskRight(f.hashBits - f.qBits)
+    val nRuns = runQuot.length
+    var frame = 0L
+    while (frame <= numSlots) {
+      val a = frame + lo
+      val b = frame + hi
+      var r = 0
+      var top = nRuns
+      while (r < top) {
+        val mid = (r + top) >>> 1
+        if (runPos(mid) + runLen(mid) - 1 >= a) top = mid else r = mid + 1
+      }
+      while (r < nRuns && runQuot(r) < b) {
+        val quot = runQuot(r)
+        val p = runPos(r)
+        val e = p + runLen(r) - 1
+        if (quot >= a) f.setOccBit(quot >>> 6, (quot & 63L).toInt, 1L)
+        if (e < b) f.setRunBit((e & slotMask) >>> 6, (e & 63L).toInt, 1L)
+        val last = math.min(e, b - 1)
+        var pos = math.max(p, a)
+        var i = runFrom(r) + (pos - p).toInt
+        while (pos <= last) {
+          setBits(f.table, f.slotBitPos(pos & slotMask), ((keys(i) & remMask) << f.countBits) | vals(i), f.slotBits)
+          pos += 1
+          i += 1
+        }
+        var s = math.max((quot + 63L) & ~63L, a)
+        while (s <= last) {
+          val block = (s & slotMask) >>> 6
+          val spill = e - s + 1
+          if (spill > f.offsetAt(block)) f.setOffsetAt(block, spill)
+          s += 64
+        }
+        r += 1
+      }
+      frame += numSlots
+    }
   }
 
   /** Merge many filters into a fresh one via the bulk path: O(total) gather
@@ -1300,35 +1470,66 @@ object BackpackFilter {
     * sort is a radix over the quotient bits only plus a merge sort of the
     * quotient groups whose inputs interleave ([[sortGroups]]).
     */
-  def mergeAll(filters: Seq[BackpackFilter]): BackpackFilter =
-    mergeAtLeast(filters, filters.map(_.quotientBits).max)
+  def mergeAll(filters: Seq[BackpackFilter]): BackpackFilter = mergeAll(filters, 1)
+
+  /** [[mergeAll]] built in up to `partitions` parallel parts ([[build]]),
+    * the inputs enumerated in as many parallel tasks: the same bytes for
+    * every count.
+    */
+  private[graft] def mergeAll(filters: Seq[BackpackFilter], partitions: Int): BackpackFilter =
+    mergeAtLeast(filters, filters.map(_.quotientBits).max, partitions)
 
   /** [[mergeAll]] with the quotient floor `floorQ` (at least every input's
     * q): the merge itself and, for one input, [[BackpackFilter.resize]].
     */
-  private def mergeAtLeast(filters: Seq[BackpackFilter], floorQ: Int): BackpackFilter = {
+  private def mergeAtLeast(filters: Seq[BackpackFilter], floorQ: Int, partitions: Int): BackpackFilter = {
     require(filters.nonEmpty)
-    val h = filters.head
-    filters.tail.foreach(o => require(
+    val fs = filters.toIndexedSeq
+    val h = fs.head
+    fs.tail.foreach(o => require(
       o.hashBits == h.hashBits && o.countBits == h.countBits && o.mode == h.mode &&
       o.kTokens == h.kTokens && o.zTokens == h.zTokens && o.seed == h.seed, "parameter mismatch in mergeAll"))
-    val total = filters.map(_.distinctCount).sum
+    val total = fs.map(_.distinctCount).sum
     require(total <= Int.MaxValue - 8, s"mergeAll too large: $total")
     val hashBits = h.hashBits
     val sortQ = sortQuotient(floorQ, total, hashBits)
     val keys = new Array[Long](total.toInt)
     val counts = new Array[Long](total.toInt)
-    var i = 0
-    filters.foreach { f =>
-      val end = i + f.distinctCount
-      f.foreachRaw { (fp, c) =>
-        if (i == end) throw new IllegalArgumentException(
-          s"mergeAll: an input holds more entries than its distinct count ${f.distinctCount}")
-        keys(i) = rotKey(fp, sortQ, hashBits); counts(i) = c; i += 1
+    // input j fills from start(j); a task enumerates the inputs that start
+    // in its share of the entries
+    val start = fs.scanLeft(0)(_ + _.distinctCount.toInt)
+    val filled = new Array[Int](fs.size)
+    val tasks = math.min(partitions, fs.size)
+    inParallel(tasks) { t =>
+      var j = 0
+      while (j < fs.size) {
+        if (math.min(start(j).toLong * tasks / math.max(total, 1L), tasks - 1L) == t) {
+          val f = fs(j)
+          val end = start(j + 1)
+          var i = start(j)
+          f.foreachRaw { (fp, c) =>
+            if (i == end) throw new IllegalArgumentException(
+              s"mergeAll: an input holds more entries than its distinct count ${f.distinctCount}")
+            keys(i) = rotKey(fp, sortQ, hashBits); counts(i) = c; i += 1
+          }
+          filled(j) = i - start(j)
+        }
+        j += 1
       }
     }
+    // an input that holds fewer entries than its distinct count leaves a gap
+    var n = 0
+    var j = 0
+    while (j < fs.size) {
+      if (start(j) != n) {
+        System.arraycopy(keys, start(j), keys, n, filled(j))
+        System.arraycopy(counts, start(j), counts, n, filled(j))
+      }
+      n += filled(j)
+      j += 1
+    }
     build(floorQ, sortQ, h.countBits, hashBits, h.mode, h.kTokens, h.zTokens, h.seed,
-      keys, counts, i, grouped = true)
+      keys, counts, n, grouped = true, partitions)
   }
 
   def apply(qBits: Int, countBits: Int, hashBits: Int = 64, mode: CountMode = CountMode.Exact,

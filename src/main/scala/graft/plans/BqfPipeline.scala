@@ -1,21 +1,26 @@
 package graft.plans
 
 import graft.operators.{BqfParams, SketchAggregators}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Distributed build plans for BQF sketches.
   *
   * Scale design (100 TB / 1000 executors): only serialized sketch blobs
   * and map-side fingerprint chunks cross shuffle boundaries. One sorted
-  * plan ([[sortedBuild]]) builds every fingerprint-range sharded index, and
-  * every one-blob build is that index folded by [[mergeShards]]: the shard
-  * blobs are collected and merged by one
-  * [[graft.core.BackpackFilter.mergeAll]] on the driver, a single sort of
-  * the shard entries with no stage after the sorted build's reduce. The
-  * per-source build fans hot `source` values out over salts before the
-  * per-source merge (two-level aggregation); the resumable build is
-  * [[graft.streaming.CheckpointedBuild]], on the ingest store.
+  * plan ([[sortedBuild]]), one keyed RDD shuffle of (bucket, long[]) chunk
+  * records with no typed rows in between, builds every fingerprint-range
+  * sharded index, and every one-blob build is that index folded on the
+  * driver ([[buildGlobal]], [[mergeShards]]): the shard blobs are collected
+  * and merged by one [[graft.core.BackpackFilter.mergeAll]] that runs its
+  * quotient-range parts on the driver's cores, with no stage after the
+  * sorted build's reduce. The per-source build fans hot `source` values
+  * out over salts before the per-source merge (two-level aggregation); the
+  * resumable build is [[graft.streaming.CheckpointedBuild]], on the ingest
+  * store.
   *
   * Scale ceilings: one sketch holds at most `Int.MaxValue - 8` entries
   * ([[graft.core.BackpackFilter.mergeAll]]); a one-blob build folds on the
@@ -28,11 +33,12 @@ import org.apache.spark.sql.functions._
 object BqfPipeline {
 
   /** One-shot global build: fingerprint arrays -> single serialized sketch,
-    * the 32-shard sorted index folded by [[mergeShards]]. An empty input
-    * gives the empty q=7 sketch.
+    * the 32 shard blobs of the sorted build collected straight from its
+    * reduce tasks and folded on the driver as [[mergeShards]] folds them:
+    * one job of two stages. An empty input gives the empty q=7 sketch.
     */
   def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] =
-    Option(mergeShards(buildIndexSorted(df, fpCol, params, 32)))
+    Option(foldBlobs(shardBlobs(indexChunks(df, fpCol, params, 32), params).values.collect()))
       .getOrElse(params.fresh().serialize())
 
   /** The blob of [[buildGlobal]], which it forwards to: the layout is
@@ -56,38 +62,42 @@ object BqfPipeline {
     * ranges; `nBuckets` must be a power of two.
     */
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: BqfParams,
-                       nBuckets: Int): DataFrame =
-    shardRows(indexChunks(df, fpCol, params, nBuckets), params)
+                       nBuckets: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    shardBlobs(indexChunks(df, fpCol, params, nBuckets), params).toDF("bucket", "sketch")
+  }
 
-  /** The routed, bucket-sorted chunk rows of [[buildIndexSorted]]: its
-    * [[sortedBuild]] up to the shard build, which
-    * [[graft.streaming.IndexIngest.build]] writes into a logged store instead.
+  /** The routed, bucket-sorted chunks of [[buildIndexSorted]]: its
+    * [[sortedBuild]] up to the shard build, which [[buildGlobal]] folds and
+    * [[graft.streaming.IndexIngest.build]] writes into a logged store
+    * instead.
     */
   private[graft] def indexChunks(df: DataFrame, fpCol: Column, params: BqfParams,
-                                 nBuckets: Int): Dataset[(Long, Array[Long], Array[Long])] = {
-    import df.sparkSession.implicits._
-    sortedBuild(df.select(fpCol.as("fps")).as[Array[Long]], params, nBuckets, counted = false)(
-      docs => docs.map(fps => (fps, null)))
-  }
+                                 nBuckets: Int): RDD[(Long, Array[Long], Array[Long])] =
+    sortedBuild(df.select(fpCol.cast("array<bigint>")).queryExecution.toRdd, params, nBuckets, counted = false)(
+      _.map(row => (if (row.isNullAt(0)) null else row.getArray(0).toLongArray(), null)))
 
-  /** Each reduce task's chunk rows gathered ([[gatherChunks]]) and built into
-    * one (bucket, sketch) row per bucket.
+  /** Each reduce task's chunks gathered ([[gatherChunks]]) and built into
+    * one (bucket, sketch) record per bucket.
     */
-  private def shardRows(chunks: Dataset[(Long, Array[Long], Array[Long])], params: BqfParams): DataFrame = {
-    import chunks.sparkSession.implicits._
+  private def shardBlobs(chunks: RDD[(Long, Array[Long], Array[Long])], params: BqfParams): RDD[(Long, Array[Byte])] =
     chunks.mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
       (bucket, buildShard(bucket, fps, stored, params))
-    }).toDF("bucket", "sketch")
-  }
+    }, preservesPartitioning = true)
 
-  /** The one sorted build plan behind [[buildIndexSorted]],
-    * [[reshardMerge]] and [[graft.streaming.IndexIngest.build]]: each input
-    * task turns its rows into (fingerprints, stored counts) entry arrays
-    * (`counted = false`: counts are all 1 and stay null), the map-side
-    * chunker groups them by destination bucket (high fingerprint bits) into
-    * array-chunk rows, one exchange moves the chunks, and each reduce task
-    * sorts its chunk rows by bucket; the caller's reduce side gathers its
-    * buckets and builds every shard with [[buildShard]].
+  /** The one sorted build plan behind [[buildGlobal]], [[buildIndexSorted]],
+    * [[reshardMerge]] and [[graft.streaming.IndexIngest.build]], one keyed
+    * RDD shuffle: each input task turns its rows (the internal rows of the
+    * input plan, read without a typed decoder or an SQL execution of their
+    * own) into (fingerprints, stored counts) entry arrays (`counted = false`:
+    * counts are all 1 and stay null), the map-side chunker groups them by
+    * destination bucket (high fingerprint bits) into (bucket, long[])
+    * chunk records, the shuffle routes each record by [[rangeTask]], and
+    * each reduce task reads its records sorted by bucket (the shuffle's key
+    * ordering); the caller's reduce side gathers its buckets and builds
+    * every shard with [[buildShard]]. A counted chunk crosses as one array,
+    * its fingerprints then its counts: a (Long, long[]) record shuffles
+    * through Kryo, a tuple value would fall back to Java serialization.
     *
     * Routing: with p = min(nBuckets, defaultParallelism) reduce tasks,
     * bucket b goes to task b * p / nBuckets (integer division), so task t
@@ -96,8 +106,8 @@ object BqfPipeline {
     * exactly one bucket per task when the cluster has nBuckets cores or
     * more. A hash exchange of nBuckets ids into nBuckets partitions would
     * collide instead (at 32 buckets on 4 cores: 12 empty tasks, several
-    * holding 2-3 shards, one file per non-empty task). Each task sorts its
-    * chunk rows by bucket, so [[gatherChunks]] holds one shard at a time.
+    * holding 2-3 shards, one file per non-empty task). Each task reads its
+    * chunks sorted by bucket, so [[gatherChunks]] holds one shard at a time.
     *
     * Why chunks: a profile of the index build at 155M k-grams showed
     * fingerprint extraction itself costs ~2 s at 8 cores while shuffling
@@ -107,18 +117,27 @@ object BqfPipeline {
     * ~tasks x buckets rows instead of one per k-gram; array encode/decode
     * is a memcpy. Same shuffle BYTES, ~10^4x fewer shuffle ROWS.
     */
-  private def sortedBuild[T](in: Dataset[T], params: BqfParams, nBuckets: Int, counted: Boolean)(
-      entries: Iterator[T] => Iterator[(Array[Long], Array[Long])]): Dataset[(Long, Array[Long], Array[Long])] = {
+  private def sortedBuild(rows: RDD[InternalRow], params: BqfParams, nBuckets: Int, counted: Boolean)(
+      entries: Iterator[InternalRow] => Iterator[(Array[Long], Array[Long])])
+      : RDD[(Long, Array[Long], Array[Long])] = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
-    val spark = in.sparkSession
-    import spark.implicits._
     val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
-    in.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted))
-      .toDF("bucket", "fps", "stored")
-      .repartitionById(p, rangeRoute(col("bucket"), nBuckets, p))
-      .sortWithinPartitions("bucket")
-      .as[(Long, Array[Long], Array[Long])]
+    val p = math.min(nBuckets, rows.sparkContext.defaultParallelism)
+    val chunks = rows.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted).map {
+      case (bucket, fps, stored) => (bucket, if (counted) Array.concat(fps, stored) else fps)
+    })
+    new ShuffledRDD[Long, Array[Long], Array[Long]](chunks, new RangeTasks(nBuckets, p))
+      .setKeyOrdering(Ordering.Long)
+      .mapPartitions(_.map { case (bucket, v) =>
+        if (!counted) (bucket, v, null)
+        else (bucket, java.util.Arrays.copyOfRange(v, 0, v.length / 2), java.util.Arrays.copyOfRange(v, v.length / 2, v.length))
+      }, preservesPartitioning = true)
+  }
+
+  /** [[rangeTask]] as the partitioner of [[sortedBuild]]'s shuffle. */
+  private final class RangeTasks(nBuckets: Int, p: Int) extends Partitioner {
+    override def numPartitions: Int = p
+    override def getPartition(key: Any): Int = rangeTask(key.asInstanceOf[Long], nBuckets, p)
   }
 
   /** The range rule of [[sortedBuild]], [[queryIndex]] and
@@ -132,7 +151,9 @@ object BqfPipeline {
     least(greatest(shiftright(bucket * p, java.lang.Integer.numberOfTrailingZeros(nBuckets)), lit(0L)),
       lit(p - 1L)).cast("int")
 
-  /** [[rangeRoute]] of one bucket, on the driver. */
+  /** [[rangeRoute]] of one bucket, outside a plan: the partitioner of
+    * [[sortedBuild]]'s shuffle, and compact's ranges on the driver.
+    */
   private[graft] def rangeTask(bucket: Long, nBuckets: Int, p: Int): Int =
     math.min(math.max((bucket * p) >> java.lang.Integer.numberOfTrailingZeros(nBuckets), 0L), p - 1L).toInt
 
@@ -309,18 +330,17 @@ object BqfPipeline {
     * sharded.
     */
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    shardRows(sortedBuild(shards.select("sketch").as[Array[Byte]], params, nOut, counted = true)(
-      _.map { bytes =>
-        val f = graft.core.BackpackFilter.deserialize(bytes)
+    import shards.sparkSession.implicits._
+    shardBlobs(sortedBuild(shards.select("sketch").queryExecution.toRdd, params, nOut, counted = true)(
+      _.map { row =>
+        val f = graft.core.BackpackFilter.deserialize(row.getBinary(0))
         val fps = new Array[Long](f.distinctCount.toInt)
         val stored = new Array[Long](fps.length)
         var i = 0
         // specialized visitor: zero boxing across the 10^8-entry stream
         f.foreachRaw { (fp, c) => fps(i) = fp; stored(i) = c; i += 1 }
         (fps, stored)
-      }), params)
+      }), params).toDF("bucket", "sketch")
   }
 
   /** The enumerate operator exposed relationally at scale: explode every
@@ -392,23 +412,30 @@ object BqfPipeline {
   }
 
   /** Fold the `sketch` column of any shard rows into one serialized
-    * sketch (null for no rows): collect the shard blobs and run one
-    * [[graft.core.BackpackFilter.mergeAll]] on the driver, which sorts the
-    * shard entries once. The job ends at the stage that produces `shards`
-    * — no aggregation buffers, no extra exchange, no one-task final stage
-    * — and the result is the same bytes however the rows were sharded or
-    * partitioned. The driver holds the blobs plus ~48 B per distinct entry
-    * while the merge runs. Null sketches contribute nothing.
+    * sketch (null for no rows): collect the shard blobs and fold them on
+    * the driver ([[foldBlobs]]). The job ends at the stage that produces
+    * `shards` — no aggregation buffers, no extra exchange, no one-task
+    * final stage — and the result is the same bytes however the rows were
+    * sharded or partitioned. Null sketches contribute nothing.
     */
   def mergeShards(shards: DataFrame): Array[Byte] = {
     import shards.sparkSession.implicits._
-    val blobs = shards.select("sketch").as[Array[Byte]].collect()
+    foldBlobs(shards.select("sketch").as[Array[Byte]].collect())
+  }
+
+  /** One [[graft.core.BackpackFilter.mergeAll]] of the blobs on the driver,
+    * built in one part per available processor (the executors are idle by
+    * then); null for no blob. The driver holds the blobs plus ~48 B per
+    * distinct entry while the merge runs.
+    */
+  private def foldBlobs(blobs: Array[Array[Byte]]): Array[Byte] = {
     val filters = blobs.indices.flatMap { i =>
       val b = blobs(i)
       blobs(i) = null // each blob is garbage once deserialized
       Option(b).map(graft.core.BackpackFilter.deserialize)
     }
-    if (filters.isEmpty) null else graft.core.BackpackFilter.mergeAll(filters).serialize()
+    if (filters.isEmpty) null
+    else graft.core.BackpackFilter.mergeAll(filters, Runtime.getRuntime.availableProcessors).serialize()
   }
 
   /** Two-level skew-safe per-source build: hot `source` values fan out over

@@ -3,11 +3,12 @@ package graft.streaming
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.OutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.{InputFile, OutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.spark.graft.TaskStoreIO
 
@@ -46,11 +47,21 @@ private[streaming] object ShardFiles {
     override protected def getWriteSupport(conf: Configuration): WriteSupport[Shard] = new Support
   }
 
+  /** A reader of `file` under the file's own conf: the builder over a
+    * path would load a fresh `Configuration`'s XML defaults for every file.
+    */
+  private final class Reader(file: InputFile) extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
+  }
+
   /** Write `shards` to the new file `path` (an existing one fails the
-    * write) and return its length in bytes.
+    * write) and return its length in bytes. A sketch blob repeats only by
+    * chance, so its column is written without a dictionary, which would be
+    * built over whole blobs and then dropped.
     */
   def write(path: Path, shards: Iterator[Shard], conf: Configuration, codec: CompressionCodecName): Long = {
     val w = new Builder(HadoopOutputFile.fromPath(path, conf)).withConf(conf).withCompressionCodec(codec)
+      .withDictionaryEncoding("sketch", false)
       .withWriteMode(ParquetFileWriter.Mode.CREATE).build()
     try shards.foreach(w.write) finally w.close()
     val bytes = path.getFileSystem(conf).getFileStatus(path).getLen
@@ -60,7 +71,7 @@ private[streaming] object ShardFiles {
 
   /** The shards of `path` that `keep(bucket, batchId)` selects. */
   def read(path: Path, conf: Configuration)(keep: (Long, Long) => Boolean): Vector[Shard] = TaskStoreIO.reading {
-    val r = ParquetReader.builder(new GroupReadSupport, path).withConf(conf).build()
+    val r = new Reader(HadoopInputFile.fromPath(path, conf)).build()
     try Iterator.continually(r.read()).takeWhile(_ != null)
       .filter(g => keep(g.getLong("bucket", 0), g.getLong("batch_id", 0)))
       .map(g => Shard(g.getLong("bucket", 0), g.getBinary("sketch", 0).getBytes, g.getLong("batch_id", 0)))

@@ -280,7 +280,6 @@ object IndexIngest {
     */
   def build(df: DataFrame, fpCol: Column, params: BqfParams, nBuckets: Int, storeDir: String): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
     require(log(spark, storeDir).forall(_.entries.isEmpty), s"$storeDir already holds an index store")
     CommitLog.create(spark, storeDir)
     val store = TaskStore(spark, storeDir, LogState(Nil))

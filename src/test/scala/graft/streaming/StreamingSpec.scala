@@ -587,10 +587,13 @@ class StreamingSpec extends AnyFunSuite {
       val store = s"$tmp/$op"
       IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
       val log = graft.plans.CommitLog.read(spark, store).get
-      assert(new java.io.File(store, log.live.values.map(_._2.name).toSeq.sorted.head).delete())
-      // the task of the lowest bucket range fails at its read; every other
-      // task is held at its file create while the failure reaches the driver
-      val (atReturn, _) = RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration, createDelayMs = 1000L) {
+      val victim = new java.io.File(store, log.live.values.map(_._2.name).toSeq.sorted.head)
+      assert(victim.delete())
+      // the task of the lowest bucket range fails at its read, which is held
+      // until every other task has reached its file create; each create is
+      // held in turn while the failure reaches the driver
+      val (atReturn, _) = RecordingFileSystem.recording(spark.sparkContext.hadoopConfiguration,
+        createDelayMs = 1000L, hold = Some(victim.getAbsolutePath -> 500L)) {
         intercept[Exception](run(store))
         dataFiles(store)
       }
