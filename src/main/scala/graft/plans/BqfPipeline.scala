@@ -5,7 +5,10 @@ import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.sql.types._
 
 /** Distributed build plans for BQF sketches.
   *
@@ -134,25 +137,22 @@ object BqfPipeline {
       }, preservesPartitioning = true)
   }
 
-  /** [[rangeTask]] as the partitioner of [[sortedBuild]]'s shuffle. */
-  private final class RangeTasks(nBuckets: Int, p: Int) extends Partitioner {
+  /** [[rangeTask]] as the partitioner of a keyed RDD shuffle whose keys
+    * are buckets shifted left by `keyShift` bits: [[sortedBuild]]'s and
+    * ingest's (bucket keys), and [[queryIndex]]'s (a bucket and one tag bit).
+    */
+  private[graft] final class RangeTasks(nBuckets: Int, p: Int, keyShift: Int = 0) extends Partitioner {
     override def numPartitions: Int = p
-    override def getPartition(key: Any): Int = rangeTask(key.asInstanceOf[Long], nBuckets, p)
+    override def getPartition(key: Any): Int = rangeTask(key.asInstanceOf[Long] >> keyShift, nBuckets, p)
   }
 
-  /** The range rule of [[sortedBuild]], [[queryIndex]] and
-    * [[graft.streaming.IndexIngest]]'s writes: bucket b of `nBuckets` (a
-    * power of two) goes to task b * p / nBuckets of `p`, so task t owns the
-    * contiguous buckets [t * nBuckets / p, (t+1) * nBuckets / p). Buckets
-    * outside [0, nBuckets) — the -1 of [[chunkByBucket]]'s strays — clamp
-    * to the edge tasks.
-    */
-  private[graft] def rangeRoute(bucket: Column, nBuckets: Int, p: Int): Column =
-    least(greatest(shiftright(bucket * p, java.lang.Integer.numberOfTrailingZeros(nBuckets)), lit(0L)),
-      lit(p - 1L)).cast("int")
-
-  /** [[rangeRoute]] of one bucket, outside a plan: the partitioner of
-    * [[sortedBuild]]'s shuffle, and compact's ranges on the driver.
+  /** The range rule of every shuffle that routes by bucket ([[sortedBuild]],
+    * [[queryIndex]], [[graft.streaming.IndexIngest]]'s writes) and of
+    * compact's ranges on the driver: bucket b of `nBuckets` (a power of two)
+    * goes to task b * p / nBuckets of `p`, so task t owns the contiguous
+    * buckets [t * nBuckets / p, (t+1) * nBuckets / p). Buckets outside
+    * [0, nBuckets) — the -1 of [[chunkByBucket]]'s strays — clamp to the
+    * edge tasks.
     */
   private[graft] def rangeTask(bucket: Long, nBuckets: Int, p: Int): Int =
     math.min(math.max((bucket * p) >> java.lang.Integer.numberOfTrailingZeros(nBuckets), 0L), p - 1L).toInt
@@ -243,19 +243,38 @@ object BqfPipeline {
       override def next(): (Long, Array[Long], Array[Long]) = { fill(); queue.dequeue() }
     }
 
-  /** The fingerprints of column `fp` as (bucket, fps) chunk rows, one per
-    * bucket per input task and [[chunkByBucket]] flush: the map side of
-    * [[queryIndex]] and of [[graft.streaming.IndexIngest.ingestBatch]].
+  /** The fingerprints of column `fp` as (bucket, fps) chunk records, one
+    * per bucket per input task and [[chunkByBucket]] flush: the map side of
+    * [[queryIndex]] and of [[graft.streaming.IndexIngest.ingestBatch]]. Each
+    * task reads the internal rows of `df.select("fp")` with `getLong` into
+    * 64Ki-long blocks, with no typed decoder. `getLong` reads a null as 0,
+    * so a null fingerprint fails the task with an IllegalArgumentException
+    * naming the column instead; a narrower integer column widens, and a
+    * column of any other type is refused at the call.
     */
-  private[graft] def fpChunks(df: DataFrame, hashBits: Int, nBuckets: Int): DataFrame = {
-    import df.sparkSession.implicits._
+  private[graft] def fingerprintChunks(df: DataFrame, hashBits: Int, nBuckets: Int): RDD[(Long, Array[Long])] = {
+    val t = df.schema("fp").dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(t),
+      s"fingerprint column fp is ${t.simpleString}, not bigint")
     val shift = hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    df.select(col("fp")).as[Long]
-      .mapPartitions { it =>
-        val blocks = it.grouped(1 << 16).map(g => (g.toArray, null: Array[Long]))
-        chunkByBucket(blocks, nBuckets, shift, counted = false).map { case (bucket, fps, _) => (bucket, fps) }
+    df.select(col("fp").cast(LongType)).queryExecution.toRdd.mapPartitions { rows =>
+      val blocks = new Iterator[(Array[Long], Array[Long])] {
+        override def hasNext: Boolean = rows.hasNext
+        override def next(): (Array[Long], Array[Long]) = {
+          val block = new Array[Long](1 << 16)
+          var n = 0
+          while (n < block.length && rows.hasNext) {
+            val row = rows.next()
+            if (row.isNullAt(0)) throw new IllegalArgumentException(
+              "a null in fingerprint column fp: a fingerprint must be a bigint, and a null has no bucket")
+            block(n) = row.getLong(0)
+            n += 1
+          }
+          (if (n == block.length) block else java.util.Arrays.copyOf(block, n), null)
+        }
       }
-      .toDF("bucket", "fps")
+      chunkByBucket(blocks, nBuckets, shift, counted = false).map { case (bucket, fps, _) => (bucket, fps) }
+    }
   }
 
   /** Shard memory guard: a shard build gathers its whole shard (~16 B per
@@ -359,38 +378,58 @@ object BqfPipeline {
   /** Distributed point queries against a sharded index — the query path
     * once the index exceeds broadcast size (a 100 TB corpus's index is
     * GBs-to-TBs of shards; no single sketch can ride a broadcast variable).
-    * The map side chunks the probes by bucket with [[chunkByBucket]] (the
-    * high-bit bucketing the build used), and the chunk rows and the shard
-    * rows meet in one exchange under [[sortedBuild]]'s range rule
-    * ([[rangeRoute]], p = min(nBuckets, defaultParallelism) tasks). Each
-    * reduce task sorts its rows by bucket, shard row first, and streams
-    * bucket by bucket: it deserializes each shard once and answers every
-    * probe chunk of that bucket against it. The shuffle moves 8-byte probe
-    * fingerprints in array chunks plus each shard blob exactly once.
+    * The map side chunks the probes by bucket ([[fingerprintChunks]], the
+    * high-bit bucketing the build used), and the chunk records, keyed
+    * `(bucket << 1) | 1`, and the shard rows, keyed `bucket << 1`, meet in
+    * one keyed RDD shuffle under the range rule of the sorted build
+    * ([[RangeTasks]] of `key >> 1`, p = min(nBuckets, defaultParallelism)
+    * tasks). Each reduce task reads its records sorted by key, so each
+    * bucket's shard before its probes, and streams bucket by bucket: it
+    * deserializes each shard once and answers every probe chunk of that
+    * bucket against it. The shuffle moves 8-byte probe fingerprints in
+    * array chunks plus each shard blob exactly once, through Kryo (with a
+    * value that is either array, an RDD shuffle would fall back to Java
+    * serialization). Both inputs are read as internal rows and the answers
+    * stream out as internal rows, with no typed encoder on either side.
     *
     * Returns (fp, abundance), one row per probe row (repeated probes are
     * answered once each). A probe whose bucket has no shard — including a
     * fingerprint with bits above hashBits — answers 0 (nothing was ever
-    * inserted there). `shards` must hold one (bucket, sketch) row per
-    * bucket: a repeated bucket fails the query.
+    * inserted there); a null probe fails the query with an
+    * IllegalArgumentException naming column `fp`. `shards` must hold one
+    * (bucket, sketch) row per bucket: a repeated bucket fails the query.
+    *
+    * Planning is eager: the call reads both inputs' `queryExecution.toRdd`,
+    * and under adaptive execution a plan with an exchange (a `distinct()`
+    * of the probes, say) runs that exchange as a job at the call; only the
+    * shuffle and the answers wait for an action on the returned frame. An
+    * input that is a scan, or an RDD-backed frame such as
+    * [[graft.streaming.IndexIngest.currentShards]], runs no job at the call.
     */
   def queryIndex(shards: DataFrame, probes: DataFrame, params: BqfParams,
                  nBuckets: Int): DataFrame = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = shards.sparkSession
-    import spark.implicits._
-    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
-    fpChunks(probes, params.hashBits, nBuckets).withColumn("sketch", lit(null).cast("binary"))
-      .union(shards.select(col("bucket"), lit(null).cast("array<bigint>").as("fps"), col("sketch")))
-      .repartitionById(p, rangeRoute(col("bucket"), nBuckets, p))
-      .sortWithinPartitions(col("bucket"), col("fps").isNotNull)
-      .as[(Long, Array[Long], Array[Byte])]
-      .mapPartitions { rows =>
+    val sc = spark.sparkContext
+    val p = math.min(nBuckets, sc.defaultParallelism)
+    val probeRecords: RDD[(Long, AnyRef)] = fingerprintChunks(probes, params.hashBits, nBuckets)
+      .map { case (bucket, fps) => ((bucket << 1) | 1L, fps) }
+    val shardRecords: RDD[(Long, AnyRef)] = shards.select(col("bucket").cast(LongType), col("sketch"))
+      .queryExecution.toRdd.map { row =>
+        require(!row.isNullAt(0), "queryIndex: a shard row with a null bucket")
+        (row.getLong(0) << 1, row.getBinary(1))
+      }
+    val answers = new ShuffledRDD[Long, AnyRef, AnyRef](probeRecords.union(shardRecords), new RangeTasks(nBuckets, p, 1))
+      .setKeyOrdering(Ordering.Long)
+      .setSerializer(new org.apache.spark.serializer.KryoSerializer(sc.getConf))
+      .mapPartitions { records =>
+        val out: InternalRow = new SpecificInternalRow(Seq(LongType, LongType))
         var bucket = Long.MinValue
         var shard: graft.core.BackpackFilter = null
-        rows.flatMap { case (b, fps, sketch) =>
+        records.flatMap { case (key, value) =>
+          val b = key >> 1
           if (b != bucket) { bucket = b; shard = null }
-          if (fps == null) {
+          if ((key & 1L) == 0L) {
             // Multiple rows for one bucket are ambiguous: an index store's
             // data files, read raw, hold SUPERSEDED versions whose merge
             // would double-count, while answering from an arbitrary row
@@ -399,17 +438,24 @@ object BqfPipeline {
             require(shard == null,
               s"queryIndex: multiple sketch rows for bucket $b -- these look like an index store's " +
                 "data files read raw; query IndexIngest.currentShards(...) instead")
-            shard = graft.core.BackpackFilter.deserialize(sketch)
+            shard = graft.core.BackpackFilter.deserialize(value.asInstanceOf[Array[Byte]])
             Iterator.empty
           } else {
             val f = shard
-            if (f == null) fps.iterator.map(fp => (fp, 0L))
-            else fps.iterator.map(fp => (fp, f.abundance(fp)))
+            value.asInstanceOf[Array[Long]].iterator.map { fp =>
+              out.setLong(0, fp)
+              out.setLong(1, if (f == null) 0L else f.abundance(fp))
+              out
+            }
           }
         }
       }
-      .toDF("fp", "abundance")
+    FrameBridge.frame(spark, answers, AnswerSchema)
   }
+
+  /** The (fp, abundance) rows of [[queryIndex]]. */
+  private val AnswerSchema = StructType(Seq(
+    StructField("fp", LongType, nullable = false), StructField("abundance", LongType, nullable = false)))
 
   /** Fold the `sketch` column of any shard rows into one serialized
     * sketch (null for no rows): collect the shard blobs and fold them on

@@ -133,6 +133,8 @@ object IndexIngest {
   import org.apache.hadoop.fs.Path
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
   import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
   private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
@@ -183,12 +185,15 @@ object IndexIngest {
     * fails the read with an error naming the file. Throws
     * IllegalArgumentException for a directory with data but no commit log.
     */
-  def currentShards(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    liveRanges(spark, TaskStore(spark, storeDir, log(spark, storeDir).getOrElse(LogState(Nil))))
-      .flatMap { case (_, buckets, sketches) => buckets.map(b => (b, sketches(b))) }
-      .toDF("bucket", "sketch")
-  }
+  def currentShards(spark: SparkSession, storeDir: String): DataFrame =
+    org.apache.spark.sql.graftbridge.FrameBridge.frame(spark,
+      liveRanges(spark, TaskStore(spark, storeDir, log(spark, storeDir).getOrElse(LogState(Nil))))
+        .flatMap { case (_, buckets, sketches) => buckets.map(b => InternalRow(b, sketches(b))) },
+      ShardSchema)
+
+  /** The (bucket, sketch) rows of [[currentShards]]. */
+  private val ShardSchema = StructType(Seq(
+    StructField("bucket", LongType, nullable = false), StructField("sketch", BinaryType, nullable = true)))
 
   /** What a write task needs of the store: its directory, the Hadoop conf
     * (broadcast once per job), the session's parquet codec, and the folded
@@ -379,10 +384,12 @@ object IndexIngest {
     * lower one that it does not hold is refused, because the live view is
     * each bucket's highest batch_id.
     *
-    * One job of two stages. The map side chunks the batch by bucket
-    * ([[graft.plans.BqfPipeline.fpChunks]]) and sends contiguous bucket
-    * ranges to min(nBuckets, cores) merge tasks, the range rule of the
-    * sorted build and of queryIndex. Each merge task reads the live
+    * One job of two stages and no SQL execution: the keyed RDD shuffle of
+    * the sorted build. The map side reads the batch's internal rows and
+    * chunks them by bucket ([[graft.plans.BqfPipeline.fingerprintChunks]]),
+    * and the shuffle sends contiguous bucket ranges to min(nBuckets, cores)
+    * merge tasks, the range rule of the sorted build and of queryIndex,
+    * each of which reads its chunk records sorted by bucket. Each merge task reads the live
     * versions of exactly the buckets it received, from the files the
     * folded log names (touched-bucket pruning: per-batch cost is
     * O(batch + touched shards), independent of store width), builds each
@@ -392,18 +399,18 @@ object IndexIngest {
     * with each new shard's lineage: fingerprint rows consumed and merge
     * depth.
     *
-    * A batch with fingerprints above hashBits (no bucket) is refused with
-    * an IllegalArgumentException and commits nothing; the files its tasks
-    * wrote are no entry's, so no reader opens them and the next [[compact]]
-    * deletes them. So does a live file that is missing or unreadable,
-    * failing the job with an error that names it; a failed batch returns
-    * once none of its tasks is still writing ([[writing]]).
+    * A batch with fingerprints above hashBits (no bucket), or with a null
+    * fingerprint, is refused with an IllegalArgumentException that says so
+    * and commits nothing; the files its tasks wrote are no entry's, so no
+    * reader opens them and the next [[compact]] deletes them. So does a
+    * live file that is missing or unreadable, failing the job with an error
+    * that names it; a failed batch returns once none of its tasks is still
+    * writing ([[writing]]).
     */
   def ingestBatch(batch: DataFrame, batchId: Long, params: BqfParams, nBuckets: Int,
                   storeDir: String): Unit = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
-    import spark.implicits._
     val routing = Routing(nBuckets, params)
     val state = log(spark, storeDir).getOrElse { CommitLog.create(spark, storeDir); LogState(Nil) }
     // The log's routing is the store's contract: a batch under another
@@ -420,11 +427,16 @@ object IndexIngest {
     val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
     val store = TaskStore(spark, storeDir, state)
     val written =
-      try writing(spark)(BqfPipeline.fpChunks(batch, params.hashBits, nBuckets)
-        .repartitionById(p, BqfPipeline.rangeRoute(col("bucket"), nBuckets, p))
-        .as[(Long, Array[Long])]
+      try writing(spark)(new org.apache.spark.rdd.ShuffledRDD[Long, Array[Long], Array[Long]](
+        BqfPipeline.fingerprintChunks(batch, params.hashBits, nBuckets), new BqfPipeline.RangeTasks(nBuckets, p))
+        .setKeyOrdering(Ordering.Long)
         .mapPartitions(mergeRange(store, batchId, params, _))
         .collect())
+      catch {
+        // an input a task refused (a null fingerprint): the caller's error
+        case e: org.apache.spark.SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+          throw new IllegalArgumentException(s"ingestBatch: ${e.getCause.getMessage}", e)
+      }
       finally store.conf.destroy()
     val strays = written.map(_.strays).sum
     require(strays == 0,
@@ -438,18 +450,19 @@ object IndexIngest {
     CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, routing, files))
   }
 
-  /** One merge task of [[ingestBatch]]: the batch's chunk rows of one
-    * bucket range in, one written file's report out (none for an empty
-    * range). The buffered chunks are sorted by bucket for the streaming
-    * gather, each touched bucket's live version is read from the log's
-    * files, and every bucket with batch fingerprints gets its new shard
-    * version. Fingerprints with no bucket (chunk bucket -1) are counted,
-    * not written: the driver refuses the batch.
+  /** One merge task of [[ingestBatch]]: the batch's chunk records of one
+    * bucket range in, sorted by bucket (the shuffle's key ordering, which
+    * the streaming gather checks), one written file's report out (none for
+    * an empty range). The chunks are buffered, each touched bucket's live
+    * version is read from the log's files, and every bucket with batch
+    * fingerprints gets its new shard version. Fingerprints with no bucket
+    * (chunk bucket -1) are counted, not written: the driver refuses the
+    * batch.
     */
   private def mergeRange(store: TaskStore, batchId: Long, params: BqfParams,
                          rows: Iterator[(Long, Array[Long])]): Iterator[Written] = {
     val (strays, chunks) = rows.map { case (bucket, fps) => (bucket, fps, null: Array[Long]) }.toVector
-      .sortBy(_._1).partition(_._1 < 0)
+      .partition(_._1 < 0)
     val stray = strays.map(_._2.length.toLong).sum
     if (chunks.isEmpty)
       return if (stray == 0) Iterator.empty else Iterator.single(Written(null, 0L, Array.empty, Array.empty, stray))

@@ -248,12 +248,17 @@ class CliSpec extends AnyFunSuite {
       graft.plans.Routing(16, graft.operators.BqfParams(qBits = 12, countBits = 16, kTokens = 8, zTokens = 2))))
     Cli.main(Array("query-index", "-b", s"$dir/shards.parquet", "-i", s"$dir/tokens.parquet",
       "-o", s"$dir/idxq.parquet", "-n", "16", "-q", "12", "-c", "16", "-k", "8", "-z", "2"))
-    val got = spark.read.parquet(s"$dir/idxq.parquet").as[(Long, Long)].collect().toMap
+    val out = spark.read.parquet(s"$dir/idxq.parquet")
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("kgram_fp", "bigint"), ("abundance", "bigint")), out.schema.toString)
+    val rows = out.as[(Long, Long)].collect()
+    val got = rows.toMap
     val expected = spark.read.parquet(s"$dir/tokens.parquet")
       .select(explode(sgram_fingerprints(col("tokens"), 6, 48, 0L)).as("fp"))
       .groupBy("fp").count()
       .as[(Long, Long)].collect().toMap
-    assert(got == expected, s"index query: ${got.size} fps vs ${expected.size}")
+    // one row per distinct s-gram, none repeated
+    assert(rows.length == got.size && got == expected, s"index query: ${rows.length} rows, ${got.size} fps vs ${expected.size}")
     // conflicting routing params must ERROR, not silently answer zeros
     val e = intercept[IllegalArgumentException] {
       Cli.main(Array("query-index", "-b", s"$dir/shards.parquet", "-i", s"$dir/tokens.parquet",

@@ -460,10 +460,9 @@ class StreamingSpec extends AnyFunSuite {
     // The merge tasks read the live versions themselves, so the evidence is
     // taken at the file system: the store data files a batch opens are
     // exactly the files the log names for its touched buckets' live
-    // versions, and the batch runs one query, which scans no store file.
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    // versions, and the batch runs no SQL query (so no scan of any file)
+    // and one job of two stages.
     import spark.implicits._
-    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
       kTokens = 8, zTokens = 0, seed = 0L)
     val nBuckets = 8
@@ -480,12 +479,13 @@ class StreamingSpec extends AnyFunSuite {
         (b.toLong << 29) | (graft.core.Fingerprint.splitmix64(i * 1000L + j % 250) & ((1L << 29) - 1))))
       val liveFiles = graft.plans.CommitLog.read(spark, store).toSeq
         .flatMap(_.live.collect { case (b, (_, f)) if pair.contains(b.toInt) => f.name }).toSet
-      val (opens, plans) = dataOpens(store)(IndexIngest.ingestBatch(fps.toDF("fp"), i.toLong, params, nBuckets, store))
+      var jobs = Seq.empty[Int]
+      val (opens, plans) = dataOpens(store) {
+        jobs = graft.SparkTestSession.jobsOf(IndexIngest.ingestBatch(fps.toDF("fp"), i.toLong, params, nBuckets, store))._2
+      }
       assert(opens == liveFiles, s"batch $i over buckets $pair opened $opens; the log names $liveFiles")
-      assert(plans.size == 1, s"batch $i ran ${plans.size} queries")
-      val scans = plans.flatMap(Walk.collect(_) { case s: FileSourceScanExec => s.relation.location.rootPaths })
-        .flatten.filter(_.toUri.getPath.startsWith(store))
-      assert(scans.isEmpty, s"batch $i scanned the store: $scans")
+      assert(plans.isEmpty, s"batch $i ran ${plans.size} SQL queries")
+      assert(jobs == Seq(2), s"batch $i submitted jobs (stages each): $jobs")
       all ++= fps
       val log = graft.plans.CommitLog.read(spark, store).get
       assert(opened(store) == log.live.values.map(_._2.name).toSet, s"currentShards after batch $i")
@@ -526,6 +526,33 @@ class StreamingSpec extends AnyFunSuite {
     // the same id commits once the batch holds no stray
     IndexIngest.ingestBatch(b2.toDF("fp"), 2L, params, 8, store)
     assert(counts(store) == exact(b0 ++ b1 ++ b2))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a null fingerprint is refused, not read as 0: ingestBatch commits nothing, queryIndex fails the probe") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-null-fp").toString
+    val store = s"$tmp/idx"
+    val rnd = new scala.util.Random(71)
+    val b0 = Vector.fill(1000)(rnd.nextLong() & 0xffffffffL)
+    IndexIngest.ingestBatch(b0.toDF("fp"), 0L, params, 8, store)
+    val entries = graft.plans.CommitLog.read(spark, store).get.entries.toSet
+    // a nullable bigint column, as a parquet batch reads
+    val withNull = (b0.map(Option(_)) :+ None :+ Some(0L)).toDF("fp")
+    val e = intercept[IllegalArgumentException](IndexIngest.ingestBatch(withNull, 1L, params, 8, store))
+    assert(e.getMessage.contains("null") && e.getMessage.contains("column fp"), e.getMessage)
+    assert(graft.plans.CommitLog.read(spark, store).get.entries.toSet == entries, "the refused batch committed")
+    assert(counts(store) == exact(b0))
+    val q = intercept[org.apache.spark.SparkException](
+      graft.plans.BqfPipeline.queryIndex(IndexIngest.currentShards(spark, store), withNull, params, 8).collect())
+    def causes(t: Throwable): List[Throwable] = if (t == null) Nil else t :: causes(t.getCause)
+    assert(causes(q).exists(c => c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("column fp")),
+      causes(q).map(_.getMessage).mkString(" <- "))
+    // a column that holds no integers is refused at the call, not cast
+    val typed = intercept[IllegalArgumentException](IndexIngest.ingestBatch(Seq("17").toDF("fp"), 1L, params, 8, store))
+    assert(typed.getMessage.contains("fingerprint column fp is string"), typed.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
