@@ -47,6 +47,32 @@ object Cli {
     else stripZeros(s)
   }
 
+  /** The sequences of a query text file: one per non-empty line, or FASTA
+    * ('>'-header dispatch on the first line), whose header lines are
+    * skipped (the reference assumes strictly alternating header/sequence
+    * records; any '>' line is a header here).
+    */
+  private def querySequences(path: String): Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toVector.filter(_.nonEmpty)
+    if (lines.headOption.exists(_.startsWith(">"))) lines.filterNot(_.startsWith(">")) else lines
+  }
+
+  /** Write the reference's query text surface: one `SequenceN : (min:…,
+    * max:…, average:…, presence ratio:…)` line per (min, max, average,
+    * presence ratio), numbered 1..n in input order (abstract_bqf.cpp:169-191,
+    * operator<< additional_methods.cpp:312-314). The reference's
+    * post-increment emits "Sequence1" twice (abstract_bqf.cpp:176-186), a
+    * cosmetic defect not replicated (SURVEY §7.4 deviations).
+    */
+  private def writeQueryText(path: String, stats: Seq[(Long, Long, Double, Double)]): Unit = {
+    val out = stats.zipWithIndex.map { case ((mn, mx, avg, ratio), i) =>
+      s"Sequence${i + 1} : (min:$mn, max:$mx, average:${fmtRefFloat(avg)}, presence ratio:${fmtRefFloat(ratio)})"
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      out.mkString("", "\n", if (out.nonEmpty) "\n" else "").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
       System.err.println("usage: graft.Cli build|query|filter|enumerate|export|build-index|query-index -i IN [-b SKETCH] [-o OUT] [-q Q -c C -k K -z Z] [-n BUCKETS] [-f parquet|text]")
@@ -79,6 +105,7 @@ object Cli {
 
       case "query" =>
         val t0 = System.nanoTime()
+        val in = opts("-i")
         // verb-for-verb migration: a sketch file written by the REFERENCE
         // binary (8xu64 header + table words, abstract_bqf.cpp:512-529) is
         // auto-detected, imported into the DNA hash domain, and answers the
@@ -88,107 +115,70 @@ object Cli {
         if (graft.sources.ReferenceFormat.isReferenceFile(opts("-b"))) {
           val rf = graft.sources.ReferenceFormat.load(opts("-b"))
           val bf = rf.toBackpackFilter
-          import scala.jdk.CollectionConverters._
-          val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(opts("-i")))
-            .asScala.toVector.filter(_.nonEmpty)
-          val seqs = (if (lines.headOption.exists(_.startsWith(">")))
-            lines.filterNot(_.startsWith(">")) else lines)
-          val out = seqs.zipWithIndex.map { case (seq, i) =>
+          writeQueryText(opts("-o"), querySequences(in).map { seq =>
             val (mn, mx, avg, ratio) = graft.sources.DnaDomain.querySequence(
               seq.trim, rf.header.kmerSize, rf.header.smerSize, bf.abundance)
-            s"Sequence${i + 1} : (min:$mn, max:$mx, average:${fmtRefFloat(avg)}, " +
-              s"presence ratio:${fmtRefFloat(ratio)})"
-          }
-          java.nio.file.Files.write(java.nio.file.Paths.get(opts("-o")),
-            out.mkString("", "\n", if (out.nonEmpty) "\n" else "").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
+            (mn, mx, avg.toDouble, ratio.toDouble)
+          })
           println(s"Load + queries time = ${(System.nanoTime() - t0) / 1000000}ms " +
             s"(reference-format index: ${rf.header.elementsInside} smers)")
-          if (!sys.props.contains("graft.cli.keepSession")) spark.stop()
-          return
-        }
-        val sketch = BackpackFilter.loadFromFile(opts("-b"))
-        val q = new BqfQuery(spark, sketch.serialize())
-        val in = opts("-i")
-        // the reference's query verb is TEXT-in/TEXT-out: a plain file (one
-        // sequence per line) or FASTA ('>'-header dispatch on the first
-        // line), emitting `SequenceN : (min:…, max:…, average:…, presence
-        // ratio:…)` lines (abstract_bqf.cpp:169-191, main.cpp:105-173,
-        // operator<< additional_methods.cpp:312-314). -f text selects that
-        // surface here; a non-parquet regular-file input implies it.
-        val isText = opts.get("-f").contains("text") ||
-          (!in.endsWith(".parquet") && java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(in)))
-        if (isText) {
-          import scala.jdk.CollectionConverters._
-          import spark.implicits._
-          val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(in))
-            .asScala.toVector.filter(_.nonEmpty)
-          // FASTA branch = header lines skipped (the reference assumes
-          // strictly alternating header/sequence records; any '>' line is a
-          // header here). Sequences are whitespace- or comma-separated
-          // integer token ids — this library's alphabet. Numbering is 1..n
-          // in input order; the reference's post-increment emits
-          // "Sequence1" twice (abstract_bqf.cpp:176-186), a cosmetic defect
-          // not replicated (SURVEY §7.4 deviations).
-          val seqs = (if (lines.headOption.exists(_.startsWith(">")))
-            lines.filterNot(_.startsWith(">")) else lines)
-            .zipWithIndex.map { case (s, i) => (i + 1L, s.trim.split("[\\s,]+").map(_.toInt)) }
-          // probes run distributed through the codegen sequence-stats
-          // expression; the ordered text write is driver-side, matching the
-          // reference's single-output-file contract (query files are the
-          // probe set — small by construction)
-          val rows = spark.createDataset(seqs).toDF("seq_no", "tokens")
-            .withColumn("st", q.sequenceStatsOf(col("tokens")))
-            .select(col("seq_no"), col("st.minimum"), col("st.maximum"),
-              col("st.average"), col("st.presenceRatio"))
-            .collect().sortBy(_.getLong(0))
-          val out = rows.map(r => s"Sequence${r.getLong(0)} : (min:${r.getLong(1)}, " +
-            s"max:${r.getLong(2)}, average:${fmtRefFloat(r.getDouble(3))}, " +
-            s"presence ratio:${fmtRefFloat(r.getDouble(4))})")
-          java.nio.file.Files.write(java.nio.file.Paths.get(opts("-o")),
-            out.mkString("", "\n", if (out.nonEmpty) "\n" else "").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
         } else {
-          spark.read.parquet(in)
-            .withColumn("st", q.sequenceStatsOf(col("tokens")))
-            .select(col("doc_id"), col("st.minimum").as("minimum"),
-              col("st.maximum").as("maximum"), col("st.average").as("average"),
-              col("st.presenceRatio").as("presence_ratio"))
-            .write.mode("overwrite").parquet(opts("-o"))
+          val q = new BqfQuery(spark, BackpackFilter.loadFromFile(opts("-b")).serialize())
+          // the reference's query verb is TEXT-in/TEXT-out (abstract_bqf.cpp:169-191,
+          // main.cpp:105-173); -f text selects that surface here, and a
+          // non-parquet regular-file input implies it
+          val isText = opts.get("-f").contains("text") ||
+            (!in.endsWith(".parquet") && java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(in)))
+          if (isText) {
+            import spark.implicits._
+            // Sequences are whitespace- or comma-separated integer token ids
+            // — this library's alphabet. Probes run distributed through the
+            // codegen sequence-stats expression; the ordered text write is
+            // driver-side, matching the reference's single-output-file
+            // contract (query files are the probe set — small by
+            // construction)
+            val seqs = querySequences(in).zipWithIndex.map { case (s, i) =>
+              (i + 1L, s.trim.split("[\\s,]+").map(_.toInt))
+            }
+            val rows = spark.createDataset(seqs).toDF("seq_no", "tokens")
+              .withColumn("st", q.sequenceStatsOf(col("tokens")))
+              .select(col("seq_no"), col("st.minimum"), col("st.maximum"),
+                col("st.average"), col("st.presenceRatio"))
+              .collect().sortBy(_.getLong(0))
+            writeQueryText(opts("-o"), rows.toSeq.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
+          } else {
+            spark.read.parquet(in)
+              .withColumn("st", q.sequenceStatsOf(col("tokens")))
+              .select(col("doc_id"), col("st.minimum").as("minimum"),
+                col("st.maximum").as("maximum"), col("st.average").as("average"),
+                col("st.presenceRatio").as("presence_ratio"))
+              .write.mode("overwrite").parquet(opts("-o"))
+          }
+          println(s"Load + queries time = ${(System.nanoTime() - t0) / 1000000}ms")
         }
-        println(s"Load + queries time = ${(System.nanoTime() - t0) / 1000000}ms")
 
       case "filter" =>
         val df = spark.read.parquet(opts("-i"))
+        // The reference's text and stream sinks write the DECODED k-mer, not
+        // its hash (bqf_cf.cpp:186-205 via hash_to_kmer — its xorshift hash
+        // is reversible; XXH64 is not, but the CLI has the pre-hash k-grams
+        // in hand). Both emit `tok,tok,...\tcount` lines: grouping by the
+        // k-gram itself is the human-readable sink — the scale sink groups
+        // by 8-byte fingerprints.
+        val k = params.kTokens
+        def kgramLines = df.filter(size(col("tokens")) >= k)
+          .select(explode(expr(
+            s"transform(sequence(1, size(tokens) - ${k - 1}), u -> slice(tokens, u, $k))")).as("kgram"))
+          .groupBy("kgram").count()
+          .filter(col("count") >= 2)
+          .select(format_string("%s\t%d", array_join(col("kgram"), ","), col("count")).as("line"))
         opts.getOrElse("-f", "parquet") match {
-          case "text" =>
-            // The reference's text sink writes the DECODED k-mer, not its
-            // hash (bqf_cf.cpp:186-205 via hash_to_kmer — its xorshift hash
-            // is reversible; XXH64 is not, but the CLI has the pre-hash
-            // k-grams in hand). Emit `tok,tok,...\tcount`: grouping by the
-            // k-gram itself is the human-readable sink — the scale sink
-            // below groups by 8-byte fingerprints.
-            val k = params.kTokens
-            df.filter(size(col("tokens")) >= k)
-              .select(explode(expr(
-                s"transform(sequence(1, size(tokens) - ${k - 1}), u -> slice(tokens, u, $k))")).as("kgram"))
-              .groupBy("kgram").count()
-              .filter(col("count") >= 2)
-              .select(format_string("%s\t%d", array_join(col("kgram"), ","), col("count")))
-              .write.mode("overwrite").text(opts("-o"))
+          case "text" => kgramLines.write.mode("overwrite").text(opts("-o"))
           case "stream" =>
             // the reference's third sink writes to STDOUT (bqf_cf.hpp:6-8
-            // output_mode_t stream); same decoded `tok,...\tcount` lines,
-            // streamed through toLocalIterator so driver memory stays
-            // bounded by one partition
-            val k = params.kTokens
-            val it = df.filter(size(col("tokens")) >= k)
-              .select(explode(expr(
-                s"transform(sequence(1, size(tokens) - ${k - 1}), u -> slice(tokens, u, $k))")).as("kgram"))
-              .groupBy("kgram").count()
-              .filter(col("count") >= 2)
-              .select(format_string("%s\t%d", array_join(col("kgram"), ","), col("count")).as("line"))
-              .toLocalIterator()
+            // output_mode_t stream), streamed through toLocalIterator so
+            // driver memory stays bounded by one partition
+            val it = kgramLines.toLocalIterator()
             while (it.hasNext) println(it.next().getString(0))
           case _ => // set semantics are order-insensitive, like the reference's E2E check
             df.select(explode(sgram_fingerprints(col("tokens"), params.kTokens, params.hashBits, params.seed)).as("kgram_fp"))

@@ -850,7 +850,7 @@ object Queries {
     import spark.implicits._
     val params = TextParams
     val nBuckets = 32
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    val shift = BqfPipeline.bucketShift(params.hashBits, nBuckets)
     // occurrence counts ride the 8-byte fingerprint (rolling kernel off the
     // document bytes, no substring materialization, q26's exchange shape);
     // the cached dictionary joins the name back AFTER the aggregate — one
@@ -933,7 +933,7 @@ object Queries {
     val params = BqfParams(qBits = 15, countBits = 6, hashBits = 48,
       mode = graft.core.CountMode.OrderOfMagnitude, kTokens = 8, zTokens = 0, seed = 0L)
     val nBuckets = 32
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+    val shift = BqfPipeline.bucketShift(params.hashBits, nBuckets)
     // same narrow-shuffle shape as q28: counts per fingerprint, name joined
     // from the cached dictionary after the aggregate
     val perShingle = docs(spark, dir).filter(length(col("text")) >= ShingleN)

@@ -87,7 +87,6 @@ final class BackpackFilter(
   def remainderBits: Int = hashBits - qBits
   def distinctCount: Long = nDistinct
   def capacity: Long = sizeLimit
-  def sizeInWords: Int = table.length
   /** Raw packed table for reference-format export: the in-memory block
     * layout (offset word, occupieds, runends, 64 slots of
     * `hashBits-q+countBits` bits per 64-slot block) IS the reference's
@@ -1535,23 +1534,6 @@ object BackpackFilter {
   def apply(qBits: Int, countBits: Int, hashBits: Int = 64, mode: CountMode = CountMode.Exact,
             kTokens: Int = 0, zTokens: Int = 0, seed: Long = 0L): BackpackFilter =
     new BackpackFilter(qBits, countBits, hashBits, mode, kTokens, zTokens, seed)
-
-  /** Largest quotient size whose table fits in `maxBytes` — the reference's
-    * memory-driven constructor rule (find_quotient_given_memory,
-    * /root/reference/src/rsqf.cpp:153-172, abstract_bqf.cpp:491-509).
-    */
-  def qBitsForMemory(maxBytes: Long, countBits: Int, hashBits: Int): Int = {
-    var q = 62
-    while (q >= 7) {
-      val slotBits = hashBits - q + countBits
-      if (slotBits >= 1 && slotBits <= 63) {
-        val words = (1L << math.max(0, q - 6)) * (3 + slotBits)
-        if (words * 8 <= maxBytes) return q
-      }
-      q -= 1
-    }
-    7
-  }
 
   /** File save/load mirroring the reference CLI's sketch persistence
     * (save_on_disk / load_from_disk, /root/reference/src/abstract_bqf.cpp:512-529).

@@ -3,19 +3,23 @@ package graft.plans
 import graft.operators.{BqfParams, SketchAggregators}
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.FrameBridge
 import org.apache.spark.sql.types._
+import scala.reflect.ClassTag
 
 /** Distributed build plans for BQF sketches.
   *
   * Scale design (100 TB / 1000 executors): only serialized sketch blobs
-  * and map-side fingerprint chunks cross shuffle boundaries. One sorted
-  * plan ([[sortedBuild]]), one keyed RDD shuffle of (bucket, long[]) chunk
-  * records with no typed rows in between, builds every fingerprint-range
+  * and map-side fingerprint chunks cross shuffle boundaries. Every
+  * operator that routes by bucket is a map-side chunker
+  * ([[chunkByBucket]], one (bucket, long[]) record shape) plus one call to
+  * the one range shuffle ([[rangeShuffle]]), with no typed rows in
+  * between. One sorted build ([[shardBlobs]]) builds every fingerprint-range
   * sharded index, and every one-blob build is that index folded on the
   * driver ([[buildGlobal]], [[mergeShards]]): the shard blobs are collected
   * and merged by one [[graft.core.BackpackFilter.mergeAll]] that runs its
@@ -41,7 +45,7 @@ object BqfPipeline {
     * one job of two stages. An empty input gives the empty q=7 sketch.
     */
   def buildGlobal(df: DataFrame, fpCol: Column, params: BqfParams): Array[Byte] =
-    Option(foldBlobs(shardBlobs(indexChunks(df, fpCol, params, 32), params).values.collect()))
+    Option(foldBlobs(shardBlobs(indexChunks(df, fpCol, params, 32), params, 32).map(_._2).collect()))
       .getOrElse(params.fresh().serialize())
 
   /** The blob of [[buildGlobal]], which it forwards to: the layout is
@@ -67,120 +71,120 @@ object BqfPipeline {
   def buildIndexSorted(df: DataFrame, fpCol: Column, params: BqfParams,
                        nBuckets: Int): DataFrame = {
     import df.sparkSession.implicits._
-    shardBlobs(indexChunks(df, fpCol, params, nBuckets), params).toDF("bucket", "sketch")
+    shardBlobs(indexChunks(df, fpCol, params, nBuckets), params, nBuckets)
+      .map { case (bucket, sketch, _) => (bucket, sketch) }.toDF("bucket", "sketch")
   }
 
-  /** The routed, bucket-sorted chunks of [[buildIndexSorted]]: its
-    * [[sortedBuild]] up to the shard build, which [[buildGlobal]] folds and
-    * [[graft.streaming.IndexIngest.build]] writes into a logged store
-    * instead.
+  /** The map side of [[buildIndexSorted]], [[buildGlobal]] and
+    * [[graft.streaming.IndexIngest.build]]: each input task reads the
+    * fingerprint arrays of `fpCol` from the internal rows of the input plan
+    * (no typed decoder, no SQL execution of their own) and chunks them by
+    * bucket ([[chunkByBucket]]). A null array (a null text/tokens row
+    * upstream) contributes nothing, as an explode of it would.
     */
   private[graft] def indexChunks(df: DataFrame, fpCol: Column, params: BqfParams,
-                                 nBuckets: Int): RDD[(Long, Array[Long], Array[Long])] =
-    sortedBuild(df.select(fpCol.cast("array<bigint>")).queryExecution.toRdd, params, nBuckets, counted = false)(
-      _.map(row => (if (row.isNullAt(0)) null else row.getArray(0).toLongArray(), null)))
+                                 nBuckets: Int): RDD[(Long, Array[Long])] =
+    df.select(fpCol.cast("array<bigint>")).queryExecution.toRdd.mapPartitions(rows => chunkByBucket(
+      rows.map(row => if (row.isNullAt(0)) null else row.getArray(0).toLongArray()), params.hashBits, nBuckets,
+      counted = false))
 
-  /** Each reduce task's chunks gathered ([[gatherChunks]]) and built into
-    * one (bucket, sketch) record per bucket.
-    */
-  private def shardBlobs(chunks: RDD[(Long, Array[Long], Array[Long])], params: BqfParams): RDD[(Long, Array[Byte])] =
-    chunks.mapPartitions(it => gatherChunks(it).map { case (bucket, fps, stored) =>
-      (bucket, buildShard(bucket, fps, stored, params))
-    }, preservesPartitioning = true)
-
-  /** The one sorted build plan behind [[buildGlobal]], [[buildIndexSorted]],
-    * [[reshardMerge]] and [[graft.streaming.IndexIngest.build]], one keyed
-    * RDD shuffle: each input task turns its rows (the internal rows of the
-    * input plan, read without a typed decoder or an SQL execution of their
-    * own) into (fingerprints, stored counts) entry arrays (`counted = false`:
-    * counts are all 1 and stay null), the map-side chunker groups them by
-    * destination bucket (high fingerprint bits) into (bucket, long[])
-    * chunk records, the shuffle routes each record by [[rangeTask]], and
-    * each reduce task reads its records sorted by bucket (the shuffle's key
-    * ordering); the caller's reduce side gathers its buckets and builds
-    * every shard with [[buildShard]]. A counted chunk crosses as one array,
-    * its fingerprints then its counts: a (Long, long[]) record shuffles
-    * through Kryo, a tuple value would fall back to Java serialization.
-    *
-    * Routing: with p = min(nBuckets, defaultParallelism) reduce tasks,
-    * bucket b goes to task b * p / nBuckets (integer division), so task t
-    * owns the contiguous buckets [t * nBuckets / p, (t+1) * nBuckets / p):
-    * balanced, none empty, one bucket-clustered output file each, and
-    * exactly one bucket per task when the cluster has nBuckets cores or
-    * more. A hash exchange of nBuckets ids into nBuckets partitions would
-    * collide instead (at 32 buckets on 4 cores: 12 empty tasks, several
-    * holding 2-3 shards, one file per non-empty task). Each task reads its
-    * chunks sorted by bucket, so [[gatherChunks]] holds one shard at a time.
+  /** The reduce side of the one sorted build behind [[buildGlobal]],
+    * [[buildIndexSorted]], [[reshardMerge]] and
+    * [[graft.streaming.IndexIngest.build]]: the chunk records cross
+    * [[rangeShuffle]], and each reduce task gathers its buckets one at a
+    * time ([[gatherChunks]]) and builds each one's shard in one sequential
+    * pass. One (bucket, sketch, fingerprint rows gathered) record per
+    * bucket, ascending, in the shuffle's partitions. A build refuses the
+    * strays of [[chunkByBucket]] (bucket -1).
     *
     * Why chunks: a profile of the index build at 155M k-grams showed
     * fingerprint extraction itself costs ~2 s at 8 cores while shuffling
     * the fingerprints as individual rows cost ~21 s and re-reading them
     * through the typed row boundary another ~13 s — the row machinery, not
-    * the bytes, dominates. One (bucket, chunk) row per bucket per flush is
-    * ~tasks x buckets rows instead of one per k-gram; array encode/decode
-    * is a memcpy. Same shuffle BYTES, ~10^4x fewer shuffle ROWS.
+    * the bytes, dominates. One (bucket, chunk) record per bucket per flush
+    * is ~tasks x buckets records instead of one per k-gram; array
+    * encode/decode is a memcpy. Same shuffle BYTES, ~10^4x fewer shuffle
+    * ROWS.
     */
-  private def sortedBuild(rows: RDD[InternalRow], params: BqfParams, nBuckets: Int, counted: Boolean)(
-      entries: Iterator[InternalRow] => Iterator[(Array[Long], Array[Long])])
-      : RDD[(Long, Array[Long], Array[Long])] = {
+  private[graft] def shardBlobs(chunks: RDD[(Long, Array[Long])], params: BqfParams, nBuckets: Int,
+                                counted: Boolean = false): RDD[(Long, Array[Byte], Long)] =
+    rangeShuffle(chunks, nBuckets).mapPartitions(it => gatherChunks(it, counted) { (bucket, fps, stored) =>
+      require(bucket >= 0, s"fingerprints above hashBits=${params.hashBits} have no bucket")
+      (bucket, graft.core.BackpackFilter.fromEntries(7, params.countBits, params.hashBits, params.mode,
+        params.kTokens, params.zTokens, params.seed, fps, stored, fps.length).serialize(), fps.length.toLong)
+    }, preservesPartitioning = true)
+
+  /** The one range shuffle of every operator that routes by bucket
+    * ([[shardBlobs]], [[queryIndex]] and
+    * [[graft.streaming.IndexIngest.ingestBatch]]): each record's key is its
+    * bucket shifted left by `keyShift` bits, the shuffle sends it to reduce
+    * task [[rangeTask]] of p = min(nBuckets, defaultParallelism), and each
+    * reduce task reads its records sorted by key. The records cross through
+    * Kryo, set here: Spark picks Kryo by itself only for a primitive or
+    * primitive-array value type, and would send an `AnyRef` value through
+    * Java serialization. `nBuckets` must be a power of two.
+    *
+    * Why ranges: each task owns a contiguous bucket range, balanced, none
+    * empty, one bucket-clustered output file each, and exactly one bucket
+    * when the cluster has nBuckets cores or more. A hash exchange of
+    * nBuckets ids into nBuckets partitions would collide instead (at 32
+    * buckets on 4 cores: 12 empty tasks, several holding 2-3 shards, one
+    * file per non-empty task). Reading sorted by bucket, [[gatherChunks]]
+    * holds one shard at a time.
+    */
+  private[graft] def rangeShuffle[V: ClassTag](records: RDD[(Long, V)], nBuckets: Int,
+                                               keyShift: Int = 0): RDD[(Long, V)] = {
     require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
-    val shift = params.hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val p = math.min(nBuckets, rows.sparkContext.defaultParallelism)
-    val chunks = rows.mapPartitions(it => chunkByBucket(entries(it), nBuckets, shift, counted).map {
-      case (bucket, fps, stored) => (bucket, if (counted) Array.concat(fps, stored) else fps)
-    })
-    new ShuffledRDD[Long, Array[Long], Array[Long]](chunks, new RangeTasks(nBuckets, p))
-      .setKeyOrdering(Ordering.Long)
-      .mapPartitions(_.map { case (bucket, v) =>
-        if (!counted) (bucket, v, null)
-        else (bucket, java.util.Arrays.copyOfRange(v, 0, v.length / 2), java.util.Arrays.copyOfRange(v, v.length / 2, v.length))
-      }, preservesPartitioning = true)
+    val sc = records.sparkContext
+    val p = math.min(nBuckets, sc.defaultParallelism)
+    new ShuffledRDD[Long, V, V](records, new Partitioner {
+      override def numPartitions: Int = p
+      override def getPartition(key: Any): Int = rangeTask(key.asInstanceOf[Long] >> keyShift, nBuckets, p)
+    }).setKeyOrdering(Ordering.Long).setSerializer(new KryoSerializer(sc.getConf))
   }
 
-  /** [[rangeTask]] as the partitioner of a keyed RDD shuffle whose keys
-    * are buckets shifted left by `keyShift` bits: [[sortedBuild]]'s and
-    * ingest's (bucket keys), and [[queryIndex]]'s (a bucket and one tag bit).
-    */
-  private[graft] final class RangeTasks(nBuckets: Int, p: Int, keyShift: Int = 0) extends Partitioner {
-    override def numPartitions: Int = p
-    override def getPartition(key: Any): Int = rangeTask(key.asInstanceOf[Long] >> keyShift, nBuckets, p)
-  }
-
-  /** The range rule of every shuffle that routes by bucket ([[sortedBuild]],
-    * [[queryIndex]], [[graft.streaming.IndexIngest]]'s writes) and of
-    * compact's ranges on the driver: bucket b of `nBuckets` (a power of two)
-    * goes to task b * p / nBuckets of `p`, so task t owns the contiguous
-    * buckets [t * nBuckets / p, (t+1) * nBuckets / p). Buckets outside
+  /** The range rule of [[rangeShuffle]] and of compact's ranges on the
+    * driver: bucket b of `nBuckets` (a power of two) goes to task
+    * b * p / nBuckets of `p`, so task t owns the contiguous buckets
+    * [t * nBuckets / p, (t+1) * nBuckets / p). Buckets outside
     * [0, nBuckets) — the -1 of [[chunkByBucket]]'s strays — clamp to the
     * edge tasks.
     */
   private[graft] def rangeTask(bucket: Long, nBuckets: Int, p: Int): Int =
     math.min(math.max((bucket * p) >> java.lang.Integer.numberOfTrailingZeros(nBuckets), 0L), p - 1L).toInt
 
-  /** Map-side bucketizer of [[sortedBuild]], [[queryIndex]] and
-    * [[graft.streaming.IndexIngest.ingestBatch]]: groups each task's entries
-    * by destination bucket into (bucket, fingerprints, stored counts) chunk
-    * rows; the counts array is null unless `counted`. Fingerprints whose
-    * bucket falls outside [0, nBuckets) (bits above hashBits) are strays:
-    * they come out under bucket -1, which no shard has, and each caller
-    * decides what a stray means (a query answers it 0, a build refuses it).
+  /** The bucket rule of every bucket-routed operator: a fingerprint of
+    * `hashBits` bits belongs to bucket `fp >>> bucketShift` of `nBuckets`
+    * (a power of two), its high bits.
+    */
+  private[graft] def bucketShift(hashBits: Int, nBuckets: Int): Int =
+    hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
+
+  /** The one map-side chunker: groups each task's entry blocks by
+    * destination bucket ([[bucketShift]]) into (bucket, long[]) chunk
+    * records, the one record shape from here to [[gatherChunks]]. A block
+    * is a fingerprint array or, when `counted`, its fingerprints followed
+    * by their stored counts, and so is a chunk. Null blocks contribute
+    * nothing. Fingerprints whose bucket falls outside [0, nBuckets) (bits
+    * above hashBits) are strays: they come out under bucket -1, which no
+    * shard has, and each caller decides what a stray means (a query
+    * answers it 0, a build refuses it).
     *
     * Bounded buffering: builders flush to chunk rows every ~4M buffered
     * fingerprints (32 MB), so task heap is independent of input-partition
     * size (an unbounded version scales with the partition — a skewed 100 TB
     * split would OOM the task). The shuffle writer consumes this iterator
-    * lazily, so flushed chunks leave the heap as they are emitted. Null
-    * fingerprint arrays (a null text/tokens row upstream) contribute
-    * nothing, matching the old explode path's semantics.
+    * lazily, so flushed chunks leave the heap as they are emitted.
     */
-  private[graft] def chunkByBucket(entries: Iterator[(Array[Long], Array[Long])], nBuckets: Int,
-                            shift: Int, counted: Boolean): Iterator[(Long, Array[Long], Array[Long])] =
-    new Iterator[(Long, Array[Long], Array[Long])] {
+  private[graft] def chunkByBucket(entries: Iterator[Array[Long]], hashBits: Int, nBuckets: Int,
+                                   counted: Boolean): Iterator[(Long, Array[Long])] =
+    new Iterator[(Long, Array[Long])] {
       private type Builder = scala.collection.mutable.ArrayBuilder.ofLong
+      private val shift = bucketShift(hashBits, nBuckets)
       // slot nBuckets collects the strays
       private val fpB = new Array[Builder](nBuckets + 1)
       private val countB = if (counted) new Array[Builder](nBuckets + 1) else null
-      private val queue = scala.collection.mutable.Queue.empty[(Long, Array[Long], Array[Long])]
+      private val queue = scala.collection.mutable.Queue.empty[(Long, Array[Long])]
       private var nBuffered = 0L
       private val flushAt = 4L << 20
       // expected entries per bucket per flush epoch (uniform fingerprints):
@@ -205,8 +209,8 @@ object BqfPipeline {
         while (b <= nBuckets) {
           val bb = fpB(b)
           if (bb != null) {
-            queue.enqueue((if (b == nBuckets) -1L else b.toLong, bb.result(),
-              if (counted) countB(b).result() else null))
+            queue.enqueue((if (b == nBuckets) -1L else b.toLong,
+              if (counted) Array.concat(bb.result(), countB(b).result()) else bb.result()))
             fpB(b) = null
             if (counted) countB(b) = null
           }
@@ -217,30 +221,32 @@ object BqfPipeline {
       private def fill(): Unit =
         while (queue.isEmpty && entries.hasNext) {
           while (entries.hasNext && nBuffered < flushAt) {
-            val (fps, stored) = entries.next()
-            if (fps != null) {
+            val block = entries.next()
+            if (block != null) {
               var i = 0
               if (counted) {
-                while (i < fps.length) {
-                  val b = slot(fps(i))
-                  builder(fpB, b).addOne(fps(i))
-                  builder(countB, b).addOne(stored(i))
+                val n = block.length / 2
+                while (i < n) {
+                  val b = slot(block(i))
+                  builder(fpB, b).addOne(block(i))
+                  builder(countB, b).addOne(block(n + i))
                   i += 1
                 }
+                nBuffered += n
               } else {
-                while (i < fps.length) {
-                  val fp = fps(i)
+                while (i < block.length) {
+                  val fp = block(i)
                   builder(fpB, slot(fp)).addOne(fp)
                   i += 1
                 }
+                nBuffered += block.length
               }
-              nBuffered += fps.length
             }
           }
           flush()
         }
       override def hasNext: Boolean = { fill(); queue.nonEmpty }
-      override def next(): (Long, Array[Long], Array[Long]) = { fill(); queue.dequeue() }
+      override def next(): (Long, Array[Long]) = { fill(); queue.dequeue() }
     }
 
   /** The fingerprints of column `fp` as (bucket, fps) chunk records, one
@@ -256,11 +262,10 @@ object BqfPipeline {
     val t = df.schema("fp").dataType
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(t),
       s"fingerprint column fp is ${t.simpleString}, not bigint")
-    val shift = hashBits - java.lang.Integer.numberOfTrailingZeros(nBuckets)
     df.select(col("fp").cast(LongType)).queryExecution.toRdd.mapPartitions { rows =>
-      val blocks = new Iterator[(Array[Long], Array[Long])] {
+      val blocks = new Iterator[Array[Long]] {
         override def hasNext: Boolean = rows.hasNext
-        override def next(): (Array[Long], Array[Long]) = {
+        override def next(): Array[Long] = {
           val block = new Array[Long](1 << 16)
           var n = 0
           while (n < block.length && rows.hasNext) {
@@ -270,10 +275,10 @@ object BqfPipeline {
             block(n) = row.getLong(0)
             n += 1
           }
-          (if (n == block.length) block else java.util.Arrays.copyOf(block, n), null)
+          if (n == block.length) block else java.util.Arrays.copyOf(block, n)
         }
       }
-      chunkByBucket(blocks, nBuckets, shift, counted = false).map { case (bucket, fps, _) => (bucket, fps) }
+      chunkByBucket(blocks, hashBits, nBuckets, counted = false)
     }
   }
 
@@ -287,79 +292,76 @@ object BqfPipeline {
   private def maxShardFps: Long =
     java.lang.Long.getLong("graft.maxShardFps", 96L << 20) // ~1.5 GB gathered
 
-  /** Concatenate per-bucket chunk rows ((bucket, fps, stored?) with stored
-    * possibly null for the all-ones build), which must arrive sorted by
-    * bucket, into one contiguous pair of arrays per bucket — plain
-    * arraycopies, no per-entry work. Streams: a bucket is emitted as soon
-    * as the next bucket's first row arrives, so only one shard is held.
+  /** Concatenate the chunk records of [[chunkByBucket]], which must arrive
+    * sorted by bucket, into one fingerprint array per bucket — plain
+    * arraycopies, no per-entry work — and hand each bucket to `shard`.
+    * Counted chunks are split while they are copied: their fingerprint
+    * halves into the fingerprints, their count halves into the stored
+    * counts; uncounted ones give null stored counts (each entry one
+    * occurrence). Streams: a bucket is handed over as soon as the next
+    * bucket's first record arrives, so only one shard is held.
     */
-  private[graft] def gatherChunks(it: Iterator[(Long, Array[Long], Array[Long])])
-      : Iterator[(Long, Array[Long], Array[Long])] =
-    new Iterator[(Long, Array[Long], Array[Long])] {
+  private[graft] def gatherChunks[T](it: Iterator[(Long, Array[Long])], counted: Boolean)(
+      shard: (Long, Array[Long], Array[Long]) => T): Iterator[T] =
+    new Iterator[T] {
       private val in = it.buffered
       private val cap = maxShardFps
+      private def entries(chunk: Array[Long]): Int = if (counted) chunk.length / 2 else chunk.length
       override def hasNext: Boolean = in.hasNext
-      override def next(): (Long, Array[Long], Array[Long]) = {
+      override def next(): T = {
         val bucket = in.head._1
-        val parts = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Array[Long])]
+        val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
         var n = 0L
         while (in.hasNext && in.head._1 == bucket) {
-          val (_, f, s) = in.next()
-          n += f.length
+          val chunk = in.next()._2
+          n += entries(chunk)
           if (n > cap) throw new IllegalStateException(
             s"shard $bucket exceeds $cap fingerprints — the corpus is under-sharded " +
             "for this executor memory; raise nBuckets (shard size = total " +
             "fingerprints / nBuckets must fit task memory at ~16 B each) or " +
             "-Dgraft.maxShardFps to raise the guard")
-          parts += ((f, s))
+          parts += chunk
         }
         if (in.hasNext && in.head._1 < bucket) throw new IllegalStateException(
           s"chunk rows out of bucket order (${in.head._1} after $bucket)")
         val fps = new Array[Long](n.toInt)
-        val stored = if (parts.head._2 == null) null else new Array[Long](fps.length)
+        val stored = if (counted) new Array[Long](fps.length) else null
         var off = 0
-        parts.foreach { case (f, s) =>
-          System.arraycopy(f, 0, fps, off, f.length)
-          if (stored != null) System.arraycopy(s, 0, stored, off, s.length)
-          off += f.length
+        parts.foreach { chunk =>
+          val m = entries(chunk)
+          System.arraycopy(chunk, 0, fps, off, m)
+          if (counted) System.arraycopy(chunk, m, stored, off, m)
+          off += m
         }
-        (bucket, fps, stored)
+        shard(bucket, fps, stored)
       }
     }
 
-  /** The serialized shard of one gathered bucket of a sorted build; a build
-    * refuses the strays of [[chunkByBucket]] (bucket -1).
-    */
-  private[graft] def buildShard(bucket: Long, fps: Array[Long], stored: Array[Long], params: BqfParams): Array[Byte] = {
-    require(bucket >= 0, s"fingerprints above hashBits=${params.hashBits} have no bucket")
-    graft.core.BackpackFilter.fromEntries(
-      7, params.countBits, params.hashBits, params.mode,
-      params.kTokens, params.zTokens, params.seed, fps, stored, fps.length).serialize()
-  }
-
   /** Distributed merge / re-shard: every input task reads its shard
-    * sketches' raw (fingerprint, storedCount) entries, and the same sorted
-    * build as [[buildIndexSorted]] routes them to `nOut` fingerprint-range
-    * buckets and bulk-rebuilds one sketch per output bucket. This is the
-    * scale form of the merge: where [[mergeShards]] ends in one merge on
-    * the driver, reshardMerge ends in `nOut` independent O(n)
-    * sorted builds, so merge wall time scales with cores. Output bucket b
-    * of nOut is exactly the merge of input shards covering that fingerprint
-    * range (high-bit prefix nesting), regardless of how the inputs were
-    * sharded.
+    * sketches' raw (fingerprint, storedCount) entries as counted blocks,
+    * and the same sorted build as [[buildIndexSorted]] routes them to
+    * `nOut` fingerprint-range buckets and bulk-rebuilds one sketch per
+    * output bucket, folding a fingerprint's stored counts as the sketch's
+    * mode does (exact: saturating add, order of magnitude: max). This is
+    * the scale form of the merge: where [[mergeShards]] ends in one merge
+    * on the driver, reshardMerge ends in `nOut` independent O(n) sorted
+    * builds, so merge wall time scales with cores. Output bucket b of nOut
+    * is exactly the merge of input shards covering that fingerprint range
+    * (high-bit prefix nesting), regardless of how the inputs were sharded.
     */
   def reshardMerge(shards: DataFrame, params: BqfParams, nOut: Int): DataFrame = {
     import shards.sparkSession.implicits._
-    shardBlobs(sortedBuild(shards.select("sketch").queryExecution.toRdd, params, nOut, counted = true)(
-      _.map { row =>
-        val f = graft.core.BackpackFilter.deserialize(row.getBinary(0))
-        val fps = new Array[Long](f.distinctCount.toInt)
-        val stored = new Array[Long](fps.length)
-        var i = 0
-        // specialized visitor: zero boxing across the 10^8-entry stream
-        f.foreachRaw { (fp, c) => fps(i) = fp; stored(i) = c; i += 1 }
-        (fps, stored)
-      }), params).toDF("bucket", "sketch")
+    val chunks = shards.select("sketch").queryExecution.toRdd.mapPartitions(rows => chunkByBucket(rows.map { row =>
+      val f = graft.core.BackpackFilter.deserialize(row.getBinary(0))
+      val n = f.distinctCount.toInt
+      val block = new Array[Long](2 * n) // the fingerprints, then their stored counts
+      var i = 0
+      // specialized visitor: zero boxing across the 10^8-entry stream
+      f.foreachRaw { (fp, c) => block(i) = fp; block(n + i) = c; i += 1 }
+      block
+    }, params.hashBits, nOut, counted = true))
+    shardBlobs(chunks, params, nOut, counted = true)
+      .map { case (bucket, sketch, _) => (bucket, sketch) }.toDF("bucket", "sketch")
   }
 
   /** The enumerate operator exposed relationally at scale: explode every
@@ -381,16 +383,14 @@ object BqfPipeline {
     * The map side chunks the probes by bucket ([[fingerprintChunks]], the
     * high-bit bucketing the build used), and the chunk records, keyed
     * `(bucket << 1) | 1`, and the shard rows, keyed `bucket << 1`, meet in
-    * one keyed RDD shuffle under the range rule of the sorted build
-    * ([[RangeTasks]] of `key >> 1`, p = min(nBuckets, defaultParallelism)
-    * tasks). Each reduce task reads its records sorted by key, so each
-    * bucket's shard before its probes, and streams bucket by bucket: it
-    * deserializes each shard once and answers every probe chunk of that
-    * bucket against it. The shuffle moves 8-byte probe fingerprints in
-    * array chunks plus each shard blob exactly once, through Kryo (with a
-    * value that is either array, an RDD shuffle would fall back to Java
-    * serialization). Both inputs are read as internal rows and the answers
-    * stream out as internal rows, with no typed encoder on either side.
+    * the sorted build's [[rangeShuffle]] (key shift 1, p =
+    * min(nBuckets, defaultParallelism) tasks). Each reduce task reads its
+    * records sorted by key, so each bucket's shard before its probes, and
+    * streams bucket by bucket: it deserializes each shard once and answers
+    * every probe chunk of that bucket against it. The shuffle moves 8-byte
+    * probe fingerprints in array chunks plus each shard blob exactly once.
+    * Both inputs are read as internal rows and the answers stream out as
+    * internal rows, with no typed encoder on either side.
     *
     * Returns (fp, abundance), one row per probe row (repeated probes are
     * answered once each). A probe whose bucket has no shard — including a
@@ -408,10 +408,7 @@ object BqfPipeline {
     */
   def queryIndex(shards: DataFrame, probes: DataFrame, params: BqfParams,
                  nBuckets: Int): DataFrame = {
-    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = shards.sparkSession
-    val sc = spark.sparkContext
-    val p = math.min(nBuckets, sc.defaultParallelism)
     val probeRecords: RDD[(Long, AnyRef)] = fingerprintChunks(probes, params.hashBits, nBuckets)
       .map { case (bucket, fps) => ((bucket << 1) | 1L, fps) }
     val shardRecords: RDD[(Long, AnyRef)] = shards.select(col("bucket").cast(LongType), col("sketch"))
@@ -419,37 +416,34 @@ object BqfPipeline {
         require(!row.isNullAt(0), "queryIndex: a shard row with a null bucket")
         (row.getLong(0) << 1, row.getBinary(1))
       }
-    val answers = new ShuffledRDD[Long, AnyRef, AnyRef](probeRecords.union(shardRecords), new RangeTasks(nBuckets, p, 1))
-      .setKeyOrdering(Ordering.Long)
-      .setSerializer(new org.apache.spark.serializer.KryoSerializer(sc.getConf))
-      .mapPartitions { records =>
-        val out: InternalRow = new SpecificInternalRow(Seq(LongType, LongType))
-        var bucket = Long.MinValue
-        var shard: graft.core.BackpackFilter = null
-        records.flatMap { case (key, value) =>
-          val b = key >> 1
-          if (b != bucket) { bucket = b; shard = null }
-          if ((key & 1L) == 0L) {
-            // Multiple rows for one bucket are ambiguous: an index store's
-            // data files, read raw, hold SUPERSEDED versions whose merge
-            // would double-count, while answering from an arbitrary row
-            // would silently answer from a stale version. Refuse instead of
-            // guessing: a store's live view is IndexIngest.currentShards.
-            require(shard == null,
-              s"queryIndex: multiple sketch rows for bucket $b -- these look like an index store's " +
-                "data files read raw; query IndexIngest.currentShards(...) instead")
-            shard = graft.core.BackpackFilter.deserialize(value.asInstanceOf[Array[Byte]])
-            Iterator.empty
-          } else {
-            val f = shard
-            value.asInstanceOf[Array[Long]].iterator.map { fp =>
-              out.setLong(0, fp)
-              out.setLong(1, if (f == null) 0L else f.abundance(fp))
-              out
-            }
+    val answers = rangeShuffle(probeRecords.union(shardRecords), nBuckets, keyShift = 1).mapPartitions { records =>
+      val out: InternalRow = new SpecificInternalRow(Seq(LongType, LongType))
+      var bucket = Long.MinValue
+      var shard: graft.core.BackpackFilter = null
+      records.flatMap { case (key, value) =>
+        val b = key >> 1
+        if (b != bucket) { bucket = b; shard = null }
+        if ((key & 1L) == 0L) {
+          // Multiple rows for one bucket are ambiguous: an index store's
+          // data files, read raw, hold SUPERSEDED versions whose merge
+          // would double-count, while answering from an arbitrary row
+          // would silently answer from a stale version. Refuse instead of
+          // guessing: a store's live view is IndexIngest.currentShards.
+          require(shard == null,
+            s"queryIndex: multiple sketch rows for bucket $b -- these look like an index store's " +
+              "data files read raw; query IndexIngest.currentShards(...) instead")
+          shard = graft.core.BackpackFilter.deserialize(value.asInstanceOf[Array[Byte]])
+          Iterator.empty
+        } else {
+          val f = shard
+          value.asInstanceOf[Array[Long]].iterator.map { fp =>
+            out.setLong(0, fp)
+            out.setLong(1, if (f == null) 0L else f.abundance(fp))
+            out
           }
         }
       }
+    }
     FrameBridge.frame(spark, answers, AnswerSchema)
   }
 

@@ -282,6 +282,14 @@ object IndexIngest {
     * routing; [[ingestBatch]] then takes ids above 0. A fingerprint above
     * hashBits fails the build and commits nothing. A directory that holds a
     * committed entry, or data files but no log, is refused.
+    *
+    * Counts: each occurrence stores the encoded count 1 (the bulk build's
+    * all-ones rule), and duplicates fold by the mode's combine. In exact
+    * mode that is the occurrence count; in order-of-magnitude mode it is
+    * `encodeCount(1)` folded by max, so every fingerprint of checkpoint 0
+    * has abundance 1 whatever its count, while [[ingestBatch]] stores
+    * floor(log2) of each batch's count. A store's order-of-magnitude counts
+    * thus depend on which writer produced each shard version.
     */
   def build(df: DataFrame, fpCol: Column, params: BqfParams, nBuckets: Int, storeDir: String): Unit = {
     val spark = df.sparkSession
@@ -289,12 +297,11 @@ object IndexIngest {
     CommitLog.create(spark, storeDir)
     val store = TaskStore(spark, storeDir, LogState(Nil))
     val written =
-      try writing(spark)(BqfPipeline.indexChunks(df, fpCol, params, nBuckets).mapPartitions { it =>
-        val shards = BqfPipeline.gatherChunks(it).map { case (bucket, fps, stored) =>
-          (ShardFiles.Shard(bucket, BqfPipeline.buildShard(bucket, fps, stored, params), 0L), fps.length.toLong)
-        }
-        if (shards.hasNext) Iterator.single(writeTask(store, 0L, shards, 0L)) else Iterator.empty
-      }.collect())
+      try writing(spark)(BqfPipeline.shardBlobs(BqfPipeline.indexChunks(df, fpCol, params, nBuckets), params, nBuckets)
+        .mapPartitions { blobs =>
+          val shards = blobs.map { case (bucket, sketch, n) => (ShardFiles.Shard(bucket, sketch, 0L), n) }
+          if (shards.hasNext) Iterator.single(writeTask(store, 0L, shards, 0L)) else Iterator.empty
+        }.collect())
       finally store.conf.destroy()
     CommitLog.commit(spark, storeDir, LogEntry(0L, checkpoint = true, Routing(nBuckets, params),
       written.toSeq.map(w => LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
@@ -384,12 +391,12 @@ object IndexIngest {
     * lower one that it does not hold is refused, because the live view is
     * each bucket's highest batch_id.
     *
-    * One job of two stages and no SQL execution: the keyed RDD shuffle of
-    * the sorted build. The map side reads the batch's internal rows and
-    * chunks them by bucket ([[graft.plans.BqfPipeline.fingerprintChunks]]),
-    * and the shuffle sends contiguous bucket ranges to min(nBuckets, cores)
-    * merge tasks, the range rule of the sorted build and of queryIndex,
-    * each of which reads its chunk records sorted by bucket. Each merge task reads the live
+    * One job of two stages and no SQL execution. The map side reads the
+    * batch's internal rows and chunks them by bucket
+    * ([[graft.plans.BqfPipeline.fingerprintChunks]]), and the sorted
+    * build's range shuffle ([[graft.plans.BqfPipeline.rangeShuffle]]) sends
+    * contiguous bucket ranges to min(nBuckets, cores) merge tasks, each of
+    * which reads its chunk records sorted by bucket. Each merge task reads the live
     * versions of exactly the buckets it received, from the files the
     * folded log names (touched-bucket pruning: per-batch cost is
     * O(batch + touched shards), independent of store width), builds each
@@ -397,7 +404,10 @@ object IndexIngest {
     * the new versions to one file of its own, straight into the store. The
     * driver then commits the batch's log entry from the tasks' reports,
     * with each new shard's lineage: fingerprint rows consumed and merge
-    * depth.
+    * depth. In order-of-magnitude mode a batch stores floor(log2) of each
+    * fingerprint's count in the batch ([[batchPartial]]), where [[build]]
+    * stores abundance 1 for every fingerprint, so the two writers' shard
+    * versions of one count differ.
     *
     * A batch with fingerprints above hashBits (no bucket), or with a null
     * fingerprint, is refused with an IllegalArgumentException that says so
@@ -409,7 +419,6 @@ object IndexIngest {
     */
   def ingestBatch(batch: DataFrame, batchId: Long, params: BqfParams, nBuckets: Int,
                   storeDir: String): Unit = {
-    require(nBuckets >= 1 && (nBuckets & (nBuckets - 1)) == 0, "nBuckets must be a power of 2")
     val spark = batch.sparkSession
     val routing = Routing(nBuckets, params)
     val state = log(spark, storeDir).getOrElse { CommitLog.create(spark, storeDir); LogState(Nil) }
@@ -424,12 +433,9 @@ object IndexIngest {
     require(batchId > state.lastId,
       s"ingestBatch: batch $batchId arrives after batch ${state.lastId} of $storeDir; batch ids must increase")
     if (state.superseded.nonEmpty) sweep(spark, storeDir, state) // a compaction crashed before its clean-up
-    val p = math.min(nBuckets, spark.sparkContext.defaultParallelism)
     val store = TaskStore(spark, storeDir, state)
     val written =
-      try writing(spark)(new org.apache.spark.rdd.ShuffledRDD[Long, Array[Long], Array[Long]](
-        BqfPipeline.fingerprintChunks(batch, params.hashBits, nBuckets), new BqfPipeline.RangeTasks(nBuckets, p))
-        .setKeyOrdering(Ordering.Long)
+      try writing(spark)(BqfPipeline.rangeShuffle(BqfPipeline.fingerprintChunks(batch, params.hashBits, nBuckets), nBuckets)
         .mapPartitions(mergeRange(store, batchId, params, _))
         .collect())
       catch {
@@ -461,13 +467,12 @@ object IndexIngest {
     */
   private def mergeRange(store: TaskStore, batchId: Long, params: BqfParams,
                          rows: Iterator[(Long, Array[Long])]): Iterator[Written] = {
-    val (strays, chunks) = rows.map { case (bucket, fps) => (bucket, fps, null: Array[Long]) }.toVector
-      .partition(_._1 < 0)
+    val (strays, chunks) = rows.toVector.partition(_._1 < 0)
     val stray = strays.map(_._2.length.toLong).sum
     if (chunks.isEmpty)
       return if (stray == 0) Iterator.empty else Iterator.single(Written(null, 0L, Array.empty, Array.empty, stray))
     val latest = store.readLive(chunks.map(_._1).distinct)
-    val shards = BqfPipeline.gatherChunks(chunks.iterator).map { case (bucket, fps, _) =>
+    val shards = BqfPipeline.gatherChunks(chunks.iterator, counted = false) { (bucket, fps, _) =>
       val partial = batchPartial(fps, params)
       val sketch = latest.get(bucket) match {
         case None => partial

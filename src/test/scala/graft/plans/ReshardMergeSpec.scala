@@ -79,6 +79,34 @@ class ReshardMergeSpec extends AnyFunSuite {
     i16.unpersist()
   }
 
+  test("reshardMerge of an order-of-magnitude index == local mergeAll, each output bucket fed by several shards") {
+    import spark.implicits._
+    // counted chunks cross the shuffle, and a fingerprint that several
+    // input shards hold folds by max: six shards over one shared pool of
+    // fingerprints, each with counts of its own, so every output bucket is
+    // fed by every shard and a shared fingerprint's counts differ
+    val oom = params.copy(mode = graft.core.CountMode.OrderOfMagnitude, countBits = 5)
+    val rnd = new scala.util.Random(29)
+    val pool = Array.fill(4000)(rnd.nextLong() & ((1L << oom.hashBits) - 1))
+    val filters = (0 until 6).map { _ =>
+      val f = oom.fresh()
+      pool.foreach(fp => if (rnd.nextInt(3) == 0) f.add(fp, 1L + rnd.nextInt(5000)))
+      f
+    }
+    val perShard = filters.map(_.entries().toMap)
+    assert(pool.exists(fp => perShard.flatMap(_.get(fp)).distinct.size > 1), "no count differs between shards")
+    val shards = filters.zipWithIndex.map { case (f, i) => (i.toLong, f.serialize()) }
+      .toDF("bucket", "sketch").repartition(3).cache()
+    val local = BackpackFilter.mergeAll(filters)
+    val one = BqfPipeline.reshardMerge(shards, oom, 1).collect()
+    assert(one.length == 1)
+    assert(java.util.Arrays.equals(one(0).getAs[Array[Byte]]("sketch"), local.serialize()), "nOut=1 bytes")
+    val eight = BqfPipeline.reshardMerge(shards, oom, 8)
+    assert(eight.count() == 8)
+    assert(enumMap(eight) == local.enumerate(), "nOut=8 entries")
+    shards.unpersist()
+  }
+
   test("mergeShards == local mergeAll of range-disjoint and of overlapping UDAF shards; no rows give null") {
     // every doc twice, under a second id, so doc buckets share s-grams
     val once = TokensTable.dataframe(spark, 200, partitions = 4)
@@ -167,18 +195,20 @@ class ReshardMergeSpec extends AnyFunSuite {
 
   test("the gather's memory guard bounds one shard, not one task") {
     def chunks(sizes: (Long, Int)*) = sizes.iterator.map { case (b, n) =>
-      (b, Array.tabulate(n)(i => (b << 40) | i.toLong), null: Array[Long])
+      (b, Array.tabulate(n)(i => (b << 40) | i.toLong))
     }
+    def gather(it: Iterator[(Long, Array[Long])]) =
+      BqfPipeline.gatherChunks(it, counted = false)((bucket, fps, _) => (bucket, fps))
     val key = "graft.maxShardFps"
     val saved = System.getProperty(key)
     System.setProperty(key, "100")
     try {
       // 3 x 80 fingerprints: each shard under the cap, the task over it
-      val shards = BqfPipeline.gatherChunks(chunks(0L -> 50, 0L -> 30, 1L -> 80, 2L -> 40, 2L -> 40)).toList
+      val shards = gather(chunks(0L -> 50, 0L -> 30, 1L -> 80, 2L -> 40, 2L -> 40)).toList
       assert(shards.map(s => (s._1, s._2.length)) == List(0L -> 80, 1L -> 80, 2L -> 80))
       assert(shards.head._2.toSeq == (0 until 50).map(_.toLong) ++ (0 until 30).map(_.toLong))
       val e = intercept[IllegalStateException](
-        BqfPipeline.gatherChunks(chunks(0L -> 80, 1L -> 60, 1L -> 60)).toList)
+        gather(chunks(0L -> 80, 1L -> 60, 1L -> 60)).toList)
       assert(e.getMessage.contains("raise nBuckets"))
     } finally {
       if (saved == null) System.clearProperty(key) else System.setProperty(key, saved)
