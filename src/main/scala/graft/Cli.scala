@@ -47,6 +47,15 @@ object Cli {
     else stripZeros(s)
   }
 
+  /** The bytes of sketch file `path`, checked once by deserializing them:
+    * the query verbs broadcast these bytes as they are.
+    */
+  private def sketchFile(path: String): Array[Byte] = {
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    BackpackFilter.deserialize(bytes)
+    bytes
+  }
+
   /** The sequences of a query text file: one per non-empty line, or FASTA
     * ('>'-header dispatch on the first line), whose header lines are
     * skipped (the reference assumes strictly alternating header/sequence
@@ -99,7 +108,7 @@ object Cli {
         val t0 = System.nanoTime()
         val bytes = BqfPipeline.buildGlobal(df,
           sgram_fingerprints(col("tokens"), params.sTokens, params.hashBits, params.seed), params)
-        BackpackFilter.saveToFile(BackpackFilter.deserialize(bytes), opts("-o"))
+        java.nio.file.Files.write(java.nio.file.Paths.get(opts("-o")), bytes)
         println(s"Construction time = ${(System.nanoTime() - t0) / 1000000}ms " +
           s"(${BackpackFilter.deserialize(bytes).distinctCount} distinct s-grams)")
 
@@ -123,7 +132,7 @@ object Cli {
           println(s"Load + queries time = ${(System.nanoTime() - t0) / 1000000}ms " +
             s"(reference-format index: ${rf.header.elementsInside} smers)")
         } else {
-          val q = new BqfQuery(spark, BackpackFilter.loadFromFile(opts("-b")).serialize())
+          val q = new BqfQuery(spark, sketchFile(opts("-b")))
           // the reference's query verb is TEXT-in/TEXT-out (abstract_bqf.cpp:169-191,
           // main.cpp:105-173); -f text selects that surface here, and a
           // non-parquet regular-file input implies it
@@ -204,7 +213,7 @@ object Cli {
               graft.sources.DnaDomain.decodeSmerCanonical(fp, s)).apply(col("fingerprint")))
             .write.mode("overwrite").parquet(opts("-o"))
         } else {
-          val q = new BqfQuery(spark, BackpackFilter.loadFromFile(opts("-b")).serialize())
+          val q = new BqfQuery(spark, sketchFile(opts("-b")))
           q.enumerateDF().write.mode("overwrite").parquet(opts("-o"))
         }
 

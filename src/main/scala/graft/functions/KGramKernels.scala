@@ -59,12 +59,6 @@ object KGramKernels {
     }
   }
 
-  /** Fingerprint of one whole token array (used for exact-dedup keys). */
-  def arrayFingerprint(tokens: ArrayData, seed: Long): Long = {
-    val arr = tokens.toIntArray()
-    Fingerprint.hashWindow(arr, 0, arr.length, seed)
-  }
-
   /** 64-bit SimHash over n-char shingles: sum per-bit votes of shingle
     * feature hashes weighted +-1, sign -> bit (tie -> 0).
     *

@@ -280,33 +280,52 @@ object IndexIngest {
     * own. The driver commits them as checkpoint 0, with each shard's
     * lineage (the fingerprint rows gathered, merge depth 1) and the
     * routing; [[ingestBatch]] then takes ids above 0. A fingerprint above
-    * hashBits fails the build and commits nothing. A directory that holds a
-    * committed entry, or data files but no log, is refused.
-    *
-    * Counts: each occurrence stores the encoded count 1 (the bulk build's
-    * all-ones rule), and duplicates fold by the mode's combine. In exact
-    * mode that is the occurrence count; in order-of-magnitude mode it is
-    * `encodeCount(1)` folded by max, so every fingerprint of checkpoint 0
-    * has abundance 1 whatever its count, while [[ingestBatch]] stores
-    * floor(log2) of each batch's count. A store's order-of-magnitude counts
-    * thus depend on which writer produced each shard version.
+    * hashBits fails the build with an IllegalArgumentException and commits
+    * nothing; the files its tasks wrote are no entry's, and the next
+    * [[compact]] deletes them. A directory that holds a committed entry, or
+    * data files but no log, is refused.
     */
   def build(df: DataFrame, fpCol: Column, params: BqfParams, nBuckets: Int, storeDir: String): Unit = {
     val spark = df.sparkSession
     require(log(spark, storeDir).forall(_.entries.isEmpty), s"$storeDir already holds an index store")
     CommitLog.create(spark, storeDir)
-    val store = TaskStore(spark, storeDir, LogState(Nil))
-    val written =
-      try writing(spark)(BqfPipeline.shardBlobs(BqfPipeline.indexChunks(df, fpCol, params, nBuckets), params, nBuckets)
+    commitWrite(spark, storeDir, LogState(Nil), 0L, checkpoint = true, Routing(nBuckets, params), "build") { store =>
+      BqfPipeline.shardBlobs(BqfPipeline.indexChunks(df, fpCol, params, nBuckets), params, nBuckets)
         .mapPartitions { blobs =>
           val shards = blobs.map { case (bucket, sketch, n) => (ShardFiles.Shard(bucket, sketch, 0L), n) }
           if (shards.hasNext) Iterator.single(writeTask(store, 0L, shards, 0L)) else Iterator.empty
-        }.collect())
+        }
+    }
+  }
+
+  /** The one commit path of [[build]] and [[ingestBatch]]: run the write
+    * tasks `tasks` over the store as `state` folds it, under [[writing]];
+    * turn an input a task refused (an IllegalArgumentException) into the
+    * caller's; refuse fingerprints with no bucket; and commit entry
+    * `batchId` with each new shard version's lineage: fingerprint rows
+    * consumed and merge depth, on top of the bucket's live version in
+    * `state`, if any.
+    */
+  private def commitWrite(spark: SparkSession, storeDir: String, state: LogState, batchId: Long, checkpoint: Boolean,
+                          routing: Routing, verb: String)(
+      tasks: TaskStore => org.apache.spark.rdd.RDD[Written]): Unit = {
+    val store = TaskStore(spark, storeDir, state)
+    val written =
+      try writing(spark)(tasks(store).collect())
+      catch {
+        case e: org.apache.spark.SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+          throw new IllegalArgumentException(s"$verb: ${e.getCause.getMessage}", e)
+      }
       finally store.conf.destroy()
-    CommitLog.commit(spark, storeDir, LogEntry(0L, checkpoint = true, Routing(nBuckets, params),
-      written.toSeq.map(w => LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
-        LoggedShard(bucket, 0L, n, 1)
-      }.toSeq))))
+    val strays = written.map(_.strays).sum
+    require(strays == 0,
+      s"$verb: $strays fingerprints above hashBits=${routing.hashBits} have no bucket of $storeDir")
+    CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint, routing, written.toSeq.map { w =>
+      LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
+        val prev = state.live.get(bucket).map(_._1)
+        LoggedShard(bucket, batchId, prev.fold(0L)(_.rowsConsumed) + n, prev.fold(0)(_.mergeDepth) + 1)
+      }.toSeq)
+    }))
   }
 
   /** Delete what the newest checkpoint superseded: the data files only
@@ -400,14 +419,15 @@ object IndexIngest {
     * versions of exactly the buckets it received, from the files the
     * folded log names (touched-bucket pruning: per-batch cost is
     * O(batch + touched shards), independent of store width), builds each
-    * bucket's batch partial, merges it into the live version and writes
-    * the new versions to one file of its own, straight into the store. The
-    * driver then commits the batch's log entry from the tasks' reports,
-    * with each new shard's lineage: fingerprint rows consumed and merge
-    * depth. In order-of-magnitude mode a batch stores floor(log2) of each
-    * fingerprint's count in the batch ([[batchPartial]]), where [[build]]
-    * stores abundance 1 for every fingerprint, so the two writers' shard
-    * versions of one count differ.
+    * bucket's batch partial by the sorted build's rule (each occurrence
+    * one entry of count 1, duplicates folded by the mode's combine),
+    * merges it into the live version (`mergeInPlace`) and writes the new
+    * versions to one file of its own, straight into the store. The driver
+    * then commits the batch's log entry from the tasks' reports, with each
+    * new shard's lineage: fingerprint rows consumed and merge depth. So the
+    * live shards are the bytes [[build]] or
+    * [[graft.plans.BqfPipeline.buildIndexSorted]] makes of the union of
+    * the batches, however the stream was split into batches.
     *
     * A batch with fingerprints above hashBits (no bucket), or with a null
     * fingerprint, is refused with an IllegalArgumentException that says so
@@ -433,27 +453,10 @@ object IndexIngest {
     require(batchId > state.lastId,
       s"ingestBatch: batch $batchId arrives after batch ${state.lastId} of $storeDir; batch ids must increase")
     if (state.superseded.nonEmpty) sweep(spark, storeDir, state) // a compaction crashed before its clean-up
-    val store = TaskStore(spark, storeDir, state)
-    val written =
-      try writing(spark)(BqfPipeline.rangeShuffle(BqfPipeline.fingerprintChunks(batch, params.hashBits, nBuckets), nBuckets)
+    commitWrite(spark, storeDir, state, batchId, checkpoint = false, routing, "ingestBatch") { store =>
+      BqfPipeline.rangeShuffle(BqfPipeline.fingerprintChunks(batch, params.hashBits, nBuckets), nBuckets)
         .mapPartitions(mergeRange(store, batchId, params, _))
-        .collect())
-      catch {
-        // an input a task refused (a null fingerprint): the caller's error
-        case e: org.apache.spark.SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
-          throw new IllegalArgumentException(s"ingestBatch: ${e.getCause.getMessage}", e)
-      }
-      finally store.conf.destroy()
-    val strays = written.map(_.strays).sum
-    require(strays == 0,
-      s"ingestBatch: $strays fingerprints above hashBits=${params.hashBits} have no bucket of $storeDir")
-    val files = written.toSeq.map { w =>
-      LoggedFile(w.file, w.bytes, w.buckets.zip(w.rows).map { case (bucket, n) =>
-        val prev = state.live.get(bucket).map(_._1)
-        LoggedShard(bucket, batchId, prev.fold(0L)(_.rowsConsumed) + n, prev.fold(0)(_.mergeDepth) + 1)
-      }.toSeq)
     }
-    CommitLog.commit(spark, storeDir, LogEntry(batchId, checkpoint = false, routing, files))
   }
 
   /** One merge task of [[ingestBatch]]: the batch's chunk records of one
@@ -473,43 +476,12 @@ object IndexIngest {
       return if (stray == 0) Iterator.empty else Iterator.single(Written(null, 0L, Array.empty, Array.empty, stray))
     val latest = store.readLive(chunks.map(_._1).distinct)
     val shards = BqfPipeline.gatherChunks(chunks.iterator, counted = false) { (bucket, fps, _) =>
-      val partial = batchPartial(fps, params)
-      val sketch = latest.get(bucket) match {
-        case None => partial
-        case Some(old) =>
-          // big absorbs small: steady-state batches are deltas against a
-          // much larger shard, and mergeInPlace folds the small side in
-          // incrementally — O(batch) per bucket, not O(store)
-          val live = BackpackFilter.deserialize(old)
-          if (live.distinctCount >= partial.distinctCount) live.mergeInPlace(partial)
-          else partial.mergeInPlace(live)
-      }
+      val partial = BackpackFilter.fromEntries(7, params.countBits, params.hashBits, params.mode,
+        params.kTokens, params.zTokens, params.seed, fps, null, fps.length)
+      val sketch = latest.get(bucket).fold(partial)(BackpackFilter.deserialize(_).mergeInPlace(partial))
       (ShardFiles.Shard(bucket, sketch.serialize(), batchId), fps.length.toLong)
     }
     Iterator.single(writeTask(store, batchId, shards, stray))
-  }
-
-  /** One bucket's batch partial: each distinct fingerprint stores the
-    * encoded count of its occurrences in this batch (order-of-magnitude
-    * stores floor(log2) of the batch count, so batches combine by max of
-    * their own counts). Sorts `fps` in place.
-    */
-  private def batchPartial(fps: Array[Long], params: BqfParams): BackpackFilter = {
-    java.util.Arrays.sort(fps)
-    val codec = params.fresh()
-    val stored = new Array[Long](fps.length)
-    var n = 0
-    var i = 0
-    while (i < fps.length) {
-      var j = i + 1
-      while (j < fps.length && fps(j) == fps(i)) j += 1
-      fps(n) = fps(i)
-      stored(n) = codec.encodeCount(j - i)
-      n += 1
-      i = j
-    }
-    BackpackFilter.fromEntries(7, params.countBits, params.hashBits, params.mode,
-      params.kTokens, params.zTokens, params.seed, fps, stored, n)
   }
 }
 

@@ -125,12 +125,12 @@ class SparkE2ESpec extends AnyFunSuite {
 
     // abundance over every distinct fingerprint
     val got = df.select(explode(fps).as("fp")).distinct()
-      .withColumn("abund", q.abundanceUdf(col("fp")))
+      .withColumn("abund", q.abundanceOf(col("fp")))
       .as[(Long, Long)].collect().toMap
     assert(got == oracle)
 
     // sequence stats: indexed docs have full presence
-    val stats = df.withColumn("st", q.sequenceStatsUdf(col("tokens")))
+    val stats = df.withColumn("st", q.sequenceStatsOf(col("tokens")))
       .select($"doc_id", $"st.minimum", $"st.presenceRatio")
       .as[(String, Long, Double)].collect()
     assert(stats.forall(_._3 == 1.0))

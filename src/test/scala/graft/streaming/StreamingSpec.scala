@@ -529,6 +529,30 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
+  test("build refuses a fingerprint above hashBits and commits nothing; a clean retry commits checkpoint 0") {
+    import spark.implicits._
+    val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
+      kTokens = 8, zTokens = 0, seed = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-build-refused").toString
+    val store = s"$tmp/idx"
+    val rnd = new scala.util.Random(83)
+    val docs = Vector.fill(20)(Vector.fill(100)(rnd.nextLong() & 0xffffffffL))
+    // a user array<bigint> column; 1 << 32 has a bit above hashBits=32
+    val e = intercept[IllegalArgumentException](
+      IndexIngest.build((docs :+ Vector(1L << 32)).toDF("fps"), col("fps"), params, 8, store))
+    assert(e.getMessage.contains("hashBits"), e.getMessage)
+    assert(graft.plans.CommitLog.read(spark, store).forall(_.entries.isEmpty), "the refused build committed")
+    val wrote = dataFiles(store)
+    assert(wrote.nonEmpty, "the refused build's tasks wrote no file")
+    IndexIngest.build(docs.toDF("fps"), col("fps"), params, 8, store)
+    assert(graft.plans.CommitLog.read(spark, store).get.entries.map(en => (en.batchId, en.checkpoint)) == Seq((0L, true)))
+    assert(counts(store) == exact(docs.flatten) && opened(store).intersect(wrote).isEmpty)
+    IndexIngest.compact(spark, store)
+    assert(dataFiles(store).intersect(wrote).isEmpty, s"compact kept ${dataFiles(store).intersect(wrote)}")
+    assert(dataFiles(store) == opened(store) && counts(store) == exact(docs.flatten))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("a null fingerprint is refused, not read as 0: ingestBatch commits nothing, queryIndex fails the probe") {
     import spark.implicits._
     val params = graft.operators.BqfParams(qBits = 10, countBits = 16, hashBits = 32,
@@ -773,27 +797,27 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
-  test("order-of-magnitude ingest: a batch stores its encoded count, batches merge by max") {
+  test("order-of-magnitude ingest: raw occurrences store presence, however the stream is split into batches") {
     import spark.implicits._
     val params = graft.operators.BqfParams(qBits = 10, countBits = 4, hashBits = 32,
       mode = graft.core.CountMode.OrderOfMagnitude, kTokens = 8, zTokens = 0, seed = 0L)
     val nBuckets = 4
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-oom").toString
-    val store = s"$tmp/idx"
     val hot = graft.core.Fingerprint.splitmix64(7L) & 0xffffffffL
     val others = (100L to 160L).map(i => graft.core.Fingerprint.splitmix64(i) & 0xffffffffL)
-    def live: Map[Long, Long] = graft.plans.BqfPipeline.enumerateIndex(
-        IndexIngest.currentShards(spark, store))
-      .as[(Long, Long)].collect().toMap
-    // batch 0: 100 occurrences answer 2^floor(log2 100) = 64, singletons 1
-    IndexIngest.ingestBatch((Seq.fill(100)(hot) ++ others).toDF("fp"), batchId = 0L,
-      params, nBuckets, store)
-    assert(live == (others.map(_ -> 1L) :+ (hot -> 64L)).toMap)
-    // batch 1: 3 more occurrences encode to 2 on their own; max(64, 2) = 64,
-    // and a repeated singleton reaches 2 through its own batch's count
-    IndexIngest.ingestBatch((Seq.fill(3)(hot) ++ Seq.fill(2)(others.head)).toDF("fp"), batchId = 1L,
-      params, nBuckets, store)
-    assert(live == (others.map(_ -> 1L) :+ (hot -> 64L) :+ (others.head -> 2L)).toMap)
+    // 103 occurrences of hot, 3 of others.head, 1 of every other fingerprint
+    val all = Seq.fill(103)(hot) ++ others ++ Seq.fill(2)(others.head)
+    def ingest(store: String, batches: Seq[Seq[Long]]): Unit =
+      batches.zipWithIndex.foreach { case (b, id) => IndexIngest.ingestBatch(b.toDF("fp"), id.toLong, params, nBuckets, store) }
+    def shards(store: String): Map[Long, Seq[Byte]] = IndexIngest.currentShards(spark, store)
+      .as[(Long, Array[Byte])].collect().map { case (b, s) => b -> s.toSeq }.toMap
+    ingest(s"$tmp/one", Seq(all))
+    // round robin: each batch holds about a third of every repeated fingerprint
+    ingest(s"$tmp/three", (0 until 3).map(r => all.zipWithIndex.collect { case (fp, i) if i % 3 == r => fp }))
+    // a duplicate insert keeps the stored exponent (the reference's OOM
+    // rule), so the hot fingerprint answers 1 like every other
+    assert(counts(s"$tmp/one") == (others :+ hot).map(_ -> 1L).toMap)
+    assert(shards(s"$tmp/one") == shards(s"$tmp/three"), "the batch split changed the shards")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
